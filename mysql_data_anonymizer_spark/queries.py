@@ -19,11 +19,14 @@ driver's value-hash comparison is meaningful:
 
 from __future__ import annotations
 
+import contextlib
+import logging
 import math
 import os
 import re
-import sys
+import shutil
 import tempfile
+import uuid
 from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
@@ -45,33 +48,34 @@ from mysql_data_anonymizer_spark.operators import (
 )
 from mysql_data_anonymizer_spark.sources import files
 from mysql_data_anonymizer_spark.plans.compiler import compile_plan
+from mysql_data_anonymizer_spark.streaming import stream_ops
 
 SEED = 42
 HEXD = "0123456789abcdef"
 
 
+_log = logging.getLogger(__name__)
 _STREAM_HARVEST_WARNED = False
+_REPLAY_DEADLINE_S = 180
 
 
-def _await_stream(spark, q, timeout_s: int = 180, *, name: str | None = None) -> None:
-    """awaitTermination + executed-plan harvest (r10 verdict item 6): a
-    finished streaming query's physical plan is invisible to the audit —
-    the memory-sink result table plans as a bare LocalTableScan, which is
-    why 14 streaming rows in PLANS.md read 0 in every column. The last
-    micro-batch's ACTUAL executed plan lives on the StreamExecution
-    (`StreamingQueryWrapper.streamingQuery().lastExecution()`); stash it on
-    the session keyed by the registry query name so tools/plan_audit.py can
-    apply the same violation rules to streaming plans as to batch ones.
+def _await_stream(spark, q, timeout_s: int = _REPLAY_DEADLINE_S, *, name: str) -> None:
+    """Deadline-bounded awaitTermination + executed-plan harvest (r10
+    verdict item 6): a finished streaming query's physical plan is
+    invisible to the audit — the memory-sink result table plans as a bare
+    LocalTableScan, which is why 14 streaming rows in PLANS.md read 0 in
+    every column. The last micro-batch's ACTUAL executed plan lives on the
+    StreamExecution (`StreamingQueryWrapper.streamingQuery().lastExecution()`);
+    stash it on the session keyed by the registry query name so
+    tools/plan_audit.py can apply the same violation rules to streaming
+    plans as to batch ones.
 
-    ``name`` is the EXPLICIT registry key (r11 ADVICE: the old
-    sys._getframe(1) key broke silently if a call site gained a wrapper,
-    and a swallowed py4j drift made plan_audit fall back to the stateless
-    LocalTableScan — the exact blindness the harvest was built to fix);
-    the caller-frame fallback remains only for ad-hoc/test callers, and a
-    harvest failure now warns on stderr once per process."""
-    q.awaitTermination(timeout_s)
-    if name is None:
-        name = sys._getframe(1).f_code.co_name
+    ``name`` is the EXPLICIT registry key (r11 ADVICE: a caller-frame key
+    broke silently if a call site gained a wrapper). A query still active
+    at the deadline is stopped and raises ``TimeoutError`` naming it; a
+    harvest failure is logged once per process (plan_audit then falls back
+    to the stateless LocalTableScan)."""
+    stream_ops.await_bounded(q, timeout_s, name)
     try:
         plan = (
             q._jsq.streamingQuery()  # noqa: SLF001
@@ -83,11 +87,12 @@ def _await_stream(spark, q, timeout_s: int = 180, *, name: str | None = None) ->
         global _STREAM_HARVEST_WARNED
         if not _STREAM_HARVEST_WARNED:
             _STREAM_HARVEST_WARNED = True
-            print(
-                f"[mda] WARNING: streaming plan harvest failed for {name!r}"
-                f" ({type(exc).__name__}: {exc}); plan_audit will see the"
-                " memory-sink LocalTableScan for this query",
-                file=sys.stderr,
+            _log.warning(
+                "streaming plan harvest failed for %r (%s: %s); plan_audit will"
+                " see the memory-sink LocalTableScan for this query",
+                name,
+                type(exc).__name__,
+                exc,
             )
         return
     store = getattr(spark, "_mda_stream_plans", None)
@@ -168,9 +173,6 @@ def _plan_str_full(df: DataFrame) -> str:
             spark.conf.set(key, old)
 
 
-import contextlib
-
-
 @contextlib.contextmanager
 def _stream_shuffle(spark, n: int = 8):
     """Pin streaming state partitioning for the duration of query START.
@@ -188,6 +190,92 @@ def _stream_shuffle(spark, n: int = 8):
         yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def _replay_source(
+    spark, sf_dir: str, *, table: str = "events", copies: int = 1, max_files: int | None = None
+) -> tuple[DataFrame, str | None]:
+    """Source half of a bounded file replay: ``{sf_dir}/{table}.parquet`` as
+    a file stream read with the batch table's schema (``max_files`` sets
+    maxFilesPerTrigger: one micro-batch per file).
+
+    FileStreamSource wants a directory and the fixtures are single parquet
+    FILES, so a file is symlinked ``copies`` times into a fresh temp dir
+    (no data copy; ``copies=2`` is an at-least-once redelivery). Scale
+    slices (tools/scale_slope.py) write multi-file parquet DIRECTORIES
+    instead — the source doesn't recurse through a symlinked subdirectory
+    (it listed 0 files and the query silently emitted nothing, r12), so a
+    directory is streamed directly. events get ``_ts_fix``; other tables
+    get ``_spread``, which works on streams too: a micro-batch over one
+    sub-split file is ONE task, so per-row map work would run serially.
+
+    Returns ``(stream, stage)``; ``stage`` is the temp dir created here
+    (``None`` for a directory source), removed by ``_replay_run``."""
+    # set here, not left to get_spark: __spark_entry__.queries() runs the
+    # registry on the caller's own session
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    src = f"{sf_dir}/{table}.parquet"
+    reader = spark.readStream.schema(spark.read.parquet(src).schema)
+    if max_files is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files)
+    stage = None
+    if os.path.isdir(src):
+        stream = reader.parquet(src)
+    else:
+        stage = tempfile.mkdtemp(prefix="mda_stream_")
+        for i in range(copies):
+            os.symlink(src, f"{stage}/{table}_{i}.parquet")
+        stream = reader.parquet(stage)
+    return (_ts_fix(stream) if table == "events" else _spread(stream, src)), stage
+
+
+def _replay_run(spark, name: str, stage: str | None, start: Callable) -> None:
+    """Run half of a bounded file replay: ``start()`` launches the writer
+    under 8 state partitions (``_stream_shuffle``) and returns its query,
+    which is awaited with the deadline and its executed plan harvested
+    under the registry ``name``; the source half's ``stage`` dir is then
+    removed, whatever the outcome. (A memory-sink ``start`` has already
+    waited inside ``stream_ops.run_to_memory``; the wait here then returns
+    at once.)"""
+    try:
+        with _stream_shuffle(spark):
+            q = start()
+        _await_stream(spark, q, name=name)
+    finally:
+        if stage is not None:
+            shutil.rmtree(stage, ignore_errors=True)
+
+
+def _bounded_replay(
+    spark,
+    sf_dir: str,
+    name: str,
+    build: Callable[[DataFrame], DataFrame],
+    *,
+    sink: str,
+    mode: str,
+    table: str = "events",
+    copies: int = 1,
+    max_files: int | None = None,
+) -> DataFrame:
+    """Replay ``{sf_dir}/{table}.parquet`` as a bounded (availableNow)
+    stream through ``build(stream)`` into a uuid-suffixed memory sink
+    named after ``sink`` with output ``mode``, and return the sink table.
+    On a bounded replay the streaming result must equal the batch query
+    over the same file — which is what each query's oracle asserts."""
+    stream, stage = _replay_source(
+        spark, sf_dir, table=table, copies=copies, max_files=max_files
+    )
+    out = f"{sink}_{uuid.uuid4().hex[:8]}"
+    _replay_run(
+        spark,
+        name,
+        stage,
+        lambda: stream_ops.run_to_memory(
+            build(stream), out, _REPLAY_DEADLINE_S, mode=mode
+        ),
+    )
+    return spark.table(out)
 
 
 def _dbl(c):
@@ -4160,7 +4248,6 @@ def pydatasource_stream_agg(spark, sf_dir):
     offsets, partition planning, and executor reads end-to-end. (sf_dir
     unused: the source is self-generating by construction.)"""
     import time
-    import uuid
 
     from mysql_data_anonymizer_spark.sources import pydatasource
 
@@ -5553,37 +5640,17 @@ WHERE d.doc_id NOT IN (SELECT doc_id FROM (SELECT doc_id FROM clusters c WHERE c
 def streaming_tumbling_agg(spark, sf_dir):
     """Structured Streaming, value-checked: the events table replayed as a
     bounded file stream through the watermark + tumbling-window operator
-    (streaming/stream_ops.py), driven to completion with availableNow into a
-    memory sink. On a bounded replay the streaming result must equal the
+    (streaming/stream_ops.py), driven to completion by ``_bounded_replay``
+    into a memory sink. On a bounded replay the streaming result must equal the
     batch GROUP BY — which is exactly what the DuckDB oracle asserts. The
     same topology against an unbounded source is the 100 TB path (bounded
     state via watermark; late events beyond 30min dropped)."""
-    import uuid
-
-    from mysql_data_anonymizer_spark.streaming.stream_ops import tumbling_aggregates
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # FileStreamSource wants a directory; stage the single fixture file into
-    # a temp dir by symlink (no data copy)
-    stage = tempfile.mkdtemp(prefix="mda_stream_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
-    with _stream_shuffle(spark):
-        stream = _ts_fix(
-            spark.readStream.schema(
-                spark.read.parquet(f"{sf_dir}/events.parquet").schema
-            ).parquet(stage)
-        )
-        agg = tumbling_aggregates(stream, window="30 minutes", watermark="30 minutes")
-        name = f"stream_agg_{uuid.uuid4().hex[:8]}"
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-    _await_stream(spark, q, name="streaming_tumbling_agg")
-    return spark.table(name).select(
+    out = _bounded_replay(
+        spark, sf_dir, "streaming_tumbling_agg",
+        lambda s: stream_ops.tumbling_aggregates(s, window="30 minutes", watermark="30 minutes"),
+        sink="stream_agg", mode="complete",
+    )
+    return out.select(
         "window_start",
         "event_type",
         "n_events",
@@ -5612,36 +5679,19 @@ def streaming_dedup_then_window(spark, sf_dir):
     windows with an inclusive boundary — green
     proves dedup state, watermark propagation across the chain, and window
     finalization all compose."""
-    import uuid
 
-    from mysql_data_anonymizer_spark.streaming.stream_ops import (
-        dedup_stream,
-        tumbling_aggregates,
-    )
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stage = tempfile.mkdtemp(prefix="mda_stream_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events_a.parquet")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events_b.parquet")
-    with _stream_shuffle(spark):
-        stream = _ts_fix(
-            spark.readStream.schema(spark.read.parquet(f"{sf_dir}/events.parquet").schema)
-            .parquet(stage)
-        )
-        deduped = dedup_stream(stream, ["event_id"], watermark="30 minutes")
+    def build(stream):
+        deduped = stream_ops.dedup_stream(stream, ["event_id"], watermark="30 minutes")
         # watermark=None: the dedup stage already defined it; Spark forbids
         # redefinition downstream and propagates the upstream one
-        agg = tumbling_aggregates(deduped, window="30 minutes", watermark=None)
-        name = f"stream_chain_{uuid.uuid4().hex[:8]}"
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    _await_stream(spark, q, name="streaming_dedup_then_window")
-    return spark.table(name).select(
+        return stream_ops.tumbling_aggregates(deduped, window="30 minutes", watermark=None)
+
+    out = _bounded_replay(
+        spark, sf_dir, "streaming_dedup_then_window",
+        build,
+        sink="stream_chain", mode="append", copies=2,
+    )
+    return out.select(
         "window_start",
         "event_type",
         "n_events",
@@ -5728,13 +5778,9 @@ def streaming_jdbc_upsert_agg(spark, sf_dir):
     per key. The read-back aggregate equals the batch truth over the slice
     iff redelivered rows converged to one row per key — which is exactly
     what the oracle asserts."""
-    import uuid
-
     from mysql_data_anonymizer_spark.sources import jdbc as jdbc_src
     from mysql_data_anonymizer_spark.sources import sinks
-    from mysql_data_anonymizer_spark.streaming.stream_ops import jdbc_upsert_sink
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     cfg = _session_derby_cfg(spark)
     target = "evt_upsert"
     # target table: schema-only create + unique key index (point-merges)
@@ -5748,26 +5794,18 @@ def streaming_jdbc_upsert_agg(spark, sf_dir):
     )
     # at-least-once source: the same fixture delivered twice, one file per
     # micro-batch
-    stage = tempfile.mkdtemp(prefix="mda_stream_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events_a.parquet")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events_b.parquet")
-    with _stream_shuffle(spark):
-        stream = _ts_fix(
-            spark.readStream.schema(spark.read.parquet(f"{sf_dir}/events.parquet").schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        sliced = stream.where(F.col("event_id") % 13 == 0).select(*sl_cols)
-        q = (
+    stream, stage = _replay_source(spark, sf_dir, copies=2, max_files=1)
+    sliced = stream.where(F.col("event_id") % 13 == 0).select(*sl_cols)
+    _replay_run(
+        spark, "streaming_jdbc_upsert_agg", stage,
+        lambda: stream_ops.start_bounded(
             sliced.writeStream.foreachBatch(
-                jdbc_upsert_sink(cfg, target, key_cols=["event_id"],
-                                 set_cols=["event_type", "value"])
-            )
-            .queryName(f"upsert_{uuid.uuid4().hex[:8]}")
-            .trigger(availableNow=True)
-            .start()
-        )
-    _await_stream(spark, q, name="streaming_jdbc_upsert_agg")
+                stream_ops.jdbc_upsert_sink(
+                    cfg, target, key_cols=["event_id"], set_cols=["event_type", "value"]
+                )
+            ).queryName(f"upsert_{uuid.uuid4().hex[:8]}")
+        ),
+    )
     back = jdbc_src.jdbc_reader(spark, cfg, target)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -6801,23 +6839,18 @@ def streaming_static_enrich_agg(spark, sf_dir):
     /day the static dim is re-broadcast per batch at dim-size cost while
     the stream side never shuffles for the join. Bounded replay must equal
     the batch join+aggregate — the oracle."""
-    import uuid
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stage = tempfile.mkdtemp(prefix="mda_stream_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    dim = (
-        batch.select("user_id")
-        .where(F.col("user_id").isNotNull())
-        .distinct()
-        .withColumn("tier", (F.col("user_id") % 3).cast("long"))
-    )
-    with _stream_shuffle(spark):
-        stream = _ts_fix(spark.readStream.schema(batch.schema).parquet(stage))
-        joined = stream.join(F.broadcast(dim), "user_id")
-        agg = (
-            joined.withWatermark("ts", "30 minutes")
+    def build(stream):
+        dim = (
+            spark.read.parquet(f"{sf_dir}/events.parquet")
+            .select("user_id")
+            .where(F.col("user_id").isNotNull())
+            .distinct()
+            .withColumn("tier", (F.col("user_id") % 3).cast("long"))
+        )
+        return (
+            stream.join(F.broadcast(dim), "user_id")
+            .withWatermark("ts", "30 minutes")
             .groupBy(F.window("ts", "30 minutes").alias("w"), "tier")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
@@ -6830,16 +6863,12 @@ def streaming_static_enrich_agg(spark, sf_dir):
                 _dbl(F.col("__tv")).alias("total_value"),
             )
         )
-        name = f"stream_enrich_{uuid.uuid4().hex[:8]}"
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-    _await_stream(spark, q, name="streaming_static_enrich_agg")
-    return spark.table(name)
+
+    return _bounded_replay(
+        spark, sf_dir, "streaming_static_enrich_agg",
+        build,
+        sink="stream_enrich", mode="complete",
+    )
 
 
 STREAMING_STATIC_ENRICH_SQL = """
@@ -6861,27 +6890,20 @@ def streaming_parquet_sink_agg(spark, sf_dir):
     must equal the batch truth — which is what the oracle asserts. At
     100 TB this is the bronze-layer landing pattern; downstream jobs read
     the same directory with ordinary scans."""
-    import uuid
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stage = tempfile.mkdtemp(prefix="mda_stream_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
     out_dir = tempfile.mkdtemp(prefix="mda_sink_")
     ckpt = tempfile.mkdtemp(prefix="mda_ckpt_")
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    with _stream_shuffle(spark):
-        stream = _ts_fix(spark.readStream.schema(batch.schema).parquet(stage))
-        proj = stream.select(
-            "event_id", "user_id", "event_type", (F.col("value") * 2).alias("value2")
-        )
-        q = (
+    stream, stage = _replay_source(spark, sf_dir)
+    proj = stream.select(
+        "event_id", "user_id", "event_type", (F.col("value") * 2).alias("value2")
+    )
+    _replay_run(
+        spark, "streaming_parquet_sink_agg", stage,
+        lambda: stream_ops.start_bounded(
             proj.writeStream.format("parquet")
             .option("path", out_dir)
             .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-    _await_stream(spark, q, name="streaming_parquet_sink_agg")
+        ),
+    )
     back = spark.read.parquet(out_dir)
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -6911,22 +6933,14 @@ def streaming_mask_pseudonymize(spark, sf_dir):
     DuckDB oracle computes (sha-256 hex is bit-identical cross-engine).
     State is bounded by the watermark; masking is a map-side codegen'd
     expression adding zero state."""
-    import uuid
+    pseudo = F.substring(
+        F.sha2(F.concat(F.lit("u:"), F.col("user_id").cast("string")), 256), 1, 12
+    )
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stage = tempfile.mkdtemp(prefix="mda_stream_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
-    with _stream_shuffle(spark):
-        stream = _ts_fix(
-            spark.readStream.schema(spark.read.parquet(f"{sf_dir}/events.parquet").schema)
-            .parquet(stage)
-        )
-        pseudo = F.substring(
-            F.sha2(F.concat(F.lit("u:"), F.col("user_id").cast("string")), 256), 1, 12
-        )
-        masked = stream.withColumn("pseudonym", pseudo)
-        agg = (
-            masked.withWatermark("ts", "30 minutes")
+    def build(stream):
+        return (
+            stream.withColumn("pseudonym", pseudo)
+            .withWatermark("ts", "30 minutes")
             .groupBy(F.window("ts", "30 minutes").alias("w"), "event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
@@ -6941,16 +6955,12 @@ def streaming_mask_pseudonymize(spark, sf_dir):
                 "last_pseudo",
             )
         )
-        name = f"stream_mask_{uuid.uuid4().hex[:8]}"
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-    _await_stream(spark, q, name="streaming_mask_pseudonymize")
-    return spark.table(name)
+
+    return _bounded_replay(
+        spark, sf_dir, "streaming_mask_pseudonymize",
+        build,
+        sink="stream_mask", mode="complete",
+    )
 
 
 STREAMING_MASK_SQL = """
@@ -6970,29 +6980,13 @@ def streaming_sliding_agg(spark, sf_dir):
     computes with a 2-row expansion join. State is bounded by the watermark;
     each event is counted into 2 window states, so state size scales with
     (#active windows x #event types), not the stream length."""
-    import uuid
-
-    from mysql_data_anonymizer_spark.streaming.stream_ops import sliding_counts
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stage = tempfile.mkdtemp(prefix="mda_stream_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
-    with _stream_shuffle(spark):
-        stream = _ts_fix(
-            spark.readStream.schema(spark.read.parquet(f"{sf_dir}/events.parquet").schema)
-            .parquet(stage)
-        )
-        agg = sliding_counts(stream, window="1 hour", slide="30 minutes", watermark="30 minutes")
-        name = f"stream_slide_{uuid.uuid4().hex[:8]}"
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-    _await_stream(spark, q, name="streaming_sliding_agg")
-    return spark.table(name)
+    return _bounded_replay(
+        spark, sf_dir, "streaming_sliding_agg",
+        lambda s: stream_ops.sliding_counts(
+            s, window="1 hour", slide="30 minutes", watermark="30 minutes"
+        ),
+        sink="stream_slide", mode="complete",
+    )
 
 
 STREAMING_SLIDING_SQL = """
@@ -7015,29 +7009,11 @@ def streaming_session_agg(spark, sf_dir):
     islands partition where a new island starts when ts - prev_ts >= gap.
     Watermark bounds session state; sessions close (and leave state) once
     the watermark passes their end."""
-    import uuid
-
-    from mysql_data_anonymizer_spark.streaming.stream_ops import session_aggregates
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stage = tempfile.mkdtemp(prefix="mda_stream_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
-    with _stream_shuffle(spark):
-        stream = _ts_fix(
-            spark.readStream.schema(spark.read.parquet(f"{sf_dir}/events.parquet").schema)
-            .parquet(stage)
-        )
-        agg = session_aggregates(stream, gap="30 minutes", watermark="30 minutes")
-        name = f"stream_sess_{uuid.uuid4().hex[:8]}"
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-    _await_stream(spark, q, name="streaming_session_agg")
-    return spark.table(name)
+    return _bounded_replay(
+        spark, sf_dir, "streaming_session_agg",
+        lambda s: stream_ops.session_aggregates(s, gap="30 minutes", watermark="30 minutes"),
+        sink="stream_sess", mode="complete",
+    )
 
 
 STREAMING_SESSION_SQL = """
@@ -7432,32 +7408,14 @@ def streaming_stateful_user_totals(spark, sf_dir):
     cannot perturb the total. State is one pair per user: O(distinct keys),
     not O(events); on an unbounded stream the same topology emits updated
     totals per micro-batch."""
-    import uuid
-
-    from mysql_data_anonymizer_spark.streaming.stream_ops import stateful_user_totals
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stage = tempfile.mkdtemp(prefix="mda_stream_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
-    with _stream_shuffle(spark):
-        stream = _ts_fix(
-            spark.readStream.schema(spark.read.parquet(f"{sf_dir}/events.parquet").schema)
-            .parquet(stage)
-        )
-        cents = stream.withColumn(
-            "value", F.floor(F.col("value") * 100 + F.lit(0.5)).cast("double")
-        )
-        agg = stateful_user_totals(cents)
-        name = f"stream_state_{uuid.uuid4().hex[:8]}"
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-    _await_stream(spark, q, name="streaming_stateful_user_totals")
-    return spark.table(name).select(
+    out = _bounded_replay(
+        spark, sf_dir, "streaming_stateful_user_totals",
+        lambda s: stream_ops.stateful_user_totals(
+            s.withColumn("value", F.floor(F.col("value") * 100 + F.lit(0.5)).cast("double"))
+        ),
+        sink="stream_state", mode="update",
+    )
+    return out.select(
         "user_id", "n_events", F.col("total_value").alias("total_cents")
     )
 
@@ -7477,32 +7435,14 @@ def streaming_stateful_user_stats_tws(spark, sf_dir):
     event_type. Same exact-cents normalization as the applyInPandasWithState
     twin (streaming_stateful_user_totals), so the two stateful APIs are
     certified against the same truth."""
-    import uuid
-
-    from mysql_data_anonymizer_spark.streaming.stream_ops import stateful_user_stats_tws
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stage = tempfile.mkdtemp(prefix="mda_stream_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
-    with _stream_shuffle(spark):
-        stream = _ts_fix(
-            spark.readStream.schema(spark.read.parquet(f"{sf_dir}/events.parquet").schema)
-            .parquet(stage)
-        )
-        cents = stream.withColumn(
-            "value", F.floor(F.col("value") * 100 + F.lit(0.5)).cast("double")
-        )
-        agg = stateful_user_stats_tws(cents)
-        name = f"stream_tws_{uuid.uuid4().hex[:8]}"
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-    _await_stream(spark, q, name="streaming_stateful_user_stats_tws")
-    return spark.table(name).select(
+    out = _bounded_replay(
+        spark, sf_dir, "streaming_stateful_user_stats_tws",
+        lambda s: stream_ops.stateful_user_stats_tws(
+            s.withColumn("value", F.floor(F.col("value") * 100 + F.lit(0.5)).cast("double"))
+        ),
+        sink="stream_tws", mode="update",
+    )
+    return out.select(
         "user_id", "n_events", F.col("total_value").alias("total_cents"), "n_types"
     )
 
@@ -7521,29 +7461,11 @@ def streaming_stream_join(spark, sf_dir):
     condition bounds join state, and the bounded single-batch replay must
     equal the batch self-join with the identical predicate — which is
     exactly the DuckDB oracle."""
-    import uuid
-
-    from mysql_data_anonymizer_spark.streaming.stream_ops import stream_stream_join
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stage = tempfile.mkdtemp(prefix="mda_stream_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
-    with _stream_shuffle(spark):
-        stream = _ts_fix(
-            spark.readStream.schema(spark.read.parquet(f"{sf_dir}/events.parquet").schema)
-            .parquet(stage)
-        )
-        joined = stream_stream_join(stream, "click", "view", within="10 minutes")
-        name = f"stream_join_{uuid.uuid4().hex[:8]}"
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    _await_stream(spark, q, name="streaming_stream_join")
-    return spark.table(name)
+    return _bounded_replay(
+        spark, sf_dir, "streaming_stream_join",
+        lambda s: stream_ops.stream_stream_join(s, "click", "view", within="10 minutes"),
+        sink="stream_join", mode="append",
+    )
 
 
 STREAMING_STREAM_JOIN_SQL = """
@@ -7566,30 +7488,12 @@ def streaming_dedup_events(spark, sf_dir):
     Key state expires at the 30-minute watermark horizon, so state is
     bounded regardless of stream length (the unbounded-corpus twin of
     operators/dedup.exact_dedup)."""
-    import uuid
-
-    from mysql_data_anonymizer_spark.streaming.stream_ops import dedup_stream
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stage = tempfile.mkdtemp(prefix="mda_stream_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events_a.parquet")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events_b.parquet")
-    with _stream_shuffle(spark):
-        stream = _ts_fix(
-            spark.readStream.schema(spark.read.parquet(f"{sf_dir}/events.parquet").schema)
-            .parquet(stage)
-        )
-        deduped = dedup_stream(stream, ["event_id"], watermark="30 minutes")
-        name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    _await_stream(spark, q, name="streaming_dedup_events")
-    return spark.table(name).select("event_id", "user_id", "event_type", "value")
+    out = _bounded_replay(
+        spark, sf_dir, "streaming_dedup_events",
+        lambda s: stream_ops.dedup_stream(s, ["event_id"], watermark="30 minutes"),
+        sink="stream_dedup", mode="append", copies=2,
+    )
+    return out.select("event_id", "user_id", "event_type", "value")
 
 
 STREAMING_DEDUP_SQL = """
@@ -8155,35 +8059,17 @@ def streaming_ohlc_window_agg(spark, sf_dir):
     """Streaming OHLC bars (streaming/stream_ops.py::ohlc_window_aggregates)
     — min_by/max_by + extremes + volume folding INCREMENTALLY inside
     watermarked tumbling-window state, complete-mode memory sink driven
-    with availableNow. On a bounded replay the streaming bars must equal
+    by ``_bounded_replay``. On a bounded replay the streaming bars must equal
     the batch GROUP BY bit-for-bit, including the (epoch_micros, event_id)
     tie rule for open/close — which is what the oracle asserts. Against an
     unbounded source the same topology holds one bar-sized state row per
     (window, type): the continuous-aggregate shape at 100 TB/day rates."""
-    import uuid
-
-    from mysql_data_anonymizer_spark.streaming.stream_ops import ohlc_window_aggregates
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stage = tempfile.mkdtemp(prefix="mda_stream_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
-    with _stream_shuffle(spark):
-        stream = _ts_fix(
-            spark.readStream.schema(
-                spark.read.parquet(f"{sf_dir}/events.parquet").schema
-            ).parquet(stage)
-        )
-        agg = ohlc_window_aggregates(stream, window="30 minutes", watermark="30 minutes")
-        name = f"stream_ohlc_{uuid.uuid4().hex[:8]}"
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-    _await_stream(spark, q, name="streaming_ohlc_window_agg")
-    return spark.table(name).select(
+    out = _bounded_replay(
+        spark, sf_dir, "streaming_ohlc_window_agg",
+        lambda s: stream_ops.ohlc_window_aggregates(s, window="30 minutes", watermark="30 minutes"),
+        sink="stream_ohlc", mode="complete",
+    )
+    return out.select(
         "window_start",
         "event_type",
         "open_value",
@@ -8747,6 +8633,40 @@ QUERIES["readability_scores_docs"] = readability_scores_docs
 ORACLES["readability_scores_docs"] = READABILITY_SQL
 
 
+def _time_halves(spark, sf_dir: str) -> str:
+    """Stage the events fixture as two time-ordered files, split at the
+    midpoint timestamp, for replays that need >= 2 micro-batches
+    (maxFilesPerTrigger=1): batch 2 never falls behind batch 1's
+    watermark, so nothing is silently late-dropped. Returns a fixture-like
+    dir whose ``events.parquet`` is a DIRECTORY holding ``half_0`` and
+    ``half_1`` — ``_replay_source`` streams it directly and leaves it in
+    place. Written once per session and fixture (cached on the session);
+    each half's write dir is removed once its file is renamed out."""
+    cache = getattr(spark, "_mda_update_stage", None)
+    if cache is None:
+        cache = {}
+        spark._mda_update_stage = cache
+    tag = _session_tag(sf_dir)
+    if tag not in cache:
+        root = tempfile.mkdtemp(prefix="mda_updstage_")
+        os.mkdir(f"{root}/events.parquet")
+        ev = _t(spark, sf_dir, "events")
+        lohi = ev.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).first()
+        cut = lohi.lo + (lohi.hi - lohi.lo) / 2
+        halves = [
+            ev.where(F.col("ts") < F.lit(cut)),
+            ev.where(~(F.col("ts") < F.lit(cut)) | F.col("ts").isNull()),
+        ]
+        for i, h in enumerate(halves):
+            tmp = tempfile.mkdtemp(prefix="mda_updtmp_")
+            h.coalesce(1).write.mode("overwrite").parquet(tmp)
+            part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
+            os.rename(os.path.join(tmp, part), f"{root}/events.parquet/half_{i}.parquet")
+            shutil.rmtree(tmp, ignore_errors=True)
+        cache[tag] = root
+    return cache[tag]
+
+
 def streaming_update_mode_agg(spark, sf_dir):
     """UPDATE output mode — the third streaming output contract (complete
     and append are certified elsewhere): each micro-batch emits only the
@@ -8761,32 +8681,6 @@ def streaming_update_mode_agg(spark, sf_dir):
     ``multibatch_ok`` pins that >= 2 micro-batches actually ran (a
     one-batch degenerate run would certify nothing about update mode);
     its 1-row scalar is a bounded broadcast crossJoin (BNL_OK)."""
-    import uuid
-
-    from mysql_data_anonymizer_spark.streaming.stream_ops import tumbling_aggregates
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    tag = _session_tag(sf_dir)
-    cache = getattr(spark, "_mda_update_stage", None)
-    if cache is None:
-        cache = {}
-        spark._mda_update_stage = cache
-    if tag not in cache:
-        stage = tempfile.mkdtemp(prefix="mda_updstage_")
-        ev = _t(spark, sf_dir, "events")
-        lohi = ev.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).first()
-        cut = lohi.lo + (lohi.hi - lohi.lo) / 2
-        halves = [
-            ev.where(F.col("ts") < F.lit(cut)),
-            ev.where(~(F.col("ts") < F.lit(cut)) | F.col("ts").isNull()),
-        ]
-        for i, h in enumerate(halves):
-            tmp = tempfile.mkdtemp(prefix="mda_updtmp_")
-            h.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            os.rename(os.path.join(tmp, part), os.path.join(stage, f"half_{i}.parquet"))
-        cache[tag] = stage
-    stage = cache[tag]
     outdir = tempfile.mkdtemp(prefix=f"mda_updout_{uuid.uuid4().hex[:6]}_")
 
     def sink(batch_df, batch_id: int) -> None:
@@ -8794,22 +8688,14 @@ def streaming_update_mode_agg(spark, sf_dir):
             "append"
         ).parquet(outdir)
 
-    with _stream_shuffle(spark):
-        stream = _ts_fix(
-            spark.readStream.schema(
-                spark.read.parquet(f"{sf_dir}/events.parquet").schema
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        agg = tumbling_aggregates(stream, window="30 minutes", watermark="30 minutes")
-        q = (
-            agg.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-    _await_stream(spark, q, name="streaming_update_mode_agg")
+    stream, stage = _replay_source(spark, _time_halves(spark, sf_dir), max_files=1)
+    agg = stream_ops.tumbling_aggregates(stream, window="30 minutes", watermark="30 minutes")
+    _replay_run(
+        spark, "streaming_update_mode_agg", stage,
+        lambda: stream_ops.start_bounded(
+            agg.writeStream.foreachBatch(sink).outputMode("update")
+        ),
+    )
     upd = spark.read.parquet(outdir)
     w = Window.partitionBy("window_start", "event_type").orderBy(F.desc("batch_id"))
     final = upd.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") == 1)
@@ -9043,53 +8929,13 @@ def streaming_stream_left_join(spark, sf_dir):
     watermarks in epoch millis), minus the delay. The strict '<' at the
     tie is pinned empirically by
     tests/test_streaming.py::test_left_outer_eviction_boundary."""
-    import uuid
-
-    from mysql_data_anonymizer_spark.streaming.stream_ops import (
-        stream_stream_left_join as _lo,
+    return _bounded_replay(
+        spark, _time_halves(spark, sf_dir), "streaming_stream_left_join",
+        lambda s: stream_ops.stream_stream_left_join(
+            s, "click", "view", within="10 minutes", watermark="30 minutes"
+        ),
+        sink="stream_louter", mode="append", max_files=1,
     )
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    tag = _session_tag(sf_dir)
-    cache = getattr(spark, "_mda_update_stage", None)
-    if cache is None:
-        cache = {}
-        spark._mda_update_stage = cache
-    if tag not in cache:
-        stage = tempfile.mkdtemp(prefix="mda_updstage_")
-        ev = _t(spark, sf_dir, "events")
-        lohi = ev.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).first()
-        cut = lohi.lo + (lohi.hi - lohi.lo) / 2
-        halves = [
-            ev.where(F.col("ts") < F.lit(cut)),
-            ev.where(~(F.col("ts") < F.lit(cut)) | F.col("ts").isNull()),
-        ]
-        for i, h in enumerate(halves):
-            tmp = tempfile.mkdtemp(prefix="mda_updtmp_")
-            h.coalesce(1).write.mode("overwrite").parquet(tmp)
-            part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-            os.rename(os.path.join(tmp, part), os.path.join(stage, f"half_{i}.parquet"))
-        cache[tag] = stage
-    stage = cache[tag]
-    with _stream_shuffle(spark):
-        stream = _ts_fix(
-            spark.readStream.schema(
-                spark.read.parquet(f"{sf_dir}/events.parquet").schema
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        joined = _lo(stream, "click", "view", within="10 minutes", watermark="30 minutes")
-        name = f"stream_louter_{uuid.uuid4().hex[:8]}"
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    _await_stream(spark, q, name="streaming_stream_left_join")
-    return spark.table(name)
 
 
 STREAMING_LEFT_JOIN_SQL = """
@@ -11248,46 +11094,6 @@ ORACLES["dedup_embedding_lsh_pairs"] = (
 QUERIES["dedup_embedding_lsh_pairs"] = dedup_embedding_lsh_pairs
 
 
-def _stage_stream_src(sf_dir: str, name: str, prefix: str) -> str:
-    """Stream-source staging: FileStreamSource wants a directory, and the
-    fixtures are single parquet FILES, so the file is symlinked into a tmp
-    dir. Scale slices (tools/scale_slope.py) write multi-file parquet
-    DIRECTORIES instead — the source doesn't recurse through a symlinked
-    subdirectory (it listed 0 files and the query silently emitted nothing,
-    r12), so a directory input is streamed directly."""
-    src = f"{sf_dir}/{name}.parquet"
-    if os.path.isdir(src):
-        return src
-    stage = tempfile.mkdtemp(prefix=prefix)
-    os.symlink(src, f"{stage}/{name}.parquet")
-    return stage
-
-
-def _spread_stream(stream_df: DataFrame, src_path: str) -> DataFrame:
-    """Stream-side twin of ``_spread`` (guide §2.2/§6): a FileStreamSource
-    micro-batch over ONE sub-split file is ONE task, so per-row map work
-    (here: shingle explosion over the document increment — measured 4.6 s
-    of the probe's 5.3 s running serially on a single core) executes with
-    zero parallelism inside the batch. Same size arithmetic and condition
-    as ``_spread``: only a source smaller than the scan split size is
-    repartitioned; at production scale the source is a multi-file
-    directory (est_splits >= parallelism) and this is a no-op — the
-    shuffle moves only the raw increment rows, before the explode
-    multiplies them."""
-    spark = stream_df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
-    m = re.match(r"(\d+)", raw)
-    max_split = int(m.group(1)) if m else 134217728
-    try:
-        est_splits = os.path.getsize(src_path) // max_split + 1
-    except OSError:
-        return stream_df
-    if est_splits < min(par, 8):
-        return stream_df.repartition(par)
-    return stream_df
-
-
 def streaming_dedup_index_probe(spark, sf_dir):
     """Streaming ingest probing the PERSISTED near-dup index — the
     crawl-pipeline synthesis of this round's index work with the streaming
@@ -11301,20 +11107,11 @@ def streaming_dedup_index_probe(spark, sf_dir):
     (same as streaming_static_enrich_agg); a production run bounds the
     aggregate's state with an arrival-time window or runs the per-batch
     filter in foreachBatch."""
-    import uuid
-
     pt, _st = _neardup_index(spark, sf_dir)
-    stage = _stage_stream_src(sf_dir, "documents", "mda_stream_ndidx_")
-    batch = spark.read.parquet(f"{sf_dir}/documents.parquet")
     post = spark.table(pt)
-    with _stream_shuffle(spark):
-        stream = _spread_stream(
-            spark.readStream.schema(batch.schema)
-            .parquet(stage)
-            .where(_inc_pred()),
-            f"{sf_dir}/documents.parquet",
-        )
-        sh = stream.select(
+
+    def build(stream):
+        sh = stream.where(_inc_pred()).select(
             "doc_id",
             F.explode(
                 dedup.shingle_expr(
@@ -11322,23 +11119,18 @@ def streaming_dedup_index_probe(spark, sf_dir):
                 )
             ).alias("sh"),
         ).where(F.col("sh") != "")
-        joined = sh.join(post, "sh")
         # streaming aggs forbid COUNT(DISTINCT ...); an exact distinct
         # count via collect_set is fine here — per-doc candidate sets are
         # bounded by (doc shingles x df cap)
-        agg = joined.groupBy("doc_id").agg(
+        return sh.join(post, "sh").groupBy("doc_id").agg(
             F.size(F.collect_set("corpus_id")).cast("long").alias("n_candidates")
         )
-        name = f"stream_ndidx_{uuid.uuid4().hex[:8]}"
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-    _await_stream(spark, q, name="streaming_dedup_index_probe")
-    return spark.table(name)
+
+    return _bounded_replay(
+        spark, sf_dir, "streaming_dedup_index_probe",
+        build,
+        sink="stream_ndidx", mode="complete", table="documents",
+    )
 
 
 STREAMING_INDEX_PROBE_SQL = r"""
@@ -11392,21 +11184,13 @@ def streaming_dedup_index_probe_wm(spark, sf_dir):
     streaming_dedup_then_window). Stream-static join against the
     persisted posting index stays stateless, exactly as in the
     sibling."""
-    import uuid
-
     pt, _st = _neardup_index(spark, sf_dir)
-    stage = _stage_stream_src(sf_dir, "documents", "mda_stream_ndidxwm_")
-    batch = spark.read.parquet(f"{sf_dir}/documents.parquet")
     post = spark.table(pt)
-    with _stream_shuffle(spark):
-        stream = _spread_stream(
-            spark.readStream.schema(batch.schema)
-            .parquet(stage)
-            .where(_inc_pred()),
-            f"{sf_dir}/documents.parquet",
-        )
+
+    def build(stream):
         sh = (
-            stream.select(
+            stream.where(_inc_pred())
+            .select(
                 "doc_id",
                 F.timestamp_seconds(
                     F.lit(_SDIP_WM_EPOCH) + F.coalesce(F.col("doc_id"), F.lit(0))
@@ -11420,22 +11204,18 @@ def streaming_dedup_index_probe_wm(spark, sf_dir):
             .where(F.col("sh") != "")
             .withWatermark("ts", f"{_SDIP_WM_DELAY_S} seconds")
         )
-        joined = sh.join(post, "sh")
-        agg = joined.groupBy(
+        return sh.join(post, "sh").groupBy(
             F.window("ts", f"{_SDIP_WM_WINDOW_S} seconds"), "doc_id"
         ).agg(
             F.size(F.collect_set("corpus_id")).cast("long").alias("n_candidates")
         )
-        name = f"stream_ndidxwm_{uuid.uuid4().hex[:8]}"
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-    _await_stream(spark, q, name="streaming_dedup_index_probe_wm")
-    return spark.table(name).select(
+
+    out = _bounded_replay(
+        spark, sf_dir, "streaming_dedup_index_probe_wm",
+        build,
+        sink="stream_ndidxwm", mode="append", table="documents",
+    )
+    return out.select(
         F.unix_timestamp(F.col("window.start")).cast("long").alias(
             "window_start_sec"
         ),
@@ -12142,6 +11922,20 @@ ORACLES["bootstrap_ci_events"] = _gen_bootstrap_sql()
 
 
 
+def _ewma_input(stream: DataFrame) -> DataFrame:
+    """The EWMA state machine's input: value as exact millionths, clamped
+    to +-4e12 (the batch operator's clamp, so the BIGINT weights cannot
+    overflow)."""
+    clamp = F.lit(4_000_000_000_000).cast("long")
+    vm = F.round(F.col("value") * F.lit(1000000.0), 0).cast("long")
+    return stream.select(
+        "user_id",
+        "ts",
+        "event_id",
+        F.greatest(F.least(vm, clamp), -clamp).alias("vm"),
+    )
+
+
 def streaming_ewma_user(spark, sf_dir):
     """Streaming per-user EWMA (streaming/stream_ops.py::stateful_user_ewma)
     — the stateful-streaming face of ewma_user_events, and the bounded-FIFO
@@ -12152,37 +11946,12 @@ def streaming_ewma_user(spark, sf_dir):
     Certification: bounded single-batch replay must equal the BATCH query's
     row for each user's LAST event (same clamp, same weights, same DIV) —
     update mode emits exactly one final row per user here."""
-    import uuid
-
-    from mysql_data_anonymizer_spark.streaming.stream_ops import stateful_user_ewma
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stage = tempfile.mkdtemp(prefix="mda_stream_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
-    clamp = F.lit(4_000_000_000_000).cast("long")
-    vm = F.round(F.col("value") * F.lit(1000000.0), 0).cast("long")
-    with _stream_shuffle(spark):
-        stream = _ts_fix(
-            spark.readStream.schema(spark.read.parquet(f"{sf_dir}/events.parquet").schema)
-            .parquet(stage)
-        )
-        prepared = stream.select(
-            "user_id",
-            "ts",
-            "event_id",
-            F.greatest(F.least(vm, clamp), -clamp).alias("vm"),
-        )
-        agg = stateful_user_ewma(prepared)
-        name = f"stream_ewma_{uuid.uuid4().hex[:8]}"
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-    _await_stream(spark, q, name="streaming_ewma_user")
-    return spark.table(name).select(
+    out = _bounded_replay(
+        spark, sf_dir, "streaming_ewma_user",
+        lambda s: stream_ops.stateful_user_ewma(_ewma_input(s)),
+        sink="stream_ewma", mode="update",
+    )
+    return out.select(
         "user_id", "n_events", "n_window", "ewma_millionths"
     )
 
@@ -12236,37 +12005,14 @@ def streaming_ewma_user_wm(spark, sf_dir):
     a user's final row is already in the sink — the streaming result
     still equals the batch EWMA oracle row-for-row, which is exactly what
     the driver asserts (same oracle SQL as the sibling)."""
-    import uuid
-
-    from mysql_data_anonymizer_spark.streaming.stream_ops import stateful_user_ewma
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stage = tempfile.mkdtemp(prefix="mda_stream_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{stage}/events.parquet")
-    clamp = F.lit(4_000_000_000_000).cast("long")
-    vm = F.round(F.col("value") * F.lit(1000000.0), 0).cast("long")
-    with _stream_shuffle(spark):
-        stream = _ts_fix(
-            spark.readStream.schema(spark.read.parquet(f"{sf_dir}/events.parquet").schema)
-            .parquet(stage)
-        )
-        prepared = stream.select(
-            "user_id",
-            "ts",
-            "event_id",
-            F.greatest(F.least(vm, clamp), -clamp).alias("vm"),
-        ).withWatermark("ts", "30 minutes")
-        agg = stateful_user_ewma(prepared, ttl_seconds=7200)
-        name = f"stream_ewma_wm_{uuid.uuid4().hex[:8]}"
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-    _await_stream(spark, q, name="streaming_ewma_user_wm")
-    return spark.table(name).select(
+    out = _bounded_replay(
+        spark, sf_dir, "streaming_ewma_user_wm",
+        lambda s: stream_ops.stateful_user_ewma(
+            _ewma_input(s).withWatermark("ts", "30 minutes"), ttl_seconds=7200
+        ),
+        sink="stream_ewma_wm", mode="update",
+    )
+    return out.select(
         "user_id", "n_events", "n_window", "ewma_millionths"
     )
 

@@ -289,18 +289,39 @@ def dedup_stream(
     )
 
 
-def run_to_memory(stream_df: DataFrame, name: str, timeout_s: int = 120) -> None:
-    """Drive a (bounded replay) stream to completion into a memory sink —
-    the test harness path: availableNow processes all existing files then
-    stops."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete" if _has_aggregate(stream_df) else "append")
-        .trigger(availableNow=True)
-        .start()
+def start_bounded(writer):
+    """Start a configured ``DataStreamWriter`` as a bounded replay: the
+    availableNow trigger processes every file present at start, in as many
+    micro-batches as the source's rate limit asks for, then stops."""
+    return writer.trigger(availableNow=True).start()
+
+
+def await_bounded(q, timeout_s: float, label: str) -> None:
+    """Wait for a bounded (availableNow) query to finish. A query still
+    active at the deadline is stopped and reported as a ``TimeoutError``
+    naming ``label`` — never left running with a partial sink."""
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {label!r} still active after {timeout_s} s; stopped"
+        )
+
+
+def run_to_memory(
+    stream_df: DataFrame, name: str, timeout_s: int = 120, *, mode: str | None = None
+):
+    """Drive a (bounded replay) stream to completion into a memory sink
+    named ``name`` and return the finished query: availableNow processes
+    all existing files then stops. ``mode`` is the output mode (default:
+    complete for an aggregate, append otherwise); a query still running
+    after ``timeout_s`` is stopped and raises ``TimeoutError``."""
+    if mode is None:
+        mode = "complete" if _has_aggregate(stream_df) else "append"
+    q = start_bounded(
+        stream_df.writeStream.format("memory").queryName(name).outputMode(mode)
     )
-    q.awaitTermination(timeout_s)
+    await_bounded(q, timeout_s, name)
+    return q
 
 
 def _has_aggregate(df: DataFrame) -> bool:

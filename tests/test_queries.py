@@ -3,6 +3,7 @@
 at sf0.001)."""
 
 import math
+import os
 
 import duckdb
 import pytest
@@ -151,6 +152,12 @@ NEW = [
     "knn_recall_report",
     "gopher_rules_docs",
     "kmeans_incremental_assign",
+    # bounded-replay harness: every file-stream query it runs
+    "streaming_jdbc_upsert_agg",
+    "streaming_stateful_user_totals",
+    "streaming_dedup_events",
+    "streaming_ewma_user",
+    "streaming_dedup_index_probe_wm",
 ]
 
 
@@ -164,18 +171,46 @@ def _norm(v):
         return str(v)
 
 
-@pytest.fixture(scope="module")
-def duck(sf_dir):
+def _duck_views(sf_dir):
     con = duckdb.connect()
     for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    return con
+
+
+@pytest.fixture(scope="module")
+def duck(sf_dir):
+    con = _duck_views(sf_dir)
     yield con
     con.close()
 
 
 @pytest.mark.parametrize("name", NEW)
 def test_query_matches_oracle(spark, sf_dir, duck, name):
+    _assert_matches_oracle(spark, sf_dir, duck, name)
+
+
+def test_stream_join_matches_oracle_at_sf0_01(spark, sf_dir):
+    """streaming_stream_join returns 0 rows at sf0.001 on both engines, so
+    its parity case runs on the sf0.01 fixtures, where clicks do meet
+    views within 10 minutes."""
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    con = _duck_views(sf01)
+    try:
+        n = _assert_matches_oracle(spark, sf01, con, "streaming_stream_join")
+    finally:
+        con.close()
+    assert n > 0
+
+
+def _assert_matches_oracle(spark, sf_dir, duck, name):
+    """Spark result == DuckDB oracle (sorted, normalized rows); returns the
+    row count. A streaming query must also leave its last micro-batch's
+    executed plan under its own registry key (what plan_audit reads)."""
+    getattr(spark, "_mda_stream_plans", {}).pop(name, None)
     sdf = Q.QUERIES[name](spark, sf_dir).toPandas()
+    if name.startswith("streaming_"):
+        assert name in getattr(spark, "_mda_stream_plans", {}), f"{name}: no harvested plan"
     odf = duck.execute(Q.ORACLES[name]).df()
     assert sorted(sdf.columns) == sorted(odf.columns)
     cols = sorted(sdf.columns)
@@ -183,6 +218,7 @@ def test_query_matches_oracle(spark, sf_dir, duck, name):
     o_rows = sorted(tuple(_norm(v) for v in row) for row in odf[cols].itertuples(index=False))
     assert len(s_rows) == len(o_rows), f"{name}: {len(s_rows)} vs {len(o_rows)} rows"
     assert s_rows == o_rows
+    return len(s_rows)
 
 
 def test_lateral_decorrelates_to_window_join(spark, sf_dir):

@@ -762,3 +762,35 @@ def test_stateful_ewma_fifo_state_across_batches(spark, tmp_path):
     vals = [(i + 1) * 1_000_000 for i in range(5, 25)]
     num = sum(v << i for i, v in enumerate(vals))
     assert got["ewma_millionths"] == num // ((1 << 20) - 1)
+
+
+def test_await_stream_deadline_stops_and_raises(spark):
+    """A stream still running at its deadline is stopped and reported by
+    its registry name — never left active behind a partial sink."""
+    from mysql_data_anonymizer_spark import queries as Q
+
+    q = (
+        spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+        .writeStream.format("memory").queryName("t_deadline_rate").start()
+    )
+    try:
+        with pytest.raises(TimeoutError, match="probe_unbounded"):
+            Q._await_stream(spark, q, 2, name="probe_unbounded")
+        assert not q.isActive
+    finally:
+        q.stop()
+
+
+def test_bounded_replays_leave_no_stage_dirs(spark, sf_dir):
+    """The replay harness removes the temp dirs it stages the fixture in."""
+    import os
+    import tempfile
+
+    from mysql_data_anonymizer_spark import queries as Q
+
+    tmp = tempfile.gettempdir()
+    before = set(os.listdir(tmp))
+    for name in ("streaming_tumbling_agg", "streaming_dedup_index_probe"):
+        Q.QUERIES[name](spark, sf_dir).count()
+    leaked = sorted(e for e in set(os.listdir(tmp)) - before if e.startswith("mda_stream"))
+    assert not leaked
