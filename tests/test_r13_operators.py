@@ -56,10 +56,11 @@ def test_cc_star_observation_signature_fixpoint(spark, caplog):
 
 
 # ---------------------------------------------------------------------------
-# knn_recall_report — r13 computes the seven per-method hit counts as
-# overlapped driver jobs (guide §2.6) and embeds recall_ok as literals (the
-# merge_equals_rebuild_ok precedent). The hash-locked contract must not
-# drift: same 7 methods, same floors, recall_ok TRUE at fixture scale.
+# knn_recall_report — r13 builds the seven per-method top-k frames as
+# overlapped driver jobs (guide §2.6); each hit count and its recall_ok
+# (``__h >= floor``) stay in the returned plan. The hash-locked contract
+# must not drift: same 7 methods, same floors, recall_ok TRUE at fixture
+# scale.
 # ---------------------------------------------------------------------------
 def test_knn_recall_report_rows_and_floors(spark):
     rows = {

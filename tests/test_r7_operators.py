@@ -106,7 +106,7 @@ def test_hashed_quality_case_and_whitespace_invariant(spark):
 # ---------------------------------------------------------------------------
 # pagerank integer fixpoint — hand-replayed tiny graph
 # ---------------------------------------------------------------------------
-def test_pagerank_integer_iteration_matches_hand_replay(spark):
+def test_pagerank_integer_iteration_matches_hand_replay(spark, tmp_path):
     # triangle 1-2-3 plus pair 4-5, replicated through the query's exact
     # integer recurrence in plain Python
     edges = [(1, 2), (2, 3), (1, 3), (4, 5)]
@@ -132,9 +132,7 @@ def test_pagerank_integer_iteration_matches_hand_replay(spark):
         [(i, a) for i, (a, b) in enumerate(edges) for a in (a, b)],
         "l_orderkey long, l_partkey long",
     )
-    import tempfile
-
-    d = tempfile.mkdtemp()
+    d = str(tmp_path)
     li.write.mode("overwrite").parquet(f"{d}/lineitem.parquet")
     out = Q.QUERIES["pagerank_copurchase_parts"](spark, d)
     got = {row["p_partkey"]: row for row in out.collect()}

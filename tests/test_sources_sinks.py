@@ -574,3 +574,77 @@ def test_hilbert_layout_prunes_both_dimensions(spark, tmp_path):
     assert h_cust < nf and h_price < nf
     assert h_price < s_price
     assert spark.read.parquet(dh).count() == od.count()
+
+
+def test_registry_scratch_lives_under_one_session_root(spark, sf_dir, tmp_path, monkeypatch):
+    """Staged and index dirs of registry queries live under ONE
+    ``$TMPDIR/mda_*`` root per session, memoized builds run once per
+    session and fixture, and the root is removed by the cleanup registered
+    with ``atexit``. Runs on a fresh session so the root is this test's."""
+    import inspect
+    import re
+    import tempfile
+    import types
+
+    from mysql_data_anonymizer_spark import queries as Q
+
+    src = inspect.getsource(Q)
+    assert src.count("tempfile.mkdtemp(") == inspect.getsource(Q._scratch).count(
+        "tempfile.mkdtemp("
+    ), "tempfile.mkdtemp outside _scratch"
+    assert set(re.findall(r'getattr\(spark, "(_mda_\w+)"', src)) == {"_mda_stream_plans"}
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    os.mkdir(tempfile.gettempdir())
+    cleanups = []
+    monkeypatch.setattr(
+        Q, "atexit", types.SimpleNamespace(register=lambda f, *a, **k: cleanups.append((f, a, k)))
+    )
+    s = spark.newSession()
+    for name in ["json_source_agg", "json_source_agg", "partition_pruned_orders_agg"]:
+        assert Q.QUERIES[name](s, sf_dir).collect()
+    [root_name] = os.listdir(tempfile.gettempdir())
+    root = os.path.join(tempfile.gettempdir(), root_name)
+    assert root_name.startswith("mda_")
+    before = set(os.listdir(root))
+    assert Q.QUERIES["partition_pruned_orders_agg"](s, sf_dir).collect()
+    assert set(os.listdir(root)) == before, "memoized partition layout was rebuilt"
+    assert Q.QUERIES["jdbc_roundtrip_agg"](s, sf_dir).collect()
+    assert os.listdir(tempfile.gettempdir()) == [root_name]
+
+    [(cleanup, args, kwargs)] = cleanups
+    cleanup(*args, **kwargs)
+    assert not os.path.exists(root)
+
+
+def test_scratch_root_is_made_once_under_concurrent_first_use(tmp_path, monkeypatch):
+    """Threads that reach ``_scratch`` at the same time on a session with no
+    root yet share one root and one exit cleanup."""
+    import sys
+    import tempfile
+    import threading
+    import types
+    from concurrent.futures import ThreadPoolExecutor
+
+    from mysql_data_anonymizer_spark import queries as Q
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    cleanups = []
+    monkeypatch.setattr(Q, "atexit", types.SimpleNamespace(register=lambda *a, **k: cleanups.append(a)))
+    session = types.SimpleNamespace()
+    start = threading.Barrier(16, timeout=30)
+
+    def first_use(i):
+        start.wait()
+        return Q._scratch(session, f"k{i}")
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=16) as pool:
+            dirs = list(pool.map(first_use, range(16)))
+    finally:
+        sys.setswitchinterval(old)
+    assert len(set(dirs)) == 16
+    assert {os.path.dirname(d) for d in dirs} == {str(tmp_path / name) for name in os.listdir(tmp_path)}
+    assert len(os.listdir(tmp_path)) == 1 and len(cleanups) == 1

@@ -788,9 +788,14 @@ def test_bounded_replays_leave_no_stage_dirs(spark, sf_dir):
 
     from mysql_data_anonymizer_spark import queries as Q
 
-    tmp = tempfile.gettempdir()
-    before = set(os.listdir(tmp))
+    # stage dirs live under the session's scratch root (Q._scratch)
+    root = os.path.dirname(Q._scratch(spark, "probe"))
+
+    def entries():
+        return set(os.listdir(tempfile.gettempdir())) | set(os.listdir(root))
+
+    before = entries()
     for name in ("streaming_tumbling_agg", "streaming_dedup_index_probe"):
         Q.QUERIES[name](spark, sf_dir).count()
-    leaked = sorted(e for e in set(os.listdir(tmp)) - before if e.startswith("mda_stream"))
+    leaked = sorted(e for e in entries() - before if e.startswith(("mda_stream", "stream_")))
     assert not leaked
