@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from mysql_data_anonymizer_spark.operators import bloom
+from mysql_data_anonymizer_spark.session import observed_metrics
 
 # sentinel: "caller did not choose a dot-product form" (distinct from an
 # explicit dim=None, which selects the compile-cheap higher-order form)
@@ -870,7 +871,7 @@ def connected_components(
         )
         labels = new.drop("__old")
         # same predicate the old probe filtered on; nonzero iff any label fell
-        if obs.get["improved"] == 0:
+        if observed_metrics(obs, "connected_components loop")["improved"] == 0:
             break
     else:
         # an unconverged result is otherwise indistinguishable from a
@@ -955,7 +956,7 @@ def connected_components_star(
             )
             .localCheckpoint()
         )
-        row = obs.get
+        row = observed_metrics(obs, "connected_components_star loop")
         sig = (row["c"], row["s"])
         if sig == prev_sig:
             break

@@ -977,7 +977,25 @@ def ivf_indexed_topk(
     probed_cells = sorted(
         {r["cell"] for r in q.select("cell").distinct().collect()}
     )
-    corpus = spark.table(table).where(F.col("cell").isin(probed_cells))
+    return probed_topk(spark, table, q, probed_cells, k, id_col, vec_col, dim)
+
+
+def probed_topk(
+    spark,
+    table: str,
+    q: DataFrame,
+    cells: list,
+    k: int = 5,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    dim: int | None = DEFAULT_DIM,
+) -> tuple[DataFrame, DataFrame]:
+    """Exact re-rank inside the probed cells of a persisted inverted file:
+    read ``table`` with a LITERAL ``cell IN (cells)`` predicate (static
+    partition pruning), pair each probed query row of ``q`` (``query_id``,
+    ``__qv``, ``__qn``, ``cell``) with its cell's vectors, exact cosine,
+    (score, id) tie-broken top-k. Returns ``(topk, pruned_scan)``."""
+    corpus = spark.table(table).where(F.col("cell").isin(cells))
     c = corpus.select(
         "cell",
         F.col(id_col).alias("neighbor_id"),

@@ -50,6 +50,7 @@ from mysql_data_anonymizer_spark.operators import (
 )
 from mysql_data_anonymizer_spark.sources import files
 from mysql_data_anonymizer_spark.plans.compiler import compile_plan
+from mysql_data_anonymizer_spark.session import observed_metrics
 from mysql_data_anonymizer_spark.streaming import stream_ops
 
 SEED = 42
@@ -4880,111 +4881,136 @@ def knn_brute_force(spark, sf_dir):
     return similarity.brute_force_topk(emb, queries, k=5, dim=None)
 
 
-def knn_lsh(spark, sf_dir):
-    """Multi-table sign-LSH ANN, driver-verifiable via the exact-twin +
-    accuracy-gate pattern: approximate results are engine-specific, so the
-    FINAL columns are the exact brute-force top-k twin (same oracle as
-    knn_brute_force) plus ``recall_ok`` — a per-query gate asserting the LSH
-    path recovered >= 3 of the 5 true neighbors (measured recall is 1.0 per
-    query at sf0.001/0.01/0.1; 8 tables x 4 bits, multiprobe). A recall
-    regression turns the driver row red instead of unverifiable."""
-    emb = _t(spark, sf_dir, "embeddings")
+# per-method certified recall floors over the 25 true (query, neighbor)
+# pairs (5 queries x k=5): the ONE place a floor is written — every
+# _certified_knn gate and every knn_recall_report row reads it. matmul is
+# the exact path: anything below 25/25 is a correctness bug. Measured hits
+# across sf0.001/0.01/0.1 in the comments.
+_KNN_RECALL_FLOORS = {
+    "matmul": 25,
+    "lsh": 15,  # knn_lsh gates per query: >= 15 // 5 = 3 of 5; measured 5/5
+    "ivf": 13,  # measured 19-23/25 (seeded-sample centroids)
+    "pq": 13,  # measured 21-25/25 (m=8, k_codes=32, refine=32)
+    "sq8": 20,  # measured 25/25 (refine=8)
+    "ivfpq": 12,  # measured 19-25/25
+    # persisted-Lloyd-model IVF (knn_ivf_kmeans_indexed): exact-integer
+    # cells from the even-half Lloyd model (4 at fixture scale), nprobe =
+    # n_cells/2; floor from measured sf0.001/0.01/0.1 minima 18-22 (r12)
+    "ivf_kmeans": 13,
+}
+
+
+def _knn_ivfpq(spark, sf_dir, emb, queries):
+    cents, books = _ann_models(spark, sf_dir, emb)
+    return similarity.ivfpq_topk(
+        emb, queries, k=5, n_cells=16, nprobe=8, k_codes=32, refine=32,
+        centroids=cents, codebooks=books,
+    )
+
+
+# one top-k builder per method, (spark, sf_dir, emb, queries) -> rows with
+# query_id/neighbor_id; keyed like _KNN_RECALL_FLOORS. "matmul" is the
+# exact path and builds every certification's exact twin. dim=None /
+# score_dim=None -> HOF dot for candidate scoring (bit-identical; saves
+# ~1.4 s Catalyst compile on this bounded certification corpus). The
+# trained IVF/PQ models come memoized from _ann_models.
+_KNN_METHODS = {
+    "matmul": lambda spark, sf_dir, emb, q: similarity.matmul_topk(emb, q, k=5),
+    "lsh": lambda spark, sf_dir, emb, q: similarity.lsh_topk(
+        emb, q, k=5, score_dim=None
+    ),
+    "ivf": lambda spark, sf_dir, emb, q: similarity.ivf_topk(
+        emb, q, k=5, nprobe=8, dim=None,
+        centroids=_ann_models(spark, sf_dir, emb)[0],
+    ),
+    "pq": lambda spark, sf_dir, emb, q: similarity.pq_topk(
+        emb, q, k=5, k_codes=32, refine=32,
+        codebooks=_ann_models(spark, sf_dir, emb)[1],
+    ),
+    "sq8": lambda spark, sf_dir, emb, q: similarity.sq8_topk(
+        emb, q, k=5, refine=8
+    ),
+    "ivfpq": _knn_ivfpq,
+    "ivf_kmeans": lambda spark, sf_dir, emb, q: _kmeans_ivf_probe(
+        spark, sf_dir, q, k=5
+    )[0],
+}
+if _KNN_METHODS.keys() != _KNN_RECALL_FLOORS.keys():
+    raise RuntimeError(
+        "knn method table and _KNN_RECALL_FLOORS disagree: methods "
+        f"{list(_KNN_METHODS)} vs floors {list(_KNN_RECALL_FLOORS)}"
+    )
+
+
+def _certified_knn(spark, sf_dir, method, emb=None, approx=None, *,
+                   per_query=False, **gates):
+    """Exact-twin + accuracy-gate certification for an ANN ``method``:
+    approximate results are engine-specific, so the FINAL columns are the
+    exact top-k twin (the knn_brute_force oracle) plus ``recall_ok`` — the
+    approx rows recover at least ``_KNN_RECALL_FLOORS[method]`` of the 25
+    true pairs, as a bounded 1-row broadcast crossJoin (plan_audit BNL_OK)
+    — then one literal boolean column per keyword in ``gates`` (the
+    caller's plan gates), in order. ``per_query`` gates each query at
+    ``floor // 5`` of its 5 neighbors instead, through a left join on
+    ``query_id``. ``approx`` defaults to the method table's builder; a
+    caller passing its own also passes the ``emb`` it was built from, so
+    the corpus is read once."""
+    if emb is None:
+        emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    # exact twin via the BLAS matmul path — value-identical to
-    # brute_force_topk (asserted in tests and by the shared oracle) but
-    # ~3x cheaper, so certification cost stays bounded
-    # the exact twin is consumed TWICE in the final plan (output rows +
-    # the broadcast hit count): pin the 25-row top-k so the matmul Python
-    # stage executes once, not once per consumer (the r12 triangle
-    # pinned-edge discipline; measured ~1.1-1.2x per knn query at sf0.1)
-    exact = similarity.matmul_topk(emb, queries, k=5).localCheckpoint(
+    if approx is None:
+        approx = _KNN_METHODS[method](spark, sf_dir, emb, queries)
+    # the exact twin (the BLAS matmul path: value-identical to
+    # brute_force_topk, ~3x cheaper) is consumed TWICE in the final plan
+    # (output rows + the broadcast hit count): pin the 25-row top-k so the
+    # matmul Python stage executes once, not once per consumer (the r12
+    # triangle pinned-edge discipline; measured ~1.1-1.2x per knn query at
+    # sf0.1)
+    exact = _KNN_METHODS["matmul"](spark, sf_dir, emb, queries).localCheckpoint(
         eager=True
     )
-    # score_dim=None -> HOF dot for candidate scoring (bit-identical; saves
-    # ~1.4 s Catalyst compile on this bounded certification corpus)
-    approx = similarity.lsh_topk(emb, queries, k=5, score_dim=None).select(
-        "query_id", "neighbor_id"
+    hits = exact.join(
+        approx.select("query_id", "neighbor_id"),
+        ["query_id", "neighbor_id"],
+        "left_semi",
     )
-    hits = exact.join(approx, ["query_id", "neighbor_id"], "left_semi").groupBy(
-        "query_id"
-    ).agg(F.count(F.lit(1)).alias("__hits"))
-    return (
-        exact.join(F.broadcast(hits), "query_id", "left")
-        .withColumn("recall_ok", F.coalesce(F.col("__hits"), F.lit(0)) >= 3)
-        .select("query_id", "neighbor_id", "cosine", "rank", "recall_ok")
-    )
+    floor = _KNN_RECALL_FLOORS[method]
+    if per_query:
+        hits = hits.groupBy("query_id").agg(F.count(F.lit(1)).alias("__hits"))
+        out = exact.join(F.broadcast(hits), "query_id", "left").withColumn(
+            "recall_ok", F.coalesce(F.col("__hits"), F.lit(0)) >= floor // 5
+        )
+    else:
+        hits = hits.agg(F.count(F.lit(1)).alias("__hits"))
+        out = exact.crossJoin(F.broadcast(hits)).withColumn(
+            "recall_ok", F.col("__hits") >= floor
+        )
+    for name, ok in gates.items():
+        out = out.withColumn(name, F.lit(bool(ok)))
+    return out.select("query_id", "neighbor_id", "cosine", "rank", "recall_ok", *gates)
+
+
+def knn_lsh(spark, sf_dir):
+    """Multi-table sign-LSH ANN (8 tables x 4 bits, multiprobe), certified
+    PER QUERY: each of the 5 queries must recover its share of the lsh
+    floor (measured recall 1.0 per query at sf0.001/0.01/0.1)."""
+    return _certified_knn(spark, sf_dir, "lsh", per_query=True)
 
 
 def knn_ivf(spark, sf_dir):
-    """IVF ANN (16 trained cells, nprobe=8), driver-verifiable the same way
-    as knn_lsh: exact brute-force twin columns + ``recall_ok``, here a
-    GLOBAL gate (hits >= 13 of 25 true pairs = recall >= 0.52; measured
-    0.76-0.92 across sf0.001/0.01/0.1) because IVF recall is per-query
-    noisier — centroids come from a seeded sample whose content shifts with
-    partition layout. The 1-row hit count is a bounded broadcast crossJoin
-    (plan_audit BNL_OK)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    # exact twin via the BLAS matmul path — value-identical to
-    # brute_force_topk (asserted in tests and by the shared oracle) but
-    # ~3x cheaper, so certification cost stays bounded
-    # the exact twin is consumed TWICE in the final plan (output rows +
-    # the broadcast hit count): pin the 25-row top-k so the matmul Python
-    # stage executes once, not once per consumer (the r12 triangle
-    # pinned-edge discipline; measured ~1.1-1.2x per knn query at sf0.1)
-    exact = similarity.matmul_topk(emb, queries, k=5).localCheckpoint(
-        eager=True
-    )
-    # dim=None -> HOF dot for probed-cell scoring (bit-identical; saves
-    # ~1.4 s Catalyst compile on this bounded certification corpus)
-    approx = similarity.ivf_topk(
-        emb, queries, k=5, nprobe=8, dim=None,
-        centroids=_ann_models(spark, sf_dir, emb)[0],
-    ).select("query_id", "neighbor_id")
-    hits = exact.join(approx, ["query_id", "neighbor_id"], "left_semi").agg(
-        F.count(F.lit(1)).alias("__hits")
-    )
-    return (
-        exact.crossJoin(F.broadcast(hits))
-        .withColumn("recall_ok", F.col("__hits") >= 13)
-        .select("query_id", "neighbor_id", "cosine", "rank", "recall_ok")
-    )
+    """IVF ANN (16 trained cells, nprobe=8), certified by a GLOBAL recall
+    gate because IVF recall is per-query noisier — centroids come from a
+    seeded sample whose content shifts with partition layout."""
+    return _certified_knn(spark, sf_dir, "ivf")
 
 
 def knn_pq(spark, sf_dir):
     """Product-quantization / ADC ANN (similarity.pq_topk — Jegou et al.
     2011), the memory-bounded billion-scale path: corpus rows are scored by
     m table lookups over 1-byte codes, and only a tiny candidate set is
-    re-ranked with true cosine. Driver-verified like knn_lsh/knn_ivf:
-    FINAL columns are the exact brute-force twin + a GLOBAL ``recall_ok``
-    gate (hits >= 13 of 25 true pairs = recall >= 0.52; measured 21-25/25
-    across sf0.001/0.01/0.1 with m=8, k_codes=32, refine=32, and
-    partition-invariant under shuffle-partitions 5 vs 31). The 1-row hit
-    count is a bounded broadcast crossJoin (plan_audit BNL_OK)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    # exact twin via the BLAS matmul path — value-identical to
-    # brute_force_topk (asserted in tests and by the shared oracle) but
-    # ~3x cheaper, so certification cost stays bounded
-    # the exact twin is consumed TWICE in the final plan (output rows +
-    # the broadcast hit count): pin the 25-row top-k so the matmul Python
-    # stage executes once, not once per consumer (the r12 triangle
-    # pinned-edge discipline; measured ~1.1-1.2x per knn query at sf0.1)
-    exact = similarity.matmul_topk(emb, queries, k=5).localCheckpoint(
-        eager=True
-    )
-    approx = similarity.pq_topk(
-        emb, queries, k=5, k_codes=32, refine=32,
-        codebooks=_ann_models(spark, sf_dir, emb)[1],
-    ).select("query_id", "neighbor_id")
-    hits = exact.join(approx, ["query_id", "neighbor_id"], "left_semi").agg(
-        F.count(F.lit(1)).alias("__hits")
-    )
-    return (
-        exact.crossJoin(F.broadcast(hits))
-        .withColumn("recall_ok", F.col("__hits") >= 13)
-        .select("query_id", "neighbor_id", "cosine", "rank", "recall_ok")
-    )
+    re-ranked with true cosine. Global recall gate; partition-invariant
+    under shuffle-partitions 5 vs 31."""
+    return _certified_knn(spark, sf_dir, "pq")
 
 
 def knn_sq8(spark, sf_dir):
@@ -4992,32 +5018,9 @@ def knn_sq8(spark, sf_dir):
     ScalarQuantizer shape): one uint8 per dimension, 4x memory/scan-I/O cut,
     candidates scored from DECODED CODES only (two fused numpy ops + one
     BLAS matmul per Arrow batch), exact re-rank of the tiny candidate set.
-    The middle rung between raw-float matmul and PQ/ADC. Same certification
-    contract as knn_pq: FINAL columns are the exact brute-force twin + a
-    GLOBAL ``recall_ok`` gate (hits >= 20 of 25 true pairs; measured 25/25
-    across sf0.001/0.01/0.1 with refine=8 — SQ8's quantization error is a
-    fraction of PQ's, so the margin is wide). The 1-row hit count is a
-    bounded broadcast crossJoin (plan_audit BNL_OK)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    # the exact twin is consumed TWICE in the final plan (output rows +
-    # the broadcast hit count): pin the 25-row top-k so the matmul Python
-    # stage executes once, not once per consumer (the r12 triangle
-    # pinned-edge discipline; measured ~1.1-1.2x per knn query at sf0.1)
-    exact = similarity.matmul_topk(emb, queries, k=5).localCheckpoint(
-        eager=True
-    )
-    approx = similarity.sq8_topk(emb, queries, k=5, refine=8).select(
-        "query_id", "neighbor_id"
-    )
-    hits = exact.join(approx, ["query_id", "neighbor_id"], "left_semi").agg(
-        F.count(F.lit(1)).alias("__hits")
-    )
-    return (
-        exact.crossJoin(F.broadcast(hits))
-        .withColumn("recall_ok", F.col("__hits") >= 20)
-        .select("query_id", "neighbor_id", "cosine", "rank", "recall_ok")
-    )
+    The middle rung between raw-float matmul and PQ/ADC; SQ8's quantization
+    error is a fraction of PQ's, so its global floor is the highest."""
+    return _certified_knn(spark, sf_dir, "sq8")
 
 
 def knn_matmul(spark, sf_dir):
@@ -6169,6 +6172,16 @@ SELECT query_id, neighbor_id, cosine, rank FROM (
 """
 
 
+def _gen_certified_knn_sql(*gates: str) -> str:
+    """Oracle of a _certified_knn query: the exact top-k plus a TRUE
+    literal for ``recall_ok`` and for each named plan gate."""
+    flags = "".join(f", TRUE AS {g}" for g in gates)
+    return (
+        "SELECT query_id, neighbor_id, cosine, rank, TRUE AS recall_ok"
+        f"{flags} FROM ({_gen_knn_sql(5)}) t"
+    )
+
+
 def _gen_decon_semantic_sql(threshold: float = 0.4) -> str:
     return f"""
 WITH b AS (SELECT embedding AS be, GREATEST(sqrt({_sql_dot('embedding', 'embedding')}), 1e-12) AS bn
@@ -6248,28 +6261,16 @@ ORACLES["dedup_simhash"] = (
     "SELECT id_a, id_b, hamming, TRUE AS exactdup_ok, TRUE AS pair_ratio_ok "
     f"FROM ({_gen_simhash_md5_sql(3, 15)}) t"
 )
-ORACLES["knn_lsh"] = (
-    "SELECT query_id, neighbor_id, cosine, rank, TRUE AS recall_ok "
-    f"FROM ({_gen_knn_sql(5)}) t"
-)
-ORACLES["knn_ivf"] = (
-    "SELECT query_id, neighbor_id, cosine, rank, TRUE AS recall_ok "
-    f"FROM ({_gen_knn_sql(5)}) t"
-)
+ORACLES["knn_lsh"] = _gen_certified_knn_sql()
+ORACLES["knn_ivf"] = _gen_certified_knn_sql()
 QUERIES["decontaminate_semantic_embeddings"] = decontaminate_semantic_embeddings
 ORACLES["decontaminate_semantic_embeddings"] = _gen_decon_semantic_sql(0.4)
 QUERIES["dedup_chunks_reconstruct"] = dedup_chunks_reconstruct
 ORACLES["dedup_chunks_reconstruct"] = DEDUP_CHUNKS_SQL
 QUERIES["knn_pq"] = knn_pq
-ORACLES["knn_pq"] = (
-    "SELECT query_id, neighbor_id, cosine, rank, TRUE AS recall_ok "
-    f"FROM ({_gen_knn_sql(5)}) t"
-)
+ORACLES["knn_pq"] = _gen_certified_knn_sql()
 QUERIES["knn_sq8"] = knn_sq8
-ORACLES["knn_sq8"] = (
-    "SELECT query_id, neighbor_id, cosine, rank, TRUE AS recall_ok "
-    f"FROM ({_gen_knn_sql(5)}) t"
-)
+ORACLES["knn_sq8"] = _gen_certified_knn_sql()
 
 QUERIES["mask_faker_profile"] = mask_faker_profile
 from mysql_data_anonymizer_spark.functions.faker_adapter import HAS_FAKER as _HAS_FAKER  # noqa: E402
@@ -8343,40 +8344,12 @@ def knn_ivfpq(spark, sf_dir):
     read per row (m code lookups), exact re-rank restores precision — the
     multiplicative combination that is THE deployed billion-scale
     configuration. Certified like the rest of the quantized-ANN ladder
-    (knn_lsh/knn_ivf/knn_pq/knn_sq8): FINAL columns are the exact
-    brute-force twin + a GLOBAL ``recall_ok`` gate (hits >= 12 of 25 true
-    pairs; measured 19-20/25 across sf0.001/0.01/0.1 with n_cells=16,
-    nprobe=8, k_codes=32, refine=32). The 1-row hit count is a bounded
-    broadcast crossJoin (plan_audit BNL_OK)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 5)
-    cents, books = _ann_models(spark, sf_dir, emb)
-    # the exact twin is consumed TWICE in the final plan (output rows +
-    # the broadcast hit count): pin the 25-row top-k so the matmul Python
-    # stage executes once, not once per consumer (the r12 triangle
-    # pinned-edge discipline; measured ~1.1-1.2x per knn query at sf0.1)
-    exact = similarity.matmul_topk(emb, queries, k=5).localCheckpoint(
-        eager=True
-    )
-    approx = similarity.ivfpq_topk(
-        emb, queries, k=5, n_cells=16, nprobe=8, k_codes=32, refine=32,
-        centroids=cents, codebooks=books,
-    ).select("query_id", "neighbor_id")
-    hits = exact.join(approx, ["query_id", "neighbor_id"], "left_semi").agg(
-        F.count(F.lit(1)).alias("__hits")
-    )
-    return (
-        exact.crossJoin(F.broadcast(hits))
-        .withColumn("recall_ok", F.col("__hits") >= 12)
-        .select("query_id", "neighbor_id", "cosine", "rank", "recall_ok")
-    )
+    (knn_lsh/knn_ivf/knn_pq/knn_sq8) by a global recall gate."""
+    return _certified_knn(spark, sf_dir, "ivfpq")
 
 
 QUERIES["knn_ivfpq"] = knn_ivfpq
-ORACLES["knn_ivfpq"] = (
-    "SELECT query_id, neighbor_id, cosine, rank, TRUE AS recall_ok "
-    f"FROM ({_gen_knn_sql(5)}) t"
-)
+ORACLES["knn_ivfpq"] = _gen_certified_knn_sql()
 
 
 def dp_bounded_sum_events(spark, sf_dir):
@@ -10655,28 +10628,23 @@ QUERIES["bpe_encode_docs"] = bpe_encode_docs
 ORACLES["bpe_encode_docs"] = _gen_bpe_encode_sql()
 
 
-def _ivf_scan_pruned(plan: str, table: str, n_cells: int) -> bool:
-    """Certify static partition pruning from an executed-plan string: locate
-    the scan node that reads ``table`` (anchored — a multi-scan plan's LAST
-    PartitionFilters may belong to a different scan), parse the literal
-    ``cell INSET`` value list out of ITS PartitionFilters, and require the
-    probed-cell count to be nonzero and STRICTLY below the trained centroid
-    count — an INSET that enumerates every cell prunes nothing (r8 ADVICE:
-    the old gate checked only substring presence after the last anchor)."""
+def _probed_cells(plan: str, table: str) -> set[int] | None:
+    """The literal ``cell`` values an executed-plan string's scan of
+    ``table`` reads, or None when they cannot be certified. The scan node
+    is located by ``table`` (anchored — a multi-scan plan's LAST
+    PartitionFilters may belong to a different scan, r8 ADVICE) and its
+    PartitionFilters value list parsed."""
     idx = plan.find(table)
     if idx < 0:
-        return False
-    seg = plan[idx:]
-    m = re.search(r"PartitionFilters:\s*\[([^\]]*)\]", seg)
-    if not m:
-        return False
+        return None
+    m = re.search(r"PartitionFilters:\s*\[([^\]]*)\]", plan[idx:])
     # Fail closed on simpleString truncation: past
     # spark.sql.debug.maxToStringFields (default 25) the INSET value list
     # is cut and '... N more fields' appended, so a full-enumeration INSET
-    # on a >25-cell index would parse as a small set and falsely pass the
+    # on a >25-cell index would parse as a small set and falsely pass a
     # strictly-fewer-than-n_cells gate (r9 ADVICE).
-    if "more fields" in m.group(1):
-        return False
+    if not m or "more fields" in m.group(1):
+        return None
     # Catalyst renders the literal predicate as `INSET v1,v2,...` past
     # spark.sql.optimizer.inSetConversionThreshold (10) and as
     # `IN (v1,v2,...)` below it — a small-nprobe probe (knn_ivf_kmeans_
@@ -10685,9 +10653,18 @@ def _ivf_scan_pruned(plan: str, table: str, n_cells: int) -> bool:
         r"INSET\s+((?:-?\d+,)*-?\d+)|IN\s+\(((?:-?\d+,)*-?\d+)\)", m.group(1)
     )
     if not lit:
-        return False
-    probed = {int(v) for v in (lit.group(1) or lit.group(2)).split(",")}
-    return 0 < len(probed) < n_cells
+        return None
+    return {int(v) for v in (lit.group(1) or lit.group(2)).split(",")}
+
+
+def _ivf_scan_pruned(plan: str, table: str, n_cells: int) -> bool:
+    """Certify static partition pruning from an executed-plan string: the
+    scan of ``table`` probes a nonzero number of cells STRICTLY below the
+    trained centroid count — an INSET that enumerates every cell prunes
+    nothing (r8 ADVICE: the old gate checked only substring presence
+    after the last anchor)."""
+    probed = _probed_cells(plan, table)
+    return probed is not None and 0 < len(probed) < n_cells
 
 
 def knn_ivf_indexed(spark, sf_dir):
@@ -10702,8 +10679,7 @@ def knn_ivf_indexed(spark, sf_dir):
     scans every row per run to assign cells; the index prunes the SCAN,
     which is the entire IVF point at 100 TB. Values are identical to
     ivf_topk with the same centroids/nprobe (unit-asserted), so the
-    certification is the knn_ivf pattern: exact matmul twin + global
-    ``recall_ok`` (hits >= 13 of 25; same measured 0.76-0.92 recall)."""
+    recall gate is knn_ivf's (same floor, same measured recall)."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
     cents = _ann_models(spark, sf_dir, emb)[0]
@@ -10722,30 +10698,10 @@ def knn_ivf_indexed(spark, sf_dir):
     # name STRICTLY FEWER cells than the trained centroid count — "every
     # partition listed" is a scan, not a prune
     pruned = _ivf_scan_pruned(plan, tbl, n_cells=len(cents))
-    # the exact twin is consumed TWICE in the final plan (output rows +
-    # the broadcast hit count): pin the 25-row top-k so the matmul Python
-    # stage executes once, not once per consumer (the r12 triangle
-    # pinned-edge discipline; measured ~1.1-1.2x per knn query at sf0.1)
-    exact = similarity.matmul_topk(emb, queries, k=5).localCheckpoint(
-        eager=True
-    )
-    hits = exact.join(
-        approx.select("query_id", "neighbor_id"),
-        ["query_id", "neighbor_id"],
-        "left_semi",
-    ).agg(F.count(F.lit(1)).alias("__hits"))
-    return (
-        exact.crossJoin(F.broadcast(hits))
-        .withColumn("recall_ok", F.col("__hits") >= 13)
-        .withColumn("pruned_ok", F.lit(bool(pruned)))
-        .select("query_id", "neighbor_id", "cosine", "rank", "recall_ok", "pruned_ok")
-    )
+    return _certified_knn(spark, sf_dir, "ivf", emb, approx, pruned_ok=pruned)
 
 
-ORACLES["knn_ivf_indexed"] = (
-    "SELECT query_id, neighbor_id, cosine, rank, TRUE AS recall_ok, "
-    f"TRUE AS pruned_ok FROM ({_gen_knn_sql(5)}) t"
-)
+ORACLES["knn_ivf_indexed"] = _gen_certified_knn_sql("pruned_ok")
 QUERIES["knn_ivf_indexed"] = knn_ivf_indexed
 
 
@@ -12550,7 +12506,7 @@ def observed_dq_gate_orders(spark, sf_dir):
         _dbl(F.sum(_dec("o_totalprice", 30, 2))).alias("total_price"),
     )
     rows = agg.collect()  # ONE action: drives the scan AND fills the observation
-    m = obs.get
+    m = observed_metrics(obs, "observed_dq_gate_orders")
     out = spark.createDataFrame(rows, agg.schema)
     return out.select(
         "o_orderstatus",
@@ -13375,7 +13331,7 @@ def _kcore_impl(spark, sf_dir, broadcast_alive=True):
             .observe(obs, F.count(F.lit(1)).alias("n"))
             .localCheckpoint(eager=True)
         )
-        n_new = obs.get["n"]
+        n_new = observed_metrics(obs, "kcore peel loop")["n"]
         fixed = n_alive is not None and n_new == n_alive
         alive, n_alive = new_alive, n_new
         if fixed:
@@ -13820,7 +13776,6 @@ def _kmeans_ivf_probe(spark, sf_dir, queries, k=5, nprobe=None, table=None):
     probe = d.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= nprobe)
     # bounded collect: |Q| x nprobe ints (the ANN query-set contract)
     probed_cells = sorted({int(r["cid"]) for r in probe.select("cid").collect()})
-    corpus = spark.table(tbl).where(F.col("cell").isin(probed_cells))
     q = queries.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("__qv"),
@@ -13829,35 +13784,7 @@ def _kmeans_ivf_probe(spark, sf_dir, queries, k=5, nprobe=None, table=None):
         probe.select(F.col("vec_id").alias("query_id"), F.col("cid").alias("cell")),
         "query_id",
     )
-    c = corpus.select(
-        "cell",
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("__cv"),
-        similarity.norm_expr("embedding", None).alias("__cn"),
-    )
-    pairs = c.join(F.broadcast(q), "cell").where(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    scored = (
-        pairs.withColumn(
-            "cosine",
-            F.round(
-                similarity.dot_expr("__qv", "__cv", None)
-                / (F.col("__qn") * F.col("__cn")),
-                4,
-            ),
-        )
-        .select("query_id", "neighbor_id", "cosine")
-        .distinct()
-    )
-    wk = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    topk = (
-        scored.withColumn("rank", F.row_number().over(wk).cast("long"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    topk, corpus = similarity.probed_topk(spark, tbl, q, probed_cells, k=k, dim=None)
     return topk, corpus, int(n_cells), int(nprobe)
 
 
@@ -13888,63 +13815,26 @@ def knn_ivf_kmeans_indexed(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
     approx, scan, n_cells, nprobe = _kmeans_ivf_probe(spark, sf_dir, queries, k=5)
-    plan = _plan_str_full(scan)
-    idx = plan.find(_kmeans_ivf_index(spark, sf_dir))
-    mpf = re.search(r"PartitionFilters:\s*\[([^\]]*)\]", plan[idx:]) if idx >= 0 else None
-    lit = (
-        re.search(
-            r"INSET\s+((?:-?\d+,)*-?\d+)|IN\s+\(((?:-?\d+,)*-?\d+)\)",
-            mpf.group(1),
-        )
-        if mpf and "more fields" not in mpf.group(1)
-        else None
-    )
-    probed = (
-        {int(v) for v in (lit.group(1) or lit.group(2)).split(",")} if lit else None
-    )
+    probed = _probed_cells(_plan_str_full(scan), _kmeans_ivf_index(spark, sf_dir))
     bounded = (
         probed is not None
         and 0 < len(probed) <= 5 * nprobe
         and nprobe < n_cells
     )
-    # the exact twin is consumed TWICE in the final plan (output rows +
-    # the broadcast hit count): pin the 25-row top-k so the matmul Python
-    # stage executes once, not once per consumer (the r12 triangle
-    # pinned-edge discipline; measured ~1.1-1.2x per knn query at sf0.1)
-    exact = similarity.matmul_topk(emb, queries, k=5).localCheckpoint(
-        eager=True
-    )
-    hits = exact.join(
-        approx.select("query_id", "neighbor_id"),
-        ["query_id", "neighbor_id"],
-        "left_semi",
-    ).agg(F.count(F.lit(1)).alias("__hits"))
-    full = _plan_str_full(
-        approx.select("query_id", "neighbor_id")
-    )
+    full = _plan_str_full(approx.select("query_id", "neighbor_id"))
     emb_scans = [
         ln for ln in full.splitlines()
         if "FileScan" in ln and "embeddings.parquet" in ln
     ]
     model_reused = all("LessThan(vec_id,5)" in ln for ln in emb_scans)
-    return (
-        exact.crossJoin(F.broadcast(hits))
-        .withColumn(
-            "recall_ok", F.col("__hits") >= _KNN_RECALL_FLOORS["ivf_kmeans"]
-        )
-        .withColumn("probe_bounded_ok", F.lit(bool(bounded)))
-        .withColumn("model_reused_ok", F.lit(bool(model_reused)))
-        .select(
-            "query_id", "neighbor_id", "cosine", "rank",
-            "recall_ok", "probe_bounded_ok", "model_reused_ok",
-        )
+    return _certified_knn(
+        spark, sf_dir, "ivf_kmeans", emb, approx,
+        probe_bounded_ok=bounded, model_reused_ok=model_reused,
     )
 
 
-ORACLES["knn_ivf_kmeans_indexed"] = (
-    "SELECT query_id, neighbor_id, cosine, rank, TRUE AS recall_ok, "
-    "TRUE AS probe_bounded_ok, TRUE AS model_reused_ok "
-    f"FROM ({_gen_knn_sql(5)}) t"
+ORACLES["knn_ivf_kmeans_indexed"] = _gen_certified_knn_sql(
+    "probe_bounded_ok", "model_reused_ok"
 )
 QUERIES["knn_ivf_kmeans_indexed"] = knn_ivf_kmeans_indexed
 
@@ -14047,75 +13937,29 @@ def knn_ivf_kmeans_append(spark, sf_dir):
     with ThreadPoolExecutor(max_workers=2) as _pool:
         _fp, _fg = _pool.submit(_probe), _pool.submit(_gate)
         approx, merge_ok = _fp.result(), _fg.result()
-    # the exact twin is consumed TWICE in the final plan (output rows +
-    # the broadcast hit count): pin the 25-row top-k so the matmul Python
-    # stage executes once, not once per consumer (the r12 triangle
-    # pinned-edge discipline; measured ~1.1-1.2x per knn query at sf0.1)
-    exact = similarity.matmul_topk(emb, queries, k=5).localCheckpoint(
-        eager=True
-    )
-    hits = exact.join(
-        approx.select("query_id", "neighbor_id"),
-        ["query_id", "neighbor_id"],
-        "left_semi",
-    ).agg(F.count(F.lit(1)).alias("__hits"))
-    return (
-        exact.crossJoin(F.broadcast(hits))
-        .withColumn(
-            "recall_ok", F.col("__hits") >= _KNN_RECALL_FLOORS["ivf_kmeans"]
-        )
-        .withColumn("merge_equals_rebuild_ok", F.lit(bool(merge_ok)))
-        .select(
-            "query_id", "neighbor_id", "cosine", "rank",
-            "recall_ok", "merge_equals_rebuild_ok",
-        )
+    return _certified_knn(
+        spark, sf_dir, "ivf_kmeans", emb, approx, merge_equals_rebuild_ok=merge_ok
     )
 
 
-ORACLES["knn_ivf_kmeans_append"] = (
-    "SELECT query_id, neighbor_id, cosine, rank, TRUE AS recall_ok, "
-    "TRUE AS merge_equals_rebuild_ok "
-    f"FROM ({_gen_knn_sql(5)}) t"
-)
+ORACLES["knn_ivf_kmeans_append"] = _gen_certified_knn_sql("merge_equals_rebuild_ok")
 QUERIES["knn_ivf_kmeans_append"] = knn_ivf_kmeans_append
-
-
-# per-method certified recall floors over the 25 true (query, neighbor)
-# pairs (5 queries x k=5) — the SAME floors the individual knn_* gates
-# enforce, centralized so the report and the gates cannot drift apart.
-# matmul is the exact path: anything below 25/25 is a correctness bug.
-_KNN_RECALL_FLOORS = {
-    "matmul": 25,
-    "lsh": 15,  # per-query >= 3/5 in knn_lsh; 5 queries -> >= 15 global
-    "ivf": 13,
-    "pq": 13,
-    "sq8": 20,
-    "ivfpq": 12,
-    # persisted-Lloyd-model IVF (knn_ivf_kmeans_indexed): exact-integer
-    # cells from the even-half Lloyd model (4 at fixture scale), nprobe =
-    # n_cells/2; floor from measured sf0.001/0.01/0.1 minima 18-22 (r12)
-    "ivf_kmeans": 13,
-}
 
 
 def knn_recall_report(spark, sf_dir):
     """Quantified-recall certification for the WHOLE ANN family in one
-    registry row per method (r10 verdict item 4): each method's top-k is
-    recomputed against the exact matmul oracle and its certified recall
-    floor is hash-locked — a recall regression in ANY method turns this
-    single driver row red, the way ``keyed_join_ok``/``prefix_pruned_ok``
-    lock plan shapes.
+    registry row per method of the knn method table (r10 verdict item 4):
+    each method's top-k is recomputed against the exact matmul oracle and
+    its certified recall floor is hash-locked — a recall regression in ANY
+    method turns this single driver row red, the way
+    ``keyed_join_ok``/``prefix_pruned_ok`` lock plan shapes.
 
     What is hash-locked and what is documented: the certified floors
-    (13/25 IVF and PQ, 12/25 IVFPQ, 20/25 SQ8, 15/25 LSH, 25/25 exact
-    matmul) and the per-method ``recall_ok`` against them. RAW hit counts
-    stay OUT of the hashed contract deliberately: the IVF/PQ trainers
-    sample through partition-layout-dependent paths (see knn_ivf —
-    "centroids come from a seeded sample whose content shifts with
-    partition layout"), so raw hits are reproducible within a session but
-    not an engine-portable constant. Measured at the fixture scales:
-    ivf 19-23/25, pq 21-25/25, sq8 25/25, lsh 25/25, ivfpq 19-25/25
-    across sf0.001/0.01/0.1 — all comfortably above their floors.
+    (_KNN_RECALL_FLOORS, with their measured hits) and the per-method
+    ``recall_ok`` against them. RAW hit counts stay OUT of the hashed
+    contract deliberately: the IVF/PQ trainers sample through
+    partition-layout-dependent paths (see knn_ivf), so raw hits are
+    reproducible within a session but not an engine-portable constant.
 
     Scale shape: the 25-row exact pair set is checkpointed once and
     semi-joined against each method's (bounded, k x queries) result; each
@@ -14127,54 +13971,37 @@ def knn_recall_report(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
     exact = (
-        similarity.matmul_topk(emb, queries, k=5)
+        _KNN_METHODS["matmul"](spark, sf_dir, emb, queries)
         .select("query_id", "neighbor_id")
         .localCheckpoint(eager=True)  # 25 rows, reused by every method
     )
     # trained models are shared by ivf/pq/ivfpq: materialize the memoized
-    # artifacts BEFORE the pool so no two threads race the trainer
-    cents, books = _ann_models(spark, sf_dir, emb)
-    builders = {
-        # the exact pair set IS matmul_topk's output (projected to the two
-        # join columns above) — reuse the checkpoint instead of executing
-        # the identical matmul pipeline a second time (guide §1.2: don't
-        # compute things you throw away); hits stay 25/25 by identity
-        "matmul": lambda: exact,
-        "lsh": lambda: similarity.lsh_topk(emb, queries, k=5, score_dim=None),
-        "ivf": lambda: similarity.ivf_topk(
-            emb, queries, k=5, nprobe=8, dim=None, centroids=cents
-        ),
-        "pq": lambda: similarity.pq_topk(
-            emb, queries, k=5, k_codes=32, refine=32, codebooks=books
-        ),
-        "sq8": lambda: similarity.sq8_topk(emb, queries, k=5, refine=8),
-        "ivfpq": lambda: similarity.ivfpq_topk(
-            emb, queries, k=5, n_cells=16, nprobe=8, k_codes=32, refine=32,
-            centroids=cents, codebooks=books,
-        ),
-        # the persisted-Lloyd-model IVF (one trainer for clustering + ANN,
-        # r11 verdict item 4) — its floor regressing flips this row red
-        # exactly like the standalone knn_ivf_kmeans_indexed gate. Its
-        # memoized index/centroid builders are thread-confined: no other
-        # method touches them.
-        "ivf_kmeans": lambda: _kmeans_ivf_probe(spark, sf_dir, queries, k=5)[0],
-    }
+    # artifacts BEFORE the pool so no two threads race the trainer (the
+    # ivf_kmeans index/centroid builders are thread-confined: no other
+    # method touches them)
+    _ann_models(spark, sf_dir, emb)
 
     # Each method's CONSTRUCTION runs driver-side actions (5-row query
     # collects, trainer/model reads, the kmeans-IVF probe's window +
-    # bounded cell collect) that previously serialized one after another
-    # on the driver before the single union action even started. Build the
-    # seven method DataFrames overlapped from a thread pool (guide §2.6 —
-    # the r12 lsh_pairs/semdedup pattern, fourth application; one worker
-    # per method since each is a small bounded job-chain whose cost is
-    # mostly dispatch + straggler tail). The RETURNED plan is unchanged:
-    # the same union of seven in-plan semi-join hit aggregates as before —
-    # only the construction-time serialization moved.
+    # bounded cell collect). Build the seven method DataFrames overlapped
+    # from a thread pool (guide §2.6; one worker per method since each is
+    # a small bounded job-chain whose cost is mostly dispatch + straggler
+    # tail). The pool changes construction only: the returned plan is one
+    # union of seven in-plan semi-join hit aggregates.
     from concurrent.futures import ThreadPoolExecutor
 
     def _build(m: str):
+        # a job description set here reaches the jobs this thread starts
+        # only because each Python thread runs on its own JVM thread
+        # (PYSPARK_PIN_THREAD, the default in Spark 4.x)
         spark.sparkContext.setJobDescription(f"knn_recall_report: build {m}")
-        return builders[m]()
+        # the exact pair set IS matmul's output (projected to the two join
+        # columns above) — reuse the checkpoint instead of executing the
+        # identical matmul pipeline a second time (guide §1.2); hits stay
+        # 25/25 by identity
+        if m == "matmul":
+            return exact
+        return _KNN_METHODS[m](spark, sf_dir, emb, queries)
 
     methods = list(_KNN_RECALL_FLOORS)
     with ThreadPoolExecutor(max_workers=len(methods)) as _pool:

@@ -11,7 +11,8 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import Observation, SparkSession
 
 
 @dataclass
@@ -102,3 +103,32 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# Observation.get waits on the JVM side with Duration.Inf (Spark 4.1.2):
+# metrics whose action never ran, or never reported, would block the
+# driver forever. `observed_metrics` waits this long, then raises.
+OBSERVATION_TIMEOUT_S = 600.0
+
+
+def observed_metrics(obs: Observation, label: str) -> dict:
+    """``obs.get`` with a deadline: wait up to ``OBSERVATION_TIMEOUT_S`` for
+    the observed metrics, then raise ``TimeoutError`` naming ``label`` (the
+    loop or query reading them) instead of hanging."""
+    if obs._jo is not None:  # never observed: obs.get raises its own error
+        jvm = obs._jvm
+        at_most = jvm.scala.concurrent.duration.Duration.apply(
+            int(OBSERVATION_TIMEOUT_S * 1000),
+            jvm.java.util.concurrent.TimeUnit.MILLISECONDS,
+        )
+        try:
+            jvm.scala.concurrent.Await.ready(obs._jo.future(), at_most)
+        except Py4JJavaError as e:
+            name = e.java_exception.getClass().getName()
+            if name != "java.util.concurrent.TimeoutException":
+                raise
+            raise TimeoutError(
+                f"{label}: observed metrics not reported within "
+                f"{OBSERVATION_TIMEOUT_S:g} s"
+            ) from None
+    return obs.get

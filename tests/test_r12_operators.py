@@ -112,6 +112,15 @@ def test_ivf_scan_pruned_parses_in_and_inset():
     )
     # wrong table anchor
     assert not Q._ivf_scan_pruned(tpl.format(pf="cell#2L IN (0,2)"), "other", 8)
+    # the shared parser behind both IVF plan gates
+    assert Q._probed_cells(tpl.format(pf="cell#2L IN (0,2,4)"), "ivftbl") == {0, 2, 4}
+    assert Q._probed_cells(
+        tpl.format(pf="cell#2L INSET 0,1,2,3,4,5,6,7,8,9,10"), "ivftbl"
+    ) == set(range(11))
+    assert Q._probed_cells(
+        tpl.format(pf="cell#2L IN (0,2), ... 4 more fields"), "ivftbl"
+    ) is None
+    assert Q._probed_cells(tpl.format(pf="cell#2L IN (0,2)"), "other") is None
 
 
 # ---------------------------------------------------------------------------

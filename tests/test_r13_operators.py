@@ -1,10 +1,11 @@
 """Round-13 (optimization round 2) tests: guards for the operator internals
 the r13 optimizations changed — the Observation-fused connected-components
-convergence probe and the thread-pooled knn_recall_report."""
+convergence probe and its read deadline, and the knn recall floors."""
 
 import logging
 
-from pyspark.sql import Window
+import pytest
+from pyspark.sql import Observation, Window
 from pyspark.sql import functions as F
 
 from mysql_data_anonymizer_spark import queries as Q
@@ -56,26 +57,44 @@ def test_cc_star_observation_signature_fixpoint(spark, caplog):
 
 
 # ---------------------------------------------------------------------------
-# knn_recall_report — r13 builds the seven per-method top-k frames as
-# overlapped driver jobs (guide §2.6); each hit count and its recall_ok
-# (``__h >= floor``) stay in the returned plan. The hash-locked contract
-# must not drift: same 7 methods, same floors, recall_ok TRUE at fixture
-# scale.
+# _KNN_RECALL_FLOORS is the only place a knn recall floor is written: raising
+# one method's floor above the 25 true pairs (and above 5 per query) must
+# turn every recall_ok of each query gated on that method False.
 # ---------------------------------------------------------------------------
-def test_knn_recall_report_rows_and_floors(spark):
-    rows = {
-        r["method"]: r
-        for r in Q.QUERIES["knn_recall_report"](
-            spark, "/root/testdata/sf0.001"
-        ).collect()
-    }
-    assert set(rows) == set(Q._KNN_RECALL_FLOORS)
-    for m, floor in Q._KNN_RECALL_FLOORS.items():
-        r = rows[m]
-        assert r["certified_floor_hits"] == floor
-        assert r["true_pairs"] == 25 and r["k"] == 5
-        assert r["floor_recall_millionths"] == 1_000_000 * floor // 25
-        assert r["recall_ok"] is True, (m, r)
+@pytest.mark.parametrize(
+    "query,method",
+    [
+        ("knn_lsh", "lsh"),
+        ("knn_ivf", "ivf"),
+        ("knn_pq", "pq"),
+        ("knn_sq8", "sq8"),
+        ("knn_ivfpq", "ivfpq"),
+        ("knn_ivf_indexed", "ivf"),
+        ("knn_ivf_kmeans_indexed", "ivf_kmeans"),
+        ("knn_ivf_kmeans_append", "ivf_kmeans"),
+    ],
+)
+def test_knn_floor_drift_turns_recall_ok_false(spark, sf_dir, monkeypatch, query, method):
+    monkeypatch.setitem(Q._KNN_RECALL_FLOORS, method, 30)
+    rows = Q.QUERIES[query](spark, sf_dir).collect()
+    assert len(rows) == 25
+    assert {r["recall_ok"] for r in rows} == {False}
+
+
+# ---------------------------------------------------------------------------
+# Observation deadline: an observation whose action never runs must raise
+# TimeoutError naming its reader instead of blocking in Observation.get.
+# ---------------------------------------------------------------------------
+def test_observed_metrics_raises_instead_of_hanging(spark, monkeypatch):
+    from mysql_data_anonymizer_spark import session
+
+    obs = Observation()
+    df = spark.range(3).observe(obs, F.count(F.lit(1)).alias("n"))  # no action
+    monkeypatch.setattr(session, "OBSERVATION_TIMEOUT_S", 1.0)
+    with pytest.raises(TimeoutError, match="stalled loop"):
+        session.observed_metrics(obs, "stalled loop")
+    df.collect()
+    assert session.observed_metrics(obs, "stalled loop") == {"n": 3}
 
 
 # ---------------------------------------------------------------------------

@@ -92,10 +92,11 @@ BNL_OK: set[str] = {
     # skew report: the per-key table crossJoins BROADCAST 1-row stats —
     # q11 threshold class
     "skew_report_lineitem",
-    # knn_lsh / knn_ivf embed the brute-force exact twin (same bounded
-    # broadcast theta join as knn_brute_force) for their recall gate; knn_ivf
-    # and dedup_simhash additionally crossJoin 1-row broadcast gate
-    # aggregates — bounded by construction, same class as q11's threshold
+    # knn_lsh / knn_ivf / knn_pq / knn_sq8 certify against a pinned 25-row
+    # exact twin (matmul_topk: mapInPandas against a broadcast query block)
+    # for their recall gate; the global-gate ones and dedup_simhash
+    # crossJoin 1-row broadcast gate aggregates — bounded by construction,
+    # same class as q11's threshold
     "knn_lsh",
     "knn_ivf",
     "knn_pq",
@@ -131,8 +132,8 @@ BNL_OK: set[str] = {
     # r8 — ccnet prod twin: SAME 1-row vocab/cutoff scalars as the base
     # query (the LM count tables themselves are keyed SMJs, gate-asserted)
     "ccnet_perplexity_buckets_prod",
-    # knn_ivf_indexed embeds the brute-force exact twin + the 1-row hit
-    # count gate — same bounded-broadcast class as knn_ivf
+    # knn_ivf_indexed certifies against the same pinned matmul_topk exact
+    # twin + the 1-row hit count gate — same bounded-broadcast class as knn_ivf
     "knn_ivf_indexed",
     # hard negatives: corpus streams against the BROADCAST anchor set with
     # a (!= id AND label-differs) theta condition — knn_brute_force class
