@@ -60,6 +60,10 @@ HEXD = "0123456789abcdef"
 _log = logging.getLogger(__name__)
 _STREAM_HARVEST_WARNED = False
 _REPLAY_DEADLINE_S = 180
+# Parallelism the small-input remedies size for: _spread repartitions a
+# scan with fewer splits than min(cores, cap), and a bounded replay opens
+# min(cores, cap) state partitions (_stream_shuffle).
+_PARALLELISM_CAP = 8
 
 
 def _await_stream(spark, q, timeout_s: int = _REPLAY_DEADLINE_S, *, name: str) -> None:
@@ -128,7 +132,7 @@ def _spread(df: DataFrame, path: str) -> DataFrame:
         est_splits = os.path.getsize(path) // max_split + 1
     except OSError:  # directory input etc. — assume the source splits fine
         return df
-    if est_splits < min(par, 8):
+    if est_splits < min(par, _PARALLELISM_CAP):
         return df.repartition(par)
     return df
 
@@ -212,16 +216,21 @@ def _plan_str_full(df: DataFrame) -> str:
 
 
 @contextlib.contextmanager
-def _stream_shuffle(spark, n: int = 8):
-    """Pin streaming state partitioning for the duration of query START.
+def _stream_shuffle(spark):
+    """Pin streaming state partitioning for the duration of query START to
+    ``min(defaultParallelism, _PARALLELISM_CAP)``: one state partition per
+    core, at most 8.
 
     Stateful operators allocate one state store per shuffle partition and
     the count is FROZEN into the checkpoint at start — AQE never coalesces
     it. A real streaming deployment therefore sizes this per job (state
     volume / target task size), instead of inheriting the batch session
-    default; 32 nearly-empty state stores measured 2.4x the wall-clock of 8
-    on the bounded replays here. The previous value is restored afterwards
-    so batch queries are unaffected."""
+    default; every store is opened and committed per micro-batch, so
+    stores beyond the core count only queue (32 nearly-empty stores
+    measured 2.4x the wall-clock of 8; SCALE.md "Streaming floor
+    decomposition" has the 8 -> cores A/B). The previous value is
+    restored afterwards so batch queries are unaffected."""
+    n = min(spark.sparkContext.defaultParallelism, _PARALLELISM_CAP)
     old = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
@@ -246,6 +255,9 @@ def _replay_source(
     directory is streamed directly. events get ``_ts_fix``; other tables
     get ``_spread``, which works on streams too: a micro-batch over one
     sub-split file is ONE task, so per-row map work would run serially.
+    The batch schema costs a Spark job to infer, so it is inferred once per
+    session and source, keyed on the source's mtime: a rewritten file or
+    directory is inferred afresh.
 
     Returns ``(stream, stage)``; ``stage`` is the temp dir created here
     (``None`` for a directory source), removed by ``_replay_run``."""
@@ -253,7 +265,12 @@ def _replay_source(
     # registry on the caller's own session
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     src = f"{sf_dir}/{table}.parquet"
-    reader = spark.readStream.schema(spark.read.parquet(src).schema)
+    schema = _memo(
+        spark,
+        ("replay_schema", src, os.stat(src).st_mtime_ns),
+        lambda: spark.read.parquet(src).schema,
+    )
+    reader = spark.readStream.schema(schema)
     if max_files is not None:
         reader = reader.option("maxFilesPerTrigger", max_files)
     stage = None
@@ -269,12 +286,12 @@ def _replay_source(
 
 def _replay_run(spark, name: str, stage: str | None, start: Callable) -> None:
     """Run half of a bounded file replay: ``start()`` launches the writer
-    under 8 state partitions (``_stream_shuffle``) and returns its query,
-    which is awaited with the deadline and its executed plan harvested
-    under the registry ``name``; the source half's ``stage`` dir is then
-    removed, whatever the outcome. (A memory-sink ``start`` has already
-    waited inside ``stream_ops.run_to_memory``; the wait here then returns
-    at once.)"""
+    under one state partition per core, at most 8 (``_stream_shuffle``),
+    and returns its query, which is awaited with the deadline and its
+    executed plan harvested under the registry ``name``; the source half's
+    ``stage`` dir is then removed, whatever the outcome. (A memory-sink
+    ``start`` has already waited inside ``stream_ops.run_to_memory``; the
+    wait here then returns at once.)"""
     try:
         with _stream_shuffle(spark):
             q = start()
@@ -13614,7 +13631,12 @@ def _kmeans_centroid_index(spark, sf_dir):
     split) and the FINAL-USED centroids (K x 64 BIGINT millionths) are
     written to parquet — the trained-model artifact a warehouse reuses
     across every later crawl (the _neardup_index / _drift_count_index /
-    ivf-index pattern applied to clustering)."""
+    ivf-index pattern applied to clustering).
+
+    Returns ``(path, cdf, k)``: the model's parquet path, ONE DataFrame
+    over it that every reader shares, and its cell count K — known when
+    the model is written, so warm callers neither re-read nor count the
+    model."""
     def _build():
         base = _t(spark, sf_dir, "embeddings").where(_base_pred("vec_id"))
         _assign, _prev, cents = _lloyd_loop(
@@ -13625,7 +13647,7 @@ def _kmeans_centroid_index(spark, sf_dir):
             [(cid, vec) for cid, vec in sorted(cents.items())],
             "cid long, cq array<bigint>",
         ).write.mode("overwrite").parquet(path)
-        return path
+        return path, spark.read.parquet(path), len(cents)
 
     return _memo(spark, ("kmeans_idx", _session_tag(sf_dir)), _build)
 
@@ -13654,8 +13676,7 @@ def kmeans_incremental_assign(spark, sf_dir):
 
     Same exact-integer discipline as kmeans_lloyd_embeddings (clamped
     millionth quantization, BIGINT distances, (dist2, cid) tiebreak)."""
-    idx_path = _kmeans_centroid_index(spark, sf_dir)
-    cdf = spark.read.parquet(idx_path)
+    cdf = _kmeans_centroid_index(spark, sf_dir)[1]
     inc = _kmeans_quantize(
         _t(spark, sf_dir, "embeddings").where(_inc_pred("vec_id"))
     )
@@ -13725,7 +13746,7 @@ def _kmeans_ivf_index(spark, sf_dir):
     tag = _session_tag(sf_dir)
 
     def _build():
-        cdf = spark.read.parquet(_kmeans_centroid_index(spark, sf_dir))
+        cdf = _kmeans_centroid_index(spark, sf_dir)[1]
         emb = _t(spark, sf_dir, "embeddings")
         cells = _kmeans_assign(_kmeans_quantize(emb), cdf).select(
             "vec_id", F.col("cluster").alias("cell")
@@ -13759,10 +13780,9 @@ def _kmeans_ivf_probe(spark, sf_dir, queries, k=5, nprobe=None, table=None):
     ``table`` overrides the probed inverted file (the incrementally
     APPENDED index in knn_ivf_kmeans_append)."""
     tbl = table if table is not None else _kmeans_ivf_index(spark, sf_dir)
-    cdf = spark.read.parquet(_kmeans_centroid_index(spark, sf_dir))
-    n_cells = cdf.count()  # bounded: the K-row model artifact
+    _path, cdf, n_cells = _kmeans_centroid_index(spark, sf_dir)
     if nprobe is None:
-        nprobe = max(1, int(n_cells) // 2)
+        nprobe = max(1, n_cells // 2)
     qq = _kmeans_quantize(queries)
     d = qq.crossJoin(F.broadcast(cdf)).select(
         "vec_id",
@@ -13785,7 +13805,7 @@ def _kmeans_ivf_probe(spark, sf_dir, queries, k=5, nprobe=None, table=None):
         "query_id",
     )
     topk, corpus = similarity.probed_topk(spark, tbl, q, probed_cells, k=k, dim=None)
-    return topk, corpus, int(n_cells), int(nprobe)
+    return topk, corpus, n_cells, int(nprobe)
 
 
 def knn_ivf_kmeans_indexed(spark, sf_dir):
@@ -13854,7 +13874,7 @@ def _kmeans_ivf_index_appended(spark, sf_dir):
     tag = _session_tag(sf_dir)
 
     def _build():
-        cdf = spark.read.parquet(_kmeans_centroid_index(spark, sf_dir))
+        cdf = _kmeans_centroid_index(spark, sf_dir)[1]
         emb = _t(spark, sf_dir, "embeddings")
         tbl = f"kmivfapp_{tag}"
         base_cells = _kmeans_assign(

@@ -281,8 +281,8 @@ def test_kmeans_incremental_assign_index_reused_and_gated(spark, sf_dir):
     # increment = odd vec_ids only
     assert all(r["vec_id"] % 2 == 1 for r in rows1)
     # memoized model: the second call reuses the SAME parquet path
-    p1 = Q._kmeans_centroid_index(spark, sf_dir)
-    p2 = Q._kmeans_centroid_index(spark, sf_dir)
+    p1 = Q._kmeans_centroid_index(spark, sf_dir)[0]
+    p2 = Q._kmeans_centroid_index(spark, sf_dir)[0]
     assert p1 == p2
     # assignments agree with a direct assignment against the stored model
     cdf = spark.read.parquet(p1)

@@ -142,7 +142,7 @@ def test_knn_ivf_kmeans_indexed_gates(spark):
     import pyspark.sql.functions as F  # noqa: PLC0415
 
     cdf = spark.read.parquet(
-        Q._kmeans_centroid_index(spark, "/root/testdata/sf0.001")
+        Q._kmeans_centroid_index(spark, "/root/testdata/sf0.001")[0]
     )
     model_cids = {int(r["cid"]) for r in cdf.collect()}
     tbl = Q._kmeans_ivf_index(spark, "/root/testdata/sf0.001")

@@ -4,6 +4,9 @@ Streams are bounded replays of the events fixture (file source +
 availableNow trigger) so results are deterministic and comparable to batch.
 """
 
+import json
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -799,3 +802,99 @@ def test_bounded_replays_leave_no_stage_dirs(spark, sf_dir):
         Q.QUERIES[name](spark, sf_dir).count()
     leaked = sorted(e for e in entries() - before if e.startswith(("mda_stream", "stream_")))
     assert not leaked
+
+
+def _drain_listener_bus(spark):
+    """Wait until every queued listener event (job status, streaming
+    progress) has been delivered, so counts read after it are complete."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["streaming_tumbling_agg", "streaming_mask_pseudonymize", "streaming_dedup_then_window"],
+)
+def test_replay_result_invariant_to_state_partition_count(spark, sf_dir, monkeypatch, name):
+    """One state partition and the per-core default give the same rows:
+    the state partition count is a speed knob, never a result knob
+    (streaming_dedup_then_window chains two stateful operators)."""
+    from mysql_data_anonymizer_spark import queries as Q
+
+    default = sorted(map(repr, Q.QUERIES[name](spark, sf_dir).collect()))
+    monkeypatch.setattr(Q, "_PARALLELISM_CAP", 1)
+    single = sorted(map(repr, Q.QUERIES[name](spark, sf_dir).collect()))
+    assert default and single == default
+
+
+def test_replay_state_stores_follow_the_cores(spark, sf_dir):
+    """A bounded replay opens one state store per core (at most the cap)
+    and leaves the session's shuffle partition count as it found it."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from mysql_data_anonymizer_spark import queries as Q
+
+    progress = []
+
+    class Listener(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            progress.append(json.loads(event.progress.json))
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    listener = Listener()
+    spark.streams.addListener(listener)
+    try:
+        Q.QUERIES["streaming_tumbling_agg"](spark, sf_dir).count()
+        _drain_listener_bus(spark)
+    finally:
+        spark.streams.removeListener(listener)
+    stores = [
+        op["numStateStoreInstances"]
+        for p in progress
+        if (p["name"] or "").startswith("stream_agg_")
+        for op in p.get("stateOperators") or []
+    ]
+    want = min(spark.sparkContext.defaultParallelism, Q._PARALLELISM_CAP)
+    assert stores and set(stores) == {want}, stores
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_replay_schema_inferred_once_per_session_and_file(spark, tmp_path):
+    """The replay source infers a file's batch schema with one Spark job on
+    first use, reuses it while the file is unchanged, and infers again once
+    the file is rewritten."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mysql_data_anonymizer_spark import queries as Q
+
+    sc = spark.sparkContext
+    path = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+
+    def replay_jobs(group):
+        sc.setJobGroup(group, group)
+        try:
+            stream, stage = Q._replay_source(spark, str(tmp_path), table="t")
+            shutil.rmtree(stage)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        _drain_listener_bus(spark)
+        return len(sc.statusTracker().getJobIdsForGroup(group)), stream.columns
+
+    assert replay_jobs("replay_schema_first") == (1, ["a"])
+    assert replay_jobs("replay_schema_again") == (0, ["a"])
+    mtime = path.stat().st_mtime_ns
+    pq.write_table(pa.table({"a": [1], "b": ["x"]}), path)
+    os.utime(path, ns=(mtime + 10**9, mtime + 10**9))
+    assert replay_jobs("replay_schema_rewritten") == (1, ["a", "b"])
