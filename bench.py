@@ -1,5 +1,6 @@
-"""Benchmark runner: headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Benchmark runner: every registry query, in registry (file) order, at
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 fixtures) on local[$SPARK_GRAFT_CPUS].
+`--queries a,b,c` times only those registry queries.
 
 Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
@@ -9,6 +10,7 @@ Prints ONE JSON line:
 from __future__ import annotations
 
 import json
+import logging
 import os
 import re
 import sys
@@ -18,266 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from mysql_data_anonymizer_spark.session import get_spark  # noqa: E402
 
-HEADLINE = [
-    # masking engine
-    "mask_static",
-    "mask_row_template",
-    "mask_generator_email",
-    "mask_global_where",
-    "mask_chain_fields",
-    "mask_unique_uuid",
-    "mask_guarded",
-    "mask_synchro_remap",
-    "mask_generator_profile",
-    "mask_faker_profile",
-    "mask_run_report",
-    "mask_report_synchro_cascade",
-    "mask_plan_manifest",
-    "k_anonymity_audit_customers",
-    "enforce_k_anonymity_customers",
-    "synthesize_marginals_customers",
-    "dp_noised_counts_customers",
-    "dp_bounded_sum_events",
-    "l_diversity_audit_customers",
-    "t_closeness_audit_customers",
-    "rtbf_forget_cascade",
-    "crypto_shred_rtbf",
-    "mask_generalize_customers",
-    "suppress_small_groups",
-    # relational
-    "q1_pricing_summary",
-    "q3_top_revenue_orders",
-    "q5_nation_revenue",
-    "q6_forecast_revenue",
-    "q14_promo_revenue",
-    "q18_large_orders",
-    "q4_order_priority",
-    "q17_small_quantity_revenue",
-    "q22_idle_rich_customers",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q10_returned_items",
-    "q13_order_distribution",
-    "q15_top_supplier",
-    "q16_supplier_part_counts",
-    "q19_disjunctive_revenue",
-    "q21_waiting_suppliers",
-    "q2_min_cost_supplier",
-    "q20_volume_share_suppliers",
-    "unpivot_lineitem_charges",
-    "q9_profit_by_nation_year",
-    "q11_important_nations",
-    "q12_priority_by_linestatus",
-    "stats_corr_qty_price",
-    "histogram_totalprice",
-    "ntile_deciles_acctbal",
-    "timeseries_gapfill_hourly",
-    "interpolate_hourly_values",
-    "udtf_trigram_stats",
-    "mask_fpe_card_customers",
-    "mask_date_shift_orders",
-    "mask_swap_acctbal_nation",
-    "mask_microaggregate_acctbal",
-    "mask_pram_mktsegment",
-    "benford_first_digit_audit",
-    "user_daily_streaks",
-    "ohlc_hourly_events",
-    "not_in_null_aware_customers",
-    "gapfill_recursive_days",
-    "zscore_acctbal_per_segment",
-    "pivot_orders_status",
-    "order_gaps_lag_lead",
-    "grouping_sets_orders",
-    "quantiles_acctbal_per_segment",
-    "approx_quantiles_events_value",
-    "topk_customers_per_segment",
-    "lateral_top2_orders_per_customer",
-    "rollup_orders",
-    "cube_orders",
-    "asof_last_order_per_event",
-    "range_join_close_prices",
-    "bloom_join_pruned_revenue",
-    "semi_join_parts_ordered",
-    "anti_join_customers_no_orders",
-    "distinct_nations_per_segment",
-    "except_rich_customers_without_orders",
-    "intersect_rich_customers_with_orders",
-    "top_supplier_per_nation",
-    "approx_distinct_users_daily",
-    "hll_union_rollup_users",
-    "hll_intersection_users",
-    "cms_frequency_parts",
-    "json_events_agg",
-    "json_source_agg",
-    "json_props_struct",
-    "customer_order_keys_array",
-    "running_total_per_customer",
-    "rolling_30d_order_stats",
-    "order_window_features",
-    "segment_nation_list",
-    "events_hourly_window",
-    "sessionize_events",
-    "max_concurrent_events_sweepline",
-    "frequent_part_pairs",
-    "scd2_user_event_history",
-    "pit_join_future_event_state",
-    "orc_source_agg",
-    "xml_source_agg",
-    "text_source_agg",
-    "csv_source_agg",
-    "binaryfile_media_manifest",
-    "pydatasource_synth_agg",
-    "pydatasource_stream_agg",
-    "pydatasource_write_roundtrip",
-    "zorder_orders_key",
-    "zorder_lineitem_key3",
-    "bucketed_join_revenue",
-    "salted_join_revenue",
-    "partition_pruned_orders_agg",
-    "compact_small_files_events",
-    "schema_evolution_merge_read",
-    "variant_events_agg",
-    "jdbc_roundtrip_agg",
-    # text / dedup / similarity
-    "text_profile",
-    "text_fingerprint_groups",
-    "text_lang_source_stats",
-    "corpus_quality_filter",
-    "quality_classifier_scores",
-    "ccnet_perplexity_buckets",
-    "ccnet_perplexity_buckets_prod",
-    "stratified_sample_docs",
-    "scrub_documents_pii",
-    "pack_docs_token_bins",
-    "select_docs_token_budget",
-    "cap_docs_per_source",
-    "shard_training_corpus",
-    "rebalance_corpus_mix",
-    "mix_temperature_sample",
-    "importance_sample_docs",
-    "pretraining_pipeline_e2e",
-    "vocab_top_terms",
-    "bm25_term_scores",
-    "readability_scores_docs",
-    "chunk_docs_for_rag",
-    "rag_pipeline_e2e",
-    "phrase_search_docs",
-    "skew_report_lineitem",
-    "approx_top_terms",
-    "explode_doc_sentences",
-    "doc_top_terms",
-    "winsorize_events_value",
-    "funnel_view_click_purchase",
-    "cohort_retention_weekly",
-    "bigram_collocations",
-    "profile_orders_columns",
-    "dq_checks_orders",
-    "snapshot_diff_orders",
-    "fuzzy_pairs_symdelete",
-    "trigram_name_matches",
-    "fuzzy_match_blocked_suppliers",
-    "entity_clusters_parts",
-    "pagerank_copurchase_parts",
-    "bpe_merge_steps",
-    "bpe_encode_docs",
-    "kmeans_assign_step",
-    "media_frame_sample",
-    "media_audio_segments",
-    "cdc_apply_changelog_orders",
-    "incremental_agg_users",
-    "compact_latest_events",
-    "text_winnowing",
-    "text_nfc_dedup_prep",
-    "dedup_exact",
-    "dedup_ngram_jaccard",
-    "dedup_ngram_containment",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_simhash_md5",
-    "dedup_exact_substring",
-    "dedup_clusters",
-    "dedup_keep_best_quality",
-    "dedup_canonical_docs",
-    "split_leakage_safe",
-    "dedup_incremental_new_docs",
-    "dedup_incremental_indexed",
-    "decontaminate_training_docs",
-    "decontaminate_bloom_ngrams",
-    "decontaminate_semantic_embeddings",
-    "dedup_chunks_reconstruct",
-    "dedup_boilerplate_chunks",
-    "doc_repetition_stats",
-    "curate_corpus_pipeline",
-    "dedup_embedding_cosine",
-    "dedup_embedding_lsh_pairs",
-    "semdedup_embeddings",
-    "semdedup_ivf",
-    "knn_brute_force",
-    "knn_matmul",
-    "knn_lsh",
-    "knn_ivf",
-    "knn_ivf_indexed",
-    "hard_negatives_embeddings",
-    "mlm_mask_docs",
-    "epoch_expand_mixture",
-    "pack_sequences_gpt",
-    "knn_pq",
-    "knn_sq8",
-    "knn_ivfpq",
-    "hybrid_search_rrf",
-    "embedding_norms_arrow",
-    "multimodal_featurize",
-    "streaming_tumbling_agg",
-    "streaming_sliding_agg",
-    "streaming_mask_pseudonymize",
-    "streaming_static_enrich_agg",
-    "streaming_parquet_sink_agg",
-    "streaming_session_agg",
-    "streaming_stateful_user_totals",
-    "streaming_stream_join",
-    "streaming_dedup_events",
-    "streaming_dedup_then_window",
-    "streaming_jdbc_upsert_agg",
-    "streaming_ohlc_window_agg",
-    "streaming_update_mode_agg",
-    "streaming_stream_left_join",
-    "streaming_dedup_index_probe",
-    # round-9 additions
-    "hilbert_orders_key",
-    "bootstrap_ci_events",
-    "skipgram_pairs_docs",
-    "kneser_ney_bigram_counts",
-    "triangle_count_copurchase",
-    "kcenter_coreset_embeddings",
-    "ewma_user_events",
-    "streaming_ewma_user",
-    "phonetic_blocking_parts",
-    "doc_novelty_bigrams",
-    "prefix_filter_jaccard_parts",
-    "cc_incremental_merge",
-    "corpus_overlap_matrix",
-    "length_batching_docs",
-    "observed_dq_gate_orders",
-    # round-10 additions
-    "kn_perplexity_docs",
-    "mixture_alpha_weights",
-    "corpus_drift_tvd",
-    "kcore_copurchase_parts",
-    "drift_incremental_merge",
-    # r11
-    "kmeans_lloyd_embeddings",
-    "knn_recall_report",
-    "gopher_rules_docs",
-    "kmeans_incremental_assign",
-    # r12
-    "knn_ivf_kmeans_indexed",
-    "knn_ivf_kmeans_append",
-    "quality_score_docs",
-    "streaming_ewma_user_wm",
-    "streaming_dedup_index_probe_wm",
-]
-
-
+_log = logging.getLogger(__name__)
 _DROP_PERSISTED_WARNED = False
 
 
@@ -310,29 +53,16 @@ def _host_snapshot() -> dict:
 
 
 def _drop_persisted(spark) -> None:
-    """Session hygiene between reps — with A/B knobs for bisecting the
-    r8->r10 uniform bench inflation (r10 verdict item 1c):
-    SPARK_GRAFT_BENCH_HYGIENE=0 skips this entirely;
-    SPARK_GRAFT_BENCH_JVMGC=0 keeps the blocking unpersist but skips the
-    System.gc() (a full JVM GC can unload janino-generated classes, forcing
-    re-JIT of every query's codegen on its next timed rep — exactly the
-    uniform per-query cost a disjoint-worst-mover analysis cannot see)."""
-    if os.environ.get("SPARK_GRAFT_BENCH_HYGIENE", "1") == "0":
-        return
-    _drop_persisted_inner(spark)
-
-
-def _drop_persisted_inner(spark) -> None:
-    """Free persisted blocks ``clearCache()`` cannot reach: localCheckpoint
-    RDDs (the dedup/graph/prefix families eager-checkpoint intermediates)
-    stay in the block manager until the JVM ContextCleaner happens to run —
-    across a 234-query session they accumulate and squeeze execution
-    memory (measured: last-third queries inflate 1.9-3x vs pins while the
-    same queries re-bench at pin level in a fresh session). A Python gc
-    pass drops driver-side references, then every still-persisted RDD is
-    unpersisted explicitly. Safe across queries: no cross-query cache in
-    this repo holds a live checkpointed DataFrame (they memoize table
-    names, dirs, and numpy arrays only)."""
+    """Session hygiene between reps: free persisted blocks ``clearCache()``
+    cannot reach. localCheckpoint RDDs (the dedup/graph/prefix families
+    eager-checkpoint intermediates) stay in the block manager until the JVM
+    ContextCleaner happens to run — across a 234-query session they
+    accumulate and squeeze execution memory (measured: last-third queries
+    inflate 1.9-3x vs pins while the same queries re-bench at pin level in
+    a fresh session). A Python gc pass drops Python-side references, then
+    every still-persisted RDD is unpersisted explicitly. Safe across
+    queries: no cross-query cache in this repo holds a live checkpointed
+    DataFrame (they memoize table names, dirs, and numpy arrays only)."""
     import gc
 
     gc.collect()
@@ -359,7 +89,7 @@ def _drop_persisted_inner(spark) -> None:
         for rdd in rdds:
             rdd.unpersist(True)
         big_drop = dropped_bytes > (1 << 30)
-        if rdds and big_drop and os.environ.get("SPARK_GRAFT_BENCH_JVMGC", "1") != "0":
+        if rdds and big_drop:
             spark.sparkContext._jvm.System.gc()
     except Exception as exc:  # pragma: no cover - py4j version drift
         # If the py4j JavaMap iteration ever stops converting, the
@@ -369,27 +99,12 @@ def _drop_persisted_inner(spark) -> None:
         global _DROP_PERSISTED_WARNED
         if not _DROP_PERSISTED_WARNED:
             _DROP_PERSISTED_WARNED = True
-            print(
-                f"WARNING: _drop_persisted failed ({exc!r}); "
-                "checkpoint blocks may leak across queries",
-                file=sys.stderr,
+            _log.warning(
+                "_drop_persisted failed (%r); checkpoint blocks may leak across queries", exc
             )
 
 
-
 def main() -> None:
-    # optional subset: `bench.py --queries a,b,c` times only those HEADLINE
-    # entries (used by tools/certify_changed.py to attribute perf deltas to
-    # a specific change without a full 135-query sweep)
-    headline = HEADLINE
-    argv = sys.argv[1:]
-    if "--queries" in argv:
-        wanted = argv[argv.index("--queries") + 1].split(",")
-        unknown = [q for q in wanted if q not in HEADLINE]
-        if unknown:
-            print(f"# not in HEADLINE, skipping: {unknown}", file=sys.stderr)
-        headline = [q for q in HEADLINE if q in wanted]
-
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -399,7 +114,18 @@ def main() -> None:
     spark = get_spark("mda-bench", master=f"local[{cpus}]")
     import mysql_data_anonymizer_spark.queries as Q
 
-    # Warmup phase: execute every headline query once at the smallest scale
+    # optional subset: `bench.py --queries a,b,c` times only those registry
+    # queries (used by tools/certify_changed.py to attribute perf deltas to
+    # a specific change without a full registry sweep)
+    names = list(Q.QUERIES)
+    if "--queries" in sys.argv:
+        wanted = sys.argv[sys.argv.index("--queries") + 1].split(",")
+        unknown = [q for q in wanted if q not in Q.QUERIES]
+        if unknown:
+            print(f"# not in the registry, skipping: {unknown}", file=sys.stderr)
+        names = [q for q in names if q in wanted]
+
+    # Warmup phase: execute every query once at the smallest scale
     # factor. A fresh JVM pays C2-JIT compilation of the interpreted
     # higher-order-function paths, janino codegen per plan shape, and Python
     # worker spin-up on first execution — measured 3-6x inflation on the
@@ -411,14 +137,14 @@ def main() -> None:
     warm_dir = sf_dir.replace(m.group(0), "sf0.001") if m else sf_dir
     if not os.path.isdir(warm_dir):
         warm_dir = sf_dir
-    for name in headline:
+    for name in names:
         try:
             Q.QUERIES[name](spark, warm_dir).count()
         except Exception as exc:  # never let warmup sink the bench
             print(f"# warmup {name} failed: {exc}", file=sys.stderr)
     # Session hygiene between queries: several operators cache/localCheckpoint
     # intermediates (minhash shingles, component rounds, broadcast corpora) —
-    # correct within one query, but across 45 back-to-back queries the
+    # correct within one query, but across ~250 back-to-back queries the
     # retained blocks squeeze execution memory and measured 2-3x inflation on
     # late queries vs a fresh session. A long-running production job would
     # unpersist per job; the bench equivalent is clearing the block caches
@@ -435,7 +161,7 @@ def main() -> None:
     # so every rep measures the same cold-cache plan.
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
     times: dict[str, float] = {}
-    for name in headline:
+    for name in names:
         fn = Q.QUERIES[name]
         samples: list[float] = []
         for _ in range(reps):

@@ -33,6 +33,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from mysql_data_anonymizer_spark.blueprint import Blueprint
 from mysql_data_anonymizer_spark.functions.generator import DOMAINS, DeterministicGenerator
@@ -149,9 +150,9 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # events.parquet stores TIMESTAMP(NANOS); ask for nanos-as-long and
         # normalize whatever dtype actually comes back (see _ts_fix).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        df = spark.read.schema(_schema(spark, path)).parquet(path)
         return _spread(_ts_fix(df), path)
-    return _spread(spark.read.parquet(path), path)
+    return _spread(spark.read.schema(_schema(spark, path)).parquet(path), path)
 
 
 _SCRATCH_LOCK = threading.Lock()
@@ -183,6 +184,25 @@ def _memo(spark, key: tuple, build: Callable):
     if key not in memo:
         memo[key] = build()
     return memo[key]
+
+
+def _schema(spark, path: str):
+    """The parquet schema at ``path``, inferred once per session: inference
+    costs a Spark job, and a fixture does not change during a session. The
+    key carries the file's mtime, so a rewritten file or directory is
+    inferred afresh, and the nanosAsLong setting, because with it on a
+    TIMESTAMP(NANOS) column (events.ts) infers as LongType."""
+    nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+    key = ("schema", path, os.stat(path).st_mtime_ns, nanos)
+    return _memo(spark, key, lambda: spark.read.parquet(path).schema)
+
+
+def _submit(pool, spark, fn: Callable, *args):
+    """``pool.submit(fn, *args)`` with the caller's job group, description
+    and tags carried into the worker thread, which would otherwise start its
+    jobs outside the query's group. Wrapped per call: each task gets its own
+    copy of the properties, so a description one task sets stays its own."""
+    return pool.submit(inheritable_thread_target(spark)(fn), *args)
 
 
 def _session_tag(sf_dir: str) -> str:
@@ -255,9 +275,8 @@ def _replay_source(
     directory is streamed directly. events get ``_ts_fix``; other tables
     get ``_spread``, which works on streams too: a micro-batch over one
     sub-split file is ONE task, so per-row map work would run serially.
-    The batch schema costs a Spark job to infer, so it is inferred once per
-    session and source, keyed on the source's mtime: a rewritten file or
-    directory is inferred afresh.
+    The batch schema comes from ``_schema``: inferred once per session and
+    source, and afresh for a rewritten file or directory.
 
     Returns ``(stream, stage)``; ``stage`` is the temp dir created here
     (``None`` for a directory source), removed by ``_replay_run``."""
@@ -265,12 +284,7 @@ def _replay_source(
     # registry on the caller's own session
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     src = f"{sf_dir}/{table}.parquet"
-    schema = _memo(
-        spark,
-        ("replay_schema", src, os.stat(src).st_mtime_ns),
-        lambda: spark.read.parquet(src).schema,
-    )
-    reader = spark.readStream.schema(schema)
+    reader = spark.readStream.schema(_schema(spark, src))
     if max_files is not None:
         reader = reader.option("maxFilesPerTrigger", max_files)
     stage = None
@@ -370,6 +384,21 @@ def _sql_md5_u32(digest_sql: str, start: int = 1) -> str:
 
 
 # ===========================================================================
+# registry: each query is one `def`, its oracle SQL, and one `_register` call;
+# registry (and bench) order is file order
+# ===========================================================================
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+ORACLES: dict[str, str] = {}
+
+
+def _register(fn: Callable[[SparkSession, str], DataFrame], oracle: str | None = None) -> None:
+    """Register ``fn`` under its own name, with its DuckDB oracle if it has one."""
+    QUERIES[fn.__name__] = fn
+    if oracle is not None:
+        ORACLES[fn.__name__] = oracle
+
+
+# ===========================================================================
 # masking queries (route through the real engine: Blueprint -> compile_plan)
 # ===========================================================================
 def mask_static(spark, sf_dir):
@@ -385,6 +414,7 @@ MASK_STATIC_SQL = """
 SELECT c_custkey, 'john@example.com' AS c_name, c_nationkey, c_acctbal, c_mktsegment
 FROM customer
 """
+_register(mask_static, MASK_STATIC_SQL)
 
 
 def mask_row_template(spark, sf_dir):
@@ -403,6 +433,7 @@ SELECT c_custkey,
        c_nationkey, c_acctbal, c_mktsegment
 FROM customer
 """
+_register(mask_row_template, MASK_ROW_TEMPLATE_SQL)
 
 
 def mask_generator_email(spark, sf_dir):
@@ -422,6 +453,7 @@ SELECT c_custkey,
        c_nationkey, c_acctbal, c_mktsegment
 FROM customer
 """
+_register(mask_generator_email, MASK_GENERATOR_EMAIL_SQL)
 
 
 def mask_guarded(spark, sf_dir):
@@ -442,6 +474,7 @@ SELECT c_custkey,
        c_nationkey, c_acctbal, c_mktsegment
 FROM customer
 """
+_register(mask_guarded, MASK_GUARDED_SQL)
 
 
 def mask_global_where(spark, sf_dir):
@@ -467,6 +500,7 @@ SELECT c.c_custkey,
        c.c_nationkey, c.c_acctbal, c.c_mktsegment
 FROM customer c LEFT JOIN numbered n ON c.c_custkey = n.c_custkey
 """
+_register(mask_global_where, MASK_GLOBAL_WHERE_SQL)
 
 
 def text_nfc_dedup_prep(spark, sf_dir):
@@ -612,6 +646,7 @@ SELECT c_custkey, c_name, c_nationkey, c_acctbal,
        upper(substr(c_name, 1, 6)) AS c_mktsegment
 FROM masked
 """
+_register(mask_chain_fields, MASK_CHAIN_FIELDS_SQL)
 
 
 def mask_unique_uuid(spark, sf_dir):
@@ -632,6 +667,7 @@ SELECT c_custkey,
        c_nationkey, c_acctbal, c_mktsegment
 FROM customer
 """
+_register(mask_unique_uuid, MASK_UNIQUE_UUID_SQL)
 
 
 def mask_synchro_remap(spark, sf_dir):
@@ -662,6 +698,7 @@ LEFT JOIN (SELECT c_custkey AS old_key, c_custkey + 1000000000 AS new_key
            FROM customer) m
   ON o.o_custkey = m.old_key
 """
+_register(mask_synchro_remap, MASK_SYNCHRO_REMAP_SQL)
 
 
 def mask_generator_profile(spark, sf_dir):
@@ -735,6 +772,9 @@ SELECT c_custkey,
        {cc_digits} || CAST((10 - ({luhn}) % 10) % 10 AS VARCHAR) AS cc
 FROM customer
 """
+
+
+_register(mask_generator_profile, _gen_profile_sql())
 
 
 def mask_faker_profile(spark, sf_dir):
@@ -841,6 +881,7 @@ FROM (
   GROUP BY l_returnflag, l_linestatus
 )
 """
+_register(q1_pricing_summary, Q1_SQL)
 
 
 def q3_top_revenue_orders(spark, sf_dir):
@@ -878,6 +919,7 @@ FROM (
   LIMIT 10
 )
 """
+_register(q3_top_revenue_orders, Q3_SQL)
 
 
 def q5_nation_revenue(spark, sf_dir):
@@ -909,6 +951,7 @@ JOIN nation ON c_nationkey = n_nationkey
 JOIN region ON n_regionkey = r_regionkey
 GROUP BY r_name, n_name
 """
+_register(q5_nation_revenue, Q5_SQL)
 
 
 def topk_customers_per_segment(spark, sf_dir):
@@ -928,6 +971,7 @@ SELECT c_mktsegment, c_custkey, c_acctbal, rnk FROM (
   FROM customer
 ) WHERE rnk <= 3
 """
+_register(topk_customers_per_segment, TOPK_SEGMENT_SQL)
 
 
 def rollup_orders(spark, sf_dir):
@@ -951,6 +995,7 @@ SELECT o_orderpriority, o_orderstatus, COUNT(*) AS n_orders,
 FROM orders
 GROUP BY ROLLUP (o_orderpriority, o_orderstatus)
 """
+_register(rollup_orders, ROLLUP_ORDERS_SQL)
 
 
 def except_rich_customers_without_orders(spark, sf_dir):
@@ -972,6 +1017,7 @@ EXCEPT
 SELECT o_custkey AS c_custkey FROM orders
 WHERE o_orderdate >= TIMESTAMP '1998-05-01'
 """
+_register(except_rich_customers_without_orders, EXCEPT_SQL)
 
 
 def anti_join_customers_no_orders(spark, sf_dir):
@@ -994,6 +1040,7 @@ WHERE NOT EXISTS (SELECT 1 FROM orders o
                   WHERE o.o_custkey = c.c_custkey
                     AND o.o_orderdate >= TIMESTAMP '1998-05-01')
 """
+_register(anti_join_customers_no_orders, ANTI_JOIN_SQL)
 
 
 def semi_join_parts_ordered(spark, sf_dir):
@@ -1009,6 +1056,7 @@ SELECT p_partkey, p_name, p_brand
 FROM part p
 WHERE EXISTS (SELECT 1 FROM lineitem l WHERE l.l_partkey = p.p_partkey)
 """
+_register(semi_join_parts_ordered, SEMI_JOIN_SQL)
 
 
 def distinct_nations_per_segment(spark, sf_dir):
@@ -1023,6 +1071,7 @@ DISTINCT_AGG_SQL = """
 SELECT c_mktsegment, COUNT(DISTINCT c_nationkey) AS n_nations, COUNT(*) AS n_customers
 FROM customer GROUP BY c_mktsegment
 """
+_register(distinct_nations_per_segment, DISTINCT_AGG_SQL)
 
 
 def json_events_agg(spark, sf_dir):
@@ -1043,6 +1092,7 @@ SELECT event_type, COUNT(*) AS n_events,
        MAX(CAST((CASE WHEN json_valid(props) THEN json_extract_string(props, '$.k') END) AS BIGINT)) AS max_k
 FROM events GROUP BY event_type
 """
+_register(json_events_agg, JSON_EVENTS_SQL)
 
 
 def json_props_struct(spark, sf_dir):
@@ -1069,6 +1119,7 @@ SELECT ((CAST((CASE WHEN json_valid(props) THEN json_extract_string(props, '$.k'
        COUNT((CASE WHEN json_valid(props) THEN json_extract_string(props, '$.cat') END)) AS n_cat
 FROM events GROUP BY 1
 """
+_register(json_props_struct, JSON_STRUCT_SQL)
 
 
 def customer_order_keys_array(spark, sf_dir):
@@ -1095,6 +1146,7 @@ SELECT o_custkey,
        COUNT(*) AS n_orders
 FROM orders GROUP BY o_custkey
 """
+_register(customer_order_keys_array, CUSTOMER_ORDER_ARRAY_SQL)
 
 
 def json_source_agg(spark, sf_dir):
@@ -1126,6 +1178,7 @@ SELECT event_type, COUNT(*) AS n,
        COUNT(DISTINCT user_id) AS n_users
 FROM events GROUP BY event_type
 """
+_register(json_source_agg, JSON_SOURCE_SQL)
 
 
 def running_total_per_customer(spark, sf_dir):
@@ -1149,6 +1202,7 @@ SELECT o_orderkey, o_custkey,
          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS VARCHAR) AS DOUBLE) AS running_total
 FROM orders
 """
+_register(running_total_per_customer, RUNNING_TOTAL_SQL)
 
 
 def rolling_30d_order_stats(spark, sf_dir):
@@ -1180,6 +1234,7 @@ FROM orders
 WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate
              RANGE BETWEEN INTERVAL '30 days' PRECEDING AND CURRENT ROW)
 """
+_register(rolling_30d_order_stats, ROLLING_30D_SQL)
 
 
 def order_window_features(spark, sf_dir):
@@ -1215,6 +1270,7 @@ WINDOW wt AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
               ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING),
        ws AS (PARTITION BY o_custkey ORDER BY o_totalprice, o_orderkey)
 """
+_register(order_window_features, ORDER_WINDOW_FEATURES_SQL)
 
 
 def segment_nation_list(spark, sf_dir):
@@ -1237,6 +1293,7 @@ SELECT c_mktsegment,
        COUNT(*) AS n_customers
 FROM customer GROUP BY c_mktsegment
 """
+_register(segment_nation_list, SEGMENT_NATION_LIST_SQL)
 
 
 def events_hourly_window(spark, sf_dir):
@@ -1257,6 +1314,7 @@ SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start, event_type,
        CAST(CAST(SUM(CAST(value AS DECIMAL(30,2))) AS VARCHAR) AS DOUBLE) AS total_value
 FROM events GROUP BY 1, 2
 """
+_register(events_hourly_window, EVENTS_HOURLY_SQL)
 
 
 def cube_orders(spark, sf_dir):
@@ -1273,6 +1331,7 @@ SELECT o_orderpriority, o_orderstatus, COUNT(*) AS n_orders,
 FROM orders
 GROUP BY CUBE (o_orderpriority, o_orderstatus)
 """
+_register(cube_orders, CUBE_ORDERS_SQL)
 
 
 def intersect_rich_customers_with_orders(spark, sf_dir):
@@ -1294,6 +1353,7 @@ INTERSECT
 SELECT o_custkey AS c_custkey FROM orders
 WHERE o_orderdate >= TIMESTAMP '1998-05-01'
 """
+_register(intersect_rich_customers_with_orders, INTERSECT_SQL)
 
 
 def asof_last_order_per_event(spark, sf_dir):
@@ -1324,6 +1384,7 @@ SELECT e.event_id, e.user_id, r.o_orderkey
 FROM events e ASOF LEFT JOIN r
   ON e.user_id = r.user_id AND e.ts >= r.o_orderdate
 """
+_register(asof_last_order_per_event, ASOF_SQL)
 
 
 def range_join_close_prices(spark, sf_dir):
@@ -1343,6 +1404,7 @@ SELECT a.p_partkey AS id_a, b.p_partkey AS id_b
 FROM part a JOIN part b
   ON a.p_partkey < b.p_partkey AND abs(a.p_retailprice - b.p_retailprice) <= 0.02
 """
+_register(range_join_close_prices, RANGE_JOIN_SQL)
 
 
 def sessionize_events(spark, sf_dir):
@@ -1382,6 +1444,7 @@ SELECT user_id, session_no, COUNT(*) AS n_events,
        MIN(ts) AS session_start, MAX(ts) AS session_end
 FROM sessions GROUP BY user_id, session_no
 """
+_register(sessionize_events, SESSIONIZE_SQL)
 
 
 def interpolate_hourly_values(spark, sf_dir):
@@ -1614,6 +1677,7 @@ SELECT lang, source, COUNT(*) AS n_docs,
                 ELSE len(regexp_split_to_array(trim(text), '\\s+')) END) AS BIGINT) AS total_tokens
 FROM documents GROUP BY lang, source
 """
+_register(text_lang_source_stats, LANG_SOURCE_SQL)
 
 
 def text_winnowing(spark, sf_dir):
@@ -1645,6 +1709,7 @@ mins AS (
 )
 SELECT DISTINCT doc_id, fp FROM mins WHERE pos <= n_sh - 4
 """
+_register(text_winnowing, TEXT_WINNOWING_SQL)
 
 
 def corpus_quality_filter(spark, sf_dir):
@@ -1817,6 +1882,7 @@ SELECT md5(array_to_string(list_sort(list_distinct(
        MIN(doc_id) AS survivor_id, COUNT(*) AS group_size
 FROM documents GROUP BY 1
 """
+_register(text_fingerprint_groups, FINGERPRINT_SQL)
 
 
 # ===========================================================================
@@ -1828,6 +1894,7 @@ def dedup_exact(spark, sf_dir):
 
 
 DEDUP_EXACT_SQL = "SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY text"
+_register(dedup_exact, DEDUP_EXACT_SQL)
 
 
 # document-frequency cap for stop-shingles: a no-op on the fixtures (max df
@@ -4799,7 +4866,9 @@ def semdedup_ivf(spark, sf_dir):
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=2) as _pool:
-        _fi = _pool.submit(
+        _fi = _submit(
+            _pool,
+            spark,
             lambda: (
                 # dim=None -> compile-cheap HOF dot for the pair scoring:
                 # on this bounded certification slice Catalyst analysis of
@@ -4813,7 +4882,9 @@ def semdedup_ivf(spark, sf_dir):
                 .localCheckpoint(eager=True)
             )
         )
-        _fe = _pool.submit(
+        _fe = _submit(
+            _pool,
+            spark,
             lambda: (
                 dedup.embedding_near_dup_pairs(emb, threshold=0.4)
                 .select(F.col("id_b").alias("vec_id"))
@@ -5081,6 +5152,7 @@ WHERE l_shipdate >= TIMESTAMP '1995-01-01' AND l_shipdate < TIMESTAMP '1997-01-0
   AND CAST(l_discount AS DECIMAL(6,4)) BETWEEN CAST(0.02 AS DECIMAL(6,4)) AND CAST(0.08 AS DECIMAL(6,4))
   AND l_quantity < 24
 """
+_register(q6_forecast_revenue, Q6_SQL)
 
 
 def q14_promo_revenue(spark, sf_dir):
@@ -5111,6 +5183,7 @@ SELECT CAST(CAST(CAST(SUM(CASE WHEN p_type LIKE 'PROMO%' THEN CAST(l_extendedpri
 FROM lineitem JOIN part ON l_partkey = p_partkey
 WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1996-07-01'
 """
+_register(q14_promo_revenue, Q14_SQL)
 
 
 def q18_large_orders(spark, sf_dir):
@@ -5151,6 +5224,7 @@ FROM (
 JOIN orders ON big.l_orderkey = o_orderkey
 JOIN customer ON o_custkey = c_custkey
 """
+_register(q18_large_orders, Q18_SQL)
 
 
 def pivot_orders_status(spark, sf_dir):
@@ -5178,6 +5252,7 @@ SELECT o_orderpriority,
        COUNT(*) FILTER (o_orderstatus = 'P') AS n_p
 FROM orders GROUP BY o_orderpriority
 """
+_register(pivot_orders_status, PIVOT_SQL)
 
 
 def order_gaps_lag_lead(spark, sf_dir):
@@ -5206,6 +5281,7 @@ SELECT o_custkey, o_orderkey,
 FROM orders
 WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
 """
+_register(order_gaps_lag_lead, ORDER_GAPS_SQL)
 
 
 def grouping_sets_orders(spark, sf_dir):
@@ -5228,6 +5304,7 @@ SELECT o_orderpriority, o_orderstatus, COUNT(*) AS n_orders,
 FROM orders
 GROUP BY GROUPING SETS ((o_orderpriority), (o_orderstatus), ())
 """
+_register(grouping_sets_orders, GROUPING_SETS_SQL)
 
 
 def top_supplier_per_nation(spark, sf_dir):
@@ -5249,6 +5326,7 @@ SELECT n_name, s_suppkey, s_name, s_acctbal FROM (
 ) s JOIN nation ON s_nationkey = n_nationkey
 WHERE rnk = 1
 """
+_register(top_supplier_per_nation, TOP_SUPPLIER_SQL)
 
 
 def quantiles_acctbal_per_segment(spark, sf_dir):
@@ -5277,6 +5355,7 @@ SELECT c_mktsegment,
        COUNT(*) AS n_customers
 FROM customer GROUP BY c_mktsegment
 """
+_register(quantiles_acctbal_per_segment, QUANTILES_SQL)
 
 
 def approx_distinct_users_daily(spark, sf_dir):
@@ -5414,6 +5493,7 @@ SELECT event_type,
        COUNT(*) AS n_events
 FROM events GROUP BY event_type
 """
+_register(approx_quantiles_events_value, APPROX_QUANTILES_SQL)
 
 
 def dedup_clusters(spark, sf_dir):
@@ -5892,124 +5972,6 @@ HAVING window_start + INTERVAL 30 MINUTE <= (SELECT w FROM wm)
 
 
 # ===========================================================================
-# registry
-# ===========================================================================
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "mask_static": mask_static,
-    "mask_row_template": mask_row_template,
-    "mask_generator_email": mask_generator_email,
-    "mask_guarded": mask_guarded,
-    "mask_global_where": mask_global_where,
-    "mask_chain_fields": mask_chain_fields,
-    "mask_unique_uuid": mask_unique_uuid,
-    "mask_synchro_remap": mask_synchro_remap,
-    "mask_generator_profile": mask_generator_profile,
-    "q1_pricing_summary": q1_pricing_summary,
-    "q3_top_revenue_orders": q3_top_revenue_orders,
-    "q5_nation_revenue": q5_nation_revenue,
-    "q6_forecast_revenue": q6_forecast_revenue,
-    "q14_promo_revenue": q14_promo_revenue,
-    "q18_large_orders": q18_large_orders,
-    "pivot_orders_status": pivot_orders_status,
-    "order_gaps_lag_lead": order_gaps_lag_lead,
-    "grouping_sets_orders": grouping_sets_orders,
-    "top_supplier_per_nation": top_supplier_per_nation,
-    "quantiles_acctbal_per_segment": quantiles_acctbal_per_segment,
-    "approx_distinct_users_daily": approx_distinct_users_daily,
-    "approx_quantiles_events_value": approx_quantiles_events_value,
-    "topk_customers_per_segment": topk_customers_per_segment,
-    "rollup_orders": rollup_orders,
-    "cube_orders": cube_orders,
-    "intersect_rich_customers_with_orders": intersect_rich_customers_with_orders,
-    "asof_last_order_per_event": asof_last_order_per_event,
-    "range_join_close_prices": range_join_close_prices,
-    "except_rich_customers_without_orders": except_rich_customers_without_orders,
-    "anti_join_customers_no_orders": anti_join_customers_no_orders,
-    "semi_join_parts_ordered": semi_join_parts_ordered,
-    "distinct_nations_per_segment": distinct_nations_per_segment,
-    "json_events_agg": json_events_agg,
-    "json_props_struct": json_props_struct,
-    "customer_order_keys_array": customer_order_keys_array,
-    "json_source_agg": json_source_agg,
-    "running_total_per_customer": running_total_per_customer,
-    "rolling_30d_order_stats": rolling_30d_order_stats,
-    "order_window_features": order_window_features,
-    "segment_nation_list": segment_nation_list,
-    "events_hourly_window": events_hourly_window,
-    "sessionize_events": sessionize_events,
-    "text_profile": text_profile,
-    "text_lang_source_stats": text_lang_source_stats,
-    "text_fingerprint_groups": text_fingerprint_groups,
-    "text_winnowing": text_winnowing,
-    "dedup_exact": dedup_exact,
-    "dedup_ngram_jaccard": dedup_ngram_jaccard,
-    "dedup_minhash_lsh": dedup_minhash_lsh,
-    "dedup_simhash": dedup_simhash,
-    "dedup_embedding_cosine": dedup_embedding_cosine,
-    "dedup_clusters": dedup_clusters,
-    "knn_brute_force": knn_brute_force,
-    "knn_lsh": knn_lsh,
-    "knn_ivf": knn_ivf,
-    "q4_order_priority": q4_order_priority,
-    "q17_small_quantity_revenue": q17_small_quantity_revenue,
-    "q22_idle_rich_customers": q22_idle_rich_customers,
-    "zscore_acctbal_per_segment": zscore_acctbal_per_segment,
-    "multimodal_featurize": multimodal_featurize,
-    "streaming_tumbling_agg": streaming_tumbling_agg,
-    "dedup_canonical_docs": dedup_canonical_docs,
-}
-
-ORACLES: dict[str, str] = {
-    "mask_static": MASK_STATIC_SQL,
-    "mask_row_template": MASK_ROW_TEMPLATE_SQL,
-    "mask_generator_email": MASK_GENERATOR_EMAIL_SQL,
-    "mask_guarded": MASK_GUARDED_SQL,
-    "mask_global_where": MASK_GLOBAL_WHERE_SQL,
-    "mask_chain_fields": MASK_CHAIN_FIELDS_SQL,
-    "mask_unique_uuid": MASK_UNIQUE_UUID_SQL,
-    "mask_synchro_remap": MASK_SYNCHRO_REMAP_SQL,
-    "mask_generator_profile": _gen_profile_sql(),
-    "q1_pricing_summary": Q1_SQL,
-    "q3_top_revenue_orders": Q3_SQL,
-    "q5_nation_revenue": Q5_SQL,
-    "q6_forecast_revenue": Q6_SQL,
-    "q14_promo_revenue": Q14_SQL,
-    "q18_large_orders": Q18_SQL,
-    "pivot_orders_status": PIVOT_SQL,
-    "order_gaps_lag_lead": ORDER_GAPS_SQL,
-    "grouping_sets_orders": GROUPING_SETS_SQL,
-    "top_supplier_per_nation": TOP_SUPPLIER_SQL,
-    "quantiles_acctbal_per_segment": QUANTILES_SQL,
-    "approx_quantiles_events_value": APPROX_QUANTILES_SQL,
-    "topk_customers_per_segment": TOPK_SEGMENT_SQL,
-    "rollup_orders": ROLLUP_ORDERS_SQL,
-    "cube_orders": CUBE_ORDERS_SQL,
-    "intersect_rich_customers_with_orders": INTERSECT_SQL,
-    "asof_last_order_per_event": ASOF_SQL,
-    "range_join_close_prices": RANGE_JOIN_SQL,
-    "except_rich_customers_without_orders": EXCEPT_SQL,
-    "anti_join_customers_no_orders": ANTI_JOIN_SQL,
-    "semi_join_parts_ordered": SEMI_JOIN_SQL,
-    "distinct_nations_per_segment": DISTINCT_AGG_SQL,
-    "json_events_agg": JSON_EVENTS_SQL,
-    "json_props_struct": JSON_STRUCT_SQL,
-    "customer_order_keys_array": CUSTOMER_ORDER_ARRAY_SQL,
-    "json_source_agg": JSON_SOURCE_SQL,
-    "running_total_per_customer": RUNNING_TOTAL_SQL,
-    "rolling_30d_order_stats": ROLLING_30D_SQL,
-    "order_window_features": ORDER_WINDOW_FEATURES_SQL,
-    "segment_nation_list": SEGMENT_NATION_LIST_SQL,
-    "events_hourly_window": EVENTS_HOURLY_SQL,
-    "sessionize_events": SESSIONIZE_SQL,
-    "text_lang_source_stats": LANG_SOURCE_SQL,
-    "text_fingerprint_groups": FINGERPRINT_SQL,
-    "text_winnowing": TEXT_WINNOWING_SQL,
-    "dedup_exact": DEDUP_EXACT_SQL,
-    # text_profile / dedup_* / knn oracles generated programmatically below
-}
-
-
-# ===========================================================================
 # programmatic oracles (long SQL mirrors)
 # ===========================================================================
 def _gen_text_profile_sql() -> str:
@@ -6213,90 +6175,64 @@ SELECT vec_id, max_bench_cosine, max_bench_cosine >= {threshold} AS contaminated
 """
 
 
-ORACLES["q4_order_priority"] = Q4_SQL
-ORACLES["q17_small_quantity_revenue"] = Q17_SQL
-ORACLES["q22_idle_rich_customers"] = Q22_SQL
-ORACLES["zscore_acctbal_per_segment"] = ZSCORE_SQL
-ORACLES["multimodal_featurize"] = MULTIMODAL_SQL
-ORACLES["streaming_tumbling_agg"] = STREAMING_TUMBLING_SQL
-ORACLES["text_profile"] = _gen_text_profile_sql()
-QUERIES["corpus_quality_filter"] = corpus_quality_filter
-ORACLES["corpus_quality_filter"] = _gen_quality_filter_sql()
-QUERIES["stratified_sample_docs"] = stratified_sample_docs
-ORACLES["stratified_sample_docs"] = _gen_stratified_sample_sql()
-QUERIES["scrub_documents_pii"] = scrub_documents_pii
-ORACLES["scrub_documents_pii"] = SCRUB_PII_SQL
-QUERIES["pack_docs_token_bins"] = pack_docs_token_bins
-ORACLES["pack_docs_token_bins"] = PACK_BINS_SQL
-ORACLES["dedup_ngram_jaccard"] = _gen_ngram_jaccard_sql(0.6)
-QUERIES["dedup_ngram_containment"] = dedup_ngram_containment
-ORACLES["dedup_ngram_containment"] = _gen_ngram_containment_sql(0.8)
-QUERIES["dedup_boilerplate_chunks"] = dedup_boilerplate_chunks
-ORACLES["dedup_boilerplate_chunks"] = BOILERPLATE_CHUNKS_SQL
-QUERIES["decontaminate_bloom_ngrams"] = decontaminate_bloom_ngrams
-ORACLES["decontaminate_bloom_ngrams"] = DECONTAMINATE_BLOOM_SQL
-QUERIES["split_leakage_safe"] = split_leakage_safe
-ORACLES["split_leakage_safe"] = _gen_split_leakage_safe_sql(0.6)
-QUERIES["hll_union_rollup_users"] = hll_union_rollup_users
-ORACLES["hll_union_rollup_users"] = HLL_UNION_ROLLUP_SQL
-ORACLES["dedup_minhash_lsh"] = _gen_minhash_sql(8, 4, 0.5)
-QUERIES["dedup_simhash_md5"] = dedup_simhash_md5
-ORACLES["dedup_simhash_md5"] = _gen_simhash_md5_sql(3, 15)
-QUERIES["dedup_incremental_new_docs"] = dedup_incremental_new_docs
-ORACLES["dedup_incremental_new_docs"] = INCREMENTAL_DEDUP_SQL
-QUERIES["scd2_user_event_history"] = scd2_user_event_history
-ORACLES["scd2_user_event_history"] = SCD2_SQL
-QUERIES["pit_join_future_event_state"] = pit_join_future_event_state
-ORACLES["pit_join_future_event_state"] = PIT_JOIN_SQL
-QUERIES["select_docs_token_budget"] = select_docs_token_budget
-ORACLES["select_docs_token_budget"] = _gen_token_budget_sql()
-QUERIES["orc_source_agg"] = orc_source_agg
-QUERIES["xml_source_agg"] = xml_source_agg
-ORACLES["xml_source_agg"] = XML_SOURCE_SQL
-QUERIES["text_source_agg"] = text_source_agg
-ORACLES["text_source_agg"] = TEXT_SOURCE_SQL
-ORACLES["orc_source_agg"] = ORC_SOURCE_SQL
-QUERIES["decontaminate_training_docs"] = decontaminate_training_docs
-ORACLES["decontaminate_training_docs"] = DECONTAMINATE_SQL
-QUERIES["doc_repetition_stats"] = doc_repetition_stats
-ORACLES["doc_repetition_stats"] = DOC_REPETITION_SQL
-QUERIES["curate_corpus_pipeline"] = curate_corpus_pipeline
-ORACLES["curate_corpus_pipeline"] = _gen_curate_pipeline_sql()
-ORACLES["dedup_embedding_cosine"] = _gen_embedding_dedup_sql(0.4)
-ORACLES["knn_brute_force"] = _gen_knn_sql(5)
-QUERIES["knn_matmul"] = knn_matmul
-ORACLES["knn_matmul"] = _gen_knn_sql(5)
-ORACLES["dedup_clusters"] = _gen_dedup_clusters_sql(0.6)
-ORACLES["dedup_canonical_docs"] = _gen_dedup_canonical_sql(0.6)
+_register(q4_order_priority, Q4_SQL)
+_register(q17_small_quantity_revenue, Q17_SQL)
+_register(q22_idle_rich_customers, Q22_SQL)
+_register(zscore_acctbal_per_segment, ZSCORE_SQL)
+_register(multimodal_featurize, MULTIMODAL_SQL)
+_register(streaming_tumbling_agg, STREAMING_TUMBLING_SQL)
+_register(text_profile, _gen_text_profile_sql())
+_register(corpus_quality_filter, _gen_quality_filter_sql())
+_register(stratified_sample_docs, _gen_stratified_sample_sql())
+_register(scrub_documents_pii, SCRUB_PII_SQL)
+_register(pack_docs_token_bins, PACK_BINS_SQL)
+_register(dedup_ngram_jaccard, _gen_ngram_jaccard_sql(0.6))
+_register(dedup_ngram_containment, _gen_ngram_containment_sql(0.8))
+_register(dedup_boilerplate_chunks, BOILERPLATE_CHUNKS_SQL)
+_register(decontaminate_bloom_ngrams, DECONTAMINATE_BLOOM_SQL)
+_register(split_leakage_safe, _gen_split_leakage_safe_sql(0.6))
+_register(hll_union_rollup_users, HLL_UNION_ROLLUP_SQL)
+_register(dedup_minhash_lsh, _gen_minhash_sql(8, 4, 0.5))
+_register(dedup_simhash_md5, _gen_simhash_md5_sql(3, 15))
+_register(dedup_incremental_new_docs, INCREMENTAL_DEDUP_SQL)
+_register(scd2_user_event_history, SCD2_SQL)
+_register(pit_join_future_event_state, PIT_JOIN_SQL)
+_register(select_docs_token_budget, _gen_token_budget_sql())
+_register(orc_source_agg, ORC_SOURCE_SQL)
+_register(xml_source_agg, XML_SOURCE_SQL)
+_register(text_source_agg, TEXT_SOURCE_SQL)
+_register(decontaminate_training_docs, DECONTAMINATE_SQL)
+_register(doc_repetition_stats, DOC_REPETITION_SQL)
+_register(curate_corpus_pipeline, _gen_curate_pipeline_sql())
+_register(dedup_embedding_cosine, _gen_embedding_dedup_sql(0.4))
+_register(knn_brute_force, _gen_knn_sql(5))
+_register(knn_matmul, _gen_knn_sql(5))
+_register(dedup_clusters, _gen_dedup_clusters_sql(0.6))
+_register(dedup_canonical_docs, _gen_dedup_canonical_sql(0.6))
 # the approximate/sketch family (xxhash64 simhash, LSH/IVF ANN, HLL) is
 # oracle-checked via the exact-twin + accuracy-gate pattern: the query's
 # FINAL columns are the exact oracle-able twin plus Spark-computed gate
 # booleans the SQL side emits as literals — a drifting sketch/recall turns
 # the driver row red instead of unverifiable
-ORACLES["approx_distinct_users_daily"] = APPROX_DISTINCT_SQL
-ORACLES["dedup_simhash"] = (
+_register(approx_distinct_users_daily, APPROX_DISTINCT_SQL)
+_register(
+    dedup_simhash,
     "SELECT id_a, id_b, hamming, TRUE AS exactdup_ok, TRUE AS pair_ratio_ok "
-    f"FROM ({_gen_simhash_md5_sql(3, 15)}) t"
+    f"FROM ({_gen_simhash_md5_sql(3, 15)}) t",
 )
-ORACLES["knn_lsh"] = _gen_certified_knn_sql()
-ORACLES["knn_ivf"] = _gen_certified_knn_sql()
-QUERIES["decontaminate_semantic_embeddings"] = decontaminate_semantic_embeddings
-ORACLES["decontaminate_semantic_embeddings"] = _gen_decon_semantic_sql(0.4)
-QUERIES["dedup_chunks_reconstruct"] = dedup_chunks_reconstruct
-ORACLES["dedup_chunks_reconstruct"] = DEDUP_CHUNKS_SQL
-QUERIES["knn_pq"] = knn_pq
-ORACLES["knn_pq"] = _gen_certified_knn_sql()
-QUERIES["knn_sq8"] = knn_sq8
-ORACLES["knn_sq8"] = _gen_certified_knn_sql()
+_register(knn_lsh, _gen_certified_knn_sql())
+_register(knn_ivf, _gen_certified_knn_sql())
+_register(decontaminate_semantic_embeddings, _gen_decon_semantic_sql(0.4))
+_register(dedup_chunks_reconstruct, DEDUP_CHUNKS_SQL)
+_register(knn_pq, _gen_certified_knn_sql())
+_register(knn_sq8, _gen_certified_knn_sql())
 
-QUERIES["mask_faker_profile"] = mask_faker_profile
 from mysql_data_anonymizer_spark.functions.faker_adapter import HAS_FAKER as _HAS_FAKER  # noqa: E402
 
-if not _HAS_FAKER:
-    # fallback backend active -> values are md5 constructions with an exact
-    # SQL twin; with the real faker library installed the values are
-    # non-SQL and the row downgrades to the driver's rows-only check
-    ORACLES["mask_faker_profile"] = _faker_fallback_sql()
+# an oracle only for the fallback backend, whose values are md5 constructions
+# with an exact SQL twin; with the real faker library installed the values are
+# non-SQL and the query is checked on rows only
+_register(mask_faker_profile, None if _HAS_FAKER else _faker_fallback_sql())
 
 
 # ===========================================================================
@@ -7089,40 +7025,23 @@ FROM sessions GROUP BY user_id, sid
 """
 
 
-QUERIES["q7_volume_shipping"] = q7_volume_shipping
-QUERIES["q8_market_share"] = q8_market_share
-QUERIES["q10_returned_items"] = q10_returned_items
-QUERIES["bloom_join_pruned_revenue"] = bloom_join_pruned_revenue
-ORACLES["bloom_join_pruned_revenue"] = BLOOM_JOIN_SQL
-QUERIES["q13_order_distribution"] = q13_order_distribution
-QUERIES["q15_top_supplier"] = q15_top_supplier
-QUERIES["q16_supplier_part_counts"] = q16_supplier_part_counts
-QUERIES["q19_disjunctive_revenue"] = q19_disjunctive_revenue
-QUERIES["q21_waiting_suppliers"] = q21_waiting_suppliers
-QUERIES["q2_min_cost_supplier"] = q2_min_cost_supplier
-QUERIES["q20_volume_share_suppliers"] = q20_volume_share_suppliers
-ORACLES["q2_min_cost_supplier"] = Q2_SQL
-ORACLES["q20_volume_share_suppliers"] = Q20_SQL
-QUERIES["unpivot_lineitem_charges"] = unpivot_lineitem_charges
-QUERIES["streaming_static_enrich_agg"] = streaming_static_enrich_agg
-ORACLES["streaming_static_enrich_agg"] = STREAMING_STATIC_ENRICH_SQL
-QUERIES["streaming_parquet_sink_agg"] = streaming_parquet_sink_agg
-ORACLES["streaming_parquet_sink_agg"] = STREAMING_PARQUET_SINK_SQL
-QUERIES["streaming_mask_pseudonymize"] = streaming_mask_pseudonymize
-ORACLES["streaming_mask_pseudonymize"] = STREAMING_MASK_SQL
-QUERIES["streaming_sliding_agg"] = streaming_sliding_agg
-QUERIES["streaming_session_agg"] = streaming_session_agg
-ORACLES["q7_volume_shipping"] = Q7_SQL
-ORACLES["q8_market_share"] = Q8_SQL
-ORACLES["q10_returned_items"] = Q10_SQL
-ORACLES["q13_order_distribution"] = Q13_SQL
-ORACLES["q15_top_supplier"] = Q15_SQL
-ORACLES["q16_supplier_part_counts"] = Q16_SQL
-ORACLES["q19_disjunctive_revenue"] = Q19_SQL
-ORACLES["q21_waiting_suppliers"] = Q21_SQL
-ORACLES["unpivot_lineitem_charges"] = UNPIVOT_SQL
-ORACLES["streaming_sliding_agg"] = STREAMING_SLIDING_SQL
-ORACLES["streaming_session_agg"] = STREAMING_SESSION_SQL
+_register(q7_volume_shipping, Q7_SQL)
+_register(q8_market_share, Q8_SQL)
+_register(q10_returned_items, Q10_SQL)
+_register(bloom_join_pruned_revenue, BLOOM_JOIN_SQL)
+_register(q13_order_distribution, Q13_SQL)
+_register(q15_top_supplier, Q15_SQL)
+_register(q16_supplier_part_counts, Q16_SQL)
+_register(q19_disjunctive_revenue, Q19_SQL)
+_register(q21_waiting_suppliers, Q21_SQL)
+_register(q2_min_cost_supplier, Q2_SQL)
+_register(q20_volume_share_suppliers, Q20_SQL)
+_register(unpivot_lineitem_charges, UNPIVOT_SQL)
+_register(streaming_static_enrich_agg, STREAMING_STATIC_ENRICH_SQL)
+_register(streaming_parquet_sink_agg, STREAMING_PARQUET_SINK_SQL)
+_register(streaming_mask_pseudonymize, STREAMING_MASK_SQL)
+_register(streaming_sliding_agg, STREAMING_SLIDING_SQL)
+_register(streaming_session_agg, STREAMING_SESSION_SQL)
 
 
 # ===========================================================================
@@ -7557,136 +7476,71 @@ SELECT DISTINCT event_id, user_id, event_type, value FROM events
 """
 
 
-QUERIES["streaming_dedup_events"] = streaming_dedup_events
-ORACLES["streaming_dedup_events"] = STREAMING_DEDUP_SQL
-QUERIES["streaming_stream_join"] = streaming_stream_join
-ORACLES["streaming_stream_join"] = STREAMING_STREAM_JOIN_SQL
-QUERIES["streaming_stateful_user_totals"] = streaming_stateful_user_totals
-ORACLES["streaming_stateful_user_totals"] = STREAMING_STATEFUL_SQL
-QUERIES["q9_profit_by_nation_year"] = q9_profit_by_nation_year
-QUERIES["q11_important_nations"] = q11_important_nations
-QUERIES["q12_priority_by_linestatus"] = q12_priority_by_linestatus
-QUERIES["stats_corr_qty_price"] = stats_corr_qty_price
-QUERIES["histogram_totalprice"] = histogram_totalprice
-QUERIES["ntile_deciles_acctbal"] = ntile_deciles_acctbal
-QUERIES["timeseries_gapfill_hourly"] = timeseries_gapfill_hourly
-ORACLES["q9_profit_by_nation_year"] = Q9_SQL
-ORACLES["q11_important_nations"] = Q11_SQL
-ORACLES["q12_priority_by_linestatus"] = Q12_SQL
-ORACLES["stats_corr_qty_price"] = STATS_CORR_SQL
-ORACLES["histogram_totalprice"] = HISTOGRAM_SQL
-ORACLES["ntile_deciles_acctbal"] = NTILE_SQL
-ORACLES["timeseries_gapfill_hourly"] = GAPFILL_SQL
-QUERIES["csv_source_agg"] = csv_source_agg
-ORACLES["csv_source_agg"] = CSV_SOURCE_SQL
-QUERIES["jdbc_roundtrip_agg"] = jdbc_roundtrip_agg
-ORACLES["jdbc_roundtrip_agg"] = JDBC_ROUNDTRIP_SQL
-QUERIES["binaryfile_media_manifest"] = binaryfile_media_manifest
-ORACLES["binaryfile_media_manifest"] = BINARYFILE_MANIFEST_SQL
-QUERIES["cap_docs_per_source"] = cap_docs_per_source
-ORACLES["cap_docs_per_source"] = CAP_PER_SOURCE_SQL
-QUERIES["shard_training_corpus"] = shard_training_corpus
-ORACLES["shard_training_corpus"] = _gen_shard_corpus_sql()
-QUERIES["semdedup_embeddings"] = semdedup_embeddings
-ORACLES["semdedup_embeddings"] = _gen_semdedup_sql(0.4, 6)
-QUERIES["semdedup_ivf"] = semdedup_ivf
-ORACLES["semdedup_ivf"] = _gen_semdedup_ivf_sql(0.4)
-QUERIES["vocab_top_terms"] = vocab_top_terms
-ORACLES["vocab_top_terms"] = VOCAB_TOP_SQL
-QUERIES["explode_doc_sentences"] = explode_doc_sentences
-ORACLES["explode_doc_sentences"] = EXPLODE_SENTENCES_SQL
-QUERIES["doc_top_terms"] = doc_top_terms
-ORACLES["doc_top_terms"] = DOC_TOP_TERMS_SQL
-QUERIES["winsorize_events_value"] = winsorize_events_value
-ORACLES["winsorize_events_value"] = WINSORIZE_SQL
-QUERIES["funnel_view_click_purchase"] = funnel_view_click_purchase
-ORACLES["funnel_view_click_purchase"] = FUNNEL_SQL
-QUERIES["cohort_retention_weekly"] = cohort_retention_weekly
-ORACLES["cohort_retention_weekly"] = COHORT_SQL
-QUERIES["bigram_collocations"] = bigram_collocations
-ORACLES["bigram_collocations"] = BIGRAM_SQL
-QUERIES["profile_orders_columns"] = profile_orders_columns
-ORACLES["profile_orders_columns"] = _gen_column_profile_sql()
-QUERIES["snapshot_diff_orders"] = snapshot_diff_orders
-ORACLES["snapshot_diff_orders"] = SNAPSHOT_DIFF_SQL
-QUERIES["kmeans_assign_step"] = kmeans_assign_step
-ORACLES["kmeans_assign_step"] = _gen_kmeans_sql()
-QUERIES["fuzzy_pairs_symdelete"] = fuzzy_pairs_symdelete
-ORACLES["fuzzy_pairs_symdelete"] = FUZZY_SYMDELETE_SQL
-QUERIES["media_frame_sample"] = media_frame_sample
-ORACLES["media_frame_sample"] = FRAME_SAMPLE_SQL
-QUERIES["cdc_apply_changelog_orders"] = cdc_apply_changelog_orders
-ORACLES["cdc_apply_changelog_orders"] = CDC_APPLY_SQL
-QUERIES["incremental_agg_users"] = incremental_agg_users
-ORACLES["incremental_agg_users"] = INCREMENTAL_AGG_SQL
-QUERIES["compact_latest_events"] = compact_latest_events
-ORACLES["compact_latest_events"] = COMPACT_LATEST_SQL
-QUERIES["lateral_top2_orders_per_customer"] = lateral_top2_orders_per_customer
-ORACLES["lateral_top2_orders_per_customer"] = LATERAL_TOP2_SQL
-QUERIES["gapfill_recursive_days"] = gapfill_recursive_days
-ORACLES["gapfill_recursive_days"] = GAPFILL_RECURSIVE_SQL
-QUERIES["dq_checks_orders"] = dq_checks_orders
-ORACLES["dq_checks_orders"] = DQ_CHECKS_SQL
-QUERIES["crypto_shred_rtbf"] = crypto_shred_rtbf
-ORACLES["crypto_shred_rtbf"] = CRYPTO_SHRED_SQL
-QUERIES["dp_noised_counts_customers"] = dp_noised_counts_customers
-ORACLES["dp_noised_counts_customers"] = _gen_dp_noised_sql(0.5, "dp")
-QUERIES["k_anonymity_audit_customers"] = k_anonymity_audit_customers
-ORACLES["k_anonymity_audit_customers"] = K_ANON_SQL
-QUERIES["l_diversity_audit_customers"] = l_diversity_audit_customers
-ORACLES["l_diversity_audit_customers"] = L_DIV_SQL
-QUERIES["t_closeness_audit_customers"] = t_closeness_audit_customers
-ORACLES["t_closeness_audit_customers"] = T_CLOSENESS_SQL
-QUERIES["max_concurrent_events_sweepline"] = max_concurrent_events_sweepline
-ORACLES["max_concurrent_events_sweepline"] = MAX_CONCURRENT_SQL
-QUERIES["frequent_part_pairs"] = frequent_part_pairs
-ORACLES["frequent_part_pairs"] = FREQUENT_PAIRS_SQL
-QUERIES["interpolate_hourly_values"] = interpolate_hourly_values
-ORACLES["interpolate_hourly_values"] = INTERPOLATE_HOURLY_SQL
-QUERIES["udtf_trigram_stats"] = udtf_trigram_stats
-ORACLES["udtf_trigram_stats"] = UDTF_TRIGRAM_SQL
-QUERIES["mask_fpe_card_customers"] = mask_fpe_card_customers
-ORACLES["mask_fpe_card_customers"] = MASK_FPE_CARD_SQL
-QUERIES["mask_date_shift_orders"] = mask_date_shift_orders
-ORACLES["mask_date_shift_orders"] = MASK_DATE_SHIFT_SQL
-QUERIES["mask_swap_acctbal_nation"] = mask_swap_acctbal_nation
-ORACLES["mask_swap_acctbal_nation"] = MASK_SWAP_SQL
-QUERIES["mask_microaggregate_acctbal"] = mask_microaggregate_acctbal
-ORACLES["mask_microaggregate_acctbal"] = MASK_MICROAGG_SQL
-QUERIES["user_daily_streaks"] = user_daily_streaks
-ORACLES["user_daily_streaks"] = USER_STREAKS_SQL
-QUERIES["rtbf_forget_cascade"] = rtbf_forget_cascade
-ORACLES["rtbf_forget_cascade"] = RTBF_SQL
-QUERIES["mask_generalize_customers"] = mask_generalize_customers
-ORACLES["mask_generalize_customers"] = MASK_GENERALIZE_SQL
-QUERIES["suppress_small_groups"] = suppress_small_groups
-ORACLES["suppress_small_groups"] = SUPPRESS_SQL
-QUERIES["pydatasource_synth_agg"] = pydatasource_synth_agg
-ORACLES["pydatasource_synth_agg"] = _gen_pydatasource_sql()
-QUERIES["variant_events_agg"] = variant_events_agg
-ORACLES["variant_events_agg"] = VARIANT_SQL
-QUERIES["chunk_docs_for_rag"] = chunk_docs_for_rag
-ORACLES["chunk_docs_for_rag"] = CHUNK_DOCS_SQL
-QUERIES["approx_top_terms"] = approx_top_terms
-ORACLES["approx_top_terms"] = APPROX_TOP_TERMS_SQL
-QUERIES["rebalance_corpus_mix"] = rebalance_corpus_mix
-ORACLES["rebalance_corpus_mix"] = _gen_rebalance_sql()
-QUERIES["importance_sample_docs"] = importance_sample_docs
-ORACLES["importance_sample_docs"] = _gen_importance_sample_sql()
-QUERIES["pretraining_pipeline_e2e"] = pretraining_pipeline_e2e
-ORACLES["pretraining_pipeline_e2e"] = _gen_pretraining_pipeline_sql()
-QUERIES["pydatasource_stream_agg"] = pydatasource_stream_agg
-ORACLES["pydatasource_stream_agg"] = _gen_pydatasource_sql(2000)
-QUERIES["zorder_orders_key"] = zorder_orders_key
-QUERIES["zorder_lineitem_key3"] = zorder_lineitem_key3
-QUERIES["mask_run_report"] = mask_run_report
-QUERIES["mask_report_synchro_cascade"] = mask_report_synchro_cascade
-ORACLES["mask_report_synchro_cascade"] = MASK_REPORT_SYNCHRO_SQL
-QUERIES["text_nfc_dedup_prep"] = text_nfc_dedup_prep
-ORACLES["text_nfc_dedup_prep"] = TEXT_NFC_SQL
-ORACLES["mask_run_report"] = MASK_RUN_REPORT_SQL
-ORACLES["zorder_lineitem_key3"] = ZORDER3_SQL
-ORACLES["zorder_orders_key"] = ZORDER_ORDERS_SQL
+_register(streaming_dedup_events, STREAMING_DEDUP_SQL)
+_register(streaming_stream_join, STREAMING_STREAM_JOIN_SQL)
+_register(streaming_stateful_user_totals, STREAMING_STATEFUL_SQL)
+_register(q9_profit_by_nation_year, Q9_SQL)
+_register(q11_important_nations, Q11_SQL)
+_register(q12_priority_by_linestatus, Q12_SQL)
+_register(stats_corr_qty_price, STATS_CORR_SQL)
+_register(histogram_totalprice, HISTOGRAM_SQL)
+_register(ntile_deciles_acctbal, NTILE_SQL)
+_register(timeseries_gapfill_hourly, GAPFILL_SQL)
+_register(csv_source_agg, CSV_SOURCE_SQL)
+_register(jdbc_roundtrip_agg, JDBC_ROUNDTRIP_SQL)
+_register(binaryfile_media_manifest, BINARYFILE_MANIFEST_SQL)
+_register(cap_docs_per_source, CAP_PER_SOURCE_SQL)
+_register(shard_training_corpus, _gen_shard_corpus_sql())
+_register(semdedup_embeddings, _gen_semdedup_sql(0.4, 6))
+_register(semdedup_ivf, _gen_semdedup_ivf_sql(0.4))
+_register(vocab_top_terms, VOCAB_TOP_SQL)
+_register(explode_doc_sentences, EXPLODE_SENTENCES_SQL)
+_register(doc_top_terms, DOC_TOP_TERMS_SQL)
+_register(winsorize_events_value, WINSORIZE_SQL)
+_register(funnel_view_click_purchase, FUNNEL_SQL)
+_register(cohort_retention_weekly, COHORT_SQL)
+_register(bigram_collocations, BIGRAM_SQL)
+_register(profile_orders_columns, _gen_column_profile_sql())
+_register(snapshot_diff_orders, SNAPSHOT_DIFF_SQL)
+_register(kmeans_assign_step, _gen_kmeans_sql())
+_register(fuzzy_pairs_symdelete, FUZZY_SYMDELETE_SQL)
+_register(media_frame_sample, FRAME_SAMPLE_SQL)
+_register(cdc_apply_changelog_orders, CDC_APPLY_SQL)
+_register(incremental_agg_users, INCREMENTAL_AGG_SQL)
+_register(compact_latest_events, COMPACT_LATEST_SQL)
+_register(lateral_top2_orders_per_customer, LATERAL_TOP2_SQL)
+_register(gapfill_recursive_days, GAPFILL_RECURSIVE_SQL)
+_register(dq_checks_orders, DQ_CHECKS_SQL)
+_register(crypto_shred_rtbf, CRYPTO_SHRED_SQL)
+_register(dp_noised_counts_customers, _gen_dp_noised_sql(0.5, "dp"))
+_register(k_anonymity_audit_customers, K_ANON_SQL)
+_register(l_diversity_audit_customers, L_DIV_SQL)
+_register(t_closeness_audit_customers, T_CLOSENESS_SQL)
+_register(max_concurrent_events_sweepline, MAX_CONCURRENT_SQL)
+_register(frequent_part_pairs, FREQUENT_PAIRS_SQL)
+_register(interpolate_hourly_values, INTERPOLATE_HOURLY_SQL)
+_register(udtf_trigram_stats, UDTF_TRIGRAM_SQL)
+_register(mask_fpe_card_customers, MASK_FPE_CARD_SQL)
+_register(mask_date_shift_orders, MASK_DATE_SHIFT_SQL)
+_register(mask_swap_acctbal_nation, MASK_SWAP_SQL)
+_register(mask_microaggregate_acctbal, MASK_MICROAGG_SQL)
+_register(user_daily_streaks, USER_STREAKS_SQL)
+_register(rtbf_forget_cascade, RTBF_SQL)
+_register(mask_generalize_customers, MASK_GENERALIZE_SQL)
+_register(suppress_small_groups, SUPPRESS_SQL)
+_register(pydatasource_synth_agg, _gen_pydatasource_sql())
+_register(variant_events_agg, VARIANT_SQL)
+_register(chunk_docs_for_rag, CHUNK_DOCS_SQL)
+_register(approx_top_terms, APPROX_TOP_TERMS_SQL)
+_register(rebalance_corpus_mix, _gen_rebalance_sql())
+_register(importance_sample_docs, _gen_importance_sample_sql())
+_register(pretraining_pipeline_e2e, _gen_pretraining_pipeline_sql())
+_register(pydatasource_stream_agg, _gen_pydatasource_sql(2000))
+_register(zorder_orders_key, ZORDER_ORDERS_SQL)
+_register(zorder_lineitem_key3, ZORDER3_SQL)
+_register(mask_run_report, MASK_RUN_REPORT_SQL)
+_register(mask_report_synchro_cascade, MASK_REPORT_SYNCHRO_SQL)
+_register(text_nfc_dedup_prep, TEXT_NFC_SQL)
 # Spark 4's transformWithStateInPandas needs the protobuf package for its
 # state-server protocol — absent in this container (no installs), so the
 # query registers only where the runtime can actually execute it
@@ -7696,12 +7550,9 @@ from mysql_data_anonymizer_spark.streaming.stream_ops import (  # noqa: E402
 )
 
 if _HAS_TWS:
-    QUERIES["streaming_stateful_user_stats_tws"] = streaming_stateful_user_stats_tws
-    ORACLES["streaming_stateful_user_stats_tws"] = STREAMING_TWS_SQL
-QUERIES["streaming_jdbc_upsert_agg"] = streaming_jdbc_upsert_agg
-ORACLES["streaming_jdbc_upsert_agg"] = STREAMING_JDBC_UPSERT_SQL
-QUERIES["streaming_dedup_then_window"] = streaming_dedup_then_window
-ORACLES["streaming_dedup_then_window"] = STREAMING_CHAIN_SQL
+    _register(streaming_stateful_user_stats_tws, STREAMING_TWS_SQL)
+_register(streaming_jdbc_upsert_agg, STREAMING_JDBC_UPSERT_SQL)
+_register(streaming_dedup_then_window, STREAMING_CHAIN_SQL)
 
 
 def ohlc_hourly_events(spark, sf_dir):
@@ -7910,14 +7761,10 @@ WHERE c_custkey NOT IN (
 """
 
 
-QUERIES["ohlc_hourly_events"] = ohlc_hourly_events
-ORACLES["ohlc_hourly_events"] = OHLC_HOURLY_SQL
-QUERIES["mask_pram_mktsegment"] = mask_pram_mktsegment
-ORACLES["mask_pram_mktsegment"] = _gen_pram_sql()
-QUERIES["benford_first_digit_audit"] = benford_first_digit_audit
-ORACLES["benford_first_digit_audit"] = _gen_benford_sql()
-QUERIES["not_in_null_aware_customers"] = not_in_null_aware_customers
-ORACLES["not_in_null_aware_customers"] = NOT_IN_NAAJ_SQL
+_register(ohlc_hourly_events, OHLC_HOURLY_SQL)
+_register(mask_pram_mktsegment, _gen_pram_sql())
+_register(benford_first_digit_audit, _gen_benford_sql())
+_register(not_in_null_aware_customers, NOT_IN_NAAJ_SQL)
 
 
 def bucketed_join_revenue(spark, sf_dir):
@@ -8041,10 +7888,8 @@ GROUP BY o_orderstatus
 """
 
 
-QUERIES["bucketed_join_revenue"] = bucketed_join_revenue
-ORACLES["bucketed_join_revenue"] = BUCKETED_JOIN_SQL
-QUERIES["partition_pruned_orders_agg"] = partition_pruned_orders_agg
-ORACLES["partition_pruned_orders_agg"] = PARTITION_PRUNED_SQL
+_register(bucketed_join_revenue, BUCKETED_JOIN_SQL)
+_register(partition_pruned_orders_agg, PARTITION_PRUNED_SQL)
 
 
 def cms_frequency_parts(spark, sf_dir):
@@ -8093,8 +7938,7 @@ GROUP BY l_partkey
 """
 
 
-QUERIES["cms_frequency_parts"] = cms_frequency_parts
-ORACLES["cms_frequency_parts"] = CMS_FREQUENCY_SQL
+_register(cms_frequency_parts, CMS_FREQUENCY_SQL)
 
 
 def streaming_ohlc_window_agg(spark, sf_dir):
@@ -8138,8 +7982,7 @@ GROUP BY 1, 2
 """
 
 
-QUERIES["streaming_ohlc_window_agg"] = streaming_ohlc_window_agg
-ORACLES["streaming_ohlc_window_agg"] = STREAMING_OHLC_SQL
+_register(streaming_ohlc_window_agg, STREAMING_OHLC_SQL)
 
 
 _BM25_TERMS = ("join", "vector", "filter")
@@ -8237,8 +8080,7 @@ FROM tf JOIN df USING (term) JOIN dl USING (doc_id) CROSS JOIN stats
 """
 
 
-QUERIES["bm25_term_scores"] = bm25_term_scores
-ORACLES["bm25_term_scores"] = BM25_SQL
+_register(bm25_term_scores, BM25_SQL)
 
 
 def trigram_name_matches(spark, sf_dir):
@@ -8334,8 +8176,7 @@ WHERE shared * 100 >= 45 * (sa.sz + sb.sz - shared)
 """
 
 
-QUERIES["trigram_name_matches"] = trigram_name_matches
-ORACLES["trigram_name_matches"] = TRIGRAM_MATCH_SQL
+_register(trigram_name_matches, TRIGRAM_MATCH_SQL)
 
 
 def _ann_models(spark, sf_dir, emb):
@@ -8365,8 +8206,7 @@ def knn_ivfpq(spark, sf_dir):
     return _certified_knn(spark, sf_dir, "ivfpq")
 
 
-QUERIES["knn_ivfpq"] = knn_ivfpq
-ORACLES["knn_ivfpq"] = _gen_certified_knn_sql()
+_register(knn_ivfpq, _gen_certified_knn_sql())
 
 
 def dp_bounded_sum_events(spark, sf_dir):
@@ -8451,8 +8291,7 @@ FROM noised
 """
 
 
-QUERIES["dp_bounded_sum_events"] = dp_bounded_sum_events
-ORACLES["dp_bounded_sum_events"] = _gen_dp_bounded_sum_sql()
+_register(dp_bounded_sum_events, _gen_dp_bounded_sum_sql())
 
 
 def compact_small_files_events(spark, sf_dir):
@@ -8511,8 +8350,7 @@ GROUP BY event_type
 """
 
 
-QUERIES["compact_small_files_events"] = compact_small_files_events
-ORACLES["compact_small_files_events"] = COMPACT_SMALL_FILES_SQL
+_register(compact_small_files_events, COMPACT_SMALL_FILES_SQL)
 
 
 def pydatasource_write_roundtrip(spark, sf_dir):
@@ -8570,8 +8408,7 @@ GROUP BY c_nationkey
 """
 
 
-QUERIES["pydatasource_write_roundtrip"] = pydatasource_write_roundtrip
-ORACLES["pydatasource_write_roundtrip"] = PYDS_WRITE_SQL
+_register(pydatasource_write_roundtrip, PYDS_WRITE_SQL)
 
 
 def readability_scores_docs(spark, sf_dir):
@@ -8634,8 +8471,7 @@ WHERE n_words >= 1 AND n_sentences >= 1
 """
 
 
-QUERIES["readability_scores_docs"] = readability_scores_docs
-ORACLES["readability_scores_docs"] = READABILITY_SQL
+_register(readability_scores_docs, READABILITY_SQL)
 
 
 def _time_halves(spark, sf_dir: str) -> str:
@@ -8723,8 +8559,7 @@ FROM events GROUP BY 1, 2
 """
 
 
-QUERIES["streaming_update_mode_agg"] = streaming_update_mode_agg
-ORACLES["streaming_update_mode_agg"] = STREAMING_UPDATE_SQL
+_register(streaming_update_mode_agg, STREAMING_UPDATE_SQL)
 
 
 def embedding_norms_arrow(spark, sf_dir):
@@ -8767,8 +8602,7 @@ WHERE embedding IS NOT NULL
 """
 
 
-QUERIES["embedding_norms_arrow"] = embedding_norms_arrow
-ORACLES["embedding_norms_arrow"] = EMBEDDING_NORMS_SQL
+_register(embedding_norms_arrow, EMBEDDING_NORMS_SQL)
 
 
 def entity_clusters_parts(spark, sf_dir):
@@ -8834,8 +8668,7 @@ FROM universe u LEFT JOIN cc ON cc.node = u.k
 """
 
 
-QUERIES["entity_clusters_parts"] = entity_clusters_parts
-ORACLES["entity_clusters_parts"] = ENTITY_CLUSTERS_SQL
+_register(entity_clusters_parts, ENTITY_CLUSTERS_SQL)
 
 
 def hll_intersection_users(spark, sf_dir):
@@ -8907,8 +8740,7 @@ GROUP BY 1, 2
 """
 
 
-QUERIES["hll_intersection_users"] = hll_intersection_users
-ORACLES["hll_intersection_users"] = HLL_INTERSECTION_SQL
+_register(hll_intersection_users, HLL_INTERSECTION_SQL)
 
 
 def streaming_stream_left_join(spark, sf_dir):
@@ -8978,8 +8810,7 @@ WHERE NOT EXISTS (SELECT 1 FROM matched m WHERE m.click_id = c.click_id)
 """
 
 
-QUERIES["streaming_stream_left_join"] = streaming_stream_left_join
-ORACLES["streaming_stream_left_join"] = STREAMING_LEFT_JOIN_SQL
+_register(streaming_stream_left_join, STREAMING_LEFT_JOIN_SQL)
 
 
 def schema_evolution_merge_read(spark, sf_dir):
@@ -9039,8 +8870,7 @@ GROUP BY 1
 """
 
 
-QUERIES["schema_evolution_merge_read"] = schema_evolution_merge_read
-ORACLES["schema_evolution_merge_read"] = SCHEMA_EVOLUTION_SQL
+_register(schema_evolution_merge_read, SCHEMA_EVOLUTION_SQL)
 
 
 def mask_plan_manifest(spark, sf_dir):
@@ -9115,8 +8945,7 @@ SELECT * FROM (VALUES
 """
 
 
-QUERIES["mask_plan_manifest"] = mask_plan_manifest
-ORACLES["mask_plan_manifest"] = MASK_PLAN_MANIFEST_SQL
+_register(mask_plan_manifest, MASK_PLAN_MANIFEST_SQL)
 
 
 # ===========================================================================
@@ -9178,8 +9007,7 @@ FROM agg
 """
 
 
-QUERIES["quality_classifier_scores"] = quality_classifier_scores
-ORACLES["quality_classifier_scores"] = _gen_quality_classifier_sql()
+_register(quality_classifier_scores, _gen_quality_classifier_sql())
 
 
 def mix_temperature_sample(spark, sf_dir):
@@ -9236,8 +9064,7 @@ WHERE ({_TMIX_GATE} % 1000000) < CAST(FLOOR(r.keep_rate * 1000000) AS BIGINT)
 """
 
 
-QUERIES["mix_temperature_sample"] = mix_temperature_sample
-ORACLES["mix_temperature_sample"] = MIX_TEMPERATURE_SQL
+_register(mix_temperature_sample, MIX_TEMPERATURE_SQL)
 
 
 def hybrid_search_rrf(spark, sf_dir):
@@ -9330,8 +9157,7 @@ FROM (
 """
 
 
-QUERIES["hybrid_search_rrf"] = hybrid_search_rrf
-ORACLES["hybrid_search_rrf"] = _gen_hybrid_rrf_sql()
+_register(hybrid_search_rrf, _gen_hybrid_rrf_sql())
 
 
 def dedup_keep_best_quality(spark, sf_dir):
@@ -9412,8 +9238,7 @@ FROM scored
 """
 
 
-QUERIES["dedup_keep_best_quality"] = dedup_keep_best_quality
-ORACLES["dedup_keep_best_quality"] = _gen_dedup_keep_best_sql()
+_register(dedup_keep_best_quality, _gen_dedup_keep_best_sql())
 
 
 _CCNET_REF_SOURCES = ("src0", "src1", "src2", "src3")
@@ -9609,8 +9434,7 @@ FROM scored CROSS JOIN cuts
 """
 
 
-QUERIES["ccnet_perplexity_buckets"] = ccnet_perplexity_buckets
-ORACLES["ccnet_perplexity_buckets"] = _gen_ccnet_buckets_sql()
+_register(ccnet_perplexity_buckets, _gen_ccnet_buckets_sql())
 
 
 def ccnet_perplexity_buckets_prod(spark, sf_dir):
@@ -9626,11 +9450,13 @@ def ccnet_perplexity_buckets_prod(spark, sf_dir):
     return _ccnet_buckets_impl(spark, sf_dir, keyed=True)
 
 
-ORACLES["ccnet_perplexity_buckets_prod"] = _gen_ccnet_buckets_sql().replace(
-    "SELECT doc_id, n_bigrams, lm_score,",
-    "SELECT doc_id, n_bigrams, lm_score, TRUE AS keyed_join_ok,",
+_register(
+    ccnet_perplexity_buckets_prod,
+    _gen_ccnet_buckets_sql().replace(
+        "SELECT doc_id, n_bigrams, lm_score,",
+        "SELECT doc_id, n_bigrams, lm_score, TRUE AS keyed_join_ok,",
+    ),
 )
-QUERIES["ccnet_perplexity_buckets_prod"] = ccnet_perplexity_buckets_prod
 
 
 _PAGERANK_ITERS = 5
@@ -9740,8 +9566,7 @@ JOIN {prev} ON {prev}.node = n.node
 """
 
 
-QUERIES["pagerank_copurchase_parts"] = pagerank_copurchase_parts
-ORACLES["pagerank_copurchase_parts"] = _gen_pagerank_sql()
+_register(pagerank_copurchase_parts, _gen_pagerank_sql())
 
 
 def enforce_k_anonymity_customers(spark, sf_dir):
@@ -9803,8 +9628,7 @@ CROSS JOIN tot t
 """
 
 
-QUERIES["enforce_k_anonymity_customers"] = enforce_k_anonymity_customers
-ORACLES["enforce_k_anonymity_customers"] = ENFORCE_K_ANON_SQL
+_register(enforce_k_anonymity_customers, ENFORCE_K_ANON_SQL)
 
 
 def synthesize_marginals_customers(spark, sf_dir):
@@ -9922,8 +9746,7 @@ JOIN nat t ON b.unat >= t.nat_lo AND b.unat < t.nat_hi
 """
 
 
-QUERIES["synthesize_marginals_customers"] = synthesize_marginals_customers
-ORACLES["synthesize_marginals_customers"] = SYNTH_MARGINALS_SQL
+_register(synthesize_marginals_customers, SYNTH_MARGINALS_SQL)
 
 
 def fuzzy_match_blocked_suppliers(spark, sf_dir):
@@ -10038,8 +9861,7 @@ WHERE levenshtein(name_a, name_b) <= 2
 """
 
 
-QUERIES["fuzzy_match_blocked_suppliers"] = fuzzy_match_blocked_suppliers
-ORACLES["fuzzy_match_blocked_suppliers"] = FUZZY_MATCH_SQL
+_register(fuzzy_match_blocked_suppliers, FUZZY_MATCH_SQL)
 
 
 _RAG_DIM = 8
@@ -10151,8 +9973,7 @@ SELECT q_doc, q_chunk, n_doc, n_chunk, cosine, rank FROM (
 """
 
 
-QUERIES["rag_pipeline_e2e"] = rag_pipeline_e2e
-ORACLES["rag_pipeline_e2e"] = _gen_rag_e2e_sql()
+_register(rag_pipeline_e2e, _gen_rag_e2e_sql())
 
 
 _PHRASE = ("table", "scan")
@@ -10204,8 +10025,7 @@ GROUP BY a.doc_id
 """
 
 
-QUERIES["phrase_search_docs"] = phrase_search_docs
-ORACLES["phrase_search_docs"] = PHRASE_SEARCH_SQL
+_register(phrase_search_docs, PHRASE_SEARCH_SQL)
 
 
 def skew_report_lineitem(spark, sf_dir):
@@ -10280,8 +10100,7 @@ FROM stats CROSS JOIN hot
 """
 
 
-QUERIES["skew_report_lineitem"] = skew_report_lineitem
-ORACLES["skew_report_lineitem"] = SKEW_REPORT_SQL
+_register(skew_report_lineitem, SKEW_REPORT_SQL)
 
 
 def media_audio_segments(spark, sf_dir):
@@ -10330,8 +10149,7 @@ FROM (
 """
 
 
-QUERIES["media_audio_segments"] = media_audio_segments
-ORACLES["media_audio_segments"] = AUDIO_SEGMENTS_SQL
+_register(media_audio_segments, AUDIO_SEGMENTS_SQL)
 
 
 def dedup_exact_substring(spark, sf_dir):
@@ -10394,8 +10212,7 @@ HAVING kept_tokens > 0
 """
 
 
-QUERIES["dedup_exact_substring"] = dedup_exact_substring
-ORACLES["dedup_exact_substring"] = EXACT_SUBSTRING_SQL
+_register(dedup_exact_substring, EXACT_SUBSTRING_SQL)
 
 
 def _neardup_index(spark, sf_dir):
@@ -10496,8 +10313,7 @@ WHERE COALESCE((d.doc_id % 2 + 2) % 2, 0) = 1
 """
 
 
-QUERIES["dedup_incremental_indexed"] = dedup_incremental_indexed
-ORACLES["dedup_incremental_indexed"] = INCREMENTAL_INDEXED_SQL
+_register(dedup_incremental_indexed, INCREMENTAL_INDEXED_SQL)
 
 
 def bpe_merge_steps(spark, sf_dir):
@@ -10568,8 +10384,7 @@ w{k} AS MATERIALIZED (
     return ",\n".join(parts) + "\n" + union
 
 
-QUERIES["bpe_merge_steps"] = bpe_merge_steps
-ORACLES["bpe_merge_steps"] = _gen_bpe_sql()
+_register(bpe_merge_steps, _gen_bpe_sql())
 
 
 def bpe_encode_docs(spark, sf_dir):
@@ -10641,8 +10456,7 @@ GROUP BY doc_id"""
     return train_ctes + ",\n" + ",\n".join(enc_ctes) + ",\n" + tail
 
 
-QUERIES["bpe_encode_docs"] = bpe_encode_docs
-ORACLES["bpe_encode_docs"] = _gen_bpe_encode_sql()
+_register(bpe_encode_docs, _gen_bpe_encode_sql())
 
 
 def _probed_cells(plan: str, table: str) -> set[int] | None:
@@ -10718,8 +10532,7 @@ def knn_ivf_indexed(spark, sf_dir):
     return _certified_knn(spark, sf_dir, "ivf", emb, approx, pruned_ok=pruned)
 
 
-ORACLES["knn_ivf_indexed"] = _gen_certified_knn_sql("pruned_ok")
-QUERIES["knn_ivf_indexed"] = knn_ivf_indexed
+_register(knn_ivf_indexed, _gen_certified_knn_sql("pruned_ok"))
 
 
 def hard_negatives_embeddings(spark, sf_dir):
@@ -10760,8 +10573,7 @@ SELECT query_id, query_label, neighbor_id, neighbor_label, cosine, rank FROM (
 """
 
 
-QUERIES["hard_negatives_embeddings"] = hard_negatives_embeddings
-ORACLES["hard_negatives_embeddings"] = HARD_NEGATIVES_SQL
+_register(hard_negatives_embeddings, HARD_NEGATIVES_SQL)
 
 
 def mlm_mask_docs(spark, sf_dir):
@@ -10800,8 +10612,7 @@ FROM pos GROUP BY doc_id
 """
 
 
-QUERIES["mlm_mask_docs"] = mlm_mask_docs
-ORACLES["mlm_mask_docs"] = MLM_MASK_SQL
+_register(mlm_mask_docs, MLM_MASK_SQL)
 
 
 def epoch_expand_mixture(spark, sf_dir):
@@ -10890,8 +10701,7 @@ CROSS JOIN UNNEST(range(1, n_epochs + 1)) AS u(e)
 """
 
 
-QUERIES["epoch_expand_mixture"] = epoch_expand_mixture
-ORACLES["epoch_expand_mixture"] = EPOCH_EXPAND_SQL
+_register(epoch_expand_mixture, EPOCH_EXPAND_SQL)
 
 
 def pack_sequences_gpt(spark, sf_dir):
@@ -10940,8 +10750,7 @@ GROUP BY shard, seq_no
 """
 
 
-QUERIES["pack_sequences_gpt"] = pack_sequences_gpt
-ORACLES["pack_sequences_gpt"] = PACK_SEQUENCES_SQL
+_register(pack_sequences_gpt, PACK_SEQUENCES_SQL)
 
 
 def salted_join_revenue(spark, sf_dir):
@@ -10996,8 +10805,7 @@ GROUP BY o_orderpriority
 """
 
 
-QUERIES["salted_join_revenue"] = salted_join_revenue
-ORACLES["salted_join_revenue"] = SALTED_JOIN_SQL
+_register(salted_join_revenue, SALTED_JOIN_SQL)
 
 
 def dedup_embedding_lsh_pairs(spark, sf_dir):
@@ -11025,12 +10833,16 @@ def dedup_embedding_lsh_pairs(spark, sf_dir):
     from concurrent.futures import ThreadPoolExecutor
 
     with ThreadPoolExecutor(max_workers=2) as _pool:
-        _fe = _pool.submit(
+        _fe = _submit(
+            _pool,
+            spark,
             lambda: dedup.embedding_near_dup_pairs(
                 emb, threshold=0.4
             ).localCheckpoint(eager=True)
         )
-        _fl = _pool.submit(
+        _fl = _submit(
+            _pool,
+            spark,
             lambda: similarity.lsh_bucketed_pairs(
                 emb, threshold=0.4, n_planes=144, n_tables=24
             )
@@ -11058,11 +10870,11 @@ def dedup_embedding_lsh_pairs(spark, sf_dir):
     )
 
 
-ORACLES["dedup_embedding_lsh_pairs"] = (
+_register(
+    dedup_embedding_lsh_pairs,
     "SELECT id_a, id_b, cosine, TRUE AS lsh_subset_ok, TRUE AS lsh_recall_ok "
-    f"FROM ({_gen_embedding_dedup_sql(0.4).replace('FROM embeddings', 'FROM embeddings WHERE vec_id % 2 = 0')}) t"
+    f"FROM ({_gen_embedding_dedup_sql(0.4).replace('FROM embeddings', 'FROM embeddings WHERE vec_id % 2 = 0')}) t",
 )
-QUERIES["dedup_embedding_lsh_pairs"] = dedup_embedding_lsh_pairs
 
 
 def streaming_dedup_index_probe(spark, sf_dir):
@@ -11129,8 +10941,7 @@ GROUP BY doc_id
 """
 
 
-QUERIES["streaming_dedup_index_probe"] = streaming_dedup_index_probe
-ORACLES["streaming_dedup_index_probe"] = STREAMING_INDEX_PROBE_SQL
+_register(streaming_dedup_index_probe, STREAMING_INDEX_PROBE_SQL)
 
 
 _SDIP_WM_EPOCH = 1_700_000_000  # synthetic arrival-time base (docs carry none)
@@ -11236,15 +11047,9 @@ WHERE ({_SDIP_WM_EPOCH} + COALESCE(doc_id, 0)) // {_SDIP_WM_WINDOW_S}
 """
 
 
-QUERIES["streaming_dedup_index_probe_wm"] = streaming_dedup_index_probe_wm
-ORACLES["streaming_dedup_index_probe_wm"] = STREAMING_INDEX_PROBE_WM_SQL
+_register(streaming_dedup_index_probe_wm, STREAMING_INDEX_PROBE_WM_SQL)
 
 
-# ===========================================================================
-# registry ordering: entries the driver has never recorded a CORRECTNESS row
-# for come FIRST, so a bounded correctness pass always reaches them before
-# re-checking queries that are already green.
-# ===========================================================================
 # --------------------------------------------------------------------------
 # round 9: Hilbert layout, skip-gram pairs, Kneser-Ney counts, triangles,
 # k-center coreset, exact-integer EWMA
@@ -11304,8 +11109,7 @@ SELECT o_orderkey, d AS hkey FROM {prev}
 """
 
 
-QUERIES["hilbert_orders_key"] = hilbert_orders_key
-ORACLES["hilbert_orders_key"] = _gen_hilbert_sql()
+_register(hilbert_orders_key, _gen_hilbert_sql())
 
 
 SKIPGRAM_WINDOW = 2
@@ -11385,8 +11189,7 @@ FROM bidi GROUP BY 1, 2 HAVING COUNT(*) >= {SKIPGRAM_MIN_COUNT}
 """
 
 
-QUERIES["skipgram_pairs_docs"] = skipgram_pairs_docs
-ORACLES["skipgram_pairs_docs"] = SKIPGRAM_SQL
+_register(skipgram_pairs_docs, SKIPGRAM_SQL)
 
 
 KN_MIN_COUNT = 5
@@ -11482,8 +11285,7 @@ WHERE bg.n_w1w2 >= {KN_MIN_COUNT}
 """
 
 
-QUERIES["kneser_ney_bigram_counts"] = kneser_ney_bigram_counts
-ORACLES["kneser_ney_bigram_counts"] = KNESER_NEY_SQL
+_register(kneser_ney_bigram_counts, KNESER_NEY_SQL)
 
 
 def triangle_count_copurchase(spark, sf_dir):
@@ -11606,8 +11408,7 @@ GROUP BY 1
 """
 
 
-QUERIES["triangle_count_copurchase"] = triangle_count_copurchase
-ORACLES["triangle_count_copurchase"] = TRIANGLE_SQL
+_register(triangle_count_copurchase, TRIANGLE_SQL)
 
 
 KCENTER_K = 5
@@ -11682,8 +11483,7 @@ FROM (
 """
 
 
-QUERIES["kcenter_coreset_embeddings"] = kcenter_coreset_embeddings
-ORACLES["kcenter_coreset_embeddings"] = _gen_kcenter_sql()
+_register(kcenter_coreset_embeddings, _gen_kcenter_sql())
 
 
 EWMA_WINDOW = 20
@@ -11767,8 +11567,7 @@ GROUP BY event_id, user_id, n_window
 """
 
 
-QUERIES["ewma_user_events"] = ewma_user_events
-ORACLES["ewma_user_events"] = EWMA_SQL
+_register(ewma_user_events, EWMA_SQL)
 
 
 
@@ -11887,8 +11686,7 @@ FROM point JOIN ci USING (event_type)
 """
 
 
-QUERIES["bootstrap_ci_events"] = bootstrap_ci_events
-ORACLES["bootstrap_ci_events"] = _gen_bootstrap_sql()
+_register(bootstrap_ci_events, _gen_bootstrap_sql())
 
 
 
@@ -11958,8 +11756,7 @@ GROUP BY user_id, n_events, n_window
 """
 
 
-QUERIES["streaming_ewma_user"] = streaming_ewma_user
-ORACLES["streaming_ewma_user"] = STREAMING_EWMA_SQL
+_register(streaming_ewma_user, STREAMING_EWMA_SQL)
 
 
 def streaming_ewma_user_wm(spark, sf_dir):
@@ -11988,8 +11785,7 @@ def streaming_ewma_user_wm(spark, sf_dir):
     )
 
 
-QUERIES["streaming_ewma_user_wm"] = streaming_ewma_user_wm
-ORACLES["streaming_ewma_user_wm"] = STREAMING_EWMA_SQL
+_register(streaming_ewma_user_wm, STREAMING_EWMA_SQL)
 
 
 
@@ -12053,8 +11849,7 @@ FROM sx GROUP BY sx_code
 """
 
 
-QUERIES["phonetic_blocking_parts"] = phonetic_blocking_parts
-ORACLES["phonetic_blocking_parts"] = PHONETIC_BLOCKING_SQL
+_register(phonetic_blocking_parts, PHONETIC_BLOCKING_SQL)
 
 
 def doc_novelty_bigrams(spark, sf_dir):
@@ -12149,8 +11944,7 @@ FROM toks t LEFT JOIN per_doc p USING (doc_id)
 """
 
 
-QUERIES["doc_novelty_bigrams"] = doc_novelty_bigrams
-ORACLES["doc_novelty_bigrams"] = DOC_NOVELTY_SQL
+_register(doc_novelty_bigrams, DOC_NOVELTY_SQL)
 
 
 
@@ -12290,8 +12084,7 @@ WHERE len(list_intersect(sa.tgs, sb.tgs)) * 100
 """
 
 
-QUERIES["prefix_filter_jaccard_parts"] = prefix_filter_jaccard_parts
-ORACLES["prefix_filter_jaccard_parts"] = PREFIX_FILTER_SQL
+_register(prefix_filter_jaccard_parts, PREFIX_FILTER_SQL)
 
 
 def cc_incremental_merge(spark, sf_dir):
@@ -12332,8 +12125,7 @@ def cc_incremental_merge(spark, sf_dir):
     )
 
 
-QUERIES["cc_incremental_merge"] = cc_incremental_merge
-ORACLES["cc_incremental_merge"] = _gen_dedup_clusters_sql(0.6)
+_register(cc_incremental_merge, _gen_dedup_clusters_sql(0.6))
 
 
 
@@ -12413,8 +12205,7 @@ FROM shared JOIN totals t ON t.source = src_a
 """
 
 
-QUERIES["corpus_overlap_matrix"] = corpus_overlap_matrix
-ORACLES["corpus_overlap_matrix"] = CORPUS_OVERLAP_SQL
+_register(corpus_overlap_matrix, CORPUS_OVERLAP_SQL)
 
 
 LENGTH_BAND = 32
@@ -12489,8 +12280,7 @@ GROUP BY band, batch_no
 """
 
 
-QUERIES["length_batching_docs"] = length_batching_docs
-ORACLES["length_batching_docs"] = LENGTH_BATCHING_SQL
+_register(length_batching_docs, LENGTH_BATCHING_SQL)
 
 
 
@@ -12553,8 +12343,7 @@ GROUP BY o.o_orderstatus, m.dq_rows, m.dq_bad_rows
 """
 
 
-QUERIES["observed_dq_gate_orders"] = observed_dq_gate_orders
-ORACLES["observed_dq_gate_orders"] = OBSERVED_DQ_SQL
+_register(observed_dq_gate_orders, OBSERVED_DQ_SQL)
 
 
 def kn_perplexity_docs(spark, sf_dir):
@@ -12809,8 +12598,7 @@ FROM scored CROSS JOIN cuts
 """
 
 
-QUERIES["kn_perplexity_docs"] = kn_perplexity_docs
-ORACLES["kn_perplexity_docs"] = _gen_kn_perplexity_sql()
+_register(kn_perplexity_docs, _gen_kn_perplexity_sql())
 
 
 def _root_seed_sql(x_sql: str, b: int) -> str:
@@ -12997,8 +12785,7 @@ FROM tgt
 """
 
 
-QUERIES["mixture_alpha_weights"] = mixture_alpha_weights
-ORACLES["mixture_alpha_weights"] = _gen_mixture_alpha_sql()
+_register(mixture_alpha_weights, _gen_mixture_alpha_sql())
 
 
 def corpus_drift_tvd(spark, sf_dir):
@@ -13181,8 +12968,7 @@ JOIN vocab USING (source)
 """
 
 
-QUERIES["corpus_drift_tvd"] = corpus_drift_tvd
-ORACLES["corpus_drift_tvd"] = _gen_corpus_drift_sql()
+_register(corpus_drift_tvd, _gen_corpus_drift_sql())
 
 
 def _drift_count_index(spark, sf_dir):
@@ -13237,11 +13023,13 @@ def drift_incremental_merge(spark, sf_dir):
     return out.withColumn("base_not_rescanned_ok", F.lit(bool(no_doc_scan)))
 
 
-QUERIES["drift_incremental_merge"] = drift_incremental_merge
-ORACLES["drift_incremental_merge"] = _gen_corpus_drift_sql().replace(
-    "SELECT p.source, ns.n_s AS n_tokens, vocab.vocab_size,",
-    "SELECT p.source, ns.n_s AS n_tokens, vocab.vocab_size,"
-    " TRUE AS base_not_rescanned_ok,",
+_register(
+    drift_incremental_merge,
+    _gen_corpus_drift_sql().replace(
+        "SELECT p.source, ns.n_s AS n_tokens, vocab.vocab_size,",
+        "SELECT p.source, ns.n_s AS n_tokens, vocab.vocab_size,"
+        " TRUE AS base_not_rescanned_ok,",
+    ),
 )
 
 
@@ -13401,8 +13189,7 @@ GROUP BY src, cnt.converged
 """
 
 
-QUERIES["kcore_copurchase_parts"] = kcore_copurchase_parts
-ORACLES["kcore_copurchase_parts"] = _gen_kcore_sql()
+_register(kcore_copurchase_parts, _gen_kcore_sql())
 
 
 _KMEANS_ROUNDS = 4
@@ -13621,8 +13408,7 @@ FROM a{rounds} a CROSS JOIN delta
 """
 
 
-QUERIES["kmeans_lloyd_embeddings"] = kmeans_lloyd_embeddings
-ORACLES["kmeans_lloyd_embeddings"] = _gen_kmeans_lloyd_sql()
+_register(kmeans_lloyd_embeddings, _gen_kmeans_lloyd_sql())
 
 
 def _kmeans_centroid_index(spark, sf_dir):
@@ -13727,8 +13513,7 @@ FROM (
 """
 
 
-QUERIES["kmeans_incremental_assign"] = kmeans_incremental_assign
-ORACLES["kmeans_incremental_assign"] = _gen_kmeans_incremental_sql()
+_register(kmeans_incremental_assign, _gen_kmeans_incremental_sql())
 
 
 def _kmeans_ivf_index(spark, sf_dir):
@@ -13853,10 +13638,7 @@ def knn_ivf_kmeans_indexed(spark, sf_dir):
     )
 
 
-ORACLES["knn_ivf_kmeans_indexed"] = _gen_certified_knn_sql(
-    "probe_bounded_ok", "model_reused_ok"
-)
-QUERIES["knn_ivf_kmeans_indexed"] = knn_ivf_kmeans_indexed
+_register(knn_ivf_kmeans_indexed, _gen_certified_knn_sql("probe_bounded_ok", "model_reused_ok"))
 
 
 def _kmeans_ivf_index_appended(spark, sf_dir):
@@ -13934,8 +13716,8 @@ def knn_ivf_kmeans_append(spark, sf_dir):
 
     _kmeans_centroid_index(spark, sf_dir)
     with ThreadPoolExecutor(max_workers=2) as _pool:
-        _fa = _pool.submit(_kmeans_ivf_index_appended, spark, sf_dir)
-        _ff = _pool.submit(_kmeans_ivf_index, spark, sf_dir)
+        _fa = _submit(_pool, spark, _kmeans_ivf_index_appended, spark, sf_dir)
+        _ff = _submit(_pool, spark, _kmeans_ivf_index, spark, sf_dir)
         tbl, full_tbl = _fa.result(), _ff.result()
     a = spark.table(tbl).select("vec_id", "cell")
     b = spark.table(full_tbl).select("vec_id", "cell")
@@ -13955,15 +13737,14 @@ def knn_ivf_kmeans_append(spark, sf_dir):
         return a.exceptAll(b).unionByName(b.exceptAll(a)).isEmpty()
 
     with ThreadPoolExecutor(max_workers=2) as _pool:
-        _fp, _fg = _pool.submit(_probe), _pool.submit(_gate)
+        _fp, _fg = _submit(_pool, spark, _probe), _submit(_pool, spark, _gate)
         approx, merge_ok = _fp.result(), _fg.result()
     return _certified_knn(
         spark, sf_dir, "ivf_kmeans", emb, approx, merge_equals_rebuild_ok=merge_ok
     )
 
 
-ORACLES["knn_ivf_kmeans_append"] = _gen_certified_knn_sql("merge_equals_rebuild_ok")
-QUERIES["knn_ivf_kmeans_append"] = knn_ivf_kmeans_append
+_register(knn_ivf_kmeans_append, _gen_certified_knn_sql("merge_equals_rebuild_ok"))
 
 
 def knn_recall_report(spark, sf_dir):
@@ -14025,7 +13806,8 @@ def knn_recall_report(spark, sf_dir):
 
     methods = list(_KNN_RECALL_FLOORS)
     with ThreadPoolExecutor(max_workers=len(methods)) as _pool:
-        approx = dict(zip(methods, _pool.map(_build, methods)))
+        futures = {m: _submit(_pool, spark, _build, m) for m in methods}
+        approx = {m: f.result() for m, f in futures.items()}
     out = None
     for m, floor in _KNN_RECALL_FLOORS.items():
         hits = exact.join(
@@ -14061,8 +13843,7 @@ SELECT * FROM (VALUES
 """
 
 
-QUERIES["knn_recall_report"] = knn_recall_report
-ORACLES["knn_recall_report"] = _gen_knn_recall_sql()
+_register(knn_recall_report, _gen_knn_recall_sql())
 
 
 # Gopher rule thresholds (Rae et al. 2021 §A1.1, adapted to the fixture
@@ -14218,8 +13999,7 @@ FROM rules
 """
 
 
-QUERIES["gopher_rules_docs"] = gopher_rules_docs
-ORACLES["gopher_rules_docs"] = _gen_gopher_rules_sql()
+_register(gopher_rules_docs, _gen_gopher_rules_sql())
 
 
 # Model-based quality scorer (r11 verdict item 5): hashed-NGRAM logistic
@@ -14392,90 +14172,4 @@ FROM seeded
 """
 
 
-QUERIES["quality_score_docs"] = quality_score_docs
-ORACLES["quality_score_docs"] = _gen_quality_score_sql()
-
-
-_CHECK_FIRST = [
-    # Ordering for the driver's bounded (~50-query) sample, round 12
-    # (standing stalest-first rule). (0) new this round — never
-    # driver-certified:
-    "knn_ivf_kmeans_indexed",
-    "knn_ivf_kmeans_append",
-    "quality_score_docs",
-    "streaming_ewma_user_wm",
-    "streaming_dedup_index_probe_wm",
-    # (1) semantics/gates changed this round by the r11 ADVICE fixes
-    # (NULL-doc_id KN cut population; truncation-proof plan gates) and the
-    # recall report's new ivf_kmeans method row — re-certify:
-    "kn_perplexity_docs",
-    "knn_recall_report",
-    "kmeans_incremental_assign",
-    "drift_incremental_merge",
-    # (2) stalest latest-cert first (r11 verdict item 1: wipe out the
-    # r6/r7 stale front): the full r6 cohort (14) ...
-    "schema_evolution_merge_read",
-    "split_leakage_safe",
-    "streaming_mask_pseudonymize",
-    "streaming_ohlc_window_agg",
-    "streaming_parquet_sink_agg",
-    "streaming_static_enrich_agg",
-    "streaming_stream_left_join",
-    "streaming_update_mode_agg",
-    "t_closeness_audit_customers",
-    "text_source_agg",
-    "trigram_name_matches",
-    "udtf_trigram_stats",
-    "user_daily_streaks",
-    "xml_source_agg",
-    # ... then the full r7 cohort (44) — whatever the ~50-sample doesn't
-    # reach stays at the head for r13:
-    "approx_quantiles_events_value",
-    "approx_top_terms",
-    "bigram_collocations",
-    "binaryfile_media_manifest",
-    "cap_docs_per_source",
-    "cdc_apply_changelog_orders",
-    "chunk_docs_for_rag",
-    "cohort_retention_weekly",
-    "csv_source_agg",
-    "customer_order_keys_array",
-    "doc_top_terms",
-    "explode_doc_sentences",
-    "funnel_view_click_purchase",
-    "hybrid_search_rrf",
-    "importance_sample_docs",
-    "incremental_agg_users",
-    "json_props_struct",
-    "json_source_agg",
-    "k_anonymity_audit_customers",
-    "kmeans_assign_step",
-    "l_diversity_audit_customers",
-    "mask_generalize_customers",
-    "media_audio_segments",
-    "media_frame_sample",
-    "mix_temperature_sample",
-    "phrase_search_docs",
-    "pretraining_pipeline_e2e",
-    "profile_orders_columns",
-    "pydatasource_synth_agg",
-    "q12_priority_by_linestatus",
-    "q14_promo_revenue",
-    "q18_large_orders",
-    "q19_disjunctive_revenue",
-    "q22_idle_rich_customers",
-    "q3_top_revenue_orders",
-    "q5_nation_revenue",
-    "q6_forecast_revenue",
-    "quality_classifier_scores",
-    "rag_pipeline_e2e",
-    "rebalance_corpus_mix",
-    "rollup_orders",
-    "rtbf_forget_cascade",
-    "running_total_per_customer",
-    "synthesize_marginals_customers",
-]
-QUERIES = {
-    **{k: QUERIES[k] for k in _CHECK_FIRST if k in QUERIES},
-    **{k: v for k, v in QUERIES.items() if k not in _CHECK_FIRST},
-}
+_register(quality_score_docs, _gen_quality_score_sql())

@@ -473,3 +473,90 @@ def test_result_invariant_to_shuffle_partitioning(spark, sf_dir, name):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
     assert a == b
+
+
+def test_each_query_name_is_written_once():
+    """A query is its ``def``, its oracle and one ``_register(fn, oracle)``
+    call; nothing else spells its name. No subscript assignment to QUERIES
+    or ORACLES outside ``_register``, no reorder list in queries.py, no name
+    list in bench.py, and the registry order is the order of the calls."""
+    import ast
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    qtree = ast.parse(open(Q.__file__).read())
+    btree = ast.parse(open(os.path.join(root, "bench.py")).read())
+
+    register = [n for n in qtree.body if isinstance(n, ast.FunctionDef) and n.name == "_register"]
+    assert len(register) == 1, "queries.py has no single _register helper"
+    inside = {id(n) for n in ast.walk(register[0])}
+    for node in ast.walk(qtree):
+        targets = getattr(node, "targets", None) or [getattr(node, "target", None)]
+        for t in targets:
+            if isinstance(t, ast.Subscript) and getattr(t.value, "id", None) in ("QUERIES", "ORACLES"):
+                assert id(node) in inside, f"queries.py:{node.lineno} assigns {t.value.id}[...]"
+    names = {n.id for tree in (qtree, btree) for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    assert not names & {"_CHECK_FIRST", "HEADLINE"}
+
+    top_defs = {n.name for n in qtree.body if isinstance(n, ast.FunctionDef)}
+    calls = [
+        n for n in ast.walk(qtree)
+        if isinstance(n, ast.Call) and getattr(n.func, "id", None) == "_register"
+    ]
+    order = [c.args[0].id for c in sorted(calls, key=lambda c: (c.lineno, c.col_offset))]
+    assert set(order) <= top_defs
+    assert len(order) == len(set(order))
+    gated = {"streaming_stateful_user_stats_tws"} - set(Q.QUERIES)
+    assert [n for n in order if n not in gated] == list(Q.QUERIES)
+
+
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn()`` under job group ``group``; return (its result, the ids of
+    the jobs in that group, the ids of the new jobs that carry no group)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    ungrouped = set(tracker.getJobIdsForGroup(None)) - before
+    return out, set(tracker.getJobIdsForGroup(group)), ungrouped
+
+
+def test_table_schema_inferred_once_per_session_and_file(spark, sf_dir, tmp_path):
+    """``_t`` infers a fixture's schema with one Spark job, then reads it with
+    the stored schema (0 jobs) until the file is rewritten."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    Q._t(spark, sf01, "orders")
+    _, jobs, stray = _jobs_in_group(spark, "t_schema_fixture", lambda: Q._t(spark, sf01, "orders"))
+    assert (len(jobs), stray) == (0, set())
+
+    shutil.copy(os.path.join(sf01, "orders.parquet"), tmp_path / "orders.parquet")
+    first = _jobs_in_group(spark, "t_schema_first", lambda: Q._t(spark, str(tmp_path), "orders"))
+    again = _jobs_in_group(spark, "t_schema_again", lambda: Q._t(spark, str(tmp_path), "orders"))
+    assert (len(first[1]), len(again[1])) == (1, 0)
+    assert again[0].columns == first[0].columns
+
+    path = tmp_path / "orders.parquet"
+    mtime = path.stat().st_mtime_ns
+    pq.write_table(pa.table({"o_orderkey": [1], "extra": ["x"]}), path)
+    os.utime(path, ns=(mtime + 10**9, mtime + 10**9))
+    df, jobs, _ = _jobs_in_group(spark, "t_schema_rewritten", lambda: Q._t(spark, str(tmp_path), "orders"))
+    assert len(jobs) == 1 and df.columns == ["o_orderkey", "extra"]
+
+
+def test_pool_threads_keep_the_query_job_group(spark, sf_dir):
+    """knn_ivf_kmeans_append builds its two indexes and its probe/gate on
+    pool threads; every job they start stays in the caller's job group."""
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    fn = Q.QUERIES["knn_ivf_kmeans_append"]
+    fn(spark, sf01)
+    _, jobs, stray = _jobs_in_group(spark, "pool_group", lambda: fn(spark, sf01))
+    assert jobs and stray == set()

@@ -1,15 +1,15 @@
 """Diff-driven certification: figure out which registry queries are affected
 by the working-tree / recent-commit changes and print the exact gate commands
-for just that subset — so a growing registry (135 queries, ~4 min of full
-compare_oracle + hash_lint + plan_audit) doesn't crowd out per-change
-certification time (VERDICT r3, next-round #6).
+for just that subset — so a growing registry (~250 queries) doesn't crowd
+out per-change certification time (VERDICT r3, next-round #6).
 
 Resolution rules (conservative — over-select rather than miss):
   - a changed line inside a top-level ``def`` in queries.py selects every
     query whose registered callable IS that function, plus every query whose
     source calls it;
+  - a changed ``_register(fn, oracle)`` line selects the query ``fn``;
   - a changed top-level SQL constant (NAME_SQL / _gen_*_sql) selects every
-    query whose oracle or source references it;
+    query whose source references it or whose ``_register`` call names it;
   - a change in an engine module (operators/, functions/, sources/, plans/,
     streaming/, multimodal/) selects every query whose source references the
     module's import name (e.g. ``dedup.`` for operators/dedup.py);
@@ -60,12 +60,19 @@ def git_diff_files(base: str) -> dict[str, set[int]]:
     return files
 
 
-def toplevel_spans(path: str) -> list[tuple[str, int, int]]:
-    """(name, first_line, last_line) for every top-level def/assign."""
-    src = open(os.path.join(REPO, path)).read()
-    tree = ast.parse(src)
-    spans = []
+def _toplevel(tree: ast.Module):
+    """Module-level statements, including those under a top-level ``if``
+    (the runtime-gated registrations)."""
     for node in tree.body:
+        yield node
+        if isinstance(node, ast.If):
+            yield from node.body + node.orelse
+
+
+def toplevel_spans(tree: ast.Module) -> list[tuple[str, int, int]]:
+    """(name, first_line, last_line) for every top-level def/assign."""
+    spans = []
+    for node in _toplevel(tree):
         name = None
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
             name = node.name
@@ -76,6 +83,18 @@ def toplevel_spans(path: str) -> list[tuple[str, int, int]]:
         if name:
             spans.append((name, node.lineno, node.end_lineno or node.lineno))
     return spans
+
+
+def registrations(tree: ast.Module) -> list[tuple[str, int, int, set[str]]]:
+    """(query, first_line, last_line, names its oracle refers to) for every
+    ``_register(fn, oracle)`` statement."""
+    regs = []
+    for node in _toplevel(tree):
+        call = node.value if isinstance(node, ast.Expr) else None
+        if isinstance(call, ast.Call) and getattr(call.func, "id", None) == "_register":
+            refs = {n.id for arg in call.args[1:] for n in ast.walk(arg) if isinstance(n, ast.Name)}
+            regs.append((call.args[0].id, node.lineno, node.end_lineno or node.lineno, refs))
+    return regs
 
 
 def affected_queries(base: str) -> tuple[list[str], bool]:
@@ -95,29 +114,27 @@ def affected_queries(base: str) -> tuple[list[str], bool]:
             qsrc[name] = inspect.getsource(fn)
         except (OSError, TypeError):
             qsrc[name] = ""
-    oracles = getattr(Q, "ORACLES", {})
 
     hits: set[str] = set()
 
     # 1. queries.py line-level mapping
     if QUERIES_PATH in changed and changed[QUERIES_PATH]:
         lines = changed[QUERIES_PATH]
-        qsrc_text = open(os.path.join(REPO, QUERIES_PATH)).read()
-        for sym, lo, hi in toplevel_spans(QUERIES_PATH):
+        tree = ast.parse(open(os.path.join(REPO, QUERIES_PATH)).read())
+        regs = registrations(tree)
+        hits.update(q for q, lo, hi, _ in regs if any(lo <= ln <= hi for ln in lines))
+        for sym, lo, hi in toplevel_spans(tree):
             if not any(lo <= ln <= hi for ln in lines):
                 continue
             if sym in Q.QUERIES:
                 hits.add(sym)
-            # function or SQL constant referenced by other queries/oracles
+            # function or SQL constant referenced by other queries' sources
             for name, src in qsrc.items():
                 if re.search(rf"\b{re.escape(sym)}\b", src):
                     hits.add(name)
-            for name, sql in oracles.items():
-                # oracle strings are built from constants at import time; map
-                # constant -> oracle by looking up the assignment expression
-                if re.search(rf"ORACLES\[\"{re.escape(name)}\"\]\s*=\s*[^\n]*\b{re.escape(sym)}\b",
-                             qsrc_text):
-                    hits.add(name)
+            # oracle strings are built from constants at import time: map a
+            # constant to every registration whose oracle names it
+            hits.update(q for q, _, _, used in regs if sym in used)
 
     # 2. engine-module mapping by import name
     for path in changed:
@@ -131,12 +148,6 @@ def affected_queries(base: str) -> tuple[list[str], bool]:
     return sorted(hits), False
 
 
-def _bench_headline() -> list[str]:
-    import bench
-
-    return bench.HEADLINE
-
-
 def main() -> None:
     args = [a for a in sys.argv[1:] if a != "--run"]
     run = "--run" in sys.argv[1:]
@@ -148,17 +159,15 @@ def main() -> None:
     scope = "ALL (global file touched)" if everything else f"{len(names)} affected"
     print(f"# {scope} queries vs {base}:")
     print("#   " + " ".join(names))
-    bench_subset = [n for n in names if n in _bench_headline()]
     cmds = [
         ["python3", "tools/compare_oracle.py", "/root/testdata/sf0.01", *names],
         ["python3", "tools/hash_lint.py", *names],
         ["python3", "tools/plan_audit.py"],  # plan audit is all-or-nothing (writes PLANS.md)
-    ]
-    if bench_subset:
         # perf attribution (VERDICT r4 #7): time ONLY the affected queries,
         # so a regression shows up against the same entries in the last
         # BENCH_r*.json instead of hiding inside a full-sweep total
-        cmds.append(["python3", "bench.py", "--queries", ",".join(bench_subset)])
+        ["python3", "bench.py", "--queries", ",".join(names)],
+    ]
     for c in cmds:
         print("$ " + " ".join(c))
     if run:
