@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from mysql_data_anonymizer_spark.blueprint import Blueprint
 from mysql_data_anonymizer_spark.plans.compiler import compile_plan
 from mysql_data_anonymizer_spark.session import EngineConfig
+from mysql_data_anonymizer_spark.sources import files
 
 TABLE_NAMES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -43,9 +44,11 @@ class Anonymizer:
         return self
 
     def register_parquet_dir(self, sf_dir: str, names: list[str] | None = None) -> "Anonymizer":
-        """Register every fixture table under ``sf_dir`` (TESTDATA layout)."""
+        """Register every fixture table under ``sf_dir`` (TESTDATA layout),
+        read like the registry queries read them (events.ts a timestamp)."""
         for name in names or TABLE_NAMES:
-            self.sources[name] = self.spark.read.parquet(f"{sf_dir}/{name}.parquet")
+            path = f"{sf_dir}/{name}.parquet"
+            self.sources[name] = files.read_table(self.spark, path, table_name=name)
         return self
 
     def table(self, name: str, callback: Callable[[Blueprint], None]) -> "Anonymizer":
@@ -69,25 +72,27 @@ class Anonymizer:
             state[name] = compiled.df
             self.key_mappings[name] = compiled.key_mappings
             for src_col, target in bp.plan.synchro_targets():
-                mapping = compiled.key_mappings[src_col]
-                # honor the [field, table, database] qualifier (reference
-                # src/Blueprint.php:185-202, default DB fill
-                # src/Anonymizer.php:381-392): a 'database.table' registration
-                # wins; an unqualified target falls back to the bare name
-                key = f"{target.database}.{target.table}" if target.database else target.table
-                if key not in state:
-                    if target.database is not None and target.table in state:
-                        key = target.table
-                    else:
-                        raise KeyError(
-                            f"synchronizeColumn target table {key!r} not registered"
-                        )
-                state[key] = remap_keys(state[key], target.field, mapping)
+                key = synchro_key(target, state)
+                if key is None:
+                    raise KeyError(
+                        f"synchronizeColumn target table {target.table!r} not registered"
+                    )
+                state[key] = remap_keys(state[key], target.field, compiled.key_mappings[src_col])
         return state
 
     def write_parquet(self, state: dict[str, DataFrame], out_dir: str) -> None:
         for name, df in state.items():
             df.write.mode("overwrite").parquet(f"{out_dir}/{name}.parquet")
+
+
+def synchro_key(target, tables) -> str | None:
+    """The registered name a synchronizeColumn target resolves to, or None.
+    Honors the [field, table, database] qualifier (reference
+    src/Blueprint.php:185-202, default DB fill src/Anonymizer.php:381-392):
+    a 'database.table' registration wins, else the bare table name."""
+    if target.database and f"{target.database}.{target.table}" in tables:
+        return f"{target.database}.{target.table}"
+    return target.table if target.table in tables else None
 
 
 def verify_referential_integrity(
@@ -210,10 +215,8 @@ def masking_report(
     # -- synchro cascade rows: the remapped REFERENCING tables -------------
     for tname, bp in blueprints.items():
         for _src_col, target in bp.plan.synchro_targets():
-            key = f"{target.database}.{target.table}" if target.database else target.table
-            if key not in post and target.database is not None and target.table in post:
-                key = target.table
-            if key not in pre or key not in post:
+            key = synchro_key(target, post)
+            if key is None or key not in pre:
                 continue
             rk = (ref_keys or {}).get(key)
             if rk is None:

@@ -75,13 +75,13 @@ def _await_stream(spark, q, timeout_s: int = _REPLAY_DEADLINE_S, *, name: str) -
     every column. The last micro-batch's ACTUAL executed plan lives on the
     StreamExecution (`StreamingQueryWrapper.streamingQuery().lastExecution()`);
     stash it on the session keyed by the registry query name so
-    tools/plan_audit.py can apply the same violation rules to streaming
+    tools/certify.py can apply the same violation rules to streaming
     plans as to batch ones.
 
     ``name`` is the EXPLICIT registry key (r11 ADVICE: a caller-frame key
     broke silently if a call site gained a wrapper). A query still active
     at the deadline is stopped and raises ``TimeoutError`` naming it; a
-    harvest failure is logged once per process (plan_audit then falls back
+    harvest failure is logged once per process (the certifier then falls back
     to the stateless LocalTableScan)."""
     stream_ops.await_bounded(q, timeout_s, name)
     try:
@@ -96,7 +96,7 @@ def _await_stream(spark, q, timeout_s: int = _REPLAY_DEADLINE_S, *, name: str) -
         if not _STREAM_HARVEST_WARNED:
             _STREAM_HARVEST_WARNED = True
             _log.warning(
-                "streaming plan harvest failed for %r (%s: %s); plan_audit will"
+                "streaming plan harvest failed for %r (%s: %s); the certifier will"
                 " see the memory-sink LocalTableScan for this query",
                 name,
                 type(exc).__name__,
@@ -1965,7 +1965,7 @@ def dedup_simhash(spark, sf_dir):
         empty or exploding xx pipeline.
 
     The three gate aggregates are 1-row broadcasts cross-joined onto the
-    pair output (bounded by construction — plan_audit BNL_OK)."""
+    pair output (bounded by construction — certify BNL_OK)."""
     docs = _t(spark, sf_dir, "documents")
     xx = dedup.simhash_pairs(docs, "doc_id", "text", max_hamming=3)
     md5 = dedup.simhash_pairs(
@@ -2205,7 +2205,7 @@ def decontaminate_bloom_ngrams(spark, sf_dir):
     (bloom_hits >= exact_hits, must hold for every doc) — and a global
     ``fpr_ok`` (false-flag rate among clean docs <= 0.05; theoretical FPR
     at these sizes ~1e-7, huge margin). The 1-row FPR scalar is a bounded
-    broadcast crossJoin (plan_audit BNL_OK pattern)."""
+    broadcast crossJoin (certify BNL_OK pattern)."""
     docs = _t(spark, sf_dir, "documents")
     bench = docs.where(F.col("doc_id") % 10 == 0)
     train = docs.where(F.col("doc_id") % 10 != 0)
@@ -3764,7 +3764,7 @@ def dp_noised_counts_customers(spark, sf_dir):
     mean |noise| over the 125 groups must sit in [0.2/eps, 5/eps] around
     the Laplace mean absolute deviation 1/eps = 2.0 (a wrong-scale or
     degenerate-noise bug trips it). The 1-row calibration scalar is a
-    bounded broadcast crossJoin (plan_audit BNL_OK)."""
+    bounded broadcast crossJoin (certify BNL_OK)."""
     c = _t(spark, sf_dir, "customer")
     out = privacy.dp_noised_counts(
         c, ["c_mktsegment", "c_nationkey"], epsilon=0.5, seed="dp"
@@ -4839,7 +4839,7 @@ def semdedup_ivf(spark, sf_dir):
         true if nothing to drop. Catches an empty or degenerate cell
         assignment.
 
-    Gate aggregates are 1-row broadcasts (plan_audit BNL_OK).
+    Gate aggregates are 1-row broadcasts (certify BNL_OK).
 
     Cost bound (VERDICT r4 #2): the O(N^2) exact twin and the IVF pass are
     each consumed by several gate branches; without materialization Spark
@@ -5036,7 +5036,7 @@ def _certified_knn(spark, sf_dir, method, emb=None, approx=None, *,
     approximate results are engine-specific, so the FINAL columns are the
     exact top-k twin (the knn_brute_force oracle) plus ``recall_ok`` — the
     approx rows recover at least ``_KNN_RECALL_FLOORS[method]`` of the 25
-    true pairs, as a bounded 1-row broadcast crossJoin (plan_audit BNL_OK)
+    true pairs, as a bounded 1-row broadcast crossJoin (certify BNL_OK)
     — then one literal boolean column per keyword in ``gates`` (the
     caller's plan gates), in order. ``per_query`` gates each query at
     ``floor // 5`` of its 5 neighbors instead, through a left join on
@@ -6829,9 +6829,11 @@ def streaming_static_enrich_agg(spark, sf_dir):
     the stream side never shuffles for the join. Bounded replay must equal
     the batch join+aggregate — the oracle."""
 
+    path = f"{sf_dir}/events.parquet"
+
     def build(stream):
         dim = (
-            spark.read.parquet(f"{sf_dir}/events.parquet")
+            spark.read.schema(_schema(spark, path)).parquet(path)
             .select("user_id")
             .where(F.col("user_id").isNotNull())
             .distinct()
@@ -7617,7 +7619,7 @@ def mask_pram_mktsegment(spark, sf_dir):
     ``pram_cal_ok`` asserts the empirical change rate sits around the
     design rate (1-p)(1-1/n) = 0.24 — a stuck always-keep / always-replace
     bug trips it. The 1-row calibration scalar is a bounded broadcast
-    crossJoin (plan_audit BNL_OK)."""
+    crossJoin (certify BNL_OK)."""
     cust = _t(spark, sf_dir, "customer")
     out = privacy.pram_randomize(
         cust, "c_custkey", "c_mktsegment", p_keep=0.7, seed="pram"
@@ -9264,7 +9266,7 @@ def ccnet_perplexity_buckets(spark, sf_dir):
     scoring explodes corpus bigrams once and joins the count tables
     (broadcast at this scale; keyed joins at web scale — the count
     tables are the only shuffled state); V and the cutoffs are 1-row
-    broadcast crossJoins (plan_audit BNL_OK). Docs with no bigrams
+    broadcast crossJoins (certify BNL_OK). Docs with no bigrams
     (empty/one-token) score NULL and land in 'tail'."""
     return _ccnet_buckets_impl(spark, sf_dir, keyed=False)
 
@@ -9446,7 +9448,7 @@ def ccnet_perplexity_buckets_prod(spark, sf_dir):
     to the broadcast variant (same exact-integer math); ``keyed_join_ok``
     certifies from the executed plan that both count joins are keyed SMJs
     and nothing was broadcast. The 1-row vocab/cutoff scalars remain
-    broadcast crossJoins — O(1) by construction (plan_audit BNL_OK)."""
+    broadcast crossJoins — O(1) by construction (certify BNL_OK)."""
     return _ccnet_buckets_impl(spark, sf_dir, keyed=True)
 
 
@@ -12384,7 +12386,7 @@ def kn_perplexity_docs(spark, sf_dir):
     trillion-token reference LM's count tables fit no executor);
     ``keyed_join_ok`` certifies that from the executed plan. The 1-row
     type total and tercile cutoffs stay broadcast crossJoins (O(1) by
-    construction, plan_audit BNL_OK)."""
+    construction, certify BNL_OK)."""
     docs = _t(spark, sf_dir, "documents")
     base = docs.select(
         "doc_id",
@@ -12670,7 +12672,7 @@ def mixture_alpha_weights(spark, sf_dir):
     Scale shape: ONE corpus scan -> per-domain token agg (map-side
     combinable keyed shuffle); every subsequent step runs on the
     |domains|-row table; the Σw/B scalar is a 1-row broadcast crossJoin
-    (q11 threshold class, plan_audit BNL_OK)."""
+    (q11 threshold class, certify BNL_OK)."""
     docs = _t(spark, sf_dir, "documents")
     base = docs.select(
         "lang",

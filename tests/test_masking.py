@@ -293,6 +293,38 @@ def test_masking_report_synchro_cascade_and_masked_pk(spark, customer):
         masking_report(pre, post, anon.blueprints, key_mappings=anon.key_mappings)
 
 
+def test_masking_report_resolves_qualified_synchro_target_to_bare_table(spark, customer, orders):
+    """A ``[fk, table, database]`` target whose table is registered bare
+    resolves to the bare name in the report as it does in ``run``: the
+    cascade row is emitted, not silently skipped."""
+    from mysql_data_anonymizer_spark.anonymizer import masking_report
+
+    anon = Anonymizer(spark).register("customer", customer).register("orders", orders)
+    anon.table(
+        "customer",
+        lambda t: t.primary("c_custkey")
+        .column("c_custkey").replaceWith(F.col("c_custkey") + F.lit(1000000000))
+        .synchronizeColumn(["o_custkey", "orders", "db"]),
+    )
+    pre = dict(anon.sources)
+    post = anon.run()
+    rep = masking_report(
+        pre, post, anon.blueprints,
+        ref_keys={"orders": ["o_orderkey"]}, key_mappings=anon.key_mappings,
+    )
+    rows = {(r.table_name, r.column_name): (r.n_rows, r.n_changed) for r in rep.collect()}
+    n_cascaded = orders.join(customer, orders.o_custkey == customer.c_custkey, "left_semi").count()
+    assert rows[("orders", "o_custkey")] == (orders.count(), n_cascaded)
+
+
+def test_register_parquet_dir_reads_events_ts_as_timestamp(spark, sf_dir):
+    """The quick-start registration reads tables like the registry does:
+    events.ts (TIMESTAMP(NANOS) on disk) is a timestamp, not timestamp_ntz
+    or a nanos long."""
+    anon = Anonymizer(spark).register_parquet_dir(sf_dir)
+    assert dict(anon.sources["events"].dtypes)["ts"] == "timestamp"
+
+
 def test_row_index_exact_in_subsampled_boundary_regime(spark):
     """Regression (found by the sf0.1 full-registry sweep): when partitions
     exceed RangePartitioner's reservoir sampleSizePerPartition, the sampled

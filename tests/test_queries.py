@@ -2,13 +2,12 @@
 (the driver runs the same comparison at sf0.01; this is the fast local twin
 at sf0.001)."""
 
-import math
 import os
 
-import duckdb
 import pytest
 
 from mysql_data_anonymizer_spark import queries as Q
+from tools.certify import duck_views, norm_cell, value_problems
 
 NEW = [
     # r8
@@ -161,26 +160,9 @@ NEW = [
 ]
 
 
-def _norm(v):
-    if isinstance(v, float):
-        return "NaN" if math.isnan(v) else repr(v)
-    try:
-        float(v)
-        return repr(float(v))
-    except (TypeError, ValueError):
-        return str(v)
-
-
-def _duck_views(sf_dir):
-    con = duckdb.connect()
-    for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
-    return con
-
-
 @pytest.fixture(scope="module")
 def duck(sf_dir):
-    con = _duck_views(sf_dir)
+    con = duck_views(sf_dir)
     yield con
     con.close()
 
@@ -195,7 +177,7 @@ def test_stream_join_matches_oracle_at_sf0_01(spark, sf_dir):
     its parity case runs on the sf0.01 fixtures, where clicks do meet
     views within 10 minutes."""
     sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
-    con = _duck_views(sf01)
+    con = duck_views(sf01)
     try:
         n = _assert_matches_oracle(spark, sf01, con, "streaming_stream_join")
     finally:
@@ -206,19 +188,14 @@ def test_stream_join_matches_oracle_at_sf0_01(spark, sf_dir):
 def _assert_matches_oracle(spark, sf_dir, duck, name):
     """Spark result == DuckDB oracle (sorted, normalized rows); returns the
     row count. A streaming query must also leave its last micro-batch's
-    executed plan under its own registry key (what plan_audit reads)."""
+    executed plan under its own registry key (what tools/certify.py reads)."""
     getattr(spark, "_mda_stream_plans", {}).pop(name, None)
     sdf = Q.QUERIES[name](spark, sf_dir).toPandas()
     if name.startswith("streaming_"):
         assert name in getattr(spark, "_mda_stream_plans", {}), f"{name}: no harvested plan"
-    odf = duck.execute(Q.ORACLES[name]).df()
-    assert sorted(sdf.columns) == sorted(odf.columns)
-    cols = sorted(sdf.columns)
-    s_rows = sorted(tuple(_norm(v) for v in row) for row in sdf[cols].itertuples(index=False))
-    o_rows = sorted(tuple(_norm(v) for v in row) for row in odf[cols].itertuples(index=False))
-    assert len(s_rows) == len(o_rows), f"{name}: {len(s_rows)} vs {len(o_rows)} rows"
-    assert s_rows == o_rows
-    return len(s_rows)
+    problems = value_problems(sdf, duck.execute(Q.ORACLES[name]).df())
+    assert not problems, f"{name}: {problems}"
+    return len(sdf)
 
 
 def test_lateral_decorrelates_to_window_join(spark, sf_dir):
@@ -463,7 +440,7 @@ def test_result_invariant_to_shuffle_partitioning(spark, sf_dir, name):
     def run():
         df = fn(spark, sf_dir)
         cols = sorted(df.columns)
-        return sorted(tuple(_norm(r[c]) for c in cols) for r in df.collect())
+        return sorted(tuple(norm_cell(r[c]) for c in cols) for r in df.collect())
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "7")

@@ -246,7 +246,7 @@ def test_kmeans_lloyd_matches_python_reference(spark, tmp_path):
 
     rng = random.Random(7)
     # 3 visible blobs, 18 vectors, dim 4 (the Spark side is dim-agnostic;
-    # the ORACLE hardcodes 64 dims for the fixture — compare_oracle covers
+    # the ORACLE hardcodes 64 dims for the fixture — tools/certify.py covers
     # that path, this test pins the Spark trajectory itself)
     centers = [[0.8, 0.8, -0.5, 0.1], [-0.7, 0.2, 0.6, -0.3], [0.1, -0.9, 0.0, 0.9]]
     vecs = {}

@@ -1,7 +1,26 @@
-"""Physical-plan audit: run every registered query's plan through scale
-invariants and emit PLANS.md.
+"""Registry certifier: build every registered query ONCE, run it once
+(``toPandas()``, the driver's own route, which executes the query's own
+QueryExecution) and check three properties of that one result.
 
-Checks per query (over the sf0.01 fixtures — plan SHAPE, not timing):
+Values: the rows equal the DuckDB oracle's, compared as sorted rows of
+canonical cells (``norm_cell``) over name-sorted columns.
+
+Driver dtypes: the driver's CORRECTNESS gate hashes both result sets
+through pandas, so value-identical results still fail it when their
+dtypes diverge:
+  - DuckDB widens SUM(int)/SUM(bigint) to HUGEINT (int128); pandas has no
+    int128, so the column lands as float64 ("3.0") while Spark emits int64
+    ("3") -> hash mismatch.
+  - DECIMAL outputs become `object` columns of decimal.Decimal with
+    engine-specific trailing-zero forms -> hash mismatch.
+  - list/array cells are unhashable -> the canonicalizer CRASHES
+    (pandas sort_values -> factorize -> TypeError).
+  Both frames must have no hazardous object column, and each column's
+  dtype kind (int, float, bool, string, datetime) must match. Rows-only
+  queries (no oracle) get the Spark-side cell check.
+
+Plan shape (over the sf0.01 fixtures — SHAPE, not timing), written to
+PLANS.md:
   - global-window hazard: a WindowExec with an empty partition spec moves
     ALL rows to one task (the 100 TB killer). Allowed only where the window
     input is provably tiny (documented allowlist, e.g. the per-partition
@@ -12,28 +31,44 @@ Checks per query (over the sf0.01 fixtures — plan SHAPE, not timing):
     unless the build side is an intentionally-broadcast bounded set.
   - scan column pruning: FileScan ReadSchema listed per query so a scan
     reading every column for a narrow projection is visible.
+  - the most FileScans of any one file (report only): a DataFrame consumed
+    N times without an eager localCheckpoint re-runs its lineage per
+    consumer, and column pruning keeps ReuseExchange from merging the
+    copies (how triangle_count_copurchase once scanned lineitem 12x).
+  - streaming state: a stateful operator without an event-time watermark
+    (unbounded state) fails unless allowlisted.
 
-Usage: python tools/plan_audit.py [sf_dir] [--out PLANS.md] [--queries a,b,c]
+Usage: python tools/certify.py [sf_dir] [--out PLANS.md] [--queries a,b,c]
 
-Safety (r10 verdict item 5 — a stray first argument used to be treated as
-the sf dir and the tool OVERWROTE PLANS.md with 240 ERROR rows):
+Exit 1 when any query fails any check, with one FAIL line per query
+naming what failed. Safety (a stray first argument once made the tool
+overwrite PLANS.md with 240 ERROR rows):
   - the sf_dir positional is validated to be a directory containing the
     fixture parquet tables; anything else aborts before any Spark work;
   - the gate artifact is refused (written to <out>.rejected instead) when
-    more than 5% of audited rows error out;
-  - --queries runs a subset (bench.py parity) and prints the table to
-    stdout WITHOUT touching PLANS.md unless --out is given explicitly.
+    more than 5% of certified queries error out;
+  - --queries runs a subset and prints the table to stdout WITHOUT
+    touching PLANS.md unless --out is given explicitly.
 """
 
 from __future__ import annotations
 
 import argparse
+import datetime as _dt
+import decimal
+import math
 import os
 import re
 import sys
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import duckdb  # noqa: E402
+import numpy as np  # noqa: E402
+import pandas as pd  # noqa: E402
+
+from mysql_data_anonymizer_spark.anonymizer import TABLE_NAMES  # noqa: E402
 from mysql_data_anonymizer_spark.session import get_spark  # noqa: E402
 
 # queries where a partition-less window is provably bounded:
@@ -230,18 +265,137 @@ BNL_OK: set[str] = {
 }
 
 
-def audit(name: str, df, plan: str | None = None) -> dict:
-    # collect() executes THIS df's own QueryExecution (count() would build a
-    # new one), so its AdaptiveSparkPlan finalizes and the string carries the
-    # real runtime plan: codegen stage markers *(n), AQEShuffleRead coalesce,
-    # runtime-demoted joins. Result sets at sf0.01 are small.
-    # When `plan` is given (streaming: the last micro-batch's executed plan
-    # harvested by queries._await_stream) it is audited INSTEAD of the
-    # result df's plan — the memory-sink result table plans as a bare
-    # LocalTableScan and would read 0 in every column (r10 verdict item 6).
-    if plan is None:
-        df.collect()
-        plan = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+def duck_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """One DuckDB connection with a view per fixture table. A table Spark
+    wrote is a directory of part files, which the glob reads."""
+    con = duckdb.connect()
+    for t in TABLE_NAMES:
+        path = f"{sf_dir}/{t}.parquet"
+        if os.path.isdir(path):
+            path += "/*.parquet"
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    return con
+
+
+def norm_cell(v) -> str:
+    """Canonical text of one result cell: exact double repr (catches any
+    bit difference), NaN, Decimal in plain notation, a date or timestamp
+    in ISO form (pandas gives a Spark DATE as datetime.date but a DuckDB
+    DATE as Timestamp), everything else through str."""
+    if isinstance(v, float):
+        return "NaN" if math.isnan(v) else repr(float(v))
+    if isinstance(v, decimal.Decimal):
+        return f"{v:f}"
+    if isinstance(v, _dt.date):
+        return pd.Timestamp(v).isoformat()
+    return str(v)
+
+
+def canon_rows(df: pd.DataFrame) -> list[tuple]:
+    """The frame as sorted rows of canonical cells over name-sorted columns."""
+    cols = sorted(df.columns)
+    return sorted(tuple(norm_cell(v) for v in row) for row in df[cols].itertuples(index=False))
+
+
+def value_problems(spd: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
+    if sorted(spd.columns) != sorted(odf.columns):
+        return [f"columns spark={sorted(spd.columns)} oracle={sorted(odf.columns)}"]
+    a, b = canon_rows(spd), canon_rows(odf)
+    if len(a) != len(b):
+        return [f"rows spark={len(a)} oracle={len(b)}"]
+    if a != b:
+        diffs = [(x, y) for x, y in zip(a, b) if x != y][:3]
+        return [f"value mismatch; first diffs: {diffs}"]
+    return []
+
+
+def _kind(series: pd.Series) -> str:
+    """Collapse a column to the equivalence class the driver's hash cares
+    about. Object columns are classified by their first non-null cell so a
+    Spark DATE column (object-of-datetime.date) pairs with DuckDB's
+    datetime64."""
+    k = getattr(series.dtype, "kind", "O")
+    if k in ("i", "u"):
+        return "int"
+    if k == "f":
+        return "float"
+    if k == "b":
+        return "bool"
+    if k == "M":
+        return "datetime"
+    for v in series:
+        if v is None or (isinstance(v, float) and np.isnan(v)):
+            continue
+        if isinstance(v, (_dt.date, _dt.datetime)):
+            return "datetime"
+        break
+    return "object"
+
+
+def _object_cell_problem(series: pd.Series) -> str | None:
+    """For an object column, identify a non-string cell type that would
+    break or destabilize the driver's hash. Strings are fine; so are
+    datetime.date cells — Spark DATE columns land in pandas as object-of-
+    date and the driver hashes them green (mask_generator_profile, r2)."""
+    for v in series:
+        if v is None or (isinstance(v, float) and np.isnan(v)):
+            continue
+        if isinstance(v, decimal.Decimal):
+            return "decimal.Decimal cell (decimal output column)"
+        if isinstance(v, (list, np.ndarray, dict, set, bytearray)):
+            return f"unhashable {type(v).__name__} cell (canonicalizer crash)"
+        if isinstance(v, (_dt.date, _dt.datetime)):
+            return None
+        if not isinstance(v, (str, bytes)):
+            return f"non-string object cell: {type(v).__name__}"
+        return None  # first real cell is a string -> column is fine
+    return None
+
+
+def _frame_problems(df: pd.DataFrame, side: str) -> list[str]:
+    out = []
+    for c in df.columns:
+        if _kind(df[c]) == "object":
+            prob = _object_cell_problem(df[c])
+            if prob:
+                out.append(f"{side}.{c}: {prob}")
+    return out
+
+
+def dtype_problems(spd: pd.DataFrame, odf: pd.DataFrame) -> list[str]:
+    problems = _frame_problems(odf, "oracle")
+    if sorted(spd.columns) != sorted(odf.columns):
+        return problems  # value_problems names the column mismatch
+    for c in sorted(spd.columns):
+        ks, ko = _kind(spd[c]), _kind(odf[c])
+        # All-NULL or nullable-int columns surface as float64/object on one
+        # side; only flag when both sides have data and still disagree.
+        if ks != ko and len(spd) and len(odf):
+            problems.append(
+                f"dtype kind mismatch on '{c}': spark={spd[c].dtype}({ks}) "
+                f"oracle={odf[c].dtype}({ko})"
+                + (" [HUGEINT trap: CAST(SUM(...) AS BIGINT) in the oracle]"
+                   if {ks, ko} == {"int", "float"} else "")
+            )
+    return problems
+
+
+def scan_counts(plan: str) -> Counter:
+    """FileScans per scanned file name in one plan."""
+    c: Counter = Counter()
+    for m in re.finditer(r"FileScan parquet[^\n]*?Location[^\[]*\[([^\]]*)\]", plan):
+        c[m.group(1).rsplit("/", 1)[-1]] += 1
+    return c
+
+
+def audit(name: str, plan: str) -> dict:
+    """Plan-shape facts of one executed plan string. For a batch query the
+    plan is read after the query ran, so its AdaptiveSparkPlan carries the
+    real runtime plan: codegen stage markers *(n), AQEShuffleRead coalesce,
+    runtime-demoted joins. For a streaming query it is the last
+    micro-batch's executed plan harvested by queries._await_stream — the
+    memory-sink result table plans as a bare LocalTableScan and would read
+    0 in every column (r10 verdict item 6)."""
     if "== Final Plan ==" in plan:  # audit the final plan, not the initial
         plan = plan.split("== Initial Plan ==")[0]
     lines = plan.splitlines()
@@ -255,6 +409,7 @@ def audit(name: str, df, plan: str | None = None) -> dict:
         "codegen": len(set(re.findall(r"\*\((\d+)\)", plan))),
         "scans": [],
         "global_window": False,
+        "hot_scan": scan_counts(plan).most_common(1),
     }
     # global-window detection: windowspecdefinition(<partition exprs>,
     # <order exprs ASC|DESC ...>, specifiedwindowframe(...)). If every arg
@@ -285,82 +440,97 @@ def audit(name: str, df, plan: str | None = None) -> dict:
     return res
 
 
+def certify(spark, con, name: str, fn, oracle: str | None, sf_dir: str) -> tuple[dict, list[str]]:
+    """Build and run one query once; returns its plan row and its failed
+    checks, each prefixed by the property it failed."""
+    df = fn(spark, sf_dir)
+    spd = df.toPandas()
+    # streaming queries run to completion inside fn and stash the last
+    # micro-batch's executed plan via queries._await_stream — audit THAT
+    # plan, not the memory-sink result table's
+    stream_plan = getattr(spark, "_mda_stream_plans", {}).get(name)
+    if stream_plan is None:
+        r = audit(name, df._jdf.queryExecution().executedPlan().toString())  # noqa: SLF001
+    else:
+        r = audit(name, stream_plan)
+        r["streaming"] = True
+    problems = [f"dtypes: {p}" for p in _frame_problems(spd, "spark")]
+    if oracle is not None:
+        try:
+            odf = con.sql(oracle).df()
+        except Exception as exc:  # noqa: BLE001
+            return r, problems + [f"values: oracle error: {str(exc)[:120]}"]
+        problems += [f"values: {p}" for p in value_problems(spd, odf)]
+        problems += [f"dtypes: {p}" for p in dtype_problems(spd, odf)]
+    return r, problems
+
+
+def plan_row(r: dict) -> tuple[str, list[str]]:
+    """The PLANS.md table row of one audited plan and its plan violations."""
+    problems = []
+    gw = "yes" if r["global_window"] else "-"
+    if r["global_window"] and r["name"] not in GLOBAL_WINDOW_OK:
+        problems.append("partition-less window over unbounded input")
+        gw = "**UNBOUNDED**"
+    elif r["global_window"]:
+        gw = "bounded (offset table)"
+    if r["bnl"] and r["name"] not in BNL_OK:
+        problems.append("BroadcastNestedLoopJoin")
+    scans = "; ".join(",".join(s) for s in r["scans"][:4]) or "-"
+    label = r["name"]
+    if r.get("streaming"):
+        if r["stateful"] and r["watermarked"]:
+            label += " ⟲ wm"
+        elif r["stateful"] and r["name"] in STREAM_STATE_OK:
+            label += " ⟲ state-no-wm (timeout-evicted / certification harness)"
+        elif r["stateful"]:
+            label += " ⟲ **STATE-NO-WM**"
+            problems.append(
+                "stateful streaming operator without an event-time watermark (unbounded state)"
+            )
+        else:
+            label += " ⟲ stateless"
+    hot = "; ".join(f"{n}x {f}" for f, n in r["hot_scan"]) or "-"
+    return (
+        f"| {label} | {r['exchanges']} | {r['bhj']} | {r['smj']} | {r['bnl']} "
+        f"| {r['codegen']} | {gw} | {scans[:100]} | {hot} |"
+    ), [f"plan: {p}" for p in problems]
+
+
 def main() -> None:
-    ap = argparse.ArgumentParser(
-        description="Audit every registered query's executed plan against "
-        "scale invariants and write PLANS.md."
-    )
-    ap.add_argument(
-        "sf_dir",
-        nargs="?",
-        default="/root/testdata/sf0.01",
-        help="fixture directory (must contain lineitem.parquet etc.)",
-    )
-    ap.add_argument(
-        "--out",
-        default=None,
-        help="output markdown path (default PLANS.md for full runs; "
-        "subset runs print to stdout unless --out is given)",
-    )
-    ap.add_argument(
-        "--queries",
-        default=None,
-        help="comma-separated subset of registry queries (bench.py parity)",
-    )
-    ap.add_argument(
-        "--force",
-        action="store_true",
-        help="allow a --queries subset run to overwrite the default gate "
-        "artifact (PLANS.md) — normally refused (r11 ADVICE)",
-    )
+    ap = argparse.ArgumentParser(description="Build and run every registered query once; "
+                                 "check its oracle values, driver dtypes and plan shape.")
+    ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01",
+                    help="fixture directory (must contain lineitem.parquet etc.)")
+    ap.add_argument("--out", help="output markdown path (default PLANS.md for full runs; "
+                    "subset runs print to stdout unless --out is given)")
+    ap.add_argument("--queries", help="comma-separated subset of registry queries")
+    ap.add_argument("--force", action="store_true",
+                    help="allow a --queries subset run to overwrite PLANS.md (r11 ADVICE)")
     args = ap.parse_args()
+    if not os.path.exists(os.path.join(args.sf_dir, "lineitem.parquet")):
+        ap.error(f"sf_dir {args.sf_dir!r} is not a fixture directory "
+                 "(no lineitem.parquet) — refusing to run")
 
-    if not os.path.isdir(args.sf_dir) or not os.path.exists(
-        os.path.join(args.sf_dir, "lineitem.parquet")
-    ):
-        ap.error(
-            f"sf_dir {args.sf_dir!r} is not a fixture directory "
-            "(no lineitem.parquet) — refusing to run"
-        )
-
-    spark = get_spark("plan-audit", master="local[4]")
+    # plan shape depends on defaultParallelism (queries._spread and
+    # _stream_shuffle), so the session size is fixed, not taken from the env
+    spark = get_spark("certify", master="local[4]")
     import mysql_data_anonymizer_spark.queries as Q
 
-    names = list(Q.QUERIES)
-    subset = None
-    if args.queries:
-        subset = args.queries.split(",")
-        unknown = [q for q in subset if q not in Q.QUERIES]
-        if unknown:
-            ap.error(f"not in registry: {unknown}")
-        names = subset
+    subset = args.queries.split(",") if args.queries else None
+    names = subset or list(Q.QUERIES)
+    unknown = [q for q in names if q not in Q.QUERIES]
+    if unknown:
+        ap.error(f"not in registry: {unknown}")
 
-    rows, violations = [], []
-    for name in names:
-        fn = Q.QUERIES[name]
-        try:
-            df = fn(spark, args.sf_dir)
-            # streaming queries run to completion inside fn and stash the
-            # last micro-batch's executed plan via queries._await_stream —
-            # audit THAT plan, not the memory-sink result table's
-            stream_plan = getattr(spark, "_mda_stream_plans", {}).get(name)
-            r = audit(name, df, plan=stream_plan)
-            if stream_plan is not None:
-                r["streaming"] = True
-            rows.append(r)
-        except Exception as exc:  # pragma: no cover
-            rows.append({"name": name, "error": str(exc)[:120]})
-
-    md = [
-        "# PLANS — physical-plan audit (generated by tools/plan_audit.py)",
-    ]
+    con = duck_views(args.sf_dir)
+    failures = {}
+    md = ["# PLANS — physical-plan audit (generated by tools/certify.py)"]
     if subset is not None:
         # subset outputs are self-declaring so a partial table can never
         # masquerade as the full gate artifact (r11 ADVICE)
-        md.append(
-            f"\n**PARTIAL ({len(names)}/{len(Q.QUERIES)} registry queries"
-            " — NOT the gate artifact)**"
-        )
+        md.append(f"\n**PARTIAL ({len(names)}/{len(Q.QUERIES)} registry queries"
+                  " — NOT the gate artifact)**")
     md += [
         "",
         f"Fixtures: `{args.sf_dir}`. Plan *shape* audit — the scale invariants",
@@ -368,82 +538,63 @@ def main() -> None:
         "shuffles only, broadcast small sides, pruned scans). Regenerate after",
         "operator changes. Rows marked ⟲ audit the STREAMING query's last",
         "micro-batch executed plan (harvested post-run via",
-        "queries._await_stream), not the memory-sink result table.",
+        "queries._await_stream), not the memory-sink result table. The last",
+        "column (report only) is the most FileScans of any one file.",
         "",
-        "| query | shuffles | BHJ | SMJ | BNLJ | codegen spans | global window | scan columns |",
-        "|---|---|---|---|---|---|---|---|",
+        "| query | shuffles | BHJ | SMJ | BNLJ | codegen spans | global window | scan columns"
+        " | most scans of one file |",
+        "|---|---|---|---|---|---|---|---|---|",
     ]
-    for r in rows:
-        if "error" in r:
-            md.append(f"| {r['name']} | ERROR: {r['error']} | | | | | | |")
-            continue
-        if "skipped" in r:
-            md.append(f"| {r['name']} | skipped: {r['skipped']} | | | | | | |")
-            continue
-        gw = "yes" if r["global_window"] else "-"
-        if r["global_window"] and r["name"] not in GLOBAL_WINDOW_OK:
-            violations.append(f"{r['name']}: partition-less window over unbounded input")
-            gw = "**UNBOUNDED**"
-        elif r["global_window"]:
-            gw = "bounded (offset table)"
-        if r["bnl"] and r["name"] not in BNL_OK:
-            violations.append(f"{r['name']}: BroadcastNestedLoopJoin")
-        scans = "; ".join(",".join(s) for s in r["scans"][:4]) or "-"
-        label = r["name"]
-        if r.get("streaming"):
-            if r["stateful"] and r["watermarked"]:
-                label += " ⟲ wm"
-            elif r["stateful"] and r["name"] in STREAM_STATE_OK:
-                label += " ⟲ state-no-wm (timeout-evicted / certification harness)"
-            elif r["stateful"]:
-                label += " ⟲ **STATE-NO-WM**"
-                violations.append(
-                    f"{r['name']}: stateful streaming operator without "
-                    "an event-time watermark (unbounded state)"
-                )
-            else:
-                label += " ⟲ stateless"
-        md.append(
-            f"| {label} | {r['exchanges']} | {r['bhj']} | {r['smj']} | {r['bnl']} "
-            f"| {r['codegen']} | {gw} | {scans[:100]} |"
-        )
-    md += ["", "## Violations", ""]
-    md += [f"- {v}" for v in violations] if violations else ["(none)"]
+    n_err = 0
+    for name in names:
+        try:
+            r, problems = certify(spark, con, name, Q.QUERIES[name], Q.ORACLES.get(name), args.sf_dir)
+            line, violations = plan_row(r)
+            problems += violations
+        except Exception as exc:  # noqa: BLE001
+            n_err += 1
+            err = str(exc)[:120]
+            line, problems = f"| {name} | ERROR: {err} | | | | | | | |", [f"error: {err}"]
+        md.append(line)
+        if problems:
+            failures[name] = problems
+    fail_lines = [f"{n}: {'; '.join(p)}" for n, p in failures.items()]
+    md += ["", "## Failures", ""] + ([f"- {f}" for f in fail_lines] or ["(none)"])
 
-    n_err = sum(1 for r in rows if "error" in r)
+    def failed(check: str) -> set[str]:
+        return {n for n, ps in failures.items() if any(p.startswith((check, "error")) for p in ps)}
+
+    n_oracle = sum(n in Q.ORACLES for n in names)
+    summary = (
+        f"{len(names)} queries certified: "
+        f"{n_oracle - len(failed('values') & set(Q.ORACLES))}/{n_oracle} matched the oracle, "
+        f"{len(names) - len(failed('dtypes'))} dtype-clean, "
+        f"{sum(p.startswith('plan') for ps in failures.values() for p in ps)} plan violations, "
+        f"{n_err} errors"
+    )
     text = "\n".join(md) + "\n"
     if subset is not None and args.out is None:
-        # subset mode: inspect, don't touch the gate artifact
-        print(text)
+        print(text)  # subset mode: inspect, don't touch the gate artifact
+        print(summary)
     else:
         out_md = args.out or "PLANS.md"
-        if (
-            subset is not None
-            and os.path.basename(out_md) == "PLANS.md"
-            and not args.force
-        ):
-            ap.error(
-                f"--queries subset targeting the gate artifact {out_md!r} "
-                "would replace the full 244-row table with a partial one; "
-                "pass --force if you really mean it (r11 ADVICE)"
-            )
+        if subset is not None and os.path.basename(out_md) == "PLANS.md" and not args.force:
+            ap.error(f"--queries subset targeting the gate artifact {out_md!r} would replace "
+                     "the full table with a partial one; pass --force if you really mean it")
         # the >5% error-rate refusal is meaningless on tiny subsets
         # (max(1, n//20) degrades to 'half the rows may error'); only the
         # full-registry run may write through the error gate
-        if rows and n_err > max(1, len(rows) // 20):
+        if n_err > max(1, len(names) // 20):
             rej = out_md + ".rejected"
             open(rej, "w").write(text)
-            print(
-                f"REFUSED to write {out_md}: {n_err}/{len(rows)} rows errored "
-                f"(>5%) — wrote {rej} instead; the gate artifact is untouched",
-                file=sys.stderr,
-            )
+            print(f"REFUSED to write {out_md}: {n_err}/{len(names)} queries errored (>5%) — "
+                  f"wrote {rej} instead; the gate artifact is untouched", file=sys.stderr)
             sys.exit(2)
         open(out_md, "w").write(text)
-        print(f"{len(rows)} plans audited; {len(violations)} violations -> {out_md}")
-    for v in violations:
-        print("VIOLATION:", v)
-    if violations:
+        print(f"{summary} -> {out_md}")
+    for f in fail_lines:
+        print("FAIL", f)
+    if failures:
         sys.exit(1)
 
 

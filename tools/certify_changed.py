@@ -3,6 +3,11 @@ by the working-tree / recent-commit changes and print the exact gate commands
 for just that subset — so a growing registry (~250 queries) doesn't crowd
 out per-change certification time (VERDICT r3, next-round #6).
 
+The gates are ``tools/certify.py --queries <affected>`` at sf0.01 (the
+PLANS.md scale) and at sf0.001 (the test scale), then the affected queries'
+``bench.py --queries`` timing. Only a global-file change certifies the whole
+registry at sf0.01, which regenerates PLANS.md.
+
 Resolution rules (conservative — over-select rather than miss):
   - a changed line inside a top-level ``def`` in queries.py selects every
     query whose registered callable IS that function, plus every query whose
@@ -159,10 +164,10 @@ def main() -> None:
     scope = "ALL (global file touched)" if everything else f"{len(names)} affected"
     print(f"# {scope} queries vs {base}:")
     print("#   " + " ".join(names))
+    subset = ["--queries", ",".join(names)]
     cmds = [
-        ["python3", "tools/compare_oracle.py", "/root/testdata/sf0.01", *names],
-        ["python3", "tools/hash_lint.py", *names],
-        ["python3", "tools/plan_audit.py"],  # plan audit is all-or-nothing (writes PLANS.md)
+        ["python3", "tools/certify.py", "/root/testdata/sf0.01", *([] if everything else subset)],
+        ["python3", "tools/certify.py", "/root/testdata/sf0.001", *subset],
         # perf attribution (VERDICT r4 #7): time ONLY the affected queries,
         # so a regression shows up against the same entries in the last
         # BENCH_r*.json instead of hiding inside a full-sweep total

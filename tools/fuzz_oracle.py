@@ -1,6 +1,6 @@
 """Edge-case fuzz sweep: run text/dedup/curation queries against a
-PERTURBED copy of the fixtures and compare Spark vs DuckDB exactly like
-compare_oracle.
+PERTURBED copy of the fixtures and compare Spark vs DuckDB values exactly
+like tools/certify.py.
 
 The driver's correctness gate only ever sees the clean synthetic fixtures —
 no empty documents, no whitespace-only text, no unicode, no degenerate
@@ -21,8 +21,6 @@ import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-import duckdb
 
 from mysql_data_anonymizer_spark.session import get_spark
 
@@ -563,21 +561,16 @@ def main() -> None:
     fuzz_dir = build_fuzz_dir(spark)
 
     import mysql_data_anonymizer_spark.queries as Q
-    from tools.compare_oracle import compare_one  # reuse the exact harness
+    from tools.certify import duck_views, value_problems  # the certifier's own rule
 
-    con = duckdb.connect()
-    for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
-        # documents is a Spark-written DIRECTORY; the pass-through tables are
-        # single files — glob handles both
-        pat = f"{fuzz_dir}/{t}.parquet"
-        if os.path.isdir(pat):
-            pat += "/*.parquet"
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{pat}'")
+    con = duck_views(fuzz_dir)
 
     failures = []
     for name in names:
         try:
-            ok, msg = compare_one(spark, con, Q.QUERIES[name], Q.ORACLES[name], name, fuzz_dir)
+            spd = Q.QUERIES[name](spark, fuzz_dir).toPandas()
+            problems = value_problems(spd, con.sql(Q.ORACLES[name]).df())
+            ok, msg = not problems, "; ".join(problems) or f"{len(spd)} rows"
         except Exception as exc:  # crash on edge rows IS the finding
             ok, msg = False, f"CRASH {type(exc).__name__}: {str(exc)[:300]}"
         status = "OK  " if ok else "FAIL"
