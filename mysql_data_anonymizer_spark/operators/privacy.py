@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mysql_data_anonymizer_spark.operators.text import _hex_u32, _md5_u32
+
 
 def k_anonymity_audit(
     df: DataFrame, quasi_cols: list[str], k: int
@@ -101,7 +103,7 @@ def dp_noised_counts(
         F.lit(seed),
         *[F.coalesce(F.col(c).cast("string"), F.lit("<NULL>")) for c in group_cols],
     )
-    h = F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("long")
+    h = _md5_u32(key)
     u = (h.cast("double") + F.lit(0.5)) / F.lit(4294967296.0)
     c = F.lit(1.0) - F.lit(2.0) * F.abs(u - F.lit(0.5))
     noise = F.lit(-b) * F.signum(u - F.lit(0.5)) * F.log(c)
@@ -188,7 +190,7 @@ def dp_bounded_sum(
         F.lit(seed),
         *[F.coalesce(F.col(c).cast("string"), F.lit("<NULL>")) for c in group_cols],
     )
-    h = F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("long")
+    h = _md5_u32(key)
     u = (h.cast("double") + F.lit(0.5)) / F.lit(4294967296.0)
     c = F.lit(1.0) - F.lit(2.0) * F.abs(u - F.lit(0.5))
     noise = F.lit(-b) * F.signum(u - F.lit(0.5)) * F.log(c)
@@ -326,7 +328,7 @@ def date_shift(
         F.lit(f"{seed}:"),
         F.coalesce(F.col(subject_col).cast("string"), F.lit("<NULL>")),
     )
-    h = F.conv(F.substring(F.md5(key), 1, 8), 16, 10).cast("long")
+    h = _md5_u32(key)
     shift = (h % F.lit(span) - F.lit(max_shift_days)).cast("int")
     return df.withColumn("shift_days", shift).withColumn(
         f"{date_col}_shifted",
@@ -487,8 +489,8 @@ def pram_randomize(
             F.coalesce(F.col(pk_col).cast("string"), F.lit("<NULL>")),
         )
     )
-    u_keep = F.conv(F.substring(digest, 1, 8), 16, 10).cast("long")
-    pick = F.conv(F.substring(digest, 9, 8), 16, 10).cast("long")
+    u_keep = _hex_u32(digest)
+    pick = _hex_u32(digest, 9)
     keep = ((u_keep.cast("double") + F.lit(0.5)) / F.lit(4294967296.0)) < F.lit(
         p_keep
     )

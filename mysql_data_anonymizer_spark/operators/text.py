@@ -89,10 +89,16 @@ def quality_score(text: Column) -> Column:
 HASHED_QUALITY_DIM = 1 << 18  # feature-hashing buckets (the fasttext default ballpark)
 
 
+def _hex_u32(digest: Column, start: int = 1) -> Column:
+    """8 hex digits of an md5 hex ``digest`` (positions ``start`` ..
+    ``start+7``) as a long in [0, 2^32) — the engine-side twin of
+    queries._sql_md5_u32."""
+    return F.conv(F.substring(digest, start, 8), 16, 10).cast("long")
+
+
 def _md5_u32(col: Column) -> Column:
-    """First 8 hex digits of md5(col) as a long in [0, 2^32) — the
-    engine-side twin of queries._sql_md5_u32."""
-    return F.conv(F.substring(F.md5(col), 1, 8), 16, 10).cast("long")
+    """First 8 hex digits of md5(col) as a long in [0, 2^32)."""
+    return _hex_u32(F.md5(col))
 
 
 def hashed_quality_features(

@@ -138,21 +138,10 @@ def _spread(df: DataFrame, path: str) -> DataFrame:
     return df
 
 
-def _ts_fix(df: DataFrame) -> DataFrame:
-    """Normalize the events ``ts`` column (TIMESTAMP(NANOS) in the fixture)
-    to TimestampType micros — shared logic in sources.files."""
-    return files.normalize_nanos_ts(df, ["ts"])
-
-
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = f"{sf_dir}/{name}.parquet"
-    if name == "events":
-        # events.parquet stores TIMESTAMP(NANOS); ask for nanos-as-long and
-        # normalize whatever dtype actually comes back (see _ts_fix).
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.schema(_schema(spark, path)).parquet(path)
-        return _spread(_ts_fix(df), path)
-    return _spread(spark.read.schema(_schema(spark, path)).parquet(path), path)
+    df = files.read_table(spark, path, schema=_schema(spark, path), table_name=name)
+    return _spread(df, path)
 
 
 _SCRATCH_LOCK = threading.Lock()
@@ -190,10 +179,8 @@ def _schema(spark, path: str):
     """The parquet schema at ``path``, inferred once per session: inference
     costs a Spark job, and a fixture does not change during a session. The
     key carries the file's mtime, so a rewritten file or directory is
-    inferred afresh, and the nanosAsLong setting, because with it on a
-    TIMESTAMP(NANOS) column (events.ts) infers as LongType."""
-    nanos = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
-    key = ("schema", path, os.stat(path).st_mtime_ns, nanos)
+    inferred afresh."""
+    key = ("schema", path, os.stat(path).st_mtime_ns)
     return _memo(spark, key, lambda: spark.read.parquet(path).schema)
 
 
@@ -272,17 +259,15 @@ def _replay_source(
     slices (tools/scale_slope.py) write multi-file parquet DIRECTORIES
     instead — the source doesn't recurse through a symlinked subdirectory
     (it listed 0 files and the query silently emitted nothing, r12), so a
-    directory is streamed directly. events get ``_ts_fix``; other tables
-    get ``_spread``, which works on streams too: a micro-batch over one
-    sub-split file is ONE task, so per-row map work would run serially.
+    directory is streamed directly. Each table gets ``files.normalize_ts``,
+    and every table but events gets ``_spread``, which works on streams
+    too: a micro-batch over one sub-split file is ONE task, so per-row map
+    work would run serially.
     The batch schema comes from ``_schema``: inferred once per session and
     source, and afresh for a rewritten file or directory.
 
     Returns ``(stream, stage)``; ``stage`` is the temp dir created here
     (``None`` for a directory source), removed by ``_replay_run``."""
-    # set here, not left to get_spark: __spark_entry__.queries() runs the
-    # registry on the caller's own session
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     src = f"{sf_dir}/{table}.parquet"
     reader = spark.readStream.schema(_schema(spark, src))
     if max_files is not None:
@@ -295,7 +280,8 @@ def _replay_source(
         for i in range(copies):
             os.symlink(src, f"{stage}/{table}_{i}.parquet")
         stream = reader.parquet(stage)
-    return (_ts_fix(stream) if table == "events" else _spread(stream, src)), stage
+    stream = files.normalize_ts(stream, table)
+    return (stream if table == "events" else _spread(stream, src)), stage
 
 
 def _replay_run(spark, name: str, stage: str | None, start: Callable) -> None:
@@ -371,16 +357,27 @@ def _sql_digest(column: str, key_sql: str, seed: int = SEED) -> str:
     return f"md5('{seed}:{column}|' || CAST({key_sql} AS VARCHAR))"
 
 
-def _sql_md5_u32(digest_sql: str, start: int = 1) -> str:
+def _sql_hex(digest_sql: str, pos: int) -> str:
+    """Hex digit ``pos`` of an md5 VARCHAR expression as an integer in
+    [0, 16)."""
+    return f"(strpos('{HEXD}', substr({digest_sql}, {pos}, 1)) - 1)"
+
+
+def _sql_hex8(digest_sql: str, start: int = 1) -> str:
     """8 hex digits of an md5 VARCHAR expression (positions ``start`` ..
-    ``start+7``) as a BIGINT in [0, 2^32) — the DuckDB twin of Spark's
-    conv(substring(md5(k),start,8),16,10) (DuckDB has no base-conv builtin;
-    the strpos chain is the same trick as the DP oracle's). ``start=9``
-    yields a second independent uniform from the same digest."""
-    v = f"(strpos('{HEXD}', substr({digest_sql}, {start}, 1)) - 1)"
+    ``start+7``) as an integer in [0, 2^32): DuckDB has no base-conv
+    builtin, so the digits are folded one ``strpos`` at a time."""
+    v = _sql_hex(digest_sql, start)
     for i in range(start + 1, start + 8):
-        v = f"({v} * 16 + (strpos('{HEXD}', substr({digest_sql}, {i}, 1)) - 1))"
-    return f"CAST({v} AS BIGINT)"
+        v = f"({v} * 16 + {_sql_hex(digest_sql, i)})"
+    return v
+
+
+def _sql_md5_u32(digest_sql: str, start: int = 1) -> str:
+    """``_sql_hex8`` as a BIGINT — the DuckDB twin of Spark's
+    ``text._hex_u32`` (conv(substring(md5(k),start,8),16,10)). ``start=9``
+    yields a second independent uniform from the same digest."""
+    return f"CAST({_sql_hex8(digest_sql, start)} AS BIGINT)"
 
 
 # ===========================================================================
@@ -742,18 +739,13 @@ def _gen_profile_sql() -> str:
     d_name = _sql_digest("c_name", "c_custkey")
     d_seg = _sql_digest("c_mktsegment", "c_custkey")
     d_prof = _sql_digest("profile", "c_custkey")
-
-    def hx(d: str, p: int) -> str:
-        return f"(strpos('{HEXD}', substr({d}, {p}, 1)) - 1)"
-
-    hex8 = hx(d_prof, 1)
-    for i in range(2, 9):
-        hex8 = f"({hex8} * 16 + {hx(d_prof, i)})"
+    hex8 = _sql_hex8(d_prof)
     octs = " || '.' || ".join(
-        f"CAST({hx(d_prof, p)} * 16 + {hx(d_prof, p + 1)} AS VARCHAR)" for p in (1, 3, 5)
+        f"CAST({_sql_hex(d_prof, p)} * 16 + {_sql_hex(d_prof, p + 1)} AS VARCHAR)"
+        for p in (1, 3, 5)
     )
     # Luhn twin: digit 1 is the literal 4, digits 2..15 come from the digest
-    digs = ["4"] + [f"({hx(d_prof, p)} % 10)" for p in range(1, 15)]
+    digs = ["4"] + [f"({_sql_hex(d_prof, p)} % 10)" for p in range(1, 15)]
     terms = []
     for i, dig in enumerate(digs, start=1):
         if i % 2 == 1:
@@ -1751,7 +1743,7 @@ def stratified_sample_docs(spark, sf_dir):
     Map-only: one codegen'd predicate on the scan, no shuffle."""
     docs = _t(spark, sf_dir, "documents")
     d = F.md5(F.concat(F.lit("s:"), F.col("doc_id").cast("string")))
-    gate = F.conv(F.substring(d, 1, 8), 16, 10).cast("long") % 100
+    gate = text._hex_u32(d) % 100
     rate = (
         F.when(F.col("lang") == "en", F.lit(50))
         .when(F.col("lang") == "de", F.lit(80))
@@ -1762,9 +1754,7 @@ def stratified_sample_docs(spark, sf_dir):
 
 def _gen_stratified_sample_sql() -> str:
     d = "md5('s:' || CAST(doc_id AS VARCHAR))"
-    gate = f"(strpos('{HEXD}', substr({d}, 1, 1)) - 1)"
-    for i in range(2, 9):
-        gate = f"({gate} * 16 + (strpos('{HEXD}', substr({d}, {i}, 1)) - 1))"
+    gate = _sql_hex8(d)
     return f"""
 SELECT doc_id, lang, source
 FROM documents
@@ -2866,7 +2856,7 @@ def shard_training_corpus(spark, sf_dir):
     100 TB."""
     docs = _t(spark, sf_dir, "documents")
     d = F.md5(F.concat(F.lit("shard:"), F.col("doc_id").cast("string")))
-    shard = (F.conv(F.substring(d, 1, 8), 16, 10).cast("long") % N_TRAINING_SHARDS).alias("shard")
+    shard = (text._hex_u32(d) % N_TRAINING_SHARDS).alias("shard")
     w = Window.partitionBy("shard").orderBy(F.asc("h"), F.asc("doc_id"))
     return (
         docs.select("doc_id", "n_chars", d.alias("h"), shard)
@@ -2877,9 +2867,7 @@ def shard_training_corpus(spark, sf_dir):
 
 def _gen_shard_corpus_sql() -> str:
     d = "md5('shard:' || CAST(doc_id AS VARCHAR))"
-    gate = f"(strpos('{HEXD}', substr({d}, 1, 1)) - 1)"
-    for i in range(2, 9):
-        gate = f"({gate} * 16 + (strpos('{HEXD}', substr({d}, {i}, 1)) - 1))"
+    gate = _sql_hex8(d)
     return f"""
 SELECT doc_id, shard, CAST(row_number() OVER (PARTITION BY shard ORDER BY h ASC, doc_id ASC) AS BIGINT) AS pos, n_chars
 FROM (
@@ -3784,9 +3772,7 @@ def _gen_dp_noised_sql(epsilon: float = 0.5, seed: str = "dp") -> str:
         f"md5('{seed}' || ':' || COALESCE(CAST(c_mktsegment AS VARCHAR), '<NULL>')"
         f" || ':' || COALESCE(CAST(c_nationkey AS VARCHAR), '<NULL>'))"
     )
-    gate = f"(strpos('{HEXD}', substr({d}, 1, 1)) - 1)"
-    for i in range(2, 9):
-        gate = f"({gate} * 16 + (strpos('{HEXD}', substr({d}, {i}, 1)) - 1))"
+    gate = _sql_hex8(d)
     b = 1.0 / epsilon
     return f"""
 WITH g AS (
@@ -4094,19 +4080,15 @@ def _sql_luhn_contrib(x: str, pos: int) -> str:
 
 def _gen_fpe_card_sql() -> str:
     d = _sql_digest("cc", "c_custkey")
-
-    def hx(dg: str, p: int) -> str:
-        return f"(strpos('{HEXD}', substr({dg}, {p}, 1)) - 1)"
-
     # generation twin (same construction as the de_DE profile oracle's cc)
-    digs = ["4"] + [f"({hx(d, p)} % 10)" for p in range(1, 15)]
+    digs = ["4"] + [f"({_sql_hex(d, p)} % 10)" for p in range(1, 15)]
     luhn = " + ".join(_sql_luhn_contrib(x, i) for i, x in enumerate(digs, start=1))
     cc = (
         " || ".join(f"CAST({x} AS VARCHAR)" for x in digs)
         + f" || CAST((10 - ({luhn}) % 10) % 10 AS VARCHAR)"
     )
     # mask twin: digits 7-11 from the fpe digest, 12 absorbs the residue
-    mids = {p: f"({hx('dg', p - 6)} % 10)" for p in range(7, 12)}
+    mids = {p: f"({_sql_hex('dg', p - 6)} % 10)" for p in range(7, 12)}
     keep = {p: f"CAST(substr(cc, {p}, 1) AS INTEGER)" for p in [1, 2, 3, 4, 5, 6, 13, 14, 15, 16]}
     s = " + ".join(
         [_sql_luhn_contrib(x, p) for p, x in keep.items()]
@@ -4340,9 +4322,7 @@ def pydatasource_synth_agg(spark, sf_dir):
 
 def _gen_pydatasource_sql(n_rows: int = SYNTH_ROWS) -> str:
     d = f"md5('{SEED}:email|' || CAST(i AS VARCHAR))"
-    gate = f"(strpos('{HEXD}', substr(d, 1, 1)) - 1)"
-    for j in range(2, 9):
-        gate = f"({gate} * 16 + (strpos('{HEXD}', substr(d, {j}, 1)) - 1))"
+    gate = _sql_hex8("d")
     return f"""
 WITH src AS (
   SELECT i, 'u_' || substr(d, 1, 12) || '@example.com' AS email,
@@ -4568,7 +4548,7 @@ def rebalance_corpus_mix(spark, sf_dir):
         (F.col("t") * F.col("share") / F.col("n_l").cast("double")).alias("keep_rate"),
     )
     d = F.md5(F.concat(F.lit("mix:"), F.col("doc_id").cast("string")))
-    gate = F.conv(F.substring(d, 1, 8), 16, 10).cast("long") % 1000000
+    gate = text._hex_u32(d) % 1000000
     return (
         docs.join(F.broadcast(rates), ["lang"])
         .where(gate < F.floor(F.col("keep_rate") * 1000000).cast("long"))
@@ -4582,9 +4562,7 @@ def _gen_rebalance_sql() -> str:
     ) + " END"
     langs = ", ".join(f"'{lang}'" for lang in TARGET_MIX)
     d = "md5('mix:' || CAST(doc_id AS VARCHAR))"
-    gate = f"(strpos('{HEXD}', substr({d}, 1, 1)) - 1)"
-    for i in range(2, 9):
-        gate = f"({gate} * 16 + (strpos('{HEXD}', substr({d}, {i}, 1)) - 1))"
+    gate = _sql_hex8(d)
     return f"""
 WITH eligible AS (SELECT * FROM documents WHERE lang IN ({langs})),
 counts AS (
@@ -4611,7 +4589,7 @@ def importance_sample_docs(spark, sf_dir):
     one codegen'd predicate on the scan."""
     docs = _t(spark, sf_dir, "documents")
     d = F.md5(F.concat(F.lit("imp:"), F.col("doc_id").cast("string")))
-    gate = F.conv(F.substring(d, 1, 8), 16, 10).cast("long") % 1000000
+    gate = text._hex_u32(d) % 1000000
     q = text.quality_score(F.col("text"))
     return (
         docs.withColumn("quality", q)
@@ -4622,9 +4600,7 @@ def importance_sample_docs(spark, sf_dir):
 
 def _gen_importance_sample_sql() -> str:
     d = "md5('imp:' || CAST(doc_id AS VARCHAR))"
-    gate = f"(strpos('{HEXD}', substr({d}, 1, 1)) - 1)"
-    for i in range(2, 9):
-        gate = f"({gate} * 16 + (strpos('{HEXD}', substr({d}, {i}, 1)) - 1))"
+    gate = _sql_hex8(d)
     return f"""
 WITH prof AS ({_gen_text_profile_sql()})
 SELECT d.doc_id, d.lang, p.quality
@@ -4659,7 +4635,7 @@ def pretraining_pipeline_e2e(spark, sf_dir):
         "lang", (F.col("t") * F.col("share") / F.col("n_l").cast("double")).alias("keep_rate")
     )
     dmix = F.md5(F.concat(F.lit("mix:"), F.col("doc_id").cast("string")))
-    mix_gate = F.conv(F.substring(dmix, 1, 8), 16, 10).cast("long") % 1000000
+    mix_gate = text._hex_u32(dmix) % 1000000
     mixed = deduped.join(F.broadcast(rates), ["lang"]).where(
         mix_gate < F.floor(F.col("keep_rate") * 1000000).cast("long")
     )
@@ -4675,9 +4651,7 @@ def pretraining_pipeline_e2e(spark, sf_dir):
         ).alias("c"),
     ).where(F.col("c.chunk") != "")
     dsh = F.md5(F.concat(F.lit("shard:"), F.col("doc_id").cast("string")))
-    shard = (F.conv(F.substring(dsh, 1, 8), 16, 10).cast("long") % N_TRAINING_SHARDS).alias(
-        "shard"
-    )
+    shard = (text._hex_u32(dsh) % N_TRAINING_SHARDS).alias("shard")
     return (
         chunks.select("doc_id", shard, F.col("c.n_tok").alias("n_tok"))
         .groupBy("shard")
@@ -4696,11 +4670,7 @@ def _gen_pretraining_pipeline_sql() -> str:
     langs = ", ".join(f"'{lang}'" for lang in TARGET_MIX)
 
     def _gate(salt: str, col: str) -> str:
-        d = f"md5('{salt}:' || CAST({col} AS VARCHAR))"
-        g = f"(strpos('{HEXD}', substr({d}, 1, 1)) - 1)"
-        for i in range(2, 9):
-            g = f"({g} * 16 + (strpos('{HEXD}', substr({d}, {i}, 1)) - 1))"
-        return g
+        return _sql_hex8(f"md5('{salt}:' || CAST({col} AS VARCHAR))")
 
     return f"""
 WITH prof AS ({_gen_text_profile_sql()}),
@@ -5553,7 +5523,7 @@ def split_leakage_safe(spark, sf_dir):
         F.coalesce(F.col("component"), F.col("doc_id")).alias("cluster_id"),
     )
     d = F.md5(F.concat(F.lit("split:"), F.col("cluster_id").cast("string")))
-    gate = F.conv(F.substring(d, 1, 8), 16, 10).cast("long") % 10
+    gate = text._hex_u32(d) % 10
     return assign.withColumn(
         "split",
         F.when(gate < 8, F.lit("train")).when(gate < 9, F.lit("val")).otherwise(F.lit("test")),
@@ -5563,9 +5533,7 @@ def split_leakage_safe(spark, sf_dir):
 def _gen_split_leakage_safe_sql(threshold: float = 0.6) -> str:
     clusters_sql = _gen_dedup_clusters_sql(threshold)
     d = "md5('split:' || CAST(cluster_id AS VARCHAR))"
-    gate = f"(strpos('{HEXD}', substr({d}, 1, 1)) - 1)"
-    for i in range(2, 9):
-        gate = f"({gate} * 16 + (strpos('{HEXD}', substr({d}, {i}, 1)) - 1))"
+    gate = _sql_hex8(d)
     return f"""
 WITH clusters AS ({clusters_sql}),
 assign AS (
@@ -9041,7 +9009,7 @@ def mix_temperature_sample(spark, sf_dir):
         ),
     )
     d = F.md5(F.concat(F.lit("tmix:"), F.col("doc_id").cast("string")))
-    gate = F.conv(F.substring(d, 1, 8), 16, 10).cast("long") % 1000000
+    gate = text._hex_u32(d) % 1000000
     return (
         docs.join(F.broadcast(rates), ["lang"])
         .where(gate < F.floor(F.col("keep_rate") * 1000000).cast("long"))
@@ -9671,16 +9639,8 @@ def synthesize_marginals_customers(spark, sf_dir):
 
     seg = cdf("c_mktsegment", "seg")
     nat = cdf("c_nationkey", "nat")
-    u = lambda tag: (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(f"syn:{tag}:"), F.col("c_custkey").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
+    u = lambda tag: text._md5_u32(
+        F.concat(F.lit(f"syn:{tag}:"), F.col("c_custkey").cast("string"))
     )
     base = cust.select("c_custkey").crossJoin(F.broadcast(n_tot)).select(
         "c_custkey",

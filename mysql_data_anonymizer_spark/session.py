@@ -54,6 +54,14 @@ class EngineConfig:
             raise ValueError("extra_spark_conf must be a dict of str -> str")
 
 
+def _driver_memory() -> str:
+    """``spark.driver.memory``: ``SPARK_GRAFT_DRIVER_MEM`` if set, else the
+    smaller of 32g and half the machine's physical memory, so a driver heap
+    never outgrows the box it shares with its executors' Python workers."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{min(32 << 10, phys_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "mysql_data_anonymizer_spark",
     config: EngineConfig | None = None,
@@ -90,13 +98,10 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_RUNTIME_BLOOM", "false"),
         )
         .config("spark.sql.session.timeZone", "UTC")
-        # fixtures store TIMESTAMP(NANOS); surface as bigint for explicit
-        # ns->us normalization (sources.files.normalize_nanos_ts)
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory", _driver_memory())
     )
     for k, v in config.extra_spark_conf.items():
         builder = builder.config(k, v)

@@ -2,7 +2,7 @@
 
 The reference reads only from MySQL (src/Anonymizer.php:298-317); file
 sources are an engine extension so the same masking plans run over data-lake
-inputs. Handles the fixtures' quirks (nanosecond parquet timestamps).
+inputs. Knows the fixtures' one timestamp quirk (``TS_COLUMNS``).
 """
 
 from __future__ import annotations
@@ -11,29 +11,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-# fixture columns stored as TIMESTAMP(NANOS), unreadable by Spark directly
-NANOS_TS_COLUMNS: dict[str, list[str]] = {"events": ["ts"]}
+# fixture columns the engine reads as TIMESTAMP, by table. Every fixture
+# timestamp is stored as INT64 TIMESTAMP(MICROS) not adjusted to UTC, which
+# Spark reads as timestamp_ntz
+TS_COLUMNS: dict[str, list[str]] = {"events": ["ts"]}
 
 
-def normalize_nanos_ts(df: DataFrame, cols: list[str]) -> DataFrame:
-    """Normalize TIMESTAMP(NANOS) parquet columns to TimestampType micros
-    regardless of how the reader surfaced them:
-
-    - ``bigint`` under ``spark.sql.legacy.parquet.nanosAsLong``: ns -> us by
-      integer division (truncation, matching DuckDB's parquet conversion);
-    - ``timestamp_ntz`` when schema inference ran without the flag: nanos
-      already truncated to NTZ micros — cast to TIMESTAMP (session timezone
-      is pinned UTC, so the instant is unchanged).
-
-    Both branches yield identical instants, so windows/aggregates and the
-    DuckDB oracles agree regardless of which inference path won."""
-    dtypes = dict(df.dtypes)
-    for c in cols:
-        dt = dtypes.get(c)
-        if dt == "bigint":
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"{c} div 1000")))
-        elif dt is not None and dt.startswith("timestamp_ntz"):
-            df = df.withColumn(c, F.col(c).cast("timestamp"))
+def normalize_ts(df: DataFrame, table_name: str | None) -> DataFrame:
+    """Cast ``table_name``'s ``TS_COLUMNS`` from timestamp_ntz to timestamp.
+    The session time zone is pinned to UTC, so each instant is unchanged and
+    matches the DuckDB oracles' reading of the same file."""
+    for c in TS_COLUMNS.get(table_name or "", []):
+        df = df.withColumn(c, F.col(c).cast("timestamp"))
     return df
 
 
@@ -45,18 +34,13 @@ def read_table(
     table_name: str | None = None,
     **options,
 ) -> DataFrame:
-    """Read one table; normalizes nanosecond timestamps to microseconds
-    (truncation — matching DuckDB's parquet ns->us conversion, so oracle
-    comparisons agree)."""
+    """Read one table; a parquet table's ``TS_COLUMNS`` are read as
+    timestamp (``normalize_ts``)."""
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
     if fmt == "parquet":
-        nanos_cols = NANOS_TS_COLUMNS.get(table_name or "", [])
-        if nanos_cols:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = reader.options(**options).parquet(path)
-        return normalize_nanos_ts(df, nanos_cols)
+        return normalize_ts(reader.options(**options).parquet(path), table_name)
     if fmt == "csv":
         return reader.options(header="true", inferSchema=schema is None, **options).csv(path)
     if fmt == "json":

@@ -95,6 +95,26 @@ def test_engine_config_validation():
     EngineConfig(locale="fr_FR")  # valid
 
 
+def test_driver_memory_default_fits_the_machine(spark, monkeypatch):
+    """The driver heap defaults to the smaller of 32g and half the physical
+    memory (8g on a 16 GB box); SPARK_GRAFT_DRIVER_MEM overrides it. The
+    suite's own session was built with that default."""
+    import os
+
+    from mysql_data_anonymizer_spark.session import _driver_memory
+
+    if not os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        assert spark.sparkContext.getConf().get("spark.driver.memory") == _driver_memory()
+    page = os.sysconf("SC_PAGE_SIZE")
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    for gib, want in ((16, "8192m"), (256, "32768m")):
+        pages = (gib << 30) // page
+        monkeypatch.setattr(os, "sysconf", lambda k, n=pages: page if k == "SC_PAGE_SIZE" else n)
+        assert _driver_memory() == want
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert _driver_memory() == "3g"
+
+
 def test_anonymizer_locale_flows_to_masks(spark, customer):
     anon = Anonymizer(spark, EngineConfig(locale="de_DE"))
     anon.register("customer", customer)

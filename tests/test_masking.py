@@ -319,8 +319,8 @@ def test_masking_report_resolves_qualified_synchro_target_to_bare_table(spark, c
 
 def test_register_parquet_dir_reads_events_ts_as_timestamp(spark, sf_dir):
     """The quick-start registration reads tables like the registry does:
-    events.ts (TIMESTAMP(NANOS) on disk) is a timestamp, not timestamp_ntz
-    or a nanos long."""
+    events.ts (INT64 TIMESTAMP(MICROS), not UTC-adjusted, on disk) is a
+    timestamp, not timestamp_ntz."""
     anon = Anonymizer(spark).register_parquet_dir(sf_dir)
     assert dict(anon.sources["events"].dtypes)["ts"] == "timestamp"
 

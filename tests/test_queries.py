@@ -537,3 +537,32 @@ def test_pool_threads_keep_the_query_job_group(spark, sf_dir):
     fn(spark, sf01)
     _, jobs, stray = _jobs_in_group(spark, "pool_group", lambda: fn(spark, sf01))
     assert jobs and stray == set()
+
+
+def test_registry_leaves_the_callers_session_conf_as_it_found_it(spark, sf_dir):
+    """Reading events through ``_t``, the quick-start registration and a
+    bounded replay each see events.ts as a timestamp, and none of them
+    writes the session conf: ``__spark_entry__.queries()`` runs the
+    registry on the caller's own session."""
+    from mysql_data_anonymizer_spark import Anonymizer
+
+    s = spark.newSession()
+    s.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    before = dict(s.conf.getAll)
+
+    assert dict(Q._t(s, sf_dir, "events").dtypes)["ts"] == "timestamp"
+    anon = Anonymizer(s).register_parquet_dir(sf_dir)
+    assert dict(anon.sources["events"].dtypes)["ts"] == "timestamp"
+    out = Q.QUERIES["streaming_tumbling_agg"](s, sf_dir)
+    assert dict(out.dtypes)["window_start"] == "timestamp" and out.count() > 0
+
+    assert dict(s.conf.getAll) == before
+
+
+def test_certifier_change_selects_the_whole_registry(monkeypatch):
+    """A change to tools/certify.py re-certifies every registered query."""
+    from tools import certify_changed
+
+    monkeypatch.setattr(certify_changed, "git_diff_files", lambda base: {"tools/certify.py": {1}})
+    names, everything = certify_changed.affected_queries("HEAD")
+    assert everything and names == sorted(Q.QUERIES)

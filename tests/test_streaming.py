@@ -208,15 +208,12 @@ def test_streaming_dedup_drops_redelivered_events(spark, sf_dir, tmp_path):
     from mysql_data_anonymizer_spark.sources import files
     from mysql_data_anonymizer_spark.streaming.stream_ops import dedup_stream
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     stage = tmp_path / "replay"
     stage.mkdir()
     os.symlink(f"{sf_dir}/events.parquet", stage / "a.parquet")
     os.symlink(f"{sf_dir}/events.parquet", stage / "b.parquet")
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = files.normalize_nanos_ts(
-        spark.readStream.schema(schema).parquet(str(stage)), ["ts"]
-    )
+    stream = files.normalize_ts(spark.readStream.schema(schema).parquet(str(stage)), "events")
     deduped = dedup_stream(stream, ["event_id"], watermark="30 minutes")
     name = f"t_dedup_{uuid.uuid4().hex[:8]}"
     q = (

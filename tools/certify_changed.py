@@ -18,7 +18,8 @@ Resolution rules (conservative — over-select rather than miss):
   - a change in an engine module (operators/, functions/, sources/, plans/,
     streaming/, multimodal/) selects every query whose source references the
     module's import name (e.g. ``dedup.`` for operators/dedup.py);
-  - a change in session.py / __spark_entry__ / conftest selects EVERYTHING.
+  - a change in session.py / __spark_entry__ / conftest / tools/certify.py
+    selects EVERYTHING.
 
 Usage:
     python tools/certify_changed.py [base_ref]      # default: HEAD
@@ -41,7 +42,12 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 QUERIES_PATH = "mysql_data_anonymizer_spark/queries.py"
-GLOBAL_PATHS = ("mysql_data_anonymizer_spark/session.py", "__spark_entry__.py", "tests/conftest.py")
+GLOBAL_PATHS = (
+    "mysql_data_anonymizer_spark/session.py",
+    "__spark_entry__.py",
+    "tests/conftest.py",
+    "tools/certify.py",
+)
 
 
 def git_diff_files(base: str) -> dict[str, set[int]]:
