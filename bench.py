@@ -1,5 +1,6 @@
 """Benchmark runner: every registry query, in registry (file) order, at
-$SPARK_GRAFT_SF_DIR (default: the sf0.1 fixtures) on local[$SPARK_GRAFT_CPUS].
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 fixtures) on local[$SPARK_GRAFT_CPUS]
+(default: the number of CPUs this process may run on).
 `--queries a,b,c` times only those registry queries.
 
 Prints ONE JSON line:
@@ -106,7 +107,7 @@ def _drop_persisted(spark) -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 

@@ -61,9 +61,7 @@ HEXD = "0123456789abcdef"
 _log = logging.getLogger(__name__)
 _STREAM_HARVEST_WARNED = False
 _REPLAY_DEADLINE_S = 180
-# Parallelism the small-input remedies size for: _spread repartitions a
-# scan with fewer splits than min(cores, cap), and a bounded replay opens
-# min(cores, cap) state partitions (_stream_shuffle).
+# A bounded replay opens min(cores, cap) state partitions (_stream_shuffle).
 _PARALLELISM_CAP = 8
 
 
@@ -110,38 +108,12 @@ def _await_stream(spark, q, timeout_s: int = _REPLAY_DEADLINE_S, *, name: str) -
     store[name] = plan
 
 
-def _spread(df: DataFrame, path: str) -> DataFrame:
-    """Round-robin repartition IFF the scan would have fewer splits than the
-    session's parallelism.
-
-    The fixtures are single-file single-row-group parquet, so the scan is ONE
-    task and every per-row map (shingling, simhash, masking expressions)
-    would otherwise run serially on one core. On a real 100 TB table the
-    scan yields thousands of splits and this is a no-op — the condition makes
-    the remedy apply only to the small-file case, never adding a shuffle at
-    scale. Split count is estimated from the file size on disk (the same
-    arithmetic FilePartition uses) — NOT via ``df.rdd.getNumPartitions()``,
-    which forces a full plan conversion per call (~0.1-0.2 s of driver time
-    paid by every query). Catalyst still pushes filters/pruning through the
-    Repartition node to the scan."""
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
-    m = re.match(r"(\d+)", raw)
-    max_split = int(m.group(1)) if m else 134217728
-    try:
-        est_splits = os.path.getsize(path) // max_split + 1
-    except OSError:  # directory input etc. — assume the source splits fine
-        return df
-    if est_splits < min(par, _PARALLELISM_CAP):
-        return df.repartition(par)
-    return df
-
-
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Fixture table ``name``, split as Spark's own scan splits it. A
+    fixture file is one row group, read by one task; a multi-file directory
+    (the scale slices) is packed into about one split per core."""
     path = f"{sf_dir}/{name}.parquet"
-    df = files.read_table(spark, path, schema=_schema(spark, path), table_name=name)
-    return _spread(df, path)
+    return files.read_table(spark, path, schema=_schema(spark, path), table_name=name)
 
 
 _SCRATCH_LOCK = threading.Lock()
@@ -259,10 +231,8 @@ def _replay_source(
     slices (tools/scale_slope.py) write multi-file parquet DIRECTORIES
     instead — the source doesn't recurse through a symlinked subdirectory
     (it listed 0 files and the query silently emitted nothing, r12), so a
-    directory is streamed directly. Each table gets ``files.normalize_ts``,
-    and every table but events gets ``_spread``, which works on streams
-    too: a micro-batch over one sub-split file is ONE task, so per-row map
-    work would run serially.
+    directory is streamed directly. Each table gets ``files.normalize_ts``
+    and is split as Spark's scan splits it, as in batch (``_t``).
     The batch schema comes from ``_schema``: inferred once per session and
     source, and afresh for a rewritten file or directory.
 
@@ -281,7 +251,7 @@ def _replay_source(
             os.symlink(src, f"{stage}/{table}_{i}.parquet")
         stream = reader.parquet(stage)
     stream = files.normalize_ts(stream, table)
-    return (stream if table == "events" else _spread(stream, src)), stage
+    return stream, stage
 
 
 def _replay_run(spark, name: str, stage: str | None, start: Callable) -> None:
@@ -13053,7 +13023,7 @@ def _kcore_impl(spark, sf_dir, broadcast_alive=True):
         .distinct()
     )
     if not broadcast_alive:
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
         e = e.repartition(n_part, "src")
     e = e.localCheckpoint(eager=True)
 

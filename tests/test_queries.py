@@ -3,6 +3,7 @@
 at sf0.001)."""
 
 import os
+import shutil
 
 import pytest
 
@@ -452,6 +453,19 @@ def test_result_invariant_to_shuffle_partitioning(spark, sf_dir, name):
     assert a == b
 
 
+def test_fixture_reads_add_no_shuffle(spark, sf_dir):
+    """Fixture tables are read as Spark's scan splits them: neither a batch
+    read nor a non-events replay source puts a repartition between the scan
+    and the query."""
+    batch = Q._t(spark, sf_dir, "customer")
+    assert "Exchange" not in batch._jdf.queryExecution().executedPlan().toString()
+    stream, stage = Q._replay_source(spark, sf_dir, table="documents")
+    try:
+        assert "Repartition" not in stream._jdf.queryExecution().logical().toString()
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+
+
 def test_each_query_name_is_written_once():
     """A query is its ``def``, its oracle and one ``_register(fn, oracle)``
     call; nothing else spells its name. No subscript assignment to QUERIES
@@ -557,6 +571,62 @@ def test_registry_leaves_the_callers_session_conf_as_it_found_it(spark, sf_dir):
     assert dict(out.dtypes)["window_start"] == "timestamp" and out.count() > 0
 
     assert dict(s.conf.getAll) == before
+
+
+def test_audit_reads_past_a_cached_relations_initial_plan():
+    """A cached relation prints its own AdaptiveSparkPlan, initial plan and
+    all, under each reader. The audit drops every initial plan and keeps
+    every final one: here, the cache's round-robin shuffle and the join's
+    hash shuffle after it."""
+    from tools.certify import audit
+
+    plan = "\n".join([
+        "AdaptiveSparkPlan isFinalPlan=true",
+        "+- == Final Plan ==",
+        "   *(2) BroadcastHashJoin [k#1], [k#2], Inner, BuildRight, false",
+        "   :- InMemoryTableScan [k#1]",
+        "   :     +- InMemoryRelation [k#1], StorageLevel(disk, memory, deserialized, 1 replicas)",
+        "   :           +- AdaptiveSparkPlan isFinalPlan=true",
+        "                  +- == Final Plan ==",
+        "                     Exchange RoundRobinPartitioning(4), REPARTITION_BY_NUM",
+        "                  +- == Initial Plan ==",
+        "                     Exchange RoundRobinPartitioning(4), REPARTITION_BY_NUM",
+        "   +- BroadcastExchange HashedRelationBroadcastMode(List(input[0, bigint, false]),false)",
+        "      +- Exchange hashpartitioning(k#2, 32), ENSURE_REQUIREMENTS",
+        "         +- *(1) FileScan parquet [k#2] Batched: true",
+        "+- == Initial Plan ==",
+        "   BroadcastHashJoin [k#1], [k#2], Inner, BuildRight, false",
+        "   +- Exchange hashpartitioning(k#2, 32), ENSURE_REQUIREMENTS",
+        "      +- SortMergeJoin [k#2], [k#3], Inner",
+    ])
+    r = audit("q", plan)
+    assert (r["exchanges"], r["bhj"], r["smj"], r["codegen"]) == (2, 1, 0, 2)
+
+
+def test_audit_counts_a_cached_plan_once():
+    """A cache read by two sides of a self-join is printed under both, the
+    second time with renamed attributes on the relation's own line. It is
+    built once, so its exchange and its file scan count once; a different
+    cached plan still counts."""
+    from tools.certify import audit
+
+    def read(edge: str, attr: str, mod: int) -> list[str]:
+        pad = ":" if edge == ":-" else " "
+        return [
+            f"{edge} InMemoryTableScan [{attr}]",
+            f"{pad}  +- InMemoryRelation [{attr}], StorageLevel(disk, memory, deserialized, 1 replicas)",
+            f"{pad}        +- Exchange hashpartitioning(k#1, 4), REPARTITION_BY_COL",
+            f"{pad}           +- Filter ((k#1 % {mod}) = 0)",
+            f"{pad}              +- FileScan parquet [k#1] Batched: true, "
+            "Location: InMemoryFileIndex(1 paths)[file:/d/t.parquet]",
+        ]
+
+    plan = "\n".join(
+        ["Union"] + read(":-", "k#1", 2) + read(":-", "k#7", 2) + read("+-", "k#1", 3)
+    )
+    r = audit("q", plan)
+    assert r["exchanges"] == 2
+    assert r["hot_scan"] == [("t.parquet", 2)]
 
 
 def test_certifier_change_selects_the_whole_registry(monkeypatch):
