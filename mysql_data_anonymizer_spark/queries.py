@@ -61,8 +61,12 @@ HEXD = "0123456789abcdef"
 _log = logging.getLogger(__name__)
 _STREAM_HARVEST_WARNED = False
 _REPLAY_DEADLINE_S = 180
-# A bounded replay opens min(cores, cap) state partitions (_stream_shuffle).
+# A bounded replay opens min(cores, cap) state partitions (_replay_conf).
 _PARALLELISM_CAP = 8
+# It checkpoints through Hadoop's FileSystem API, not FileContext (_replay_conf).
+_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+)
 
 
 def _await_stream(spark, q, timeout_s: int = _REPLAY_DEADLINE_S, *, name: str) -> None:
@@ -181,41 +185,56 @@ def _plan_str_full(df: DataFrame) -> str:
     render, restored after. MUST be the FIRST render of the plan:
     FileSourceScanExec.metadata is a transient lazy val, so whichever
     conf is live at first access is frozen into every later render."""
-    spark = df.sparkSession
-    key = "spark.sql.maxMetadataStringLength"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, "65536")
-    try:
+    with _session_conf(df.sparkSession, {"spark.sql.maxMetadataStringLength": "65536"}):
         return df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
 
 
 @contextlib.contextmanager
-def _stream_shuffle(spark):
-    """Pin streaming state partitioning for the duration of query START to
-    ``min(defaultParallelism, _PARALLELISM_CAP)``: one state partition per
-    core, at most 8.
-
-    Stateful operators allocate one state store per shuffle partition and
-    the count is FROZEN into the checkpoint at start — AQE never coalesces
-    it. A real streaming deployment therefore sizes this per job (state
-    volume / target task size), instead of inheriting the batch session
-    default; every store is opened and committed per micro-batch, so
-    stores beyond the core count only queue (32 nearly-empty stores
-    measured 2.4x the wall-clock of 8; SCALE.md "Streaming floor
-    decomposition" has the 8 -> cores A/B). The previous value is
-    restored afterwards so batch queries are unaffected."""
-    n = min(spark.sparkContext.defaultParallelism, _PARALLELISM_CAP)
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+def _session_conf(spark, confs: dict[str, str]):
+    """Set ``confs`` on the session for the block, then restore the
+    caller's values: a key the caller left unset is unset again."""
+    old = {key: spark.conf.get(key, None) for key in confs}
+    for key, value in confs.items():
+        spark.conf.set(key, value)
     try:
         yield
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+        for key, value in old.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
+
+
+def _replay_conf(spark):
+    """Scope the streaming confs to a bounded replay's query START
+    (``_session_conf``: the caller's values come back afterwards).
+    StreamExecution clones the session at ``start()``, so the query's logs
+    and state stores keep the values set here.
+
+    - ``spark.sql.shuffle.partitions``: ``min(defaultParallelism,
+      _PARALLELISM_CAP)``, one state partition per core, at most 8.
+      Stateful operators allocate one state store per shuffle partition and
+      the count is FROZEN into the checkpoint at start — AQE never coalesces
+      it. A real streaming deployment therefore sizes this per job (state
+      volume / target task size), instead of inheriting the batch session
+      default; every store is opened and committed per micro-batch, so
+      stores beyond the core count only queue (32 nearly-empty stores
+      measured 2.4x the wall-clock of 8).
+    - ``spark.sql.streaming.checkpointFileManagerClass``:
+      ``_CHECKPOINT_MANAGER``. Spark's default FileContext manager resolves
+      symlinks on every atomic rename, and without libhadoop each lookup
+      forks a ``readlink`` process (about 80 per replay). Every registry
+      replay checkpoints to a local dir, where ``rename`` is atomic, so the
+      FileSystem manager is safe there.
+
+    SCALE.md "Streaming floor decomposition" has both A/Bs."""
+    return _session_conf(spark, {
+        "spark.sql.shuffle.partitions": str(
+            min(spark.sparkContext.defaultParallelism, _PARALLELISM_CAP)
+        ),
+        "spark.sql.streaming.checkpointFileManagerClass": _CHECKPOINT_MANAGER,
+    })
 
 
 def _replay_source(
@@ -256,14 +275,15 @@ def _replay_source(
 
 def _replay_run(spark, name: str, stage: str | None, start: Callable) -> None:
     """Run half of a bounded file replay: ``start()`` launches the writer
-    under one state partition per core, at most 8 (``_stream_shuffle``),
-    and returns its query, which is awaited with the deadline and its
-    executed plan harvested under the registry ``name``; the source half's
-    ``stage`` dir is then removed, whatever the outcome. (A memory-sink
+    under the replay confs (``_replay_conf``: one state partition per core,
+    at most 8, and the FileSystem checkpoint manager) and returns its
+    query, which is awaited with the deadline and its executed plan
+    harvested under the registry ``name``; the source half's ``stage``
+    dir is then removed, whatever the outcome. (A memory-sink
     ``start`` has already waited inside ``stream_ops.run_to_memory``; the
     wait here then returns at once.)"""
     try:
-        with _stream_shuffle(spark):
+        with _replay_conf(spark):
             q = start()
         _await_stream(spark, q, name=name)
     finally:
@@ -4326,7 +4346,7 @@ def pydatasource_stream_agg(spark, sf_dir):
 
     pydatasource.register_stream(spark)
     name = f"pyds_stream_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle(spark):
+    with _replay_conf(spark):
         q = (
             spark.readStream.format("synthstream")
             .option("n_rows", SYNTH_STREAM_ROWS)

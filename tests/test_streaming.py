@@ -823,6 +823,57 @@ def test_replay_result_invariant_to_state_partition_count(spark, sf_dir, monkeyp
     assert default and single == default
 
 
+_FILE_CONTEXT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
+)
+
+
+@pytest.mark.parametrize("caller", [None, _FILE_CONTEXT_MANAGER], ids=["unset", "file_context"])
+def test_replay_checkpoints_through_the_filesystem_manager(spark, sf_dir, monkeypatch, caller):
+    """A bounded replay's offset and commit logs write through Hadoop's
+    FileSystem API whatever the caller's session holds, and the caller's
+    conf is as it was afterwards: a key it left unset is unset again."""
+    from mysql_data_anonymizer_spark import queries as Q
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    s = spark.newSession()
+    if caller is not None:
+        s.conf.set(key, caller)
+    before = dict(s.conf.getAll)
+    started = []
+    start = ms.start_bounded
+
+    def capture(writer):
+        started.append(start(writer))
+        return started[-1]
+
+    monkeypatch.setattr(ms, "start_bounded", capture)
+    assert Q.QUERIES["streaming_tumbling_agg"](s, sf_dir).count() > 0
+    (q,) = started
+    sq = q._jsq.streamingQuery()  # noqa: SLF001
+    managers = {log.fileManager().getClass().getName() for log in (sq.offsetLog(), sq.commitLog())}
+    assert managers == {Q._CHECKPOINT_MANAGER}
+    assert dict(s.conf.getAll) == before
+    assert s.conf.get(key, None) == caller
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["streaming_tumbling_agg", "streaming_dedup_then_window", "streaming_parquet_sink_agg"],
+)
+def test_replay_result_invariant_to_checkpoint_manager(spark, sf_dir, monkeypatch, name):
+    """Spark's FileContext checkpoint manager and the FileSystem one give
+    the same rows: the manager moves checkpoint I/O, never values (complete
+    mode, append mode through two stateful operators, and a file sink with
+    its _spark_metadata log)."""
+    from mysql_data_anonymizer_spark import queries as Q
+
+    default = sorted(map(repr, Q.QUERIES[name](spark, sf_dir).collect()))
+    monkeypatch.setattr(Q, "_CHECKPOINT_MANAGER", _FILE_CONTEXT_MANAGER)
+    file_context = sorted(map(repr, Q.QUERIES[name](spark, sf_dir).collect()))
+    assert default and file_context == default
+
+
 def test_replay_state_stores_follow_the_cores(spark, sf_dir):
     """A bounded replay opens one state store per core (at most the cap)
     and leaves the session's shuffle partition count as it found it."""

@@ -542,7 +542,7 @@ def main() -> None:
         ap.error(f"sf_dir {args.sf_dir!r} is not a fixture directory "
                  "(no lineitem.parquet) — refusing to run")
 
-    # plan shape depends on defaultParallelism (queries._stream_shuffle and
+    # plan shape depends on defaultParallelism (queries._replay_conf and
     # the scan's split packing), so the session size is fixed, not taken
     # from the env
     spark = get_spark("certify", master="local[4]")

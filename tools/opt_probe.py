@@ -43,7 +43,7 @@ def main() -> None:
         argv.remove("--no-plan")
     names = argv
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     spark = get_spark("mda-opt-probe", master=f"local[{cpus}]")
     import mysql_data_anonymizer_spark.queries as Q
     from bench import _drop_persisted

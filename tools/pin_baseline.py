@@ -56,7 +56,7 @@ def main() -> None:
         "pinned_at_head": head,
         "sf": bench.get("sf"),
         "reps": bench.get("reps"),
-        "cpus": os.cpu_count(),
+        "cpus": len(os.sched_getaffinity(0)),
         "total_sec": bench.get("value"),
         "queries": bench["queries"],
     }
