@@ -180,11 +180,7 @@ def masking_report(
                     "key_mappings (Anonymizer.run stashes them as "
                     "anon.key_mappings) so pre rows can be matched to post"
                 )
-            a = (
-                a.join(F.broadcast(mapping), a[c] == mapping["__old"], "left")
-                .withColumn(c, F.coalesce(F.col("__new"), F.col(c)))
-                .drop("__old", "__new")
-            )
+            a = remap_keys(a, c, mapping)
         b = post[tname].select(*pk, *[F.col(c).alias(f"__post_{c}") for c in cols])
         joined = a.join(b, pk)
         agg = joined.agg(

@@ -1242,9 +1242,6 @@ def exact_substring_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
     min_tokens: int = 12,
-    stride: int = 1,
-    hash_key: bool = False,
-    coverage: str = "windows",
 ) -> DataFrame:
     """Exact-substring dedup — the suffix-array family of Lee et al. 2022
     ("Deduplicating Training Data Makes Language Models Better"): every
@@ -1255,12 +1252,11 @@ def exact_substring_dedup(
     ``(id_col, total_tokens, kept_tokens, dedup_text)``.
 
     Distributed formulation (vs a monolithic suffix array): enumerate
-    every ``min_tokens``-gram at ``stride`` spacing — with ``stride=1``
-    (default) detection is EXACT for duplicated substrings of length >=
-    ``min_tokens``: a duplicate of L >= W tokens contributes all of its
-    L - W + 1 windows, so the union of its non-first duplicated windows
-    covers every token of every non-first occurrence, exactly the tokens a
-    suffix-array pass removes. Divergences from the paper, both inherent
+    every ``min_tokens``-gram at every token position — detection is EXACT
+    for duplicated substrings of length >= ``min_tokens``: a duplicate of
+    L >= W tokens contributes all of its L - W + 1 windows, so the union of
+    its non-first duplicated windows covers every token of every non-first
+    occurrence, exactly the tokens a suffix-array pass removes. Divergences from the paper, both inherent
     to distribution: (a) "first occurrence" is decided PER WINDOW, so when
     two long duplicates interleave, surviving tokens may be stitched from
     different occurrences — the guarantee is every duplicated W-gram
@@ -1268,29 +1264,16 @@ def exact_substring_dedup(
     whole; (b) substrings shorter than ``min_tokens`` are untouched (the
     paper's 50-BPE-token threshold plays the same role).
 
-    ``stride`` > 1 is the cheap pre-pass knob: window rows drop by S x but
-    only duplicate pairs whose occurrences align mod S are caught (whole-
-    doc and common-prefix duplicates — arbitrary-offset duplicates need
-    stride 1, because two grids agree on a window start only when the
-    occurrence offsets are congruent mod S).
-
     100 TB shape: window count ~= corpus token count (NO pair join and no
     quadratic anywhere): one hash aggregate on the gram key (min-struct
     first-occurrence; map-side partial combine absorbs hot boilerplate
     grams — the skew that breaks a row_number window), one 1:1 join back,
     then removal coverage fans out W positions per duplicated window only
-    (the W x cliff is on DUPLICATED volume, not the corpus —
-    ``coverage="intervals"`` is the extreme-dup remedy: per-doc
-    gaps-and-islands merges overlapping [pos, pos+W) spans BEFORE the
-    explode, so fan-out equals the removed token count exactly; output is
-    identical, unit-asserted; the per-doc window is bounded by doc
-    length), one (doc, pos) anti-join and one per-doc rebuild
-    aggregate. With
-    ``hash_key=True`` the shuffle key is xxhash64 of the gram (8 bytes vs
-    ~W tokens of text) — the production default at scale; collisions are
-    ~n^2/2^65 and only ever REMOVE an extra span. String key kept for the
-    bit-exact oracle. Reference parity: none (src/Anonymizer.php is
-    row-oriented); this is the LLM-curation surface.
+    (the W x cliff is on DUPLICATED volume, not the corpus), one
+    (doc, pos) anti-join and one per-doc rebuild aggregate. The shuffle
+    key is the gram string itself, bit-exact with the oracle. Reference
+    parity: none (src/Anonymizer.php is row-oriented); this is the
+    LLM-curation surface.
     """
     toks = docs.select(
         F.col(id_col),
@@ -1304,17 +1287,13 @@ def exact_substring_dedup(
         .select(
             F.col(id_col),
             F.expr(
-                f"explode(transform(sequence(0, size(__t) - {w}, {stride}), "
+                f"explode(transform(sequence(0, size(__t) - {w}, 1), "
                 f"s -> struct(CAST(s AS LONG) AS pos, "
                 f"array_join(slice(__t, s + 1, {w}), ' ') AS gram)))"
             ).alias("c"),
         )
         .select(id_col, "c.pos", "c.gram")
     )
-    if hash_key:
-        windows = windows.select(
-            id_col, "pos", F.xxhash64(F.col("gram")).alias("gram")
-        )
     firsts = windows.groupBy("gram").agg(
         F.min(F.struct(F.col(id_col).alias("d"), F.col("pos").alias("i"))).alias(
             "__first"
@@ -1330,40 +1309,10 @@ def exact_substring_dedup(
         )
         .select(id_col, "pos")
     )
-    if coverage == "intervals":
-        # gaps-and-islands: merge overlapping/adjacent [pos, pos+w) spans
-        # per doc, then explode each merged interval exactly once — the
-        # fan-out equals the removed token count (no distinct needed:
-        # merged intervals are disjoint by construction)
-        from pyspark.sql import Window as _W
-
-        wnd = _W.partitionBy(id_col).orderBy("pos")
-        prev_end = F.max(F.col("pos") + F.lit(w)).over(
-            wnd.rowsBetween(_W.unboundedPreceding, -1)
-        )
-        islands = (
-            dup_occ.withColumn(
-                "__new",
-                F.when(
-                    prev_end.isNull() | (F.col("pos") > prev_end), F.lit(1)
-                ).otherwise(F.lit(0)),
-            )
-            .withColumn("__isl", F.sum("__new").over(wnd))
-            .groupBy(id_col, "__isl")
-            .agg(
-                F.min("pos").alias("__s"),
-                F.max(F.col("pos") + F.lit(w)).alias("__e"),
-            )
-        )
-        removed = islands.select(
-            id_col,
-            F.explode(F.sequence(F.col("__s"), F.col("__e") - 1)).alias("__p"),
-        )
-    else:
-        removed = dup_occ.select(
-            id_col,
-            F.explode(F.sequence(F.col("pos"), F.col("pos") + F.lit(w - 1))).alias("__p"),
-        ).distinct()
+    removed = dup_occ.select(
+        id_col,
+        F.explode(F.sequence(F.col("pos"), F.col("pos") + F.lit(w - 1))).alias("__p"),
+    ).distinct()
     tokens = toks.select(
         id_col, F.posexplode(F.col("__t")).alias("__p", "__tk")
     ).withColumn("__p", F.col("__p").cast("long"))

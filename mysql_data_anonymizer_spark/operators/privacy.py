@@ -515,7 +515,6 @@ def enforce_k_anonymity(
     quasi_cols: list[str],
     k: int,
     sentinel: str = "*",
-    broadcast_groups: bool = True,
 ) -> DataFrame:
     """The ENFORCEMENT half of the k-anonymity pair (``k_anonymity_audit``
     measures; this repairs): quasi-identifier values of every row whose QI
@@ -546,10 +545,8 @@ def enforce_k_anonymity(
     the group table is QI-combination-cardinality, orders of magnitude
     smaller than the data FOR SANE QI SETS. The broadcast has a cliff:
     near-unique quasi-identifier combinations (exactly the k-anonymity
-    danger case) make the group dim approach |df| and blow the broadcast.
-    Pass ``broadcast_groups=False`` there: the join runs as a keyed
-    shuffle (sort-merge on the null-safe QI key) — result-identical,
-    one extra shuffle of the fact table. Joins are NULL-SAFE on every QI
+    danger case) make the group dim approach |df| and blow the broadcast;
+    the caller widens generalization first. Joins are NULL-SAFE on every QI
     column (NULL is a QI value an attacker can see — it must count toward
     its own group, not silently escape suppression)."""
     # prefix the group-side key columns: groups derives from df, so bare
@@ -578,12 +575,7 @@ def enforce_k_anonymity(
     for c in quasi_cols:
         eq = F.col(c).eqNullSafe(F.col(f"__g_{c}"))
         cond = eq if cond is None else cond & eq
-    if broadcast_groups:
-        joined = df.join(F.broadcast(groups), cond, "left")
-    else:
-        # high-cardinality QI fallback: null-safe keys plan as a keyed
-        # sort-merge join; nothing is broadcast
-        joined = df.join(groups.hint("shuffle_merge"), cond, "left")
+    joined = df.join(F.broadcast(groups), cond, "left")
     suppressed = F.col("__grp_n") < k
     out_cols = [F.col(c) for c in df.columns if c not in quasi_cols]
     for c in quasi_cols:

@@ -418,34 +418,6 @@ def train_pq_codebooks(
     return books
 
 
-def pq_encode_expr(vec_col: str, codebooks: np.ndarray) -> Column:
-    """PQ codes as array<int> of length m — ~32x smaller than the float
-    vector (m bytes of information vs dim*4). Arrow-batched: one
-    (batch x dsub x k) distance evaluation per subspace. At 100 TB the codes
-    column is what lives hot (RAM/SSD); raw vectors stay cold and are only
-    fetched for the final re-rank."""
-    from pyspark.sql.functions import pandas_udf
-
-    m, k_codes, dsub = codebooks.shape
-    books = codebooks.copy()
-
-    @pandas_udf("array<int>")
-    def _encode(v):
-        import pandas as pd
-
-        mat = np.stack(v.to_numpy()).astype(np.float64)
-        mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-        out = np.empty((len(mat), m), dtype=np.int32)
-        for j in range(m):
-            xj = mat[:, j * dsub : (j + 1) * dsub]  # batch x dsub
-            # ||x - c||^2 = ||x||^2 - 2 x.c + ||c||^2 ; argmin over codes
-            d2 = -2.0 * (xj @ books[j].T) + (books[j] ** 2).sum(axis=1)[None, :]
-            out[:, j] = np.argmin(d2, axis=1)
-        return pd.Series(list(out))
-
-    return _encode(F.col(vec_col) if isinstance(vec_col, str) else vec_col)
-
-
 def pq_topk(
     df: DataFrame,
     queries: DataFrame,

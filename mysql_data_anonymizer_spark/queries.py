@@ -7763,12 +7763,9 @@ def bucketed_join_revenue(spark, sf_dir):
 
     lt, ot = _memo(spark, ("bucketed", tag), _build)
     joined = (
-        bucketing.read_bucketed(spark, lt)
+        spark.table(lt)
         .hint("merge")
-        .join(
-            bucketing.read_bucketed(spark, ot),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
+        .join(spark.table(ot), F.col("l_orderkey") == F.col("o_orderkey"))
     )
     plan = joined._jdf.queryExecution().executedPlan().toString()
     colocated = ("Exchange" not in plan) and ("SortMergeJoin" in plan)
@@ -10109,21 +10106,18 @@ def dedup_exact_substring(spark, sf_dir):
     the suffix-array family of Lee et al. 2022: every 12-token span that
     occurs more than once in the corpus is removed from every occurrence
     except the globally first (by doc, position); docs reassemble from
-    surviving tokens, emptied docs vanish. stride=1 makes detection EXACT
-    for >= 12-token duplicates — the distributed divergence from a true
-    suffix array is only that first-occurrence keep is per-window (see the
-    operator docstring for the recall statement).
+    surviving tokens, emptied docs vanish. Windows at every token position
+    make detection EXACT for >= 12-token duplicates — the distributed
+    divergence from a true suffix array is only that first-occurrence keep
+    is per-window (see the operator docstring for the recall statement).
 
     100 TB shape: window rows ~= corpus tokens, NO pair join — one gram-key
     min-struct aggregate (map-side combine absorbs boilerplate skew), a 1:1
     join back, a W-position fan-out on duplicated windows only, one
     (doc,pos) anti-join, one per-doc rebuild agg. Certified on the
-    bit-exact string gram key; hash_key=True swaps in xxhash64 8-byte
-    shuffle keys for production (unit-tested identical on fixtures)."""
+    bit-exact string gram key."""
     docs = _t(spark, sf_dir, "documents")
-    return dedup.exact_substring_dedup(
-        docs, "doc_id", "text", min_tokens=12, stride=1
-    )
+    return dedup.exact_substring_dedup(docs, "doc_id", "text", min_tokens=12)
 
 
 EXACT_SUBSTRING_SQL = r"""
@@ -13018,20 +13012,7 @@ def kcore_copurchase_parts(spark, sf_dir):
     Scale shape: 6 x (one shuffle over the still-alive edge subset); the
     only driver actions are the two bounded node-set counts (the
     cc_incremental class). Output is the surviving core with in-core
-    degrees. NULL part/order keys drop out of the graph in both engines.
-
-    ``broadcast_alive=False`` is the past-the-broadcast-cliff fallback
-    (r10 verdict item 7 — previously documented but unimplemented): the
-    pinned edge table is repartitioned by src ONCE before the checkpoint
-    (localCheckpoint preserves the hash partitioning), so each round's
-    src-side semi-join plans WITHOUT re-exchanging the edges; only the
-    dst-side semi-join shuffles the already-peeled edge subset. The alive
-    sets travel through keyed shuffles instead of broadcasts —
-    result-identical (test-asserted on the fixture and a hand graph)."""
-    return _kcore_impl(spark, sf_dir, broadcast_alive=True)
-
-
-def _kcore_impl(spark, sf_dir, broadcast_alive=True):
+    degrees. NULL part/order keys drop out of the graph in both engines."""
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     e = (
         li.alias("a")
@@ -13041,32 +13022,21 @@ def _kcore_impl(spark, sf_dir, broadcast_alive=True):
             F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst")
         )
         .distinct()
+        .localCheckpoint(eager=True)
     )
-    if not broadcast_alive:
-        n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        e = e.repartition(n_part, "src")
-    e = e.localCheckpoint(eager=True)
 
     def induced(alive):
-        if broadcast_alive:
-            # explicit broadcast: alive is a CHECKPOINTED node set, and
-            # RDD-backed plans carry no size stats, so without the hint the
-            # planner assumes defaultSizeInBytes and sorts the full edge
-            # table TWICE PER ROUND (measured: 99 s at the x10 slice vs
-            # 26 s for PageRank on the same edges; with the hint the
-            # semi-joins are map-side). Bound: |nodes| longs — the
-            # product-catalog side, tens of MB at 100 TB.
-            return e.join(F.broadcast(alive), "src", "left_semi").join(
-                F.broadcast(alive.withColumnRenamed("src", "dst")),
-                "dst",
-                "left_semi",
-            )
-        # past the cliff: keyed semi-joins; the edge side is already
-        # hash-partitioned on src (pinned once above), the dst-side join
-        # shuffles only the still-alive edge subset
-        a = alive.hint("shuffle_merge")
-        return e.join(a, "src", "left_semi").join(
-            a.withColumnRenamed("src", "dst"), "dst", "left_semi"
+        # explicit broadcast: alive is a CHECKPOINTED node set, and
+        # RDD-backed plans carry no size stats, so without the hint the
+        # planner assumes defaultSizeInBytes and sorts the full edge
+        # table TWICE PER ROUND (measured: 99 s at the x10 slice vs
+        # 26 s for PageRank on the same edges; with the hint the
+        # semi-joins are map-side). Bound: |nodes| longs — the
+        # product-catalog side, tens of MB at 100 TB.
+        return e.join(F.broadcast(alive), "src", "left_semi").join(
+            F.broadcast(alive.withColumnRenamed("src", "dst")),
+            "dst",
+            "left_semi",
         )
 
     # Round 1 degrees come straight off e (semi-joins against 'all nodes'

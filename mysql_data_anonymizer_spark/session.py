@@ -88,15 +88,11 @@ def get_spark(
         .config("spark.sql.shuffle.partitions", str(config.shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # runtime bloom-filter join pruning prunes the probe-side scan on
-        # selective shuffle joins — a large win on 100 TB fact joins, but
-        # building the sketch costs ~0.3-0.6s per join at fixture scale
-        # while pruning nothing (measured), so it is enabled only when the
-        # deployment says the data is big enough to repay it
-        .config(
-            "spark.sql.optimizer.runtime.bloomFilter.enabled",
-            os.environ.get("SPARK_GRAFT_RUNTIME_BLOOM", "false"),
-        )
+        # runtime bloom-filter join pruning (Spark's default) builds a
+        # sketch per selective shuffle join, ~0.3-0.6s each at fixture
+        # scale while pruning nothing (measured); a deployment whose data
+        # repays it turns it back on through extra_spark_conf
+        .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")

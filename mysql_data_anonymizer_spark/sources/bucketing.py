@@ -22,7 +22,7 @@ Rules of thumb encoded here:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -42,17 +42,3 @@ def write_bucketed(
         writer = writer.option("path", path)
     writer.format("parquet").saveAsTable(table)
 
-
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    """Read a bucketed table back (bucket metadata comes from the catalog)."""
-    return spark.table(table)
-
-
-def cobucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: list[str], how: str = "inner"
-) -> DataFrame:
-    """Join two co-bucketed tables on their bucket key. With matching bucket
-    specs Catalyst plans this without any Exchange: each task merge-joins
-    bucket i of both tables in place. Verified by plan assertion in
-    tests/test_sources_sinks.py."""
-    return read_bucketed(spark, left_table).join(read_bucketed(spark, right_table), on, how)

@@ -729,20 +729,6 @@ def test_pq_train_rejects_bad_inputs(spark, embeddings):
         similarity.train_pq_codebooks(embeddings, m=7)
 
 
-def test_pq_encode_expr_codes_shape(spark, embeddings):
-    """pq_encode_expr yields m codes in [0, k_codes) per vector — the
-    compressed hot column a 100 TB deployment scans instead of floats."""
-    books = similarity.train_pq_codebooks(embeddings, m=8, k_codes=16, seed=7)
-    rows = (
-        embeddings.limit(50)
-        .select(similarity.pq_encode_expr("embedding", books).alias("codes"))
-        .collect()
-    )
-    assert len(rows) == 50
-    assert all(len(r.codes) == 8 for r in rows)
-    assert all(0 <= c < 16 for r in rows for c in r.codes)
-
-
 def test_sq8_topk_recall_and_quantization_model(spark, embeddings):
     """SQ8 ANN (similarity.sq8_topk): near-perfect recall against brute
     force (int8 quantization error is tiny at dim=64), and the numpy

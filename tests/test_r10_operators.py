@@ -1,5 +1,5 @@
-"""Round-10 tests: pins for the r9 ADVICE fixes, the k-anonymity keyed
-fallback, then the round-10 operator cohort."""
+"""Round-10 tests: pins for the r9 ADVICE fixes, the k-anonymity group
+join's plan, then the round-10 operator cohort."""
 
 from pyspark.sql import functions as F
 
@@ -7,24 +7,19 @@ from mysql_data_anonymizer_spark.operators import privacy
 
 
 # ---------------------------------------------------------------------------
-# enforce_k_anonymity — keyed-join fallback for high-cardinality QI sets
+# enforce_k_anonymity — the group table joins back by broadcast
 # ---------------------------------------------------------------------------
-def test_enforce_k_keyed_fallback_identical_and_not_broadcast(spark):
+def test_enforce_k_group_join_is_broadcast(spark):
     rows = (
         [(i, "A", None if i % 3 == 0 else "x") for i in range(8)]
         + [(8, "B", "y"), (9, "B", "y"), (10, None, None), (11, "C", "z")]
     )
     df = spark.createDataFrame(rows, "id long, qi1 string, qi2 string")
-    bc = privacy.enforce_k_anonymity(df, ["qi1", "qi2"], k=3)
-    keyed = privacy.enforce_k_anonymity(
-        df, ["qi1", "qi2"], k=3, broadcast_groups=False
-    )
-    assert sorted(map(tuple, bc.collect())) == sorted(map(tuple, keyed.collect()))
-    plan = keyed._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" in plan, "keyed path must plan a sort-merge join"
-    # the only broadcast allowed in the keyed path is the 1-row totals scalar
-    # onto the group dim — the fact-side group join must NOT be broadcast
-    assert plan.count("BroadcastHashJoin") <= 1
+    out = privacy.enforce_k_anonymity(df, ["qi1", "qi2"], k=3)
+    assert out.count() == len(rows)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan, plan
+    assert "SortMergeJoin" not in plan, plan
 
 
 # ---------------------------------------------------------------------------

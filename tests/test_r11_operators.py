@@ -168,8 +168,8 @@ def test_kn_tercile_buckets_rank_based(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# kcore broadcast-cliff fallback — keyed-join path is result-identical and
-# plans without broadcasting the alive set (r10 verdict item 7)
+# kcore_copurchase_parts on a hand graph: the peel keeps the K4 and its
+# semi-joins against the alive set are broadcast, never sort-merged
 # ---------------------------------------------------------------------------
 def _write_lineitem_graph(spark, tmp_path, order_parts):
     rows = [(o, p) for o, parts in order_parts for p in parts]
@@ -182,20 +182,10 @@ def test_kcore_fallback_identical_hand_graph(spark, tmp_path):
     # K4 on parts 1-4 (all degree 3 -> the 3-core) + pendant part 5
     # (degree 1 -> peeled round 1)
     _write_lineitem_graph(spark, tmp_path, [(100, [1, 2, 3, 4]), (200, [4, 5])])
-    bc = Q._kcore_impl(spark, str(tmp_path), broadcast_alive=True)
-    keyed = Q._kcore_impl(spark, str(tmp_path), broadcast_alive=False)
-    want = {(p, 3, True) for p in (1, 2, 3, 4)}
-    assert {tuple(r) for r in bc.collect()} == want
-    assert {tuple(r) for r in keyed.collect()} == want
-    plan = keyed._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
-    assert "SortMergeJoin" in plan, "fallback must keyed-join the alive set"
-    assert "BroadcastHashJoin" not in plan, "fallback must not broadcast"
-
-
-def test_kcore_fallback_identical_fixture(spark, sf_dir):
-    bc = {tuple(r) for r in Q._kcore_impl(spark, sf_dir, True).collect()}
-    keyed = {tuple(r) for r in Q._kcore_impl(spark, sf_dir, False).collect()}
-    assert bc == keyed
+    out = Q.kcore_copurchase_parts(spark, str(tmp_path))
+    assert {tuple(r) for r in out.collect()} == {(p, 3, True) for p in (1, 2, 3, 4)}
+    plan = out._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+    assert "SortMergeJoin" not in plan, plan
 
 
 # ---------------------------------------------------------------------------

@@ -64,37 +64,6 @@ def test_exact_substring_short_and_empty_docs(spark):
     assert 2 not in out
 
 
-def test_exact_substring_hash_key_twin_identical(spark):
-    # the xxhash64 production key must reproduce the string-key result
-    # exactly at fixture scale (collisions ~ n^2 / 2^65)
-    docs = _docs(
-        spark,
-        [(i, f"common prefix tokens here {i % 3} tail w{i}") for i in range(30)]
-        + [(100, "common prefix tokens here 0 tail w0")],
-    )
-    a = dedup.exact_substring_dedup(docs, min_tokens=4, hash_key=False)
-    b = dedup.exact_substring_dedup(docs, min_tokens=4, hash_key=True)
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-
-def test_exact_substring_stride_catches_aligned_duplicates(spark):
-    # stride=4 grid: identical docs (offset 0 vs 0, aligned mod 4) are
-    # caught; the same span at a misaligned offset is NOT — the documented
-    # recall tradeoff of the pre-pass knob
-    docs = _docs(
-        spark,
-        [(1, "a b c d e f g h"), (2, "a b c d e f g h"), (3, "z a b c d e f g")],
-    )
-    out = {
-        r["doc_id"]: r
-        for r in dedup.exact_substring_dedup(
-            docs, min_tokens=4, stride=4
-        ).collect()
-    }
-    assert 2 not in out or out[2]["kept_tokens"] == 0  # aligned dup removed
-    assert out[3]["kept_tokens"] == 8  # misaligned copy escapes at stride 4
-
-
 # ---------------------------------------------------------------------------
 # build_near_dup_index / probe_near_dup_index
 # ---------------------------------------------------------------------------
@@ -257,16 +226,6 @@ def test_ivf_index_probe_matches_in_memory_and_prunes(spark, tmp_path):
     assert not _ivf_scan_pruned(truncated, "t_trunc", n_cells=100), (
         "a truncated INSET list may enumerate every cell; must fail closed"
     )
-
-
-def test_exact_substring_interval_coverage_identical(spark):
-    # the extreme-dup production path (merged intervals, no distinct) must
-    # reproduce the window-explode result exactly — including overlapping
-    # and within-doc duplicates
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    a = dedup.exact_substring_dedup(docs, min_tokens=12, coverage="windows")
-    b = dedup.exact_substring_dedup(docs, min_tokens=12, coverage="intervals")
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
 # ---------------------------------------------------------------------------

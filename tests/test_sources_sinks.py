@@ -96,10 +96,7 @@ def test_parquet_write_roundtrip(spark, tmp_path, customer):
 
 # ------------------------------------------------------ bucketed layout
 def test_bucketed_join_is_shuffle_free(spark, customer, orders, tmp_path):
-    from mysql_data_anonymizer_spark.sources.bucketing import (
-        cobucketed_join,
-        write_bucketed,
-    )
+    from mysql_data_anonymizer_spark.sources.bucketing import write_bucketed
 
     write_bucketed(
         customer.withColumnRenamed("c_custkey", "custkey"),
@@ -114,7 +111,7 @@ def test_bucketed_join_is_shuffle_free(spark, customer, orders, tmp_path):
         # force a shuffle-shaped join so the assertion is about bucketing,
         # not about the dim being broadcast-small
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = cobucketed_join(spark, "bt_orders", "bt_customer", ["custkey"])
+        joined = spark.table("bt_orders").join(spark.table("bt_customer"), "custkey")
         plan = joined._jdf.queryExecution().executedPlan().toString()
         assert "SortMergeJoin" in plan
         assert "Exchange" not in plan, f"bucketed join should not shuffle:\n{plan}"

@@ -8,7 +8,8 @@ super-linearly (a 100 TB red flag). This tool derives 5x and 10x slices from
 the sf0.1 tables (under .scaledata/, inside the repo — /root/testdata is
 read-only) and times each family exactly like bench.py: one local thread
 per usable CPU unless SPARK_GRAFT_CPUS says otherwise, sf0.001 warm-up
-first, cache cleared between runs.
+first, cache cleared between runs, and the median of ``bench._REPS`` runs
+reported per family and scale point.
 
 Derivation preserves workload shape instead of inflating it:
   - documents: K copies; copy k>0 prefixes every token with ``c<k>·`` so the
@@ -34,6 +35,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import _REPS, _drop_persisted, _host_snapshot  # noqa: E402
 from mysql_data_anonymizer_spark.session import get_spark  # noqa: E402
 
 BASE = "/root/testdata/sf0.1"
@@ -304,8 +306,6 @@ def time_family(spark, name: str, sf_dir: str, k: int = 1) -> tuple[float, int]:
     # _drop_persisted lesson): without this, a graph family's x10 row
     # measures the x1+x5 leftovers' memory squeeze, not the operator —
     # kcore measured 115 s leaked vs ~25 s in a fresh session
-    from bench import _drop_persisted
-
     _drop_persisted(spark)
     return round(dt, 3), n
 
@@ -340,13 +340,15 @@ def main() -> None:
     for name in families:
         results[name] = {}
         for k in ks:
-            results[name][k] = time_family(spark, name, dirs[k], k)
-            print(f"# {name} x{k}: {results[name][k]}", file=sys.stderr)
+            # median of _REPS runs, as bench.py: one run per point read
+            # kcore_copurchase_parts x5 at 16.32 s and 13.75 s on unchanged code
+            samples = [time_family(spark, name, dirs[k], k) for _ in range(_REPS)]
+            secs = sorted(dt for dt, _ in samples)
+            results[name][k] = (secs[len(secs) // 2], samples[-1][1])
+            print(f"# {name} x{k}: {results[name][k]} of {secs}", file=sys.stderr)
 
     # self-qualifying load stamp (r10 verdict item 1): a slope row recorded
     # in a slow window is unfalsifiable after the fact without this
-    from bench import _host_snapshot
-
     print(f"host at table emit: {_host_snapshot()}")
     print()
     hdr = "| family | " + " | ".join(f"x{k} s (rows)" for k in ks)
