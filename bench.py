@@ -11,7 +11,6 @@ Prints ONE JSON line:
 from __future__ import annotations
 
 import json
-import logging
 import os
 import re
 import sys
@@ -19,10 +18,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from mysql_data_anonymizer_spark.session import get_spark  # noqa: E402
+from mysql_data_anonymizer_spark.session import get_spark, release  # noqa: E402
 
-_log = logging.getLogger(__name__)
-_DROP_PERSISTED_WARNED = False
 # timed reps per query; the median is reported (see main)
 _REPS = 3
 
@@ -53,58 +50,6 @@ def _host_snapshot() -> dict:
     except Exception:
         pass
     return snap
-
-
-def _drop_persisted(spark) -> None:
-    """Session hygiene between reps: free persisted blocks ``clearCache()``
-    cannot reach. localCheckpoint RDDs (the dedup/graph/prefix families
-    eager-checkpoint intermediates) stay in the block manager until the JVM
-    ContextCleaner happens to run — across a 234-query session they
-    accumulate and squeeze execution memory (measured: last-third queries
-    inflate 1.9-3x vs pins while the same queries re-bench at pin level in
-    a fresh session). A Python gc pass drops Python-side references, then
-    every still-persisted RDD is unpersisted explicitly. Safe across
-    queries: no cross-query cache in this repo holds a live checkpointed
-    DataFrame (they memoize table names, dirs, and numpy arrays only)."""
-    import gc
-
-    gc.collect()
-    try:
-        # BLOCKING unpersist: the async form (unpersist(False), r9) left
-        # the blocks alive into the next query under memory pressure —
-        # repeated 24M-edge kcore runs degraded 26->49->93 s with async
-        # cleanup and run at a flat ~9 s with blocking unpersist + a JVM
-        # GC (measured r10). r11 REFINEMENT: that unconditional System.gc
-        # was itself the largest code-attributable share of the r10 bench
-        # inflation — a full G1 GC on the 32g heap uncommits memory to the
-        # OS, so the NEXT timed rep pays page re-commit faults: a uniform
-        # additive ~0.1-1.5s per query, worst on the smallest queries
-        # (measured r11: the same 11-query subset ran 19.9s with the GC,
-        # 14.9s without, pins 8.25s). The GC now runs only when the
-        # dropped blocks were actually big enough to have caused the
-        # original leak-class degradation (>1 GiB persisted) — the 24M-edge
-        # slope slices still get it, the ~240 fixture-scale queries don't.
-        jsc = spark.sparkContext._jsc
-        dropped_bytes = 0
-        for info in jsc.sc().getRDDStorageInfo():
-            dropped_bytes += info.memSize() + info.diskSize()
-        rdds = list(jsc.getPersistentRDDs().values())
-        for rdd in rdds:
-            rdd.unpersist(True)
-        big_drop = dropped_bytes > (1 << 30)
-        if rdds and big_drop:
-            spark.sparkContext._jvm.System.gc()
-    except Exception as exc:  # pragma: no cover - py4j version drift
-        # If the py4j JavaMap iteration ever stops converting, the
-        # checkpoint-leak fix silently degrading to a no-op would bring
-        # back the 26->93s kcore degradation with no signal (r10 ADVICE)
-        # — so shout once per process instead of passing silently.
-        global _DROP_PERSISTED_WARNED
-        if not _DROP_PERSISTED_WARNED:
-            _DROP_PERSISTED_WARNED = True
-            _log.warning(
-                "_drop_persisted failed (%r); checkpoint blocks may leak across queries", exc
-            )
 
 
 def main() -> None:
@@ -145,15 +90,12 @@ def main() -> None:
             Q.QUERIES[name](spark, warm_dir).count()
         except Exception as exc:  # never let warmup sink the bench
             print(f"# warmup {name} failed: {exc}", file=sys.stderr)
-    # Session hygiene between queries: several operators cache/localCheckpoint
+    # Session hygiene between queries: several operators cache or pin
     # intermediates (minhash shingles, component rounds, broadcast corpora) —
     # correct within one query, but across ~250 back-to-back queries the
     # retained blocks squeeze execution memory and measured 2-3x inflation on
-    # late queries vs a fresh session. A long-running production job would
-    # unpersist per job; the bench equivalent is clearing the block caches
-    # between queries (cheap: milliseconds).
-    spark.catalog.clearCache()
-    _drop_persisted(spark)
+    # late queries vs a fresh session, so every rep ends with a release.
+    release(spark)
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
 
     # Median-of-3 per query (VERDICT r4 #3): this box has documented
@@ -170,8 +112,7 @@ def main() -> None:
             t0 = time.time()
             n = fn(spark, sf_dir).count()
             samples.append(time.time() - t0)
-            spark.catalog.clearCache()
-            _drop_persisted(spark)
+            release(spark)
         samples.sort()
         times[name] = round(samples[len(samples) // 2], 3)
         print(

@@ -25,17 +25,20 @@ counts from evaluation A applied to evaluation B's partitions shift every
 index after the first divergent boundary. Invisible at small inputs
 (below ~sampleSizePerPartition the "sample" is the whole partition and
 boundaries are data-deterministic); at sf0.1 (15k rows / 32 partitions)
-the subsample diverged and indexes drifted by up to a few hundred. The
-eager ``localCheckpoint`` pins ONE partitioning for both consumers; with
-pinned boundaries the result is exact and run-invariant for ANY sampled
-boundary placement (earlier ranges hold strictly smaller keys, so
-index = earlier-range row count + local rank is boundary-independent).
+the subsample diverged and indexes drifted by up to a few hundred. An
+eager checkpoint (``session.pin``) pins ONE partitioning for both
+consumers; with pinned boundaries the result is exact and run-invariant
+for ANY sampled boundary placement (earlier ranges hold strictly smaller
+keys, so index = earlier-range row count + local rank is
+boundary-independent).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from mysql_data_anonymizer_spark.session import pin
 
 _PID = "__mda_pid"
 _LOCAL = "__mda_local_rn"
@@ -57,11 +60,9 @@ def with_row_index(
         _PID, F.spark_partition_id()
     )
     local_w = Window.partitionBy(_PID).orderBy(*order)
-    # eager localCheckpoint: BOTH consumers (counts, final join) must read
-    # the SAME materialized partitioning — see module docstring
-    part = part.withColumn(_LOCAL, F.row_number().over(local_w)).localCheckpoint(
-        eager=True
-    )
+    # pin: BOTH consumers (counts, final join) must read the SAME
+    # materialized partitioning — see module docstring
+    part = pin(part.withColumn(_LOCAL, F.row_number().over(local_w)))
 
     counts = part.groupBy(_PID).agg(F.count(F.lit(1)).alias("__n"))
     # cumulative offset over the (tiny: one row per partition) counts DF

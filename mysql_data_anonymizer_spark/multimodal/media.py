@@ -75,9 +75,7 @@ def fake_decode_batch(payloads: pd.Series) -> np.ndarray:
     return out
 
 
-def decode_and_featurize(
-    df: DataFrame, use_real_codecs: bool = False, batch_size_hint: int | None = None
-) -> DataFrame:
+def decode_and_featurize(df: DataFrame, use_real_codecs: bool = False) -> DataFrame:
     """binary payload -> FEATURE_DIM float feature vector per media row.
 
     Arrow-batched mapInPandas: each batch decodes to a (batch x samples)

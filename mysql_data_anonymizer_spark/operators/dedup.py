@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from mysql_data_anonymizer_spark.operators import bloom
-from mysql_data_anonymizer_spark.session import observed_metrics
+from mysql_data_anonymizer_spark.session import observed_metrics, pin
 
 # sentinel: "caller did not choose a dot-product form" (distinct from an
 # explicit dim=None, which selects the compile-cheap higher-order form)
@@ -705,7 +705,6 @@ def semantic_dedup_ivf(
     seed: int = 42,
     dim: int | None = _DIM_DEFAULT,
     centroids=None,
-    materialize_assignment: bool = True,
 ) -> DataFrame:
     """SemDeDup with TRAINED IVF cells as the clusters — the corpus-scale
     swap documented in ``semantic_dedup_sign_buckets``: data-adaptive
@@ -721,10 +720,10 @@ def semantic_dedup_ivf(
 
     The assignment frame is consumed by THREE branches (both join sides +
     the final anti-join); without materialization Spark re-runs the Arrow
-    assignment UDF once per branch. ``materialize_assignment`` (default on)
-    eagerly localCheckpoints it so the corpus is assigned exactly once —
-    at scale this is the deliberate persist point of (id, vec, norm, cell),
-    the same frame the dedup join shuffles anyway.
+    assignment UDF once per branch, so it is pinned and the corpus is
+    assigned exactly once — at scale this is the deliberate persist point
+    of (id, vec, norm, cell), the same frame the dedup join shuffles
+    anyway.
 
     ``dim`` picks the dot-product FORM for the pair scoring: the default
     unrolls to ``DEFAULT_DIM`` element_at terms (execution-optimal — at
@@ -749,14 +748,14 @@ def semantic_dedup_ivf(
         if centroids is not None
         else train_ivf_centroids(df, vec_col, n_cells=n_cells, seed=seed)
     )
-    e = df.select(
-        F.col(id_col).alias("__id"),
-        F.col(vec_col).alias("__v"),
-        norm_expr(vec_col, dim).alias("__n"),
-        F.element_at(ivf_assign_expr(vec_col, cents, 1), 1).cast("long").alias("cell"),
+    e = pin(
+        df.select(
+            F.col(id_col).alias("__id"),
+            F.col(vec_col).alias("__v"),
+            norm_expr(vec_col, dim).alias("__n"),
+            F.element_at(ivf_assign_expr(vec_col, cents, 1), 1).cast("long").alias("cell"),
+        )
     )
-    if materialize_assignment:
-        e = e.localCheckpoint(eager=True)
     a = e.select(
         F.col("__id").alias("id_a"), F.col("__v").alias("__va"),
         F.col("__n").alias("__na"), "cell",
@@ -823,25 +822,21 @@ def connected_components(
     Scale design: one keyed shuffle (join + min-aggregate) per round,
     O(component diameter) rounds — near-dup clusters are shallow (chains of
     overlapping docs), so a handful of rounds suffices. Each round is
-    ``localCheckpoint``-ed: iterative self-joins otherwise stack lineage and
-    re-execute the whole history every round. Convergence is detected with a
-    ``limit(1)`` existence probe, not a full count. For adversarial
-    planet-scale graphs (long chains), swap in the large-star/small-star
-    algorithm (Kiveris et al., "Connected Components in MapReduce") — same
-    interface, O(log^2 n) rounds.
+    pinned (``session.pin``): iterative self-joins otherwise stack lineage and
+    re-execute the whole history every round. Convergence is an Observation
+    on each round's pin, not a second probe job.
     """
     # materialize the edge list ONCE: ``sym`` is joined every round, and
     # without a checkpoint each round would re-execute the entire upstream
     # pair-finding pipeline (shingle + LSH joins) — measured ~2x the whole
     # clustering cost on the jaccard pipeline
-    sym = (
+    sym = pin(
         edges.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .union(edges.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .localCheckpoint()
     )
-    labels = sym.select(F.col("src").alias("node")).distinct().withColumn(
-        "component", F.col("node")
-    ).localCheckpoint()
+    labels = pin(
+        sym.select(F.col("src").alias("node")).distinct().withColumn("component", F.col("node"))
+    )
     for _ in range(max_iter):
         prop = sym.join(labels, sym.src == labels.node).select(
             F.col("dst").alias("node"), "component", F.lit(False).alias("__own")
@@ -853,7 +848,7 @@ def connected_components(
         # §1.2: one job per round, not checkpoint + a second limit(1) probe
         # job — the probe was pure fixed job-dispatch latency per round).
         obs = Observation()
-        new = (
+        new = pin(
             labels.withColumn("__own", F.lit(True))
             .unionByName(prop)
             .groupBy("node")
@@ -867,7 +862,6 @@ def connected_components(
                     F.when(F.col("component") < F.col("__old"), 1)
                 ).alias("improved"),
             )
-            .localCheckpoint()
         )
         labels = new.drop("__old")
         # same predicate the old probe filtered on; nonzero iff any label fell
@@ -878,106 +872,11 @@ def connected_components(
         # correct one: some nodes may carry intermediate non-minimum labels
         _log.warning(
             "connected_components: max_iter=%d exhausted before fixpoint; "
-            "labels may be partial (raise max_iter or use "
-            "connected_components_star for long-chain graphs)",
+            "labels may be partial (raise max_iter; a long-chain graph "
+            "needs one round per hop of its longest shortest path)",
             max_iter,
         )
     return labels
-
-
-def connected_components_star(
-    edges: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iter: int = 30,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") — the
-    adversarial-graph path: O(log^2 n) rounds regardless of component
-    diameter, where min-label propagation (``connected_components``) needs
-    O(diameter) rounds. Same (node, component) interface; prefer this when
-    components can be long chains (e.g. transitive near-dup drift at corpus
-    scale), the label-propagation twin when clusters are shallow.
-
-    Each round is two keyed groupBy+join shuffles; edges are
-    localCheckpoint-ed per round to truncate the iterative lineage, and
-    convergence is a single-scalar (count + hash-sum) probe."""
-    E = (
-        edges.select(F.col(id_a).cast("long").alias("u"), F.col(id_b).cast("long").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()
-    )
-    nodes = (
-        E.select(F.col("u").alias("n")).union(E.select(F.col("v").alias("n"))).distinct()
-        .localCheckpoint()
-    )
-    prev_sig = None
-    for _ in range(max_iter):
-        # ---- large-star: every strictly-larger neighbor of u hooks onto
-        # u's minimum neighborhood element ----
-        sym = E.union(E.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("__mv"))
-            .select("u", F.least(F.col("__mv"), F.col("u")).alias("m"))
-        )
-        E = (
-            sym.join(mins, "u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # ---- small-star: smaller-or-equal neighbors (and u itself) hook
-        # onto the minimum of that smaller neighborhood ----
-        sym = E.union(E.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        small = sym.where(F.col("v") <= F.col("u"))
-        mins = (
-            small.groupBy("u")
-            .agg(F.min("v").alias("__mv"))
-            .select("u", F.least(F.col("__mv"), F.col("u")).alias("m"))
-        )
-        # signature = (edge count, xor of edge hashes): order-independent,
-        # overflow-free (sum of 64-bit hashes trips ANSI overflow). Collected
-        # as an Observation on the checkpoint materialization — one job per
-        # round instead of checkpoint + a separate signature collect job.
-        obs = Observation()
-        E = (
-            small.join(mins, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .union(mins.select(F.col("u"), F.col("m").alias("v")))
-            .where(F.col("u") != F.col("v"))
-            .distinct()
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("c"),
-                F.expr("bit_xor(xxhash64(u, v))").alias("s"),
-            )
-            .localCheckpoint()
-        )
-        row = observed_metrics(obs, "connected_components_star loop")
-        sig = (row["c"], row["s"])
-        if sig == prev_sig:
-            break
-        prev_sig = sig
-    else:
-        # exiting on max_iter (not sig fixpoint) can leave nodes mapped to
-        # intermediate non-root ids — surface it instead of returning a
-        # silently inconsistent clustering
-        _log.warning(
-            "connected_components_star: max_iter=%d exhausted before the "
-            "edge-set signature reached fixpoint; cluster labels may be "
-            "partial/non-root (raise max_iter)",
-            max_iter,
-        )
-    comp = E.select(F.col("u").alias("node"), F.col("v").alias("component"))
-    # component minima point to themselves (roots never appear as a source
-    # at the star fixpoint)
-    roots = nodes.join(
-        comp.select(F.col("node").alias("n")), "n", "left_anti"
-    ).select(F.col("n").alias("node"), F.col("n").alias("component"))
-    return comp.union(roots)
 
 
 # ---------------------------------------------------------------------------
@@ -1177,15 +1076,6 @@ def boilerplate_chunk_removal(
 # ---------------------------------------------------------------------------
 # Bloom-filter decontamination (the no-broadcast-of-raw-shingles scale path)
 # ---------------------------------------------------------------------------
-def _bloom_bits_from_hashes(hashed: DataFrame, m_bits: int, num_hashes: int) -> bytes:
-    """Back-compat alias — the shared core lives in operators/bloom.py
-    (also consumed by joins.bloom_prefiltered_join)."""
-    return bloom.bits_from_hashes(hashed, m_bits, num_hashes)
-
-
-_BLOOM_SEED2 = bloom.SEED2
-
-
 def decontaminate_bloom_hits(
     train: DataFrame,
     bench: DataFrame,
@@ -1208,7 +1098,7 @@ def decontaminate_bloom_hits(
 
     100 TB design: both passes are map-shaped. Build: shingle -> xxhash64
     JVM-side, bitset OR per partition, bounded driver collect (see
-    _bloom_bits_from_hashes). Probe: per-doc-distinct shingles ->
+    ``bloom.bits_from_hashes``). Probe: per-doc-distinct shingles ->
     xxhash64 pairs JVM-side -> Arrow-batched vectorized bit test (numpy
     gather, no per-row Python) -> one keyed count per doc. No shuffle ever
     carries shingle strings to a join; the only wide exchange is the final

@@ -204,7 +204,6 @@ def lsh_topk(
     n_planes: int = 32,
     n_tables: int = 8,
     seed: int = 42,
-    multiprobe: bool = True,
     dim: int = 64,
     score_dim: int | None = DEFAULT_DIM,
 ) -> DataFrame:
@@ -239,11 +238,10 @@ def lsh_topk(
         norm_expr(vec_col, score_dim).alias("__qn"),
         F.explode(bucket_expr(vec_col, planes, n_tables)).alias("bucket"),
     )
-    if multiprobe:
-        probes = F.array(
-            F.col("bucket"), *[F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(b)]
-        )
-        q = q.withColumn("bucket", F.explode(probes))
+    probes = F.array(
+        F.col("bucket"), *[F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(b)]
+    )
+    q = q.withColumn("bucket", F.explode(probes))
     pairs = c.join(F.broadcast(q), "bucket").where(F.col("query_id") != F.col("neighbor_id"))
     scored = pairs.withColumn(
         "cosine", F.round(dot_expr("__qv", "__cv", score_dim) / (F.col("__qn") * F.col("__cn")), 4)

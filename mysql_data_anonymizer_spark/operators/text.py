@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from mysql_data_anonymizer_spark.session import pin
+
 # marker stopwords per language for the n-gram/stopword language heuristic;
 # chosen to be unambiguous across the fixture languages
 LANG_MARKERS: dict[str, list[str]] = {
@@ -404,7 +406,6 @@ def bpe_merge_steps(
     docs: DataFrame,
     text_col: str = "text",
     k_merges: int = 6,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Distributed BPE tokenizer training, the first ``k_merges`` merge
     steps (Sennrich et al. 2016): word counts -> symbols start as
@@ -420,8 +421,8 @@ def bpe_merge_steps(
     the WORD table, which is vocabulary-sized — the corpus itself is
     touched once, by the word-count aggregate) plus a 1-row broadcast
     crossJoin carrying the chosen pair into the merge application (a
-    codegen string fold, no Python). ``checkpoint`` eagerly pins the
-    small word table between steps — K nested HOF folds otherwise stack
+    codegen string fold, no Python). The small word table is pinned
+    (``session.pin``) before each step — K nested HOF folds otherwise stack
     into one deep Catalyst plan (the r7 plan-compile lesson). Words are
     ASCII-projected so char splitting is codepoint-identical in both
     engines. 100 TB shape: the iteration runs on the word-count dict
@@ -444,8 +445,7 @@ def bpe_merge_steps(
     )
     merges = []
     for k in range(1, k_merges + 1):
-        if checkpoint:
-            words = words.localCheckpoint(eager=True)
+        words = pin(words)
         syms = F.split(F.col("__w"), " ")
         pair_structs = F.when(
             F.size(syms) >= 2,

@@ -51,7 +51,7 @@ from mysql_data_anonymizer_spark.operators import (
 )
 from mysql_data_anonymizer_spark.sources import files
 from mysql_data_anonymizer_spark.plans.compiler import compile_plan
-from mysql_data_anonymizer_spark.session import observed_metrics
+from mysql_data_anonymizer_spark.session import observed_metrics, pin
 from mysql_data_anonymizer_spark.streaming import stream_ops
 
 SEED = 42
@@ -4829,7 +4829,7 @@ def semdedup_ivf(spark, sf_dir):
         _fi = _submit(
             _pool,
             spark,
-            lambda: (
+            lambda: pin(
                 # dim=None -> compile-cheap HOF dot for the pair scoring:
                 # on this bounded certification slice Catalyst analysis of
                 # the unrolled 64-term chain (~2 s/plan) dwarfs execution;
@@ -4839,24 +4839,21 @@ def semdedup_ivf(spark, sf_dir):
                     centroids=cents,
                 )
                 .select("vec_id")
-                .localCheckpoint(eager=True)
             )
         )
         _fe = _submit(
             _pool,
             spark,
-            lambda: (
+            lambda: pin(
                 dedup.embedding_near_dup_pairs(emb, threshold=0.4)
                 .select(F.col("id_b").alias("vec_id"))
                 .distinct()
-                .localCheckpoint(eager=True)
             )
         )
         ivf_surv, exact_dropped = _fi.result(), _fe.result()
-    exact_surv = (
+    exact_surv = pin(
         emb.select("vec_id")
         .join(exact_dropped, "vec_id", "left_anti")
-        .localCheckpoint(eager=True)
     )
     missing = exact_surv.join(ivf_surv, "vec_id", "left_anti").agg(
         F.count(F.lit(1)).alias("__missing")
@@ -5014,9 +5011,7 @@ def _certified_knn(spark, sf_dir, method, emb=None, approx=None, *,
     # matmul Python stage executes once, not once per consumer (the r12
     # triangle pinned-edge discipline; measured ~1.1-1.2x per knn query at
     # sf0.1)
-    exact = _KNN_METHODS["matmul"](spark, sf_dir, emb, queries).localCheckpoint(
-        eager=True
-    )
+    exact = pin(_KNN_METHODS["matmul"](spark, sf_dir, emb, queries))
     hits = exact.join(
         approx.select("query_id", "neighbor_id"),
         ["query_id", "neighbor_id"],
@@ -7077,13 +7072,12 @@ def q11_important_nations(spark, sf_dir):
     s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     val = _dec("p_retailprice", 12, 2) * _dec("l_quantity", 12, 2)
-    nv = (
+    nv = pin(
         l.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
         .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
         .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
         .groupBy(F.col("n_name").alias("nation"))
         .agg(F.sum(val).cast("decimal(30,4)").alias("value"))
-        .localCheckpoint()
     )
     total = nv.agg(F.sum(F.col("value").cast("double")).alias("__total"))
     return (
@@ -9450,8 +9444,8 @@ def pagerank_copurchase_parts(spark, sf_dir):
         .distinct()
     )
     deg = e.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("d"))
-    ed = e.join(deg, "src").localCheckpoint(eager=True)
-    nodes = ed.select(F.col("src").alias("node")).distinct().localCheckpoint(eager=True)
+    ed = pin(e.join(deg, "src"))
+    nodes = pin(ed.select(F.col("src").alias("node")).distinct())
     ranks = nodes.select("node", F.lit(1000000).cast("long").alias("r"))
     for _ in range(_PAGERANK_ITERS):
         # ranks is |nodes| rows — AQE broadcasts it at runtime, so the
@@ -10782,18 +10776,16 @@ def dedup_embedding_lsh_pairs(spark, sf_dir):
         _fe = _submit(
             _pool,
             spark,
-            lambda: dedup.embedding_near_dup_pairs(
-                emb, threshold=0.4
-            ).localCheckpoint(eager=True)
+            lambda: pin(dedup.embedding_near_dup_pairs(emb, threshold=0.4)),
         )
         _fl = _submit(
             _pool,
             spark,
-            lambda: similarity.lsh_bucketed_pairs(
-                emb, threshold=0.4, n_planes=144, n_tables=24
-            )
-            .select("id_a", "id_b")
-            .localCheckpoint(eager=True)
+            lambda: pin(
+                similarity.lsh_bucketed_pairs(
+                    emb, threshold=0.4, n_planes=144, n_tables=24
+                ).select("id_a", "id_b")
+            ),
         )
         exact, lsh = _fe.result(), _fl.result()
     stats = (
@@ -11264,12 +11256,11 @@ def triangle_count_copurchase(spark, sf_dir):
         .distinct()
     )
     a, b = li.alias("a"), li.alias("b")
-    und = (
+    und = pin(
         a.join(b, F.col("a.l_orderkey") == F.col("b.l_orderkey"))
         .where(F.col("a.l_partkey") < F.col("b.l_partkey"))
         .select(F.col("a.l_partkey").alias("s"), F.col("b.l_partkey").alias("t"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     deg = (
         und.select(F.explode(F.array("s", "t")).alias("node"))
@@ -11283,11 +11274,13 @@ def triangle_count_copurchase(spark, sf_dir):
     fwd = (F.col("ds") < F.col("dt")) | (
         (F.col("ds") == F.col("dt")) & (F.col("s") < F.col("t"))
     )
-    oriented = ed.select(
-        F.when(fwd, F.col("s")).otherwise(F.col("t")).alias("src"),
-        F.when(fwd, F.col("t")).otherwise(F.col("s")).alias("dst"),
-        F.when(fwd, F.col("dt")).otherwise(F.col("ds")).alias("ddst"),
-    ).localCheckpoint(eager=True)
+    oriented = pin(
+        ed.select(
+            F.when(fwd, F.col("s")).otherwise(F.col("t")).alias("src"),
+            F.when(fwd, F.col("t")).otherwise(F.col("s")).alias("dst"),
+            F.when(fwd, F.col("dt")).otherwise(F.col("ds")).alias("ddst"),
+        )
+    )
     o1, o2 = oriented.alias("o1"), oriented.alias("o2")
     wedges = (
         o1.join(o2, F.col("o1.src") == F.col("o2.src"))
@@ -11950,7 +11943,7 @@ def prefix_filter_jaccard_parts(spark, sf_dir):
     # eager-checkpoint: recs feeds the posting index, BOTH verify sides,
     # and the gate aggregate — without it the df-join + sort agg re-runs
     # four times (the BPE merge-step lesson)
-    recs = (
+    recs = pin(
         sets.join(ordered, "k")
         .select(
             "k",
@@ -11960,7 +11953,6 @@ def prefix_filter_jaccard_parts(spark, sf_dir):
                 f"slice(ord, 1, CAST(sz - (({PREFIX_JACCARD_T} * sz + 99) DIV 100) + 1 AS INT))"
             ).alias("pfx"),
         )
-        .localCheckpoint(eager=True)
     )
     posting = recs.select("k", F.explode("pfx").alias("tg"))
     cand = (
@@ -12052,12 +12044,11 @@ def cc_incremental_merge(spark, sf_dir):
     # run checkpoints its own symmetric edge list, so without pinning the
     # pairs here the whole shingle join executes twice (guide §1.2) —
     # measured 4.4-4.7 s -> 3.5 s at sf0.1
-    pairs = (
+    pairs = pin(
         dedup.ngram_jaccard_pairs(
             docs, "doc_id", "text", n=3, threshold=0.6, max_shingle_df=MAX_SHINGLE_DF
         )
         .select("id_a", "id_b")
-        .localCheckpoint(eager=True)
     )
     old = pairs.where((F.col("id_a") % 2 == 0) & (F.col("id_b") % 2 == 0))
     new = pairs.where((F.col("id_a") % 2 != 0) | (F.col("id_b") % 2 != 0))
@@ -12386,7 +12377,7 @@ def kn_perplexity_docs(spark, sf_dir):
         "      DIV (4L * c_w1 * n_types)"
         " END"
     ).cast("long")
-    per_doc = (
+    per_doc = pin(
         joined.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_bigrams"),
@@ -12402,7 +12393,6 @@ def kn_perplexity_docs(spark, sf_dir):
         # 3 SMJs + the per-bigram division — runs exactly ONCE: the tercile
         # cuts AND the final projection both read this table (without it,
         # each consumer re-evaluated the whole pipeline; measured 4.1x)
-        .localCheckpoint(eager=True)
     )
     all_ids = base.select("doc_id").distinct()
     scored = all_ids.join(per_doc, "doc_id", "left").select(
@@ -12770,7 +12760,7 @@ def corpus_drift_tvd(spark, sf_dir):
     # counts: its per-consumer re-execution is a small persisted-parquet
     # read already ReusedExchange-covered, and the same pin measured
     # SLOWER there (2.19 -> 2.68 s) — rejected.
-    sc = _drift_token_counts(docs).localCheckpoint(eager=True)
+    sc = pin(_drift_token_counts(docs))
     return _drift_from_counts(sc)
 
 
@@ -12955,7 +12945,7 @@ def drift_incremental_merge(spark, sf_dir):
     inc = _t(spark, sf_dir, "documents").where(_inc_pred())
     # vocab-sized; checkpointing it keeps document scans out of the final
     # plan entirely (and caps the explode at one execution)
-    inc_counts = _drift_token_counts(inc).localCheckpoint(eager=True)
+    inc_counts = pin(_drift_token_counts(inc))
     merged = (
         base_counts.unionByName(inc_counts)
         .groupBy("source", "w")
@@ -13014,7 +13004,7 @@ def kcore_copurchase_parts(spark, sf_dir):
     cc_incremental class). Output is the surviving core with in-core
     degrees. NULL part/order keys drop out of the graph in both engines."""
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    e = (
+    e = pin(
         li.alias("a")
         .join(li.alias("b"), "l_orderkey")
         .where(F.col("a.l_partkey") != F.col("b.l_partkey"))
@@ -13022,7 +13012,6 @@ def kcore_copurchase_parts(spark, sf_dir):
             F.col("a.l_partkey").alias("src"), F.col("b.l_partkey").alias("dst")
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
 
     def induced(alive):
@@ -13052,11 +13041,10 @@ def kcore_copurchase_parts(spark, sf_dir):
         # as an Observation (one job per round, not checkpoint + a second
         # count job — the connected_components convergence-probe fusion)
         obs = Observation()
-        new_alive = (
+        new_alive = pin(
             deg.where(F.col("d") >= _KCORE_K)
             .select("src")
             .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
         )
         n_new = observed_metrics(obs, "kcore peel loop")["n"]
         fixed = n_alive is not None and n_new == n_alive
@@ -13125,7 +13113,7 @@ def _kmeans_quantize(emb):
     edge vector, ANSI-crashed the subtract). NaN folds to the upper clamp
     in BOTH engines. Eagerly checkpointed — pinned once, reused per round
     (the kcore edge discipline)."""
-    return (
+    return pin(
         emb.select(
             "vec_id",
             F.expr(
@@ -13134,7 +13122,6 @@ def _kmeans_quantize(emb):
                 " -100.0D), 100.0D) * 1000000.0) AS BIGINT))"
             ).alias("q"),
         )
-        .localCheckpoint(eager=True)
     )
 
 
@@ -13188,7 +13175,7 @@ def _lloyd_loop(spark, q, k):
     prev_assign, assign = None, None
     for rnd in range(_KMEANS_ROUNDS):
         prev_assign = assign
-        assign = _kmeans_assign(q, cents).localCheckpoint(eager=True)
+        assign = pin(_kmeans_assign(q, cents))
         if rnd == _KMEANS_ROUNDS - 1:
             break
         means = (
@@ -13693,10 +13680,8 @@ def knn_recall_report(spark, sf_dir):
     all-pairs."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
-    exact = (
-        _KNN_METHODS["matmul"](spark, sf_dir, emb, queries)
-        .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)  # 25 rows, reused by every method
+    exact = pin(  # 25 rows, reused by every method
+        _KNN_METHODS["matmul"](spark, sf_dir, emb, queries).select("query_id", "neighbor_id")
     )
     # trained models are shared by ivf/pq/ivfpq: materialize the memoized
     # artifacts BEFORE the pool so no two threads race the trainer (the

@@ -185,13 +185,11 @@ def test_winnowing_robust_to_local_edit(spark):
     assert len(s1 & s2) / len(s1) >= 0.5
 
 
-def test_connected_components_star_matches_label_propagation(spark):
-    """large-star/small-star (O(log^2 n) rounds) must agree with min-label
-    propagation on random graphs AND on a long chain, the shape where label
-    propagation needs O(diameter) rounds."""
+def test_connected_components_matches_union_find(spark):
+    """Min-label propagation labels every node with its component's
+    smallest id, as a Python union-find does, on random graphs AND on a
+    long chain (the shape that needs O(diameter) rounds)."""
     import random
-
-    from pyspark.sql import functions as F
 
     rng = random.Random(7)
     cases = [
@@ -206,26 +204,25 @@ def test_connected_components_star_matches_label_propagation(spark):
     ]
     for edges in cases:
         edges = [e for e in edges if e[0] != e[1]]
+        parent = {}
+
+        def find(x):
+            parent.setdefault(x, x)
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for a, b in edges:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+        expect = {(n, find(n)) for n in parent}
         df = spark.createDataFrame(edges, "id_a long, id_b long")
         lab = {
             (r.node, r.component)
             for r in dedup.connected_components(df, max_iter=200).collect()
         }
-        star = {
-            (r.node, r.component)
-            for r in dedup.connected_components_star(df).collect()
-        }
-        assert star == lab
-
-
-def test_connected_components_star_round_bound(spark):
-    """The star algorithm converges in far fewer rounds than the chain
-    diameter — the property that makes it the planet-scale path."""
-    edges = [(i, i + 1) for i in range(200)]
-    df = spark.createDataFrame(edges, "id_a long, id_b long")
-    out = dedup.connected_components_star(df, max_iter=12)  # << diameter 200
-    comps = {r.component for r in out.collect()}
-    assert comps == {0}
+        assert lab == expect
 
 
 def test_jaccard_short_and_empty_docs(spark):

@@ -636,3 +636,69 @@ def test_certifier_change_selects_the_whole_registry(monkeypatch):
     monkeypatch.setattr(certify_changed, "git_diff_files", lambda base: {"tools/certify.py": {1}})
     names, everything = certify_changed.affected_queries("HEAD")
     assert everything and names == sorted(Q.QUERIES)
+
+
+def test_only_a_full_sf001_run_writes_plans_md():
+    """PLANS.md holds the sf0.01 audit: a full run at another scale, or a
+    subset, prints its table unless ``--out`` names a file."""
+    from tools.certify import plans_target
+
+    assert plans_target("fixtures/sf0.01", None, None) == "PLANS.md"
+    assert plans_target("fixtures/sf0.01/", None, None) == "PLANS.md"
+    assert plans_target("fixtures/sf0.001", None, None) is None
+    assert plans_target("fixtures/sf0.1", None, None) is None
+    assert plans_target("fixtures/sf0.01", None, ["dedup_clusters"]) is None
+    assert plans_target("fixtures/sf0.001", "out.md", None) == "out.md"
+
+
+def test_only_session_pin_calls_local_checkpoint():
+    """Every eager checkpoint goes through ``session.pin``, so ``release``
+    knows each one: no other package module calls ``localCheckpoint``."""
+    import ast
+
+    pkg = os.path.dirname(Q.__file__)
+    callers = set()
+    for dirpath, _, files in os.walk(pkg):
+        for f in files:
+            if f.endswith(".py"):
+                path = os.path.join(dirpath, f)
+                for n in ast.walk(ast.parse(open(path).read())):
+                    if isinstance(n, ast.Call) and getattr(n.func, "attr", None) == "localCheckpoint":
+                        callers.add(os.path.relpath(path, pkg))
+    assert callers == {"session.py"}
+
+
+def test_release_frees_the_pins_and_keeps_the_callers_own_rdd(spark, sf_dir):
+    """dedup_clusters pins its edge list and each label round, and pool
+    threads pin concurrently; ``release`` unpersists exactly those pins,
+    and an RDD the caller persisted survives."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    from mysql_data_anonymizer_spark import session
+
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return {int(k) for k in jsc.getPersistentRDDs().keySet().toArray()}
+
+    own = spark.sparkContext.parallelize(range(4)).persist()
+    own.count()
+    before = persisted()
+    Q.QUERIES["dedup_clusters"](spark, sf_dir).count()
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            pinned = list(pool.map(lambda i: session.pin(spark.range(i + 1)), range(16)))
+    finally:
+        sys.setswitchinterval(switch)
+    assert [df.count() for df in pinned] == list(range(1, 17))
+    new = persisted() - before
+    assert len(new) > 16 and new <= session._PINS
+    try:
+        session.release(spark)
+        left = persisted()
+        assert not new & left and own.id() in left and not session._PINS
+    finally:
+        own.unpersist()

@@ -40,22 +40,6 @@ def test_cc_observation_convergence_detection(spark, caplog):
     ], "convergence Observation failed to stop the loop before max_iter"
 
 
-def test_cc_star_observation_signature_fixpoint(spark, caplog):
-    # two triangles bridged — star rounds must reach the signature fixpoint
-    # (the Observation-collected (count, xor) pair) well before max_iter
-    edges = spark.createDataFrame(
-        [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 5), (5, 3)],
-        "id_a long, id_b long",
-    )
-    with caplog.at_level(logging.WARNING):
-        out = {
-            r.node: r.component
-            for r in dedup.connected_components_star(edges, max_iter=30).collect()
-        }
-    assert out == {i: 0 for i in range(6)}
-    assert not [r for r in caplog.records if "max_iter" in r.getMessage()]
-
-
 # ---------------------------------------------------------------------------
 # _KNN_RECALL_FLOORS is the only place a knn recall floor is written: raising
 # one method's floor above the 25 true pairs (and above 5 per query) must

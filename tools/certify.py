@@ -47,8 +47,9 @@ overwrite PLANS.md with 240 ERROR rows):
     fixture parquet tables; anything else aborts before any Spark work;
   - the gate artifact is refused (written to <out>.rejected instead) when
     more than 5% of certified queries error out;
-  - --queries runs a subset and prints the table to stdout WITHOUT
-    touching PLANS.md unless --out is given explicitly.
+  - only a full run over the sf0.01 fixtures writes PLANS.md (the sf0.01
+    audit); --queries subsets and other scales print the table to stdout
+    WITHOUT touching PLANS.md unless --out is given explicitly.
 """
 
 from __future__ import annotations
@@ -69,7 +70,7 @@ import numpy as np  # noqa: E402
 import pandas as pd  # noqa: E402
 
 from mysql_data_anonymizer_spark.anonymizer import TABLE_NAMES  # noqa: E402
-from mysql_data_anonymizer_spark.session import get_spark  # noqa: E402
+from mysql_data_anonymizer_spark.session import get_spark, release  # noqa: E402
 
 # queries where a partition-less window is provably bounded:
 #   - rownum.py's cumulative-offset window runs over ONE ROW PER PARTITION
@@ -527,13 +528,24 @@ def plan_row(r: dict) -> tuple[str, list[str]]:
     ), [f"plan: {p}" for p in problems]
 
 
+def plans_target(sf_dir: str, out: str | None, subset: list[str] | None) -> str | None:
+    """Where the plan table is written: ``out`` when given, else PLANS.md
+    (the sf0.01 audit) for a full run over the sf0.01 fixtures, else
+    nowhere (None: the table is printed)."""
+    if out is not None:
+        return out
+    if subset is None and os.path.basename(os.path.normpath(sf_dir)) == "sf0.01":
+        return "PLANS.md"
+    return None
+
+
 def main() -> None:
     ap = argparse.ArgumentParser(description="Build and run every registered query once; "
                                  "check its oracle values, driver dtypes and plan shape.")
     ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.01",
                     help="fixture directory (must contain lineitem.parquet etc.)")
-    ap.add_argument("--out", help="output markdown path (default PLANS.md for full runs; "
-                    "subset runs print to stdout unless --out is given)")
+    ap.add_argument("--out", help="output markdown path (default PLANS.md for full sf0.01 "
+                    "runs; other runs print to stdout unless --out is given)")
     ap.add_argument("--queries", help="comma-separated subset of registry queries")
     ap.add_argument("--force", action="store_true",
                     help="allow a --queries subset run to overwrite PLANS.md (r11 ADVICE)")
@@ -586,6 +598,7 @@ def main() -> None:
             n_err += 1
             err = str(exc)[:120]
             line, problems = f"| {name} | ERROR: {err} | | | | | | | |", [f"error: {err}"]
+        release(spark)
         md.append(line)
         if problems:
             failures[name] = problems
@@ -604,11 +617,11 @@ def main() -> None:
         f"{n_err} errors"
     )
     text = "\n".join(md) + "\n"
-    if subset is not None and args.out is None:
-        print(text)  # subset mode: inspect, don't touch the gate artifact
+    out_md = plans_target(args.sf_dir, args.out, subset)
+    if out_md is None:
+        print(text)  # inspect, don't touch the gate artifact
         print(summary)
     else:
-        out_md = args.out or "PLANS.md"
         if subset is not None and os.path.basename(out_md) == "PLANS.md" and not args.force:
             ap.error(f"--queries subset targeting the gate artifact {out_md!r} would replace "
                      "the full table with a partial one; pass --force if you really mean it")

@@ -22,7 +22,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from mysql_data_anonymizer_spark.session import get_spark
+from mysql_data_anonymizer_spark.session import get_spark, release
 
 BASE = "/root/testdata/sf0.001"
 OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".fuzzdata")
@@ -557,7 +557,8 @@ def build_fuzz_dir(spark) -> str:
 
 def main() -> None:
     names = sys.argv[1:] or DEFAULT_QUERIES
-    spark = get_spark("mda-fuzz", master="local[8]")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+    spark = get_spark("mda-fuzz", master=f"local[{cpus}]")
     fuzz_dir = build_fuzz_dir(spark)
 
     import mysql_data_anonymizer_spark.queries as Q
@@ -573,6 +574,7 @@ def main() -> None:
             ok, msg = not problems, "; ".join(problems) or f"{len(spd)} rows"
         except Exception as exc:  # crash on edge rows IS the finding
             ok, msg = False, f"CRASH {type(exc).__name__}: {str(exc)[:300]}"
+        release(spark)
         status = "OK  " if ok else "FAIL"
         print(f"{status} {name}: {msg}")
         if not ok:

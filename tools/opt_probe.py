@@ -20,7 +20,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from mysql_data_anonymizer_spark.session import get_spark  # noqa: E402
+from mysql_data_anonymizer_spark.session import get_spark, release  # noqa: E402
 
 
 def main() -> None:
@@ -46,7 +46,6 @@ def main() -> None:
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     spark = get_spark("mda-opt-probe", master=f"local[{cpus}]")
     import mysql_data_anonymizer_spark.queries as Q
-    from bench import _drop_persisted
 
     plan_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", rnd)
     os.makedirs(plan_dir, exist_ok=True)
@@ -60,8 +59,7 @@ def main() -> None:
                 fn(spark, warm).count()
             except Exception as exc:  # noqa: BLE001
                 print(f"# warmup {name} failed: {exc}", file=sys.stderr)
-        spark.catalog.clearCache()
-        _drop_persisted(spark)
+        release(spark)
 
         noop_t, count_t, build_t = [], [], []
         for r in range(reps):
@@ -73,13 +71,11 @@ def main() -> None:
             t2 = time.time()
             build_t.append(t1 - t0)
             noop_t.append(t2 - t1)
-            spark.catalog.clearCache()
-            _drop_persisted(spark)
+            release(spark)
             t0 = time.time()
             n = fn(spark, sf_dir).count()
             count_t.append(time.time() - t0)
-            spark.catalog.clearCache()
-            _drop_persisted(spark)
+            release(spark)
         if want_plan:
             df = fn(spark, sf_dir)
             with open(os.path.join(plan_dir, f"{name}_{tag}.txt"), "w") as f:

@@ -35,8 +35,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import _REPS, _drop_persisted, _host_snapshot  # noqa: E402
-from mysql_data_anonymizer_spark.session import get_spark  # noqa: E402
+from bench import _REPS, _host_snapshot  # noqa: E402
+from mysql_data_anonymizer_spark.session import get_spark, release  # noqa: E402
 
 BASE = "/root/testdata/sf0.1"
 WARM = "/root/testdata/sf0.001"
@@ -301,12 +301,10 @@ def time_family(spark, name: str, sf_dir: str, k: int = 1) -> tuple[float, int]:
     else:
         n = Q.QUERIES[name](spark, sf_dir).count()
     dt = time.time() - t0
-    spark.catalog.clearCache()
-    # localCheckpoint blocks survive clearCache() (the bench.py
-    # _drop_persisted lesson): without this, a graph family's x10 row
-    # measures the x1+x5 leftovers' memory squeeze, not the operator —
+    # pins survive clearCache(): without the release, a graph family's x10
+    # row measures the x1+x5 leftovers' memory squeeze, not the operator —
     # kcore measured 115 s leaked vs ~25 s in a fresh session
-    _drop_persisted(spark)
+    release(spark)
     return round(dt, 3), n
 
 
@@ -333,7 +331,6 @@ def main() -> None:
             time_family(spark, name, WARM)
         except Exception as exc:
             print(f"# warmup {name} failed: {exc}", file=sys.stderr)
-    spark.catalog.clearCache()
 
     ks = [1] + scales
     results: dict[str, dict[int, tuple[float, int]]] = {}
