@@ -1,6 +1,6 @@
 """Benchmark runner: every registry query, in registry (file) order, at
-$SPARK_GRAFT_SF_DIR (default: the sf0.1 fixtures) on local[$SPARK_GRAFT_CPUS]
-(default: the number of CPUs this process may run on).
+$SPARK_GRAFT_SF_DIR (default: the sf0.1 fixtures) on ``get_spark``'s default
+master: local[$SPARK_GRAFT_CPUS], else one core per CPU this process may run on.
 `--queries a,b,c` times only those registry queries.
 
 Prints ONE JSON line:
@@ -54,12 +54,11 @@ def _host_snapshot() -> dict:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
 
     host_start = _host_snapshot()
-    spark = get_spark("mda-bench", master=f"local[{cpus}]")
+    spark = get_spark("mda-bench")
     import mysql_data_anonymizer_spark.queries as Q
 
     # optional subset: `bench.py --queries a,b,c` times only those registry

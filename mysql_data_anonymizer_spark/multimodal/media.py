@@ -1,11 +1,10 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns.
 
 Real Spark-side machinery — schema, Arrow batching via mapInPandas,
-partition-friendly shapes — with the codec layer stubbed: the container has
-no image/audio libraries, so ``decode_media`` raises NotImplementedError and
-tests run through ``fake_decode_batch``, a deterministic stand-in with the
-same (bytes -> ndarray) contract. Swapping in PIL/torchaudio is a one-line
-change at the marked seam.
+partition-friendly shapes — with the codec layer faked: no image/audio
+libraries are installed, so ``decode_and_featurize`` decodes through
+``fake_decode_batch``, a deterministic stand-in with the (bytes -> ndarray)
+contract a real decoder (PIL / soundfile / pyav) would keep.
 
 Design for 100 TB of media:
   - binary payloads stay columnar (parquet BYTE_ARRAY) and are never
@@ -49,18 +48,6 @@ MEDIA_SCHEMA = T.StructType(
 FEATURE_DIM = 16
 
 
-def decode_media(payload: bytes, kind: str) -> np.ndarray:
-    """REAL-CODEC SEAM — deliberately stubbed.
-
-    Production: PIL.Image.open / soundfile.read / pyav frame iteration.
-    This container ships none of those, so attempting a real decode is an
-    explicit error rather than a silent fake."""
-    raise NotImplementedError(
-        "media codecs are not available in this environment; "
-        "use fake_decode_batch (deterministic) or install PIL/soundfile/pyav"
-    )
-
-
 def fake_decode_batch(payloads: pd.Series) -> np.ndarray:
     """Deterministic decode stand-in: bytes -> pseudo-sample array derived
     from the payload content (so tests exercise real data flow, and
@@ -75,7 +62,7 @@ def fake_decode_batch(payloads: pd.Series) -> np.ndarray:
     return out
 
 
-def decode_and_featurize(df: DataFrame, use_real_codecs: bool = False) -> DataFrame:
+def decode_and_featurize(df: DataFrame) -> DataFrame:
     """binary payload -> FEATURE_DIM float feature vector per media row.
 
     Arrow-batched mapInPandas: each batch decodes to a (batch x samples)
@@ -85,12 +72,7 @@ def decode_and_featurize(df: DataFrame, use_real_codecs: bool = False) -> DataFr
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if use_real_codecs:
-                samples = np.stack(
-                    [decode_media(p, k) for p, k in zip(pdf["payload"], pdf["kind"])]
-                )
-            else:
-                samples = fake_decode_batch(pdf["payload"])
+            samples = fake_decode_batch(pdf["payload"])
             qs = np.quantile(samples, np.linspace(0, 1, FEATURE_DIM - 2), axis=1).T
             feats = np.column_stack([samples.mean(axis=1), samples.std(axis=1), qs])
             yield pd.DataFrame(

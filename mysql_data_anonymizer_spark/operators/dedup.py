@@ -371,7 +371,7 @@ def minhash_lsh_pairs(
 # ---------------------------------------------------------------------------
 # SimHash
 # ---------------------------------------------------------------------------
-def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 64) -> DataFrame:
+def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """64-bit SimHash per document: bit j of the fingerprint is the sign of
     sum over tokens of (2*bit_j(xxhash64(token)) - 1), token-frequency
     weighted (bit 63 kept clear so fingerprints stay non-negative).
@@ -383,7 +383,6 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 64) -> DataFr
     stage. (A previous explode + 64-column groupBy version shuffled every
     token AND blew up whole-stage codegen with a 63-deep Add tree — minutes
     per 500 docs; this form is sub-second.)"""
-    assert bits == 64, "packed-long simhash is fixed at 64 bits"
     return _simhash_impl(df, id_col, text_col, "xxhash64(t)", n_bits=64, pack_bits=63)
 
 

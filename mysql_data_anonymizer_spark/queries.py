@@ -220,7 +220,10 @@ def _replay_conf(spark):
       volume / target task size), instead of inheriting the batch session
       default; every store is opened and committed per micro-batch, so
       stores beyond the core count only queue (32 nearly-empty stores
-      measured 2.4x the wall-clock of 8).
+      measured 2.4x the wall-clock of 8). ``get_spark``'s own rule does not
+      make this redundant: ``__spark_entry__`` replays on the driver's
+      session, whose conf ``get_spark`` never sets, and the cap binds above
+      8 cores.
     - ``spark.sql.streaming.checkpointFileManagerClass``:
       ``_CHECKPOINT_MANAGER``. Spark's default FileContext manager resolves
       symlinks on every atomic rename, and without libhadoop each lookup

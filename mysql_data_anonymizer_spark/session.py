@@ -1,9 +1,11 @@
 """SparkSession factory + engine configuration.
 
 Replaces the reference's config loader (reference src/Anonymizer.php:63-100,
-config/config-sample.php): DB connection knobs become JDBC options, the
-concurrency knobs (NB_MAX_MYSQL_CLIENT / NB_MAX_PROMISE_IN_LOOP) become Spark
-partition parallelism + writeback batch size.
+config/config-sample.php): DB connection knobs become JDBC options. The two
+concurrency knobs live where they act: NB_MAX_MYSQL_CLIENT is
+``JdbcConfig.num_partitions`` (``sources/jdbc.py``) and
+NB_MAX_PROMISE_IN_LOOP is ``sinks.updates_via_foreach_partition(batch_size=)``.
+The session itself is sized from the cores it runs on (``get_spark``).
 """
 
 from __future__ import annotations
@@ -26,16 +28,11 @@ class EngineConfig:
     - ``locale``         <- DEFAULT_GENERATOR_LOCALE (config-sample.php:8)
     - ``seed``           global seed for deterministic fake data (new; the
                           reference used Faker's process-global RNG)
-    - ``jdbc_num_partitions``  <- NB_MAX_MYSQL_CLIENT (read parallelism)
-    - ``writeback_batch_size`` <- NB_MAX_PROMISE_IN_LOOP (rows per
-                          executemany batch in the JDBC update sink)
+    - ``extra_spark_conf``  Spark conf that wins over ``get_spark``'s own
     """
 
     locale: str = "en_US"
     seed: int = 42
-    jdbc_num_partitions: int = 32
-    writeback_batch_size: int = 1000
-    shuffle_partitions: int = 32
     extra_spark_conf: dict[str, str] = field(default_factory=dict)
 
     def __post_init__(self) -> None:
@@ -48,12 +45,8 @@ class EngineConfig:
             raise ValueError(
                 f"unsupported locale {self.locale!r}; available: {sorted(LOCALES)}"
             )
-        for knob in ("seed", "jdbc_num_partitions", "writeback_batch_size", "shuffle_partitions"):
-            v = getattr(self, knob)
-            if not isinstance(v, int) or isinstance(v, bool):
-                raise ValueError(f"{knob} must be an int, got {type(v).__name__}")
-            if knob != "seed" and v <= 0:
-                raise ValueError(f"{knob} must be positive, got {v}")
+        if not isinstance(self.seed, int) or isinstance(self.seed, bool):
+            raise ValueError(f"seed must be an int, got {type(self.seed).__name__}")
         if not isinstance(self.extra_spark_conf, dict):
             raise ValueError("extra_spark_conf must be a dict of str -> str")
 
@@ -66,6 +59,12 @@ def _driver_memory() -> str:
     return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{min(32 << 10, phys_mb // 2)}m"
 
 
+def _default_master() -> str:
+    """``local[N]``: N is ``SPARK_GRAFT_CPUS`` if set, else the number of
+    CPUs this process may run on."""
+    return f"local[{os.environ.get('SPARK_GRAFT_CPUS') or len(os.sched_getaffinity(0))}]"
+
+
 def get_spark(
     app_name: str = "mysql_data_anonymizer_spark",
     config: EngineConfig | None = None,
@@ -73,11 +72,14 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for this engine.
 
-    AQE is on so runtime stats re-plan skewed joins and coalesce small
-    shuffle partitions; Arrow is on for the pandas-UDF slow path.
+    The master defaults to ``local[$SPARK_GRAFT_CPUS]``, else one core per
+    CPU this process may run on, and shuffle partitions follow the
+    session's cores (``defaultParallelism``); a key set in
+    ``config.extra_spark_conf`` wins over the latter. AQE is on so
+    runtime stats re-plan skewed joins and coalesce small shuffle
+    partitions; Arrow is on for the pandas-UDF slow path.
     """
     config = config or EngineConfig()
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or "local[*]"
     # Make this package importable by Python UDF workers regardless of the
     # caller's cwd: export the repo root on PYTHONPATH before the JVM (and
     # thus the workers' env) is spawned. On a real cluster the equivalent
@@ -87,9 +89,8 @@ def get_spark(
     if repo_root not in pp.split(os.pathsep):
         os.environ["PYTHONPATH"] = f"{repo_root}{os.pathsep}{pp}" if pp else repo_root
     builder = (
-        SparkSession.builder.master(master)
+        SparkSession.builder.master(master or _default_master())
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(config.shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # runtime bloom-filter join pruning (Spark's default) builds a
@@ -106,6 +107,8 @@ def get_spark(
     for k, v in config.extra_spark_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    if "spark.sql.shuffle.partitions" not in config.extra_spark_conf:
+        spark.conf.set("spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism))
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
@@ -170,18 +173,20 @@ def release(spark: SparkSession) -> None:
         ids = list(_PINS)
         _PINS.clear()
     try:
-        jsc = spark.sparkContext._jsc  # noqa: SLF001
-        held = jsc.getPersistentRDDs()
-        live = {i: rdd for i in ids if (rdd := held.get(i)) is not None}
+        sc = spark.sparkContext._jsc.sc()  # noqa: SLF001
+        held = sc.getPersistentRDDs()
+        live = {i for i in ids if held.contains(i)}
         if not live:
             return
         freed = sum(
             info.memSize() + info.diskSize()
-            for info in jsc.sc().getRDDStorageInfo()
+            for info in sc.getRDDStorageInfo()
             if info.id() in live
         )
-        for rdd in live.values():
-            rdd.unpersist(True)
+        # SparkContext.unpersistRDD, not RDD.unpersist: the latter logs one
+        # "was locally checkpointed ... cannot be recomputed" WARN per pin
+        for i in live:
+            sc.unpersistRDD(i, True)
         # A full GC uncommits heap, so the next query pays page re-commit
         # faults (0.1-1.5 s per query on a 32g heap); it pays off only
         # after big drops: over 1 GiB of leftover blocks slowed repeated

@@ -88,10 +88,8 @@ def test_dob_age_window():
 def test_engine_config_validation():
     with pytest.raises(ValueError, match="locale"):
         EngineConfig(locale="xx_XX")
-    with pytest.raises(ValueError, match="positive"):
-        EngineConfig(shuffle_partitions=0)
     with pytest.raises(ValueError, match="int"):
-        EngineConfig(writeback_batch_size="many")
+        EngineConfig(seed="many")
     EngineConfig(locale="fr_FR")  # valid
 
 
@@ -113,6 +111,31 @@ def test_driver_memory_default_fits_the_machine(spark, monkeypatch):
         assert _driver_memory() == want
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
     assert _driver_memory() == "3g"
+
+
+def test_session_is_sized_from_its_cores(spark, monkeypatch):
+    """The default master is local[SPARK_GRAFT_CPUS], else one core per CPU
+    this process may run on, and shuffle partitions follow the session's
+    cores unless ``extra_spark_conf`` names the key."""
+    import os
+
+    key = "spark.sql.shuffle.partitions"
+    cores = str(spark.sparkContext.defaultParallelism)
+    assert spark.conf.get(key) == cores
+
+    from mysql_data_anonymizer_spark.session import _default_master, get_spark
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert _default_master() == "local[3]"
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 2, 5, 7, 9})
+    assert _default_master() == "local[5]"
+    try:
+        config = EngineConfig(extra_spark_conf={key: "7"})
+        assert get_spark("mda-tests", config, master="local[4]") is spark
+        assert spark.conf.get(key) == "7"
+    finally:
+        spark.conf.set(key, cores)
 
 
 def test_anonymizer_locale_flows_to_masks(spark, customer):

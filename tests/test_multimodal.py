@@ -1,4 +1,4 @@
-"""Multimodal binary-column plumbing (decode seam stubbed, flow real)."""
+"""Multimodal binary-column plumbing (codecs faked, flow real)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -16,11 +16,6 @@ def media_df(spark):
         (5, "image", None, (0, 0, None, "png")),
     ]
     return spark.createDataFrame(rows, media.MEDIA_SCHEMA)
-
-
-def test_decode_media_is_explicit_stub():
-    with pytest.raises(NotImplementedError, match="codecs"):
-        media.decode_media(b"xx", "image")
 
 
 def test_decode_and_featurize_shapes(spark, media_df):

@@ -554,9 +554,9 @@ def main() -> None:
         ap.error(f"sf_dir {args.sf_dir!r} is not a fixture directory "
                  "(no lineitem.parquet) — refusing to run")
 
-    # plan shape depends on defaultParallelism (queries._replay_conf and
-    # the scan's split packing), so the session size is fixed, not taken
-    # from the env
+    # fixed, not get_spark's default: PLANS.md is the sf0.01 audit at
+    # local[4], and plan shape follows the cores (shuffle partitions,
+    # queries._replay_conf, the scan's split packing)
     spark = get_spark("certify", master="local[4]")
     import mysql_data_anonymizer_spark.queries as Q
 

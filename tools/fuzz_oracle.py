@@ -557,8 +557,7 @@ def build_fuzz_dir(spark) -> str:
 
 def main() -> None:
     names = sys.argv[1:] or DEFAULT_QUERIES
-    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
-    spark = get_spark("mda-fuzz", master=f"local[{cpus}]")
+    spark = get_spark("mda-fuzz")
     fuzz_dir = build_fuzz_dir(spark)
 
     import mysql_data_anonymizer_spark.queries as Q

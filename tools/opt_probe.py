@@ -43,8 +43,7 @@ def main() -> None:
         argv.remove("--no-plan")
     names = argv
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
-    spark = get_spark("mda-opt-probe", master=f"local[{cpus}]")
+    spark = get_spark("mda-opt-probe")
     import mysql_data_anonymizer_spark.queries as Q
 
     plan_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", rnd)

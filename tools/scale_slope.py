@@ -6,10 +6,9 @@ enough for correctness but says nothing about the *slope* — whether a family
 grows ~linearly (healthy: scan/shuffle-bound with bounded per-key work) or
 super-linearly (a 100 TB red flag). This tool derives 5x and 10x slices from
 the sf0.1 tables (under .scaledata/, inside the repo — /root/testdata is
-read-only) and times each family exactly like bench.py: one local thread
-per usable CPU unless SPARK_GRAFT_CPUS says otherwise, sf0.001 warm-up
-first, cache cleared between runs, and the median of ``bench._REPS`` runs
-reported per family and scale point.
+read-only) and times each family exactly like bench.py: on ``get_spark``'s
+default master, sf0.001 warm-up first, cache cleared between runs, and the
+median of ``bench._REPS`` runs reported per family and scale point.
 
 Derivation preserves workload shape instead of inflating it:
   - documents: K copies; copy k>0 prefixes every token with ``c<k>·`` so the
@@ -316,8 +315,7 @@ def main() -> None:
     families = args.families.split(",")
     scales = [int(s) for s in args.scales.split(",")]
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
-    spark = get_spark("mda-scale-slope", master=f"local[{cpus}]")
+    spark = get_spark("mda-scale-slope")
     import mysql_data_anonymizer_spark.queries as Q  # noqa: F401
 
     dirs = {1: BASE}
